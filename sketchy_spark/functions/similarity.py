@@ -292,9 +292,13 @@ def ann_params(
         )
 
     def windows(bits: int) -> int | None:
-        """Distinct rotated-offset windows at this width (None = no cap)."""
+        """Distinct rotated-offset windows at this width (None = no cap).
+        A window of bits >= dim covers every dim, so all probes bucket
+        alike: no distinct window exists and the width is infeasible."""
         if dim is None or dim <= 0:
             return None
+        if bits >= dim:
+            return 0
         return dim // math.gcd(bits, dim)
 
     best: tuple[int, int] | None = None

@@ -358,27 +358,6 @@ def candidate_pairs(
     ).distinct()
 
 
-def candidate_pairs_join(
-    signatures: DataFrame, cfg: SketchConfig
-) -> DataFrame:
-    """Self-join formulation of candidate generation (kept as the
-    reference plan shape; more stages, same output as candidate_pairs)."""
-    bands = band_table(signatures, cfg).persist()
-    hot = hot_band_keys(bands, cfg.band_skew_cap)
-    cold = bands.join(F.broadcast(hot), "band_key", "left_anti")
-    a = cold.alias("a")
-    b = cold.alias("b")
-    return (
-        a.join(b, "band_key")
-        .where(F.col("a.file_id") < F.col("b.file_id"))
-        .select(
-            F.col("a.file_id").alias("a_id"),
-            F.col("b.file_id").alias("b_id"),
-        )
-        .distinct()
-    )
-
-
 def exact_dup_edges(signatures: DataFrame) -> DataFrame:
     """Star edges (member -> group-min) within identical-sha256 groups.
 

@@ -12,6 +12,17 @@ Two equivalent Jaccard-verification implementations:
   Same estimator, ~100x less CPU; this is the honest re-expression of
   the reference's "assumes hashes are sorted" fast path.
 
+:func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in front
+of that kernel. While the signature matrix, the candidate pairs and the
+borderline sigs fit one 30 MB budget (``RESIDENT_BYTES``) the whole
+cascade runs on the driver, as the reference scans its in-memory sketch
+collection (src/sketchy.rs:81): the only Python UDF stage it starts is
+one re-sketch of the borderline files. Above the budget it runs on
+executors. On small traffic every Python task costs a fixed ~180 ms
+before user code runs (worker file setup re-reads ~16 zip directories,
+see the cascade's docstring), so fewer Python stages beat faster kernels
+there.
+
 Key narrowness: the pipeline hands this module fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle here
 moves 16-byte keys; string file_ids are attached once, to the final
@@ -31,19 +42,21 @@ from pyspark.sql import DataFrame
 from sketchy_spark.config import SketchConfig
 
 
-# Caches persisted by verified_pairs_cascade for callers that provided no
+# Caches persisted by the scan-side cascade for callers that provided no
 # ``persisted`` release list (ad-hoc / public use): the persists are
-# required for correctness (see the in-function comments on exchange
-# reuse), so rather than leaking anonymously they are tracked here.
+# required for correctness (see the comments on exchange reuse in
+# _scan_side_cascade), so rather than leaking anonymously they are
+# tracked here. The resident cascade persists nothing.
 # Long-lived sessions reclaim executor storage with
 # :func:`release_cascade_caches`.
 _CASCADE_CACHES: list[DataFrame] = []
 
 
 def release_cascade_caches() -> None:
-    """Unpersist every cache the cascade retained on behalf of callers
-    that passed no ``persisted`` list (ADVICE r3: repeated ad-hoc calls in
-    a long-lived session otherwise accumulate unreleasable caches)."""
+    """Unpersist every cache the scan-side cascade and the containment
+    pass retained on behalf of callers that passed no ``persisted`` list
+    (ADVICE r3: repeated ad-hoc calls in a long-lived session otherwise
+    accumulate unreleasable caches)."""
     while _CASCADE_CACHES:
         df = _CASCADE_CACHES.pop()
         try:
@@ -103,6 +116,63 @@ def _with_sides(
 
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
 
+# The one driver-side byte budget that picks where the cascade runs. It
+# counts the slim signature matrix (num_perm * 4 + 24 B/file), the
+# candidate pairs (16 B/pair) and the borderline bottom-s sigs (8 * s
+# B/file). Within it the cascade runs on the driver (_driver_cascade);
+# above it, on executors (_scan_side_cascade).
+RESIDENT_BYTES = 30_000_000
+# Pairs per numpy block in the driver's stage 1: bounds the two gathered
+# (block, num_perm) int32 temporaries to ~64 MB at any pair count.
+_BLOCK_PAIRS = 1 << 16
+_NO_SIG = np.empty(0, dtype=np.int64)
+
+
+def _hamming(a_sim, b_sim) -> np.ndarray:
+    """SimHash hamming distance per pair (popcount of the XOR)."""
+    x = np.asarray(a_sim, dtype=np.int64) ^ np.asarray(b_sim, dtype=np.int64)
+    return _POPCNT8[x.view(np.uint8).reshape(x.size, 8)].sum(axis=1)
+
+
+def _slot_estimates(
+    a_perm: np.ndarray, b_perm: np.ndarray, a_sim, b_sim, a_nsh, b_nsh,
+    num_perm: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Cascade stage 1 over a block of pairs -> (est, hamming, needs_exact).
+
+    est = matching OPH slots / num_perm. needs_exact is the small-doc
+    guard: either side has fewer shingles than signature slots (see
+    :func:`verified_pairs_cascade`)."""
+    est = (a_perm == b_perm).sum(axis=1) / num_perm
+    small = (np.asarray(a_nsh) < num_perm) | (np.asarray(b_nsh) < num_perm)
+    return est, _hamming(a_sim, b_sim), small
+
+
+def _bottom_s_jaccard(a_sigs, b_sigs, s: int) -> np.ndarray:
+    """Bottom-s Jaccard per pair of sorted sigs: with U = bottom_s(A ∪ B),
+    j ≈ |U ∩ A ∩ B| / |U| — the reference's two-pointer kernel
+    (src/sketchy.rs:419-459) as a sorted merge."""
+    jac = np.empty(len(a_sigs), dtype=np.float64)
+    for i, (a, b) in enumerate(zip(a_sigs, b_sigs)):
+        a = np.asarray(a, dtype=np.int64)
+        b = np.asarray(b, dtype=np.int64)
+        union = np.union1d(a, b)
+        k = min(union.size, s)
+        if k == 0:
+            jac[i] = 0.0
+            continue
+        ab = np.intersect1d(a, b, assume_unique=True)
+        # U = union[:k]; x in U iff x <= union[k-1] (sorted distinct)
+        jac[i] = np.searchsorted(ab, union[k - 1], side="right") / k
+    return jac
+
+
+def _verified_schema(a_col: str, b_col: str, key_type: str) -> str:
+    return (
+        f"{a_col} {key_type}, {b_col} {key_type}, "
+        "jaccard double, hamming long"
+    )
+
 
 def verified_pairs(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
@@ -111,8 +181,8 @@ def verified_pairs(
     """Arrow-kernel Jaccard verification (default path; see module doc).
 
     Estimator identical to :func:`verified_pairs_sql`: with
-    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. Sorted-merge per pair —
-    the reference's two-pointer kernel — plus vectorized simhash hamming.
+    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. Sorted-merge per pair
+    (:func:`_bottom_s_jaccard`) plus vectorized simhash hamming.
     Accepts string- (a_id/b_id) or fid- (a_fid/b_fid) keyed pairs and
     returns the same key columns it was given.
     """
@@ -123,48 +193,26 @@ def verified_pairs(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            jac = np.empty(n, dtype=np.float64)
-            a_sigs = pdf["a_sig"].to_numpy()
-            b_sigs = pdf["b_sig"].to_numpy()
-            for i in range(n):
-                a = np.asarray(a_sigs[i], dtype=np.int64)
-                b = np.asarray(b_sigs[i], dtype=np.int64)
-                union = np.union1d(a, b)
-                k = min(union.size, s)
-                if k == 0:
-                    jac[i] = 0.0
-                    continue
-                ab = np.intersect1d(a, b, assume_unique=True)
-                # U = union[:k]; x in U iff x <= union[k-1] (sorted distinct)
-                inter3 = np.searchsorted(ab, union[k - 1], side="right")
-                jac[i] = inter3 / k
-            x = (
-                pdf["a_simhash"].to_numpy(dtype=np.int64)
-                ^ pdf["b_simhash"].to_numpy(dtype=np.int64)
-            )
-            ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
             out = pd.DataFrame(
                 {
                     a_col: pdf[a_col],
                     b_col: pdf[b_col],
-                    "jaccard": jac,
-                    "hamming": ham,
+                    "jaccard": _bottom_s_jaccard(
+                        pdf["a_sig"].to_numpy(), pdf["b_sig"].to_numpy(), s
+                    ),
+                    "hamming": _hamming(
+                        pdf["a_simhash"].to_numpy(),
+                        pdf["b_simhash"].to_numpy(),
+                    ),
                 }
             )
             yield out[out["jaccard"] >= tau]
 
     return df.select(
         a_col, b_col, "a_sig", "b_sig", "a_simhash", "b_simhash"
-    ).mapInPandas(
-        fn,
-        schema=(
-            f"{a_col} {key_type}, {b_col} {key_type}, "
-            "jaccard double, hamming long"
-        ),
-    )
+    ).mapInPandas(fn, schema=_verified_schema(a_col, b_col, key_type))
 
 
 def verified_pairs_cascade(
@@ -178,12 +226,13 @@ def verified_pairs_cascade(
     by default; ``attach_ids=False`` keeps fid keys (the pipeline's
     internal flow, which stays fid-typed through connected components).
 
-    Stage 1 transfers only the 128-slot OPH signature (+simhash) per pair
-    and computes est = matching_slots / num_perm. Pairs with
+    Stage 1 reads only the 128-slot OPH signature (+simhash) per pair and
+    computes est = matching_slots / num_perm. Pairs with
     est >= tau + margin are accepted, est < tau - margin rejected
     (binomial error at 4-sigma ~ 1e-5 — negligible vs the 0.99 recall
     budget). Stage 2 runs the bottom-s estimator only on the borderline
-    band. Cuts Arrow transfer ~7x (sig_perm is 1KB vs sig's 8KB).
+    band, re-sketching just the borderline files when ``signatures``
+    lacks the ``sig`` column (``files`` is then required).
 
     Small-document guard: OPH rotation densification is biased for docs
     with fewer shingles than signature slots (A={x}, B={x,y} estimates
@@ -192,205 +241,52 @@ def verified_pairs_cascade(
     and goes straight to stage-2 exact verification (for such docs the
     bottom-s sketch is the full set, so stage 2 is exact).
 
+    Where it runs — the reference keeps every sketch in memory and scans
+    it per query (src/sketchy.rs:81):
+
+    - Resident (``resident=True``, or by default while the signature
+      matrix, the pairs and the borderline sigs fit ``RESIDENT_BYTES``,
+      30 MB): the driver collects the slim matrix and the pairs with
+      Arrow, runs both stages in numpy and returns a local frame. The
+      only Spark work is the collects and ONE re-sketch of the borderline
+      files; no Python UDF stage runs besides that re-sketch, and nothing
+      persists. On small traffic each Python task costs a fixed ~180 ms
+      before user code runs (``pyspark.worker_util.setup_spark_files``
+      calls ``importlib.invalidate_caches()``, which on CPython 3.11
+      re-reads ~16 zip directories: the pyspark.zip subpackages and the
+      spark-core jar), so the number of Python stages, not the kernels,
+      sets the cost there.
+    - Scan-side (``resident=False``, or above the budget): executors
+      attach both sides by scan-side joins and run stage 1 and
+      :func:`verified_pairs` as ``mapInPandas`` stages. The borderline
+      count is known only after stage 1, so a driver run whose
+      borderline sigs overflow the budget hands over to this path.
+
     ``n_files``: pass the already-known signature count (e.g. from the
     pipeline's eager-cache count) to avoid a second full-table count —
     each driver barrier is serial time that caps scaling efficiency.
-    ``resident``: force the broadcast (True) or scan-side join (False)
-    stage-1 attach; default picks by table size.
-    ``persisted``: list receiving every frame this function persists, for
-    the caller to unpersist. Without it the caches are tracked in a
-    module registry instead — reclaim with :func:`release_cascade_caches`
-    in long-lived sessions.
+    ``persisted``: list receiving every frame the scan-side path
+    persists, for the caller to unpersist. Without it the caches are
+    tracked in a module registry instead — reclaim with
+    :func:`release_cascade_caches` in long-lived sessions. The resident
+    path persists nothing.
     """
-    tau = cfg.jaccard_threshold
-    num_perm = cfg.num_perm
-    min_sh = num_perm  # densification-bias bound (see docstring)
-    spark = signatures.sparkSession
-    a_col, b_col, key, key_type = _key_cols(pairs)
+    _, _, key, _ = _key_cols(pairs)
     sigs = _keyed_signatures(signatures, key)
-
-    # Resident-collection strategy (the reference keeps every reference
-    # sketch in memory and scans it per query, src/sketchy.rs:81): when
-    # the slim signature map fits an executor, ship (key -> sig_perm,
-    # simhash) as a broadcast variable and evaluate pairs map-side — no
-    # attach joins at all. Falls back to scan-side joins beyond the cap.
-    # Resident is only a win while the broadcast stays trivially small:
-    # every Python worker unpickles the full signature matrix once, so at
-    # W workers the aggregate deserialization is W x size — measured
-    # 37.7s vs 8.9s (scan-side) for a 440 MB matrix at 32 workers. The
-    # scan-side attach (broadcast the PAIR ids, stream the cached
-    # signatures map-side) scales with workers and is the 100 TB default.
+    sig_budget = None  # forced resident: no cap on the borderline sigs
     if resident is None:
         if n_files is None:
             n_files = signatures.count()
-        resident = n_files * (cfg.num_perm * 4 + 24) < 30_000_000
+        sig_budget = RESIDENT_BYTES - n_files * (cfg.num_perm * 4 + 24)
+        if sig_budget > 0:
+            sig_budget -= 16 * pairs.count()
+        resident = sig_budget > 0
 
+    out = None
     if resident:
-        # Arrow-native collect: flatten the fixed-width sig_perm lists
-        # into an (n, num_perm) int64 matrix zero-copy — no pandas object
-        # column, no per-row vstack (both are serial driver time).
-        tbl = (
-            sigs.select(key, "sig_perm", "simhash", "n_shingles")
-            .toArrow()
-            .combine_chunks()
-        )
-        n_rows = tbl.num_rows
-        if n_rows and tbl["sig_perm"].num_chunks:
-            sig_mat = np.asarray(
-                tbl["sig_perm"].chunk(0).flatten()
-            ).reshape(n_rows, num_perm)
-        else:
-            sig_mat = np.zeros((0, num_perm), dtype=np.int64)
-        sim_vec = tbl["simhash"].to_numpy(zero_copy_only=False).astype(np.int64)
-        nsh_vec = tbl["n_shingles"].to_numpy(zero_copy_only=False).astype(np.int64)
-        if key == "fid":
-            keys = tbl[key].to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.argsort(keys)
-            payload = (
-                keys[order], sig_mat[order], sim_vec[order], nsh_vec[order]
-            )
-
-            def lookup(bc_val, col: pd.Series) -> np.ndarray:
-                return np.searchsorted(bc_val[0], col.to_numpy(dtype=np.int64))
-        else:
-            index = {f: i for i, f in enumerate(tbl[key].to_pylist())}
-            payload = (index, sig_mat, sim_vec, nsh_vec)
-
-            def lookup(bc_val, col: pd.Series) -> np.ndarray:
-                idx = bc_val[0]
-                return np.array([idx[x] for x in col], dtype=np.int64)
-
-        bc = spark.sparkContext.broadcast(payload)
-
-        def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            val = bc.value
-            _, mat, sim, nsh = val
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                ai = lookup(val, pdf[a_col])
-                bi = lookup(val, pdf[b_col])
-                est = (mat[ai] == mat[bi]).sum(axis=1) / num_perm
-                x = sim[ai] ^ sim[bi]
-                ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
-                small = (nsh[ai] < min_sh) | (nsh[bi] < min_sh)
-                out = pd.DataFrame(
-                    {
-                        a_col: pdf[a_col],
-                        b_col: pdf[b_col],
-                        "jaccard": est,
-                        "hamming": ham,
-                        "needs_exact": small,
-                    }
-                )
-                yield out[small | (est >= tau - margin)]
-
-        src = pairs
-    else:
-        def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                a = np.vstack(pdf["a_sig_perm"].to_numpy())
-                b = np.vstack(pdf["b_sig_perm"].to_numpy())
-                est = (a == b).sum(axis=1) / num_perm
-                x = (
-                    pdf["a_simhash"].to_numpy(dtype=np.int64)
-                    ^ pdf["b_simhash"].to_numpy(dtype=np.int64)
-                )
-                ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
-                small = (
-                    (pdf["a_n_shingles"].to_numpy(dtype=np.int64) < min_sh)
-                    | (pdf["b_n_shingles"].to_numpy(dtype=np.int64) < min_sh)
-                )
-                out = pd.DataFrame(
-                    {
-                        a_col: pdf[a_col],
-                        b_col: pdf[b_col],
-                        "jaccard": est,
-                        "hamming": ham,
-                        "needs_exact": small,
-                    }
-                )
-                yield out[small | (est >= tau - margin)]
-
-        # The scan-side attach broadcasts the pair frame twice (a- and
-        # b-side). ReusedExchange can NOT be assumed to dedupe the two
-        # builds: a pair DAG containing collect_list (the band groupBy)
-        # is flagged non-deterministic, which disables exchange reuse —
-        # so an unmaterialized pair frame would execute its full DAG
-        # twice. The pipeline pre-persists pairs (candidate_pairs_fid
-        # eager path); for any other caller, persist here and hand the
-        # cache to ``persisted`` (or track it in the module registry when
-        # no release list was provided — correctness over a leak, but a
-        # reclaimable one: see release_cascade_caches).
-        from pyspark import StorageLevel
-
-        if pairs.storageLevel == StorageLevel.NONE:
-            pairs = pairs.persist()
-            (persisted if persisted is not None else _CASCADE_CACHES).append(
-                pairs
-            )
-        src = _with_sides(
-            pairs, sigs, ["sig_perm", "simhash", "n_shingles"]
-        ).select(
-            a_col, b_col, "a_sig_perm", "b_sig_perm", "a_simhash",
-            "b_simhash", "a_n_shingles", "b_n_shingles",
-        )
-
-    coarse = src.mapInPandas(
-        stage1,
-        schema=(
-            f"{a_col} {key_type}, {b_col} {key_type}, jaccard double, "
-            "hamming long, needs_exact boolean"
-        ),
-    ).persist()
-    # Eager: accepted and the borderline re-sketch broadcast are separate
-    # query stages; AQE materializes them concurrently, and concurrent
-    # consumers of a lazily-persisted frame each run their own evaluation.
-    coarse.count()
-    (persisted if persisted is not None else _CASCADE_CACHES).append(coarse)
-    accepted = coarse.where(
-        (~F.col("needs_exact")) & (F.col("jaccard") >= tau + margin)
-    ).drop("needs_exact")
-    borderline = coarse.where(
-        F.col("needs_exact") | (F.col("jaccard") < tau + margin)
-    ).select(a_col, b_col)
-
-    if "sig" in signatures.columns:
-        sig_source = sigs
-    else:
-        # slim signatures (no bottom-s column): re-sketch only the
-        # borderline files — O(|borderline|), not O(corpus)
-        if files is None:
-            raise ValueError(
-                "signatures lack 'sig' and no files source given"
-            )
-        from sketchy_spark.operators.lsh import with_fid
-        from sketchy_spark.operators.sketch import sketch_files
-
-        wanted_keys = (
-            borderline.select(F.col(a_col).alias(key))
-            .unionAll(borderline.select(F.col(b_col).alias(key)))
-            .distinct()
-        )
-        wanted_ids = (
-            sigs.select(key, "file_id")
-            .join(F.broadcast(wanted_keys), key, "left_semi")
-            .select("file_id")
-        )
-        wanted = files.join(
-            F.broadcast(wanted_ids),
-            F.concat_ws("/", "repo", "path") == F.col("file_id"),
-            "left_semi",
-        )
-        sig_source = sketch_files(wanted, cfg, with_sig=True)
-        if key == "fid":
-            sig_source = with_fid(sig_source)
-    refined = verified_pairs(borderline, sig_source, cfg)
-    out = accepted.unionByName(refined)
+        out = _driver_cascade(pairs, sigs, cfg, margin, files, sig_budget)
+    if out is None:
+        out = _scan_side_cascade(pairs, sigs, cfg, margin, files, persisted)
 
     if key == "fid" and attach_ids:
         from sketchy_spark.operators.lsh import attach_file_ids
@@ -402,6 +298,194 @@ def verified_pairs_cascade(
             "hamming",
         )
     return out
+
+
+def _borderline_sigs(
+    wanted: DataFrame, sigs: DataFrame, files: DataFrame | None,
+    cfg: SketchConfig,
+) -> DataFrame:
+    """Signatures WITH the bottom-s ``sig`` column for the keys in the
+    one-column frame ``wanted`` (fid or file_id). Slim signatures are
+    re-sketched from ``files`` for those files only — O(|borderline|),
+    not O(corpus) — without winnow fingerprints."""
+    key = wanted.columns[0]
+    if "sig" in sigs.columns:
+        return sigs.join(F.broadcast(wanted), key, "left_semi")
+    if files is None:
+        raise ValueError("signatures lack 'sig' and no files source given")
+    from sketchy_spark.operators.lsh import with_fid
+    from sketchy_spark.operators.sketch import sketch_files
+
+    file_key = F.concat_ws("/", "repo", "path")  # sketch_files' file_id
+    if key == "fid":
+        file_key = F.xxhash64(file_key)  # with_fid's hash of file_id
+    picked = files.join(
+        F.broadcast(wanted), file_key == wanted[key], "left_semi"
+    )
+    out = sketch_files(picked, cfg, with_sig=True, with_fp=False)
+    return with_fid(out) if key == "fid" else out
+
+
+def _driver_cascade(
+    pairs: DataFrame, sigs: DataFrame, cfg: SketchConfig, margin: float,
+    files: DataFrame | None, sig_budget: int | None,
+) -> DataFrame | None:
+    """The resident cascade, evaluated on the driver (see
+    :func:`verified_pairs_cascade`). ``sig_budget``: bytes left for the
+    borderline sigs (None: no cap); returns None when they exceed it."""
+    spark = sigs.sparkSession
+    a_col, b_col, key, key_type = _key_cols(pairs)
+    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
+    schema = _verified_schema(a_col, b_col, key_type)
+
+    # Arrow-native collect: the fixed-width sig_perm lists flatten into
+    # an (n, num_perm) matrix zero-copy — no pandas object column.
+    tbl = sigs.select(key, "sig_perm", "simhash", "n_shingles").toArrow()
+    keys, first = np.unique(tbl[key].to_numpy(), return_index=True)
+    mat = np.asarray(tbl["sig_perm"].combine_chunks().flatten()).reshape(
+        -1, num_perm
+    )[first]
+    sim = tbl["simhash"].to_numpy()[first]
+    nsh = tbl["n_shingles"].to_numpy()[first]
+    index = pd.Index(keys)
+
+    ptbl = pairs.select(a_col, b_col).toArrow()
+    a, b = ptbl[a_col].to_numpy(), ptbl[b_col].to_numpy()
+    ai, bi = index.get_indexer(a), index.get_indexer(b)
+    found = (ai >= 0) & (bi >= 0)  # the scan-side joins drop the rest
+    a, b, ai, bi = a[found], b[found], ai[found], bi[found]
+    if not a.size:
+        return spark.createDataFrame([], schema)
+
+    blocks = [
+        _slot_estimates(
+            mat[ai[sl]], mat[bi[sl]], sim[ai[sl]], sim[bi[sl]],
+            nsh[ai[sl]], nsh[bi[sl]], num_perm,
+        )
+        for sl in (
+            slice(lo, lo + _BLOCK_PAIRS)
+            for lo in range(0, a.size, _BLOCK_PAIRS)
+        )
+    ]
+    est, ham, small = (np.concatenate(x) for x in zip(*blocks))
+    accept = ~small & (est >= tau + margin)
+    border = ~accept & (small | (est >= tau - margin))
+    keep, jac = accept, est
+
+    if border.any():
+        wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
+        if sig_budget is not None and 8 * cfg.s * wanted_pos.size > sig_budget:
+            return None
+        wanted = spark.createDataFrame(
+            pd.DataFrame({key: keys[wanted_pos]}), f"{key} {key_type}"
+        )
+        got = (
+            _borderline_sigs(wanted, sigs, files, cfg)
+            .select(key, "sig")
+            .toArrow()
+        )
+        sig_of = dict(
+            zip(index.get_indexer(got[key].to_numpy()), got["sig"].to_numpy())
+        )
+        jac = est.copy()
+        jac[border] = _bottom_s_jaccard(
+            [sig_of.get(i, _NO_SIG) for i in ai[border]],
+            [sig_of.get(i, _NO_SIG) for i in bi[border]],
+            cfg.s,
+        )
+        keep = accept | (border & (jac >= tau))
+
+    return spark.createDataFrame(
+        pd.DataFrame({
+            a_col: a[keep], b_col: b[keep],
+            "jaccard": jac[keep], "hamming": ham[keep],
+        }),
+        schema,
+    )
+
+
+def _scan_side_cascade(
+    pairs: DataFrame, sigs: DataFrame, cfg: SketchConfig, margin: float,
+    files: DataFrame | None, persisted: list | None,
+) -> DataFrame:
+    """The cascade on executors (see :func:`verified_pairs_cascade`):
+    stage 1 and stage 2 are ``mapInPandas`` stages over scan-side
+    attach joins — broadcast the PAIR ids, stream the cached signatures
+    map-side — which scales with workers (the 100 TB default)."""
+    a_col, b_col, key, key_type = _key_cols(pairs)
+    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
+
+    def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            est, ham, small = _slot_estimates(
+                np.vstack(pdf["a_sig_perm"].to_numpy()),
+                np.vstack(pdf["b_sig_perm"].to_numpy()),
+                pdf["a_simhash"].to_numpy(),
+                pdf["b_simhash"].to_numpy(),
+                pdf["a_n_shingles"].to_numpy(),
+                pdf["b_n_shingles"].to_numpy(),
+                num_perm,
+            )
+            out = pd.DataFrame(
+                {
+                    a_col: pdf[a_col],
+                    b_col: pdf[b_col],
+                    "jaccard": est,
+                    "hamming": ham,
+                    "needs_exact": small,
+                }
+            )
+            yield out[small | (est >= tau - margin)]
+
+    # The scan-side attach broadcasts the pair frame twice (a- and
+    # b-side). ReusedExchange can NOT be assumed to dedupe the two
+    # builds: a pair DAG containing collect_list (the band groupBy) is
+    # flagged non-deterministic, which disables exchange reuse — so an
+    # unmaterialized pair frame would execute its full DAG twice. The
+    # pipeline pre-persists pairs (candidate_pairs_fid eager path); for
+    # any other caller, persist here and hand the cache to ``persisted``
+    # (or track it in the module registry when no release list was
+    # provided — correctness over a leak, but a reclaimable one: see
+    # release_cascade_caches).
+    from pyspark import StorageLevel
+
+    keep = persisted if persisted is not None else _CASCADE_CACHES
+    if pairs.storageLevel == StorageLevel.NONE:
+        pairs = pairs.persist()
+        keep.append(pairs)
+    src = _with_sides(
+        pairs, sigs, ["sig_perm", "simhash", "n_shingles"]
+    ).select(
+        a_col, b_col, "a_sig_perm", "b_sig_perm", "a_simhash",
+        "b_simhash", "a_n_shingles", "b_n_shingles",
+    )
+    coarse = src.mapInPandas(
+        stage1,
+        schema=_verified_schema(a_col, b_col, key_type)
+        + ", needs_exact boolean",
+    ).persist()
+    # Eager: accepted and the borderline re-sketch broadcast are separate
+    # query stages; AQE materializes them concurrently, and concurrent
+    # consumers of a lazily-persisted frame each run their own evaluation.
+    coarse.count()
+    keep.append(coarse)
+    accepted = coarse.where(
+        (~F.col("needs_exact")) & (F.col("jaccard") >= tau + margin)
+    ).drop("needs_exact")
+    borderline = coarse.where(
+        F.col("needs_exact") | (F.col("jaccard") < tau + margin)
+    ).select(a_col, b_col)
+    wanted = (
+        borderline.select(F.col(a_col).alias(key))
+        .unionAll(borderline.select(F.col(b_col).alias(key)))
+        .distinct()
+    )
+    refined = verified_pairs(
+        borderline, _borderline_sigs(wanted, sigs, files, cfg), cfg
+    )
+    return accepted.unionByName(refined)
 
 
 def verified_pairs_sql(
@@ -453,7 +537,7 @@ def verified_pairs_sql(
 
 def containment_candidates(
     signatures: DataFrame, cfg: SketchConfig,
-    min_containment: float | None = None,
+    min_containment: float | None = None, persisted: list | None = None,
 ) -> DataFrame:
     """Fingerprint-overlap containment candidates (G3, candidate stage).
 
@@ -463,6 +547,9 @@ def containment_candidates(
     count (containment score). Pairs at any Jaccard can surface here —
     this is the path that catches low-Jaccard verbatim embeddings LSH
     misses.
+
+    ``persisted`` receives the fingerprint-group cache for the caller to
+    unpersist (module registry otherwise, as in the cascade).
     """
     fp = signatures.select(
         "file_id", F.explode("fingerprints").alias("fp")
@@ -479,6 +566,7 @@ def containment_candidates(
         .persist()
     )
     groups.count()  # eager: two consumers + AQE would double-evaluate
+    (persisted if persisted is not None else _CASCADE_CACHES).append(groups)
     pairs = (
         groups.where(F.size("ids") <= cfg.fp_skew_cap)
         .select(F.explode("ids").alias("a_id"), "ids")
@@ -530,6 +618,7 @@ def containment_candidates(
 def containment_verified(
     candidates: DataFrame, files: DataFrame,
     cfg: SketchConfig | None = None, min_overlap_chars: int = 512,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Exact-substring containment verification (G3, verify stage).
 
@@ -550,6 +639,8 @@ def containment_verified(
 
     Output: (small_id, big_id, containment, overlap_chars) — containment
     is the verified overlap fraction of the smaller side (1.0 for tier 1).
+    ``persisted`` receives the staged pair cache for the caller to
+    unpersist (module registry otherwise, as in the cascade).
     """
     from sketchy_spark.config import DEFAULT_CONFIG
 
@@ -583,6 +674,7 @@ def containment_verified(
     # would otherwise race the unpopulated cache, re-running the
     # content-wide candidate joins twice.
     staged.count()
+    (persisted if persisted is not None else _CASCADE_CACHES).append(staged)
     full = staged.where(F.instr("big_c", "small_c") > 0).select(
         "small_id",
         "big_id",

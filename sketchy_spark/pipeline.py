@@ -96,12 +96,20 @@ def run_pipeline(
     # The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
     # operators/lsh.py); file_id strings attach once, to final outputs.
     # ``internal`` collects every frame the stages persist (band cache,
-    # candidate pairs, coarse estimates) so unpersist() can release them.
+    # candidate pairs, scan-side cascade estimates, containment groups
+    # and staged pairs) so unpersist() can release them.
     internal: list[DataFrame] = []
     fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
     # the cache is populated by the candidate stage's first action, so
     # this count is a memory scan (cheap), not a second sketch pass
     n_files = signatures.count() if cache_signatures else None
+    # Within the cascade's 30 MB budget (signature matrix + candidate
+    # pairs + borderline sigs) the cascade runs on the driver: the only
+    # Python stage it starts is one re-sketch of the borderline files,
+    # and its result is a local frame. Every Python task costs a fixed
+    # ~180 ms of worker file setup, so at dup-dense sizes that is what
+    # the verify layer's wall time tracks. Above the budget it runs
+    # scan-side on executors (operators/verify.py).
     verified_fid = verified_pairs_cascade(
         fid_candidates, signatures, cfg, files=files, n_files=n_files,
         attach_ids=False, persisted=internal,
@@ -135,9 +143,11 @@ def run_pipeline(
             containment_candidates(
                 signatures, cfg,
                 min_containment=min(0.25, cfg.containment_threshold),
+                persisted=internal,
             ),
             files,
             cfg,
+            persisted=internal,
         )
     else:
         cont = (

@@ -15,10 +15,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_pushed_filters(df: DataFrame) -> bool:
     """True if the scan carries PushedFilters (predicate pushdown hit
     the parquet reader)."""

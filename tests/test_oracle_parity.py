@@ -166,6 +166,18 @@ def test_ann_params_dim_caps_probe_diversity():
     assert sim.ann_params(0.9, n=1_000_000_000)[0] == 28
 
 
+def test_ann_params_refuses_bits_at_or_above_dim():
+    """A bucket window of bits >= dim covers every dim, so all its probes
+    are the same bucket table: (19, 5) on 8 dims would ship one real
+    probe. Such widths are infeasible and the derivation routes to IVF."""
+    from sketchy_spark.functions import similarity as sim
+
+    with pytest.raises(ValueError, match="IVF"):
+        sim.ann_params(0.99, n=10**6, dim=8)
+    bits, _ = sim.ann_params(0.9, n=40, dim=8)
+    assert bits < 8
+
+
 def test_ann_multiprobe_derivation_reads_dim(spark):
     """The derivation path must feed the MEASURED embedding width into
     ann_params' diversity cap (one fused agg job: n + dim). On 8-dim

@@ -142,3 +142,22 @@ def test_permutation_invariance(spark):
     p1 = run_pipeline(files, CFG, with_containment=False)
     p2 = run_pipeline(shuffled, CFG, with_containment=False)
     assert _cluster_pairs(p1.clusters) == _cluster_pairs(p2.clusters)
+
+
+def test_unpersist_releases_every_pipeline_cache(spark):
+    """PipelineResult.unpersist() releases every frame the run persisted,
+    containment fingerprint groups and staged pairs included: the JVM's
+    persistent-RDD registry returns to its pre-run size."""
+
+    def n_persistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = n_persistent()
+    # a corpus no other test builds: identical plans share one cache
+    files = corpus_df(spark, 300, seed=7)
+    res = run_pipeline(files, CFG, with_containment=True)
+    res.clusters.collect()
+    assert res.containment.count() > 0
+    assert n_persistent() > base
+    res.unpersist()
+    assert n_persistent() == base

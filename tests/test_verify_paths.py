@@ -299,11 +299,13 @@ def test_minima_cache_refuses_oversized_entry():
 
 
 def test_release_cascade_caches_reclaims_storage(spark):
-    """VERDICT r4 #8: ad-hoc cascades (no ``persisted`` list) park their
-    required persists in _CASCADE_CACHES; release_cascade_caches() must
-    actually unpersist them — the JVM's persistent-RDD registry shrinks
-    back to its pre-call footprint, so repeated ad-hoc use in a
-    long-lived session cannot accumulate executor storage."""
+    """VERDICT r4 #8: ad-hoc scan-side cascades (no ``persisted`` list)
+    park their required persists in _CASCADE_CACHES;
+    release_cascade_caches() must actually unpersist them — the JVM's
+    persistent-RDD registry shrinks back to its pre-call footprint, so
+    repeated ad-hoc use in a long-lived session cannot accumulate
+    executor storage. The resident cascade runs on the driver and
+    persists nothing."""
     import pandas as pd
 
     from sketchy_spark.operators import verify as V
@@ -327,14 +329,97 @@ def test_release_cascade_caches_reclaims_storage(spark):
     sigs = sketch_files(files, CFG).cache()
     n = sigs.count()
     cand = candidate_pairs_fid(sigs, CFG)
-    # ad-hoc call: no persisted list -> caches tracked module-side
-    V.verified_pairs_cascade(cand, sigs, CFG, n_files=n).count()
+    # resident ad-hoc call: evaluated on the driver, nothing retained
+    V.verified_pairs_cascade(cand, sigs, CFG, n_files=n, resident=True).count()
+    assert len(V._CASCADE_CACHES) == 0
+    # scan-side ad-hoc call: no persisted list -> caches tracked module-side
+    V.verified_pairs_cascade(
+        cand, sigs, CFG, n_files=n, resident=False
+    ).count()
     assert len(V._CASCADE_CACHES) > 0
     assert n_persistent() > base_rdds + 1  # sigs cache + cascade persists
     V.release_cascade_caches()
     assert len(V._CASCADE_CACHES) == 0
     sigs.unpersist(blocking=True)
     assert n_persistent() <= base_rdds
+
+
+def test_resident_cascade_matches_scan_side(spark, monkeypatch):
+    """The driver-side (resident) cascade and the executor (scan-side)
+    cascade return identical (a_fid, b_fid, jaccard, hamming) rows on a
+    corpus with accepted, borderline and small-doc pairs (n_shingles <
+    num_perm), and the resident result's plan runs no Python UDF. A
+    default call whose borderline sigs overflow the resident budget hands
+    over to the scan-side path."""
+    import numpy as np
+    import pandas as pd
+
+    from sketchy_spark.corpus import FILES_COLUMNS
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.operators.lsh import candidate_pairs_fid, with_fid
+    from sketchy_spark.plans.explain import physical_plan
+
+    tiny = pd.DataFrame(
+        [
+            ("org/tiny", f"t{i}.py", f"t{i}", "py",
+             "alpha = beta(1)\n" * 2 + f"gamma = {i % 2}")
+            for i in range(6)
+        ],
+        columns=FILES_COLUMNS,
+    )
+    files = spark.createDataFrame(
+        pd.concat([corpus_pandas(400)[FILES_COLUMNS], tiny], ignore_index=True)
+    )
+    sigs = with_fid(sketch_files(files, CFG, with_sig=False)).cache()
+    n = sigs.count()
+    internal = []
+    cand = candidate_pairs_fid(sigs, CFG, persisted=internal)
+
+    # the corpus covers every stage-1 branch
+    tbl = sigs.select("fid", "sig_perm", "simhash", "n_shingles").toPandas()
+    tbl = tbl.set_index("fid")
+    c = cand.toPandas()
+    a, b = tbl.loc[c["a_fid"]], tbl.loc[c["b_fid"]]
+    est, _, small = V._slot_estimates(
+        np.vstack(a["sig_perm"]), np.vstack(b["sig_perm"]),
+        a["simhash"], b["simhash"], a["n_shingles"], b["n_shingles"],
+        CFG.num_perm,
+    )
+    tau = CFG.jaccard_threshold
+    assert small.any()
+    assert (~small & (est >= tau + 0.15)).any()
+    assert (~small & (est >= tau - 0.15) & (est < tau + 0.15)).any()
+
+    def rows(df):
+        return sorted(
+            (r.a_fid, r.b_fid, r.jaccard, r.hamming) for r in df.collect()
+        )
+
+    def cascade(resident):
+        return V.verified_pairs_cascade(
+            cand, sigs, CFG, files=files, n_files=n, resident=resident,
+            attach_ids=False, persisted=internal,
+        )
+
+    resident = cascade(True)
+    plan = physical_plan(resident)
+    for node in ("MapInPandas", "PythonMapInArrow", "BatchEvalPython"):
+        assert node not in plan, plan
+    want = rows(resident)
+    assert len(want) > 0
+    assert rows(cascade(False)) == want
+
+    # matrix and pairs fit the budget, the borderline sigs do not
+    monkeypatch.setattr(
+        V, "RESIDENT_BYTES",
+        n * (CFG.num_perm * 4 + 24) + 16 * cand.count() + 1,
+    )
+    handed_over = cascade(None)
+    assert "MapInPandas" in physical_plan(handed_over)
+    assert rows(handed_over) == want
+    for df in internal:
+        df.unpersist()
+    sigs.unpersist()
 
 
 def test_candidate_sets_agree_across_eager_and_lazy_paths(spark):
