@@ -22,8 +22,11 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_DIR = "_manifest"
+# Footer key under which Spark's parquet writer stores the row schema.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _StoreBase:
@@ -96,6 +99,11 @@ class CheckpointStore(_StoreBase):
         ``meta``: small JSON-able dict stored verbatim in the manifest
         (e.g. the compaction's folded-batch set) — the writer's own
         bookkeeping, opaque to the store.
+
+        ``schema``: the Spark schema (StructType JSON) Spark records in
+        every part footer under ``SPARK_SCHEMA_KEY``, taken from the
+        first footer already opened for lineage; :meth:`read_stage`
+        pins it so a read runs no schema-inference job.
         """
         t0 = time.time()
         path = self.stage_path(stage)
@@ -105,14 +113,19 @@ class CheckpointStore(_StoreBase):
         import pyarrow.parquet as pq
 
         lineage = []
+        schema = None
         for part in sorted(Path(tmp).glob("part-*.parquet")):
+            footer = pq.ParquetFile(part).metadata
             lineage.append(
                 {
                     "file": part.name,
                     "task_id": int(part.name.split("-")[1]),
-                    "rows": pq.ParquetFile(part).metadata.num_rows,
+                    "rows": footer.num_rows,
                 }
             )
+            raw = (footer.metadata or {}).get(SPARK_SCHEMA_KEY)
+            if schema is None and raw:
+                schema = json.loads(raw)
         n_rows = sum(e["rows"] for e in lineage)
         shutil.rmtree(path, ignore_errors=True)
         Path(tmp).rename(path)
@@ -127,12 +140,20 @@ class CheckpointStore(_StoreBase):
                     "config_hash": self.config_hash,
                     "ts": time.time(),
                     "meta": meta or {},
+                    "schema": schema,
                 }
             )
         )
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.stage_path(stage))
+        """Read a stage against the schema its manifest recorded — no
+        footer-inference job. A manifest without one (older store, or a
+        stage written without part files) falls back to inference."""
+        m = self.manifest(stage)
+        reader = spark.read
+        if m is not None and m.get("schema"):
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(self.stage_path(stage))
 
     def invalidate_from(self, stages: list[str], failed: str) -> None:
         """Drop manifests for ``failed`` and everything after it."""

@@ -23,6 +23,12 @@ already-stored signatures without duplicating rows (the r1 crash-window
 bug: promoting a rewritten sig_all before the edges marker permanently
 double-counted the batch).
 
+Per-batch driver work is kept fixed and small: a batch bands the new and
+the previous signatures once each (the accumulated band table is their
+union), collects its hot band-key set in one job, and reads every stage
+against the Spark schema its manifest recorded, so no read runs a
+schema-inference job (checkpoint.py ``read_stage``).
+
 True sub-second streaming would swap the batch source for
 ``readStream`` + ``applyInPandasWithState``; the north rule requires
 resumable incremental batches, which is what this is.
@@ -42,20 +48,24 @@ from sketchy_spark.operators.verify import verified_pairs
 
 
 def _new_vs_all_candidates(
-    new_sigs: DataFrame,
-    all_sigs: DataFrame,
-    cfg: SketchConfig,
-    prev_sigs: DataFrame | None = None,
+    new_sigs: DataFrame, prev_sigs: DataFrame | None, cfg: SketchConfig
 ) -> DataFrame:
     """Band join restricted to pairs touching a new file: the incremental
     form of G1. Work is O(|new| x collision) instead of O(|all|²).
 
-    Hot band keys (> cap members in the accumulated corpus) are excluded
-    from the all-pairs join and handled like the batch path's salted
-    stars (operators/lsh.py): each NEW member of a hot band pairs with
-    the band's hub, so an over-cap near-dup clique keeps absorbing
-    arrivals through its hub instead of silently dropping them —
-    O(|new|) extra candidates.
+    The batch bands each side once — ``new_bands`` and ``prev_bands``,
+    whose union is the accumulated band table — and collects its hot set
+    (> cap members in the accumulated corpus) in ONE job. An empty hot
+    set, the usual case, leaves a plain cold join: no anti-joins and no
+    hub branch. A non-empty one comes back as a small broadcast table
+    (the ``candidate_pairs_fid`` over-cap fallback's shape), so the
+    joins that consume it never re-plan the band aggregation.
+
+    Hot band keys are excluded from the all-pairs join and handled like
+    the batch path's salted stars (operators/lsh.py): each NEW member of
+    a hot band pairs with the band's hub, so an over-cap near-dup clique
+    keeps absorbing arrivals through its hub instead of silently
+    dropping them — O(|new|) extra candidates.
 
     The hub MUST come from the pre-batch corpus when the band has prior
     members: taking min(file_id) over the accumulated bands (old bug)
@@ -68,10 +78,26 @@ def _new_vs_all_candidates(
     hub only for bands with no prior members at all.
     """
     new_bands = band_table(new_sigs, cfg)
-    all_bands = band_table(all_sigs, cfg)
-    hot = hot_band_keys(all_bands, cfg.band_skew_cap)
-    new_cold = new_bands.join(F.broadcast(hot), "band_key", "left_anti")
-    all_cold = all_bands.join(F.broadcast(hot), "band_key", "left_anti")
+    prev_bands = band_table(prev_sigs, cfg) if prev_sigs is not None else None
+    all_bands = (
+        prev_bands.unionByName(new_bands)
+        if prev_bands is not None
+        else new_bands
+    )
+    hot_keys = [
+        r["band_key"]
+        for r in hot_band_keys(all_bands, cfg.band_skew_cap).collect()
+    ]
+
+    new_cold, all_cold = new_bands, all_bands
+    if hot_keys:
+        hot = F.broadcast(
+            new_sigs.sparkSession.createDataFrame(
+                [(k,) for k in hot_keys], "band_key long"
+            )
+        )
+        new_cold = new_bands.join(hot, "band_key", "left_anti")
+        all_cold = all_bands.join(hot, "band_key", "left_anti")
     n = new_cold.select(F.col("file_id").alias("n_id"), "band_key")
     m = all_cold.select(F.col("file_id").alias("m_id"), "band_key")
     pairs = (
@@ -82,15 +108,16 @@ def _new_vs_all_candidates(
             F.greatest("n_id", "m_id").alias("b_id"),
         )
     )
+    if not hot_keys:
+        return pairs.distinct()
     batch_hub = (
-        new_bands.join(F.broadcast(hot), "band_key", "left_semi")
+        new_bands.join(hot, "band_key", "left_semi")
         .groupBy("band_key")
         .agg(F.min("file_id").alias("bhub"))
     )
-    if prev_sigs is not None:
+    if prev_bands is not None:
         prev_hub = (
-            band_table(prev_sigs, cfg)
-            .join(F.broadcast(hot), "band_key", "left_semi")
+            prev_bands.join(hot, "band_key", "left_semi")
             .groupBy("band_key")
             .agg(F.min("file_id").alias("phub"))
         )
@@ -393,9 +420,7 @@ class IncrementalDedup:
             if prev_sigs is not None
             else new_sigs
         )
-        cand = _new_vs_all_candidates(
-            new_sigs, all_sigs, self.cfg, prev_sigs=prev_sigs
-        )
+        cand = _new_vs_all_candidates(new_sigs, prev_sigs, self.cfg)
         ver = verified_pairs(cand, all_sigs, self.cfg).select("a_id", "b_id")
         exact = _incremental_exact_edges(new_sigs, prev_sigs)
         self.store.write_stage(

@@ -421,3 +421,138 @@ def test_clusters_skips_edge_count_action(spark, tmp_path):
     assert got == _pairs(single.clusters)
     single.unpersist()
     files.unpersist()
+
+
+def test_read_stage_pins_recorded_schema(spark, tmp_path):
+    """write_stage records the Spark schema from the part footers, so
+    read_stage reads against it: same schema and rows as an inferring
+    read, and no schema-inference job. A manifest without the key (an
+    older store) still reads, by inference."""
+    import json
+
+    from sketchy_spark.operators.sketch import sketch_files
+
+    files = corpus_df(spark, 120)
+    store = CheckpointStore(str(tmp_path / "pin"), CFG.config_hash)
+    sigs, _ = store.get_or_compute(
+        spark, "sig_batch_00000", lambda: sketch_files(files, CFG)
+    )
+    store.write_stage(
+        "edges_batch_00000",
+        sigs.select(
+            F.col("file_id").alias("a_id"), F.col("file_id").alias("b_id")
+        ),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for stage in ("sig_batch_00000", "edges_batch_00000"):
+        assert store.manifest(stage)["schema"]
+        inferred = spark.read.parquet(store.stage_path(stage))
+
+        group = f"pin-{stage}"
+        sc.setJobGroup(group, "schema-pinned read")
+        try:
+            pinned = store.read_stage(spark, stage)
+            jobs = list(tracker.getJobIdsForGroup(group))
+            spark.read.parquet(store.stage_path(stage))
+            inferring_jobs = list(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == [], jobs
+        assert inferring_jobs, "an inferring read should run a job"
+        assert pinned.schema == inferred.schema
+        key = pinned.columns[0]
+        assert sorted(pinned.select(key).collect()) == sorted(
+            inferred.select(key).collect()
+        )
+
+        path = store._manifest_path(stage)
+        m = json.loads(path.read_text())
+        del m["schema"]
+        path.write_text(json.dumps(m))
+        legacy = store.read_stage(spark, stage)
+        assert legacy.schema == inferred.schema
+        assert legacy.count() == store.manifest(stage)["rows"]
+
+
+def _band_truth(new_bands, prev_bands, cap):
+    """Pandas truth for the incremental candidate set, from collected
+    (file_id, band_key) band tables: all pairs over cold keys that touch
+    a new file, plus new member -> hub edges on hot keys (hub = the
+    prior-corpus minimum, else the batch minimum)."""
+    import pandas as pd
+
+    every = pd.concat([prev_bands, new_bands])
+    counts = every.groupby("band_key").size()
+    hot = set(counts[counts > cap].index)
+    want = set()
+    cold_new = new_bands[~new_bands.band_key.isin(hot)]
+    cold_all = every[~every.band_key.isin(hot)]
+    members = cold_all.groupby("band_key").file_id.apply(set)
+    for n_id, key in zip(cold_new.file_id, cold_new.band_key):
+        for m_id in members[key]:
+            if m_id != n_id:
+                want.add((min(n_id, m_id), max(n_id, m_id)))
+    prev_min = prev_bands.groupby("band_key").file_id.min()
+    new_min = new_bands.groupby("band_key").file_id.min()
+    hot_new = new_bands[new_bands.band_key.isin(hot)]
+    for f_id, key in zip(hot_new.file_id, hot_new.band_key):
+        hub = prev_min.get(key, new_min[key])
+        if f_id != hub:
+            want.add((min(f_id, hub), max(f_id, hub)))
+    return want, hot
+
+
+def test_new_vs_all_candidates_match_band_truth(spark):
+    """The incremental candidate set equals a pandas truth built from the
+    collected band tables, with hot keys present (cap 8, a new arrival
+    that is the global minimum of every hot band) and with an empty hot
+    set (default cap), whose plan joins no hot-key frame."""
+    import pandas as pd
+
+    from sketchy_spark.corpus import corpus_pandas
+    from sketchy_spark.operators.lsh import band_table
+    from sketchy_spark.operators.sketch import sketch_files
+    from sketchy_spark.plans.explain import physical_plan
+    from sketchy_spark.streaming.incremental import _new_vs_all_candidates
+
+    base = "\n".join(
+        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
+    )
+
+    def clique(names):
+        return pd.DataFrame(
+            [
+                ("org/clique", f"src/{m}.py", f"c{m}", "py",
+                 base + f"\n# member {m}")
+                for m in names
+            ],
+            columns=["repo", "path", "commit", "lang", "content"],
+        )
+
+    corpus = corpus_pandas(160)[["repo", "path", "commit", "lang", "content"]]
+    prev_pdf = pd.concat(
+        [corpus.iloc[::2], clique([f"m{i}" for i in range(10, 30)])]
+    )
+    new_pdf = pd.concat([corpus.iloc[1::2], clique(["a0", "a1", "a2"])])
+
+    for cap, expect_hot in ((8, True), (CFG.band_skew_cap, False)):
+        cfg = SketchConfig(band_skew_cap=cap)
+        prev = sketch_files(spark.createDataFrame(prev_pdf), cfg).cache()
+        new = sketch_files(spark.createDataFrame(new_pdf), cfg).cache()
+        want, hot = _band_truth(
+            band_table(new, cfg).toPandas(),
+            band_table(prev, cfg).toPandas(),
+            cap,
+        )
+        assert bool(hot) == expect_hot
+        cand = _new_vs_all_candidates(new, prev, cfg)
+        got = {(r["a_id"], r["b_id"]) for r in cand.collect()}
+        assert got == want
+        plan = physical_plan(cand)
+        hot_joins = "LeftAnti" in plan or "LeftSemi" in plan
+        assert hot_joins == expect_hot, plan
+        if expect_hot:
+            assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in got
+        prev.unpersist()
+        new.unpersist()

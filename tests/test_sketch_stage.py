@@ -98,3 +98,27 @@ def test_exact_dups_identical_signatures(spark, signatures):
 def test_no_content_column_downstream(signatures):
     """Narrow signatures table: content must be pruned after the sketch."""
     assert "content" not in signatures.columns
+
+
+def test_band_keys_match_per_band_oracle(spark):
+    """The one-string band_keys_expr yields the same b keys as band i's
+    xxhash64(i, sig_perm[i*r+1 .. i*r+r]) built per band from Columns."""
+    from sketchy_spark.operators.lsh import band_keys_expr
+
+    r = CFG.rows_per_band
+    sig_perm = [
+        (j * 0x9E3779B97F4A7C15) % (1 << 64) - (1 << 63)
+        for j in range(CFG.num_perm)
+    ]
+    df = spark.createDataFrame([(sig_perm,)], "sig_perm array<long>")
+    oracle = [
+        F.xxhash64(
+            F.lit(i),
+            *[F.element_at("sig_perm", i * r + j + 1) for j in range(r)],
+        ).alias(f"k{i}")
+        for i in range(CFG.bands)
+    ]
+    row = df.select(band_keys_expr(CFG).alias("keys"), *oracle).first()
+    assert len(row["keys"]) == CFG.bands
+    assert row["keys"] == [row[f"k{i}"] for i in range(CFG.bands)]
+    assert len(set(row["keys"])) == CFG.bands
