@@ -368,11 +368,8 @@ def run_pipeline_checkpointed(
     from sketchy_spark.operators.cluster import assign_clusters
     from sketchy_spark.operators.lsh import candidate_pairs, exact_dup_edges
     from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import (
-        containment_candidates,
-        containment_verified,
-        verified_pairs,
-    )
+    from sketchy_spark.operators.verify import verified_pairs
+    from sketchy_spark.pipeline import containment_pairs
 
     spark = files.sparkSession
     resumed: dict[str, bool] = {}
@@ -406,9 +403,7 @@ def run_pipeline_checkpointed(
     containment, resumed["containment"] = store.get_or_compute(
         spark,
         "containment",
-        lambda: containment_verified(
-            containment_candidates(signatures, cfg), files
-        ),
+        lambda: containment_pairs(signatures, files, cfg),
     )
     return {
         "signatures": signatures,

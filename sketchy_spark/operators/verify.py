@@ -1,30 +1,29 @@
 """Candidate verification (G2/G3/G4): Jaccard estimate, SimHash distance,
 exact-substring containment.
 
-Two equivalent Jaccard-verification implementations:
+Jaccard verification has one kernel, :func:`verified_pairs`: the
+reference's two-pointer sorted merge (src/sketchy.rs:419-459) over the
+already-sorted bottom-s sigs (:func:`_bottom_s_jaccard`), ~30us per pair.
+:func:`verified_pairs_sql` computes the same estimator with built-in
+array SQL (Catalyst builds hash sets per row, ~ms per 1000-element pair);
+it stays as the oracle the kernel is tested against.
 
-- :func:`verified_pairs_sql` — built-in array SQL (array_union/sort/
-  intersect). Oracle-friendly, but Catalyst's array set-ops build hash
-  sets per row: ~ms per 1000-element pair.
-- :func:`verified_pairs` (default) — Arrow-batched numpy sorted-merge:
-  the reference's two-pointer kernel (src/sketchy.rs:419-459) done with
-  np.intersect1d/np.union1d on the already-sorted sigs, ~30us per pair.
-  Same estimator, ~100x less CPU; this is the honest re-expression of
-  the reference's "assumes hashes are sorted" fast path.
+Both passes pick where they run by one rule. :func:`verified_pairs_cascade`
+puts a cheap OPH slot-match stage in front of the kernel; the containment
+pass is :func:`containment_candidates` then :func:`containment_verified`.
+While a pass's working set fits one 30 MB budget (``RESIDENT_BYTES``) it
+runs on the driver, as the reference scans its in-memory sketch
+collection (src/sketchy.rs:81): the cascade starts one Python UDF stage
+(the borderline re-sketch), the containment pass none, and neither
+persists anything. Above the budget each runs scan-side on executors,
+and a driver run that finds it would overflow hands over to that path.
+Each pass takes a ``resident`` override. On small traffic every Python
+task costs a fixed ~180 ms before user code runs (worker file setup
+re-reads ~16 zip directories, see the cascade's docstring), so fewer
+Python stages beat faster kernels there.
 
-:func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in front
-of that kernel. While the signature matrix, the candidate pairs and the
-borderline sigs fit one 30 MB budget (``RESIDENT_BYTES``) the whole
-cascade runs on the driver, as the reference scans its in-memory sketch
-collection (src/sketchy.rs:81): the only Python UDF stage it starts is
-one re-sketch of the borderline files. Above the budget it runs on
-executors. On small traffic every Python task costs a fixed ~180 ms
-before user code runs (worker file setup re-reads ~16 zip directories,
-see the cascade's docstring), so fewer Python stages beat faster kernels
-there.
-
-Key narrowness: the pipeline hands this module fid-keyed pairs
-(a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle here
+Key narrowness: the pipeline hands the cascade fid-keyed pairs
+(a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
 moves 16-byte keys; string file_ids are attached once, to the final
 verified set only. The public string-keyed entry points remain for tests
 and ad-hoc use.
@@ -42,19 +41,19 @@ from pyspark.sql import DataFrame
 from sketchy_spark.config import SketchConfig
 
 
-# Caches persisted by the scan-side cascade for callers that provided no
-# ``persisted`` release list (ad-hoc / public use): the persists are
-# required for correctness (see the comments on exchange reuse in
-# _scan_side_cascade), so rather than leaking anonymously they are
-# tracked here. The resident cascade persists nothing.
+# Caches persisted by the scan-side cascade and containment pass for
+# callers that provided no ``persisted`` release list (ad-hoc / public
+# use): the persists are required for correctness (see the comments on
+# exchange reuse in _scan_side_cascade), so rather than leaking
+# anonymously they are tracked here. The resident paths persist nothing.
 # Long-lived sessions reclaim executor storage with
 # :func:`release_cascade_caches`.
 _CASCADE_CACHES: list[DataFrame] = []
 
 
 def release_cascade_caches() -> None:
-    """Unpersist every cache the scan-side cascade and the containment
-    pass retained on behalf of callers that passed no ``persisted`` list
+    """Unpersist every cache the scan-side cascade and containment pass
+    retained on behalf of callers that passed no ``persisted`` list
     (ADVICE r3: repeated ad-hoc calls in a long-lived session otherwise
     accumulate unreleasable caches)."""
     while _CASCADE_CACHES:
@@ -535,30 +534,140 @@ def verified_pairs_sql(
     )
 
 
+CONTAINMENT_SCHEMA = (
+    "small_id string, big_id string, containment double, overlap_chars long"
+)
+_CANDIDATE_SCHEMA = (
+    "a_id string, b_id string, containment double, a_nb long, b_nb long"
+)
+
+
 def containment_candidates(
     signatures: DataFrame, cfg: SketchConfig,
     min_containment: float | None = None, persisted: list | None = None,
+    n_fp: int | None = None, resident: bool | None = None,
 ) -> DataFrame:
     """Fingerprint-overlap containment candidates (G3, candidate stage).
 
     Winnowing fingerprints are position-robust: if A is embedded verbatim
-    in B, most of A's fingerprints appear in B's. Explode -> self-join ->
-    per-pair overlap count, normalized by the smaller side's fingerprint
-    count (containment score). Pairs at any Jaccard can surface here —
+    in B, most of A's fingerprints appear in B's. Group the fingerprint
+    rows by fingerprint, count the groups each pair shares (``shared_fp``)
+    and normalize by the smaller side's fingerprint count: containment =
+    shared_fp / min(a_nfp, b_nfp). Pairs at any Jaccard can surface here —
     this is the path that catches low-Jaccard verbatim embeddings LSH
-    misses.
+    misses. Hot fingerprints (groups above ``cfg.fp_skew_cap``: shared
+    license headers, generated code — quadratic, no pair signal) emit no
+    pairs and do not count in either side's ``n_fp`` (SURVEY §4.1).
+    Returns (a_id, b_id, containment, a_nb, b_nb) with a_id < b_id and
+    the sides' ``n_bytes``, which size :func:`containment_verified`.
 
-    ``persisted`` receives the fingerprint-group cache for the caller to
-    unpersist (module registry otherwise, as in the cascade).
+    Where it runs follows the cascade's rule (one ``RESIDENT_BYTES``
+    budget, 30 MB, known before each allocation it bounds):
+
+    - Resident (``resident=True``, or by default while the fingerprint
+      rows, 8 B each, fit): the driver Arrow-collects
+      ``file_id, n_bytes, fingerprints``, sorts the (fingerprint, file
+      rank) rows and emits each kept group's pairs with numpy. The pair
+      codes, sum of m(m-1)/2 over the kept groups at 8 B each, are sized
+      from the group sizes before any is emitted; if they overflow what
+      the rows left, the call hands over to the scan-side path. Nothing
+      persists and the result is a local frame.
+    - Scan-side (``resident=False``, or above the budget): one groupBy
+      over the exploded fingerprints on executors.
+
+    ``n_fp``: the signatures' total fingerprint count,
+    ``sum(size(fingerprints))``, if the caller already has it (the
+    pipeline folds it into its signature count); otherwise one aggregate
+    job sizes the call. ``persisted`` receives the scan-side path's
+    fingerprint-group cache for the caller to unpersist (module registry
+    otherwise, as in the cascade).
     """
+    threshold = (
+        cfg.containment_threshold if min_containment is None
+        else min_containment
+    )
+    budget = None  # forced resident: no cap on the pair codes
+    if resident is None:
+        if n_fp is None:
+            n_fp = signatures.agg(F.sum(F.size("fingerprints"))).first()[0]
+        budget = RESIDENT_BYTES - 8 * (n_fp or 0)
+        resident = budget > 0
+    out = None
+    if resident:
+        out = _driver_containment_candidates(signatures, cfg, threshold, budget)
+    if out is None:
+        out = _scan_side_containment_candidates(
+            signatures, cfg, threshold, persisted
+        )
+    return out
+
+
+def _driver_containment_candidates(
+    signatures: DataFrame, cfg: SketchConfig, threshold: float,
+    budget: int | None,
+) -> DataFrame | None:
+    """The resident candidate stage (see :func:`containment_candidates`).
+    ``budget``: bytes left for the pair codes (None: no cap); returns
+    None when they exceed it. Fingerprints are distinct within a file
+    (``hashing.winnow``), so a group's members are distinct files."""
+    import pyarrow.compute as pc
+
+    tbl = signatures.select("file_id", "n_bytes", "fingerprints").toArrow()
+    # file ranks in string order, so rank order is a_id < b_id order
+    ids, first, rank = np.unique(
+        tbl["file_id"].to_numpy(), return_index=True, return_inverse=True
+    )
+    n = ids.size
+    nb = tbl["n_bytes"].to_numpy()[first]
+    lists = tbl["fingerprints"].combine_chunks()
+    fp = np.asarray(lists.flatten(), dtype=np.int64)
+    member = np.repeat(
+        rank, pc.list_value_length(lists).fill_null(0).to_numpy()
+    )
+    order = np.lexsort((member, fp))
+    fp, member = fp[order], member[order]
+    _, starts, sizes = np.unique(fp, return_index=True, return_counts=True)
+    hot = (sizes >= 2) & (sizes > cfg.fp_skew_cap)
+    kept = (sizes >= 2) & ~hot
+    # retained fingerprints per file: every membership outside hot groups
+    n_fp = np.bincount(member[~np.repeat(hot, sizes)], minlength=n)
+    if budget is not None:
+        m = sizes[kept]
+        if 8 * int((m * (m - 1) // 2).sum()) > budget:
+            return None
+
+    codes = [np.empty(0, dtype=np.int64)]
+    for m in np.unique(sizes[kept]):
+        groups = member[starts[kept & (sizes == m)][:, None] + np.arange(m)]
+        i, j = np.triu_indices(m, 1)  # members sort by rank: a < b
+        codes.append((groups[:, i] * n + groups[:, j]).ravel())
+    codes, shared = np.unique(np.concatenate(codes), return_counts=True)
+    a, b = np.divmod(codes, n)
+    cont = shared / np.maximum(np.minimum(n_fp[a], n_fp[b]), 1)
+    keep = cont >= threshold
+    a, b = a[keep], b[keep]
+    return signatures.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "a_id": ids[a], "b_id": ids[b], "containment": cont[keep],
+            "a_nb": nb[a], "b_nb": nb[b],
+        }),
+        _CANDIDATE_SCHEMA,
+    )
+
+
+def _scan_side_containment_candidates(
+    signatures: DataFrame, cfg: SketchConfig, threshold: float,
+    persisted: list | None,
+) -> DataFrame:
+    """The candidate stage on executors (see
+    :func:`containment_candidates`)."""
     fp = signatures.select(
         "file_id", F.explode("fingerprints").alias("fp")
     )
     # ONE groupBy over the exploded fingerprints (the plan-shape lesson
     # from the band join): collect member lists per fingerprint, emit
-    # pairs via pipelined double-explode. Hot fingerprints (shared
-    # license headers / generated code — quadratic, no pair signal) are
-    # excluded by the same size cap inside the aggregate (SURVEY §4.1).
+    # pairs via pipelined double-explode; the hot-group cap applies
+    # inside the aggregate.
     groups = (
         fp.groupBy("fp")
         .agg(F.collect_list("file_id").alias("ids"))
@@ -583,18 +692,22 @@ def containment_candidates(
         .agg(F.count("*").alias("n_hot"))
     )
     counts = (
-        signatures.select("file_id", F.size("fingerprints").alias("n_all"))
+        signatures.select(
+            "file_id", "n_bytes", F.size("fingerprints").alias("n_all")
+        )
         .join(n_hot, "file_id", "left")
         .select(
-            "file_id",
+            "file_id", "n_bytes",
             (F.col("n_all") - F.coalesce("n_hot", F.lit(0))).alias("n_fp"),
         )
     )
     a_cnt = counts.select(
-        F.col("file_id").alias("a_id"), F.col("n_fp").alias("a_nfp")
+        F.col("file_id").alias("a_id"), F.col("n_fp").alias("a_nfp"),
+        F.col("n_bytes").alias("a_nb"),
     )
     b_cnt = counts.select(
-        F.col("file_id").alias("b_id"), F.col("n_fp").alias("b_nfp")
+        F.col("file_id").alias("b_id"), F.col("n_fp").alias("b_nfp"),
+        F.col("n_bytes").alias("b_nb"),
     )
     return (
         pairs.join(a_cnt, "a_id")
@@ -603,48 +716,146 @@ def containment_candidates(
             "containment",
             F.col("shared_fp") / F.greatest(F.least("a_nfp", "b_nfp"), F.lit(1)),
         )
-        .where(
-            F.col("containment")
-            >= (
-                cfg.containment_threshold
-                if min_containment is None
-                else min_containment
-            )
-        )
-        .select("a_id", "b_id", "containment")
+        .where(F.col("containment") >= threshold)
+        .select("a_id", "b_id", "containment", "a_nb", "b_nb")
     )
 
 
 def containment_verified(
     candidates: DataFrame, files: DataFrame,
     cfg: SketchConfig | None = None, min_overlap_chars: int = 512,
-    persisted: list | None = None,
+    persisted: list | None = None, resident: bool | None = None,
 ) -> DataFrame:
     """Exact-substring containment verification (G3, verify stage).
 
-    Two tiers over the fingerprint candidates:
+    Two tiers over the fingerprint candidates (from
+    :func:`containment_candidates`):
 
-    1. WHOLE-FILE embedding — JVM ``instr`` (no UDF): the smaller content
-       is a verbatim substring of the larger. The fast, common case (a
-       vendored file, a concatenated bundle).
-    2. PARTIAL overlap — pairs that fail ``instr`` go through a
-       positional-winnowing kernel: both sides' sliding-window minima are
-       recomputed WITH positions, shared minima are grouped by alignment
-       diagonal (pos_small - pos_big), the longest gap-free diagonal
-       segment marks a candidate run, and the run's span is byte-compared
-       for exact equality. Detects a shared verbatim block >=
-       ``min_overlap_chars`` even when neither file embeds the other —
-       the suffix-array behavior of SURVEY §2.8 G3 at candidate-pair
-       (not corpus) cost.
+    1. WHOLE-FILE embedding: the smaller content (by byte length; ``a``
+       on ties) is a verbatim substring of the larger. The fast, common
+       case (a vendored file, a concatenated bundle).
+    2. PARTIAL overlap — pairs that fail tier 1 go through a
+       positional-winnowing kernel (:func:`_overlap_rows`): both sides'
+       sliding-window minima are recomputed WITH positions, shared minima
+       are grouped by alignment diagonal (pos_small - pos_big), the
+       longest gap-free diagonal segment marks a candidate run, and the
+       run's span is byte-compared for exact equality. Detects a shared
+       verbatim block >= ``min_overlap_chars`` even when neither file
+       embeds the other — the suffix-array behavior of SURVEY §2.8 G3 at
+       candidate-pair (not corpus) cost.
 
     Output: (small_id, big_id, containment, overlap_chars) — containment
-    is the verified overlap fraction of the smaller side (1.0 for tier 1).
-    ``persisted`` receives the staged pair cache for the caller to
-    unpersist (module registry otherwise, as in the cascade).
+    is the verified overlap fraction of the smaller side (1.0 and the
+    small side's byte length for tier 1).
+
+    Where it runs follows the cascade's rule, under the same
+    ``RESIDENT_BYTES`` budget:
+
+    - Resident (``resident=True``, or by default while the candidate
+      rows, 8 B each, plus the candidate files' content bytes, the sum of
+      their ``n_bytes``, fit): the driver collects the candidates, then
+      ``content`` for the candidate files only with one broadcast
+      ``left_semi`` Arrow collect, runs tier 1 as Python ``in`` and tier
+      2 as :func:`_overlap_rows` over the pairs sorted by (big_id,
+      small_id), and returns a local frame. No Python UDF stage runs and
+      nothing persists.
+    - Scan-side (``resident=False``, or above the budget): both tiers run
+      on executors over a content-wide candidate join — tier 1 as JVM
+      ``instr``, tier 2 as a ``mapInPandas`` stage. ``persisted``
+      receives its staged pair cache for the caller to unpersist (module
+      registry otherwise, as in the cascade).
     """
     from sketchy_spark.config import DEFAULT_CONFIG
 
     cfg = cfg or DEFAULT_CONFIG
+    out = None
+    if resident is not False:
+        out = _driver_containment_verified(
+            candidates, files, cfg, min_overlap_chars,
+            None if resident else RESIDENT_BYTES,
+        )
+    if out is None:
+        out = _scan_side_containment_verified(
+            candidates, files, cfg, min_overlap_chars, persisted
+        )
+    return out
+
+
+def _driver_containment_verified(
+    candidates: DataFrame, files: DataFrame, cfg: SketchConfig,
+    min_overlap_chars: int, budget: int | None,
+) -> DataFrame | None:
+    """The resident verify stage (see :func:`containment_verified`).
+    ``budget``: bytes for the candidate rows and contents (None: no cap);
+    returns None when they exceed it."""
+    spark = files.sparkSession
+    src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
+    if budget is not None:
+        src = src.limit(budget // 8 + 1)  # never collect an unbounded set
+    cand = src.toArrow()
+    if not cand.num_rows:
+        return spark.createDataFrame([], CONTAINMENT_SCHEMA)
+    a_id, b_id = cand["a_id"].to_numpy(), cand["b_id"].to_numpy()
+    ids, first = np.unique(np.r_[a_id, b_id], return_index=True)
+    nbytes = np.r_[cand["a_nb"].to_numpy(), cand["b_nb"].to_numpy()][first]
+    if budget is not None and 8 * cand.num_rows + int(nbytes.sum()) > budget:
+        return None
+
+    wanted = spark.createDataFrame(
+        pd.DataFrame({"file_id": ids}), "file_id string"
+    )
+    got = (
+        files.select(
+            F.concat_ws("/", "repo", "path").alias("file_id"),
+            "content",
+            F.octet_length("content").alias("nb"),
+        )
+        .join(F.broadcast(wanted), "file_id", "left_semi")
+        .toArrow()
+    )
+    # positions in string order, so sorting by them sorts by file_id
+    fids, first = np.unique(got["file_id"].to_numpy(), return_index=True)
+    text = np.asarray(got["content"].to_pylist(), dtype=object)[first]
+    nb = got["nb"].to_numpy()[first]
+    index = pd.Index(fids)
+    ia, ib = index.get_indexer(a_id), index.get_indexer(b_id)
+    found = (ia >= 0) & (ib >= 0)  # the scan-side joins drop the rest
+    ia, ib = ia[found], ib[found]
+    small_first = nb[ia] <= nb[ib]
+    small = np.where(small_first, ia, ib)
+    big = np.where(small_first, ib, ia)
+
+    full = np.fromiter(
+        (s in b for s, b in zip(text[small], text[big])),
+        dtype=bool, count=small.size,
+    )
+    rest = np.lexsort((small[~full], big[~full]))
+    rs, rb = small[~full][rest], big[~full][rest]
+    partial = _overlap_rows(
+        pd.DataFrame({
+            "small_id": fids[rs], "big_id": fids[rb],
+            "small_c": text[rs], "big_c": text[rb],
+        }),
+        cfg, min_overlap_chars,
+    )
+    whole = pd.DataFrame({
+        "small_id": fids[small[full]], "big_id": fids[big[full]],
+        "containment": 1.0, "overlap_chars": nb[small[full]],
+    })
+    return spark.createDataFrame(
+        pd.concat(
+            [df for df in (whole, partial) if len(df)] or [whole],
+            ignore_index=True,
+        ),
+        CONTAINMENT_SCHEMA,
+    )
+
+
+def _scan_side_containment_verified(
+    candidates: DataFrame, files: DataFrame, cfg: SketchConfig,
+    min_overlap_chars: int, persisted: list | None,
+) -> DataFrame:
+    """The verify stage on executors (see :func:`containment_verified`)."""
     c = files.select(
         F.concat_ws("/", "repo", "path").alias("file_id"),
         F.col("content"),
@@ -660,7 +871,7 @@ def containment_verified(
         F.col("content").alias("b_content"),
         F.col("nb").alias("b_nb"),
     )
-    df = candidates.join(a, "a_id").join(b, "b_id")
+    df = candidates.select("a_id", "b_id").join(a, "a_id").join(b, "b_id")
     small_first = F.col("a_nb") <= F.col("b_nb")
     staged = df.select(
         F.when(small_first, F.col("a_id")).otherwise(F.col("b_id")).alias("small_id"),
@@ -668,20 +879,22 @@ def containment_verified(
         F.when(small_first, F.col("a_content")).otherwise(F.col("b_content")).alias("small_c"),
         F.when(small_first, F.col("b_content")).otherwise(F.col("a_content")).alias("big_c"),
         F.when(small_first, F.col("a_nb")).otherwise(F.col("b_nb")).alias("small_nb"),
-        "containment",
     ).persist()  # two tiers consume it
     # Eager: the two tiers materialize concurrently under one action and
     # would otherwise race the unpopulated cache, re-running the
     # content-wide candidate joins twice.
     staged.count()
     (persisted if persisted is not None else _CASCADE_CACHES).append(staged)
-    full = staged.where(F.instr("big_c", "small_c") > 0).select(
+    # instr's substring must be a Column: a plain string is taken as a
+    # literal, and the whole-file tier would never match
+    found_at = F.instr("big_c", F.col("small_c"))
+    full = staged.where(found_at > 0).select(
         "small_id",
         "big_id",
         F.lit(1.0).alias("containment"),
         F.col("small_nb").cast("long").alias("overlap_chars"),
     )
-    rest = staged.where(F.instr("big_c", "small_c") == 0).select(
+    rest = staged.where(found_at == 0).select(
         "small_id", "big_id", "small_c", "big_c", "small_nb"
     )
     partial = _partial_overlap_kernel(rest, cfg, min_overlap_chars)
@@ -706,11 +919,12 @@ class _MinimaCache:
     """Bounded LRU of (encoded bytes, positional minima) keyed by file id.
 
     Lifetime is one mapInPandas PARTITION, not one Arrow batch (VERDICT
-    r4 minor #4): a hub file whose pairs span several batches of the same
-    partition is sketched once per partition, deterministically — the
-    kernel's input is locally sorted by big_id so a hub's rows are
-    contiguous and LRU eviction never thrashes. Byte-bounded because a
-    partition can hold arbitrarily many distinct files' contents."""
+    r4 minor #4), or one resident verify call on the driver: a hub file
+    whose pairs span several batches of the same partition is sketched
+    once per partition, deterministically — the kernel's input is sorted
+    by big_id so a hub's rows are contiguous and LRU eviction never
+    thrashes. Byte-bounded because a partition can hold arbitrarily many
+    distinct files' contents."""
 
     def __init__(self, max_bytes: int = 128 << 20):
         from collections import OrderedDict
@@ -749,14 +963,16 @@ def _overlap_rows(
     min_overlap_chars: int,
     cache: "_MinimaCache | None" = None,
 ) -> pd.DataFrame:
-    """One Arrow batch of candidate pairs -> verified partial overlaps.
+    """Candidate pairs (one Arrow batch on executors, every tier-2 pair on
+    the driver) -> verified partial overlaps.
 
     Positional minima (and the encoded bytes) are computed ONCE PER
     DISTINCT FILE, keyed by file id: a big file appearing in p pairs is
     sketched once, not p times (VERDICT r3 #5 — the per-pair re-hash made
     the kernel quadratic in the pair multiplicity of popular files). The
-    caller passes a partition-lifetime :class:`_MinimaCache` so the
-    guarantee spans Arrow batches (VERDICT r4 minor #4)."""
+    scan-side caller passes a partition-lifetime :class:`_MinimaCache` so
+    the guarantee spans Arrow batches (VERDICT r4 minor #4); the resident
+    caller hands over every pair in one call."""
     k, w = cfg.k, cfg.winnow_window
 
     if cache is None:
@@ -838,9 +1054,5 @@ def _partial_overlap_kernel(
             yield _overlap_rows(pdf, cfg, min_overlap_chars, cache)
 
     return pairs.sortWithinPartitions("big_id", "small_id").mapInPandas(
-        fn,
-        schema=(
-            "small_id string, big_id string, containment double, "
-            "overlap_chars long"
-        ),
+        fn, schema=CONTAINMENT_SCHEMA
     )

@@ -5,7 +5,7 @@ files(repo, path, commit, lang, content)
   -> signatures            [narrow table: content pruned]
   -> exact edges (sha256)  + LSH candidates -> Jaccard-verified pairs
   -> connected components  -> clusters
-  -> containment pairs     [fingerprint candidates -> instr verification]
+  -> containment pairs     [fingerprint candidates -> substring verification]
 
 The Spark re-expression of `sketchy predict` end-to-end (SURVEY §3.1),
 with the all-pairs kernel replaced by LSH (G1) and ranking replaced by
@@ -29,6 +29,7 @@ from sketchy_spark.operators.lsh import (
 )
 from sketchy_spark.operators.sketch import sketch_files
 from sketchy_spark.operators.verify import (
+    CONTAINMENT_SCHEMA,
     containment_candidates,
     containment_verified,
     verified_pairs_cascade,
@@ -96,13 +97,19 @@ def run_pipeline(
     # The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
     # operators/lsh.py); file_id strings attach once, to final outputs.
     # ``internal`` collects every frame the stages persist (band cache,
-    # candidate pairs, scan-side cascade estimates, containment groups
-    # and staged pairs) so unpersist() can release them.
+    # candidate pairs, and the scan-side cascade estimates, containment
+    # groups and staged pairs) so unpersist() can release them.
     internal: list[DataFrame] = []
     fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
     # the cache is populated by the candidate stage's first action, so
-    # this count is a memory scan (cheap), not a second sketch pass
-    n_files = signatures.count() if cache_signatures else None
+    # this count is a memory scan (cheap), not a second sketch pass; the
+    # same job sums the fingerprint rows that size the containment pass
+    n_files = n_fp = None
+    if cache_signatures:
+        n_files, n_fp = signatures.agg(
+            F.count("*"),
+            F.sum(F.size("fingerprints")) if with_containment else F.lit(0),
+        ).first()
     # Within the cascade's 30 MB budget (signature matrix + candidate
     # pairs + borderline sigs) the cascade runs on the driver: the only
     # Python stage it starts is one re-sketch of the borderline files,
@@ -136,30 +143,42 @@ def run_pipeline(
     edges = edges_fid
 
     if with_containment:
-        # candidate threshold drops to a quarter of the small side's
-        # fingerprints: partial verbatim overlaps (a shared block that is
-        # NOT a whole-file embedding) must reach the run-verify kernel
-        cont = containment_verified(
-            containment_candidates(
-                signatures, cfg,
-                min_containment=min(0.25, cfg.containment_threshold),
-                persisted=internal,
-            ),
-            files,
-            cfg,
-            persisted=internal,
+        cont = containment_pairs(
+            signatures, files, cfg, persisted=internal, n_fp=n_fp
         )
     else:
-        cont = (
-            signatures.sparkSession.createDataFrame(
-                [],
-                "small_id string, big_id string, containment double, "
-                "overlap_chars long",
-            )
-        )
+        cont = signatures.sparkSession.createDataFrame([], CONTAINMENT_SCHEMA)
     return PipelineResult(
         signatures, candidates, verified, clusters, cont, edges,
         persisted=(verified_fid, *internal),
+    )
+
+
+def containment_pairs(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
+    persisted: list | None = None, n_fp: int | None = None,
+) -> DataFrame:
+    """The containment pass (G3): fingerprint candidates, then
+    substring verification — the one stage both the plain and the
+    checkpointed pipeline run. ``n_fp``: the signatures' total
+    fingerprint count if known (see
+    :func:`~sketchy_spark.operators.verify.containment_candidates`).
+
+    The candidate threshold drops to a quarter of the small side's
+    fingerprints: partial verbatim overlaps (a shared block that is NOT a
+    whole-file embedding) must reach the run-verify kernel. Both stages
+    follow the cascade's budget: within it they run on the driver and
+    return local frames (no Python UDF stage, no persist); above it,
+    scan-side on executors."""
+    return containment_verified(
+        containment_candidates(
+            signatures, cfg,
+            min_containment=min(0.25, cfg.containment_threshold),
+            persisted=persisted, n_fp=n_fp,
+        ),
+        files,
+        cfg,
+        persisted=persisted,
     )
 
 

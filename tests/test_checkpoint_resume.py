@@ -556,3 +556,22 @@ def test_new_vs_all_candidates_match_band_truth(spark):
             assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in got
         prev.unpersist()
         new.unpersist()
+
+
+def test_checkpointed_containment_matches_plain(spark, tmp_path):
+    """The checkpointed pipeline's containment stage holds the same rows
+    as the plain pipeline's containment output on the planted corpus."""
+    files = corpus_df(spark, N).cache()
+
+    def rows(df):
+        return sorted(
+            (r.small_id, r.big_id, r.containment, r.overlap_chars)
+            for r in df.collect()
+        )
+
+    plain = run_pipeline(files, CFG, with_containment=True)
+    want = rows(plain.containment)
+    plain.unpersist()
+    store = CheckpointStore(str(tmp_path / "cont"), CFG.config_hash)
+    got = rows(run_pipeline_checkpointed(files, CFG, store)["containment"])
+    assert got == want and len(want) > 0

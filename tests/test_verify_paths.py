@@ -449,3 +449,141 @@ def test_candidate_sets_agree_across_eager_and_lazy_paths(spark):
     for df in internal:
         df.unpersist()
     sigs.unpersist()
+
+
+def _containment_rows(df):
+    return sorted(
+        (r.small_id, r.big_id, r.containment, r.overlap_chars)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("resident", [False, True])
+def test_whole_file_embedding_is_tier_one(spark, resident):
+    """A file embedded verbatim in a bigger one comes back from the
+    whole-file tier: containment 1.0 and overlap_chars equal to the small
+    side's byte length. One small side is above 512 chars, one below:
+    the partial-overlap kernel alone reports the first with a shorter
+    run and misses the second (its run is under ``min_overlap_chars``)."""
+    import pandas as pd
+
+    from sketchy_spark.operators.verify import (
+        containment_candidates,
+        containment_verified,
+    )
+
+    long_small = "\n".join(
+        f"vendored_{i} = décode({i * 17})" for i in range(60)
+    )  # ~1.6 KB, multi-byte chars: bytes != chars
+    short_small = "\n".join(f"tiny_{i} = ünit({i})" for i in range(20))
+    assert len(short_small.encode()) < 512 < len(long_small)
+
+    def host(tag, inner):
+        head = "\n".join(f"{tag}_head_{i} = {i * 3}" for i in range(50))
+        tail = "\n".join(f"{tag}_tail_{i} = {i * 5}" for i in range(50))
+        return head + "\n" + inner + "\n" + tail
+
+    rows = [
+        ("org/e", "long_small.py", "c1", "py", long_small),
+        ("org/e", "long_big.py", "c2", "py", host("lb", long_small)),
+        ("org/e", "short_small.py", "c3", "py", short_small),
+        ("org/e", "short_big.py", "c4", "py", host("sb", short_small)),
+    ]
+    for m in range(10):
+        body = "\n".join(f"noise_{m}_{i} = f({i * m})" for i in range(60))
+        rows.append(("org/n", f"n{m}.py", f"d{m}", "py", body))
+    files = spark.createDataFrame(
+        pd.DataFrame(
+            rows, columns=["repo", "path", "commit", "lang", "content"]
+        )
+    )
+    sigs = sketch_files(files, CFG).cache()
+    cand = containment_candidates(sigs, CFG, min_containment=0.25)
+    got = {
+        (r[0], r[1]): r[2:]
+        for r in _containment_rows(
+            containment_verified(cand, files, CFG, resident=resident)
+        )
+    }
+    for small, big, text in (
+        ("org/e/long_small.py", "org/e/long_big.py", long_small),
+        ("org/e/short_small.py", "org/e/short_big.py", short_small),
+    ):
+        assert got.get((small, big)) == (1.0, len(text.encode())), got
+    sigs.unpersist()
+
+
+def test_resident_containment_matches_scan_side(spark, monkeypatch):
+    """The driver-side (resident) containment pass and the executor
+    (scan-side) one return identical candidate and verified rows on the
+    planted corpus, at the pipeline's 0.25 candidate threshold and at the
+    default, and at a small ``fp_skew_cap`` where hot fingerprints are
+    excluded. Budget hand-overs still equal the scan-side result: pair
+    codes that overflow after the fingerprint rows fit, and candidate
+    contents that overflow. An ad-hoc resident call retains no cache and
+    runs no Python UDF."""
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.plans.explain import physical_plan
+
+    files = spark.createDataFrame(corpus_pandas(600)).cache()
+    sigs = sketch_files(files, CFG, with_sig=False).cache()
+    n_fp = sigs.selectExpr("sum(size(fingerprints))").first()[0]
+    internal = []
+
+    def cand_rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def both(cfg, mc):
+        res = V.containment_candidates(sigs, cfg, mc, resident=True)
+        scan = V.containment_candidates(
+            sigs, cfg, mc, persisted=internal, resident=False
+        )
+        assert cand_rows(res) == cand_rows(scan)
+        want = _containment_rows(
+            V.containment_verified(
+                scan, files, cfg, persisted=internal, resident=False
+            )
+        )
+        got = _containment_rows(
+            V.containment_verified(res, files, cfg, resident=True)
+        )
+        assert got == want and len(want) > 0
+        return want
+
+    for mc in (0.25, None):
+        both(CFG, mc)
+    capped = SketchConfig(fp_skew_cap=3)
+    capped_rows = both(capped, 0.25)
+    # the cap removed some fingerprint groups from the pair counts
+    assert cand_rows(
+        V.containment_candidates(sigs, capped, 0.25, resident=True)
+    ) != cand_rows(V.containment_candidates(sigs, CFG, 0.25, resident=True))
+
+    # ad-hoc default calls within the budget: driver only, nothing kept
+    V.release_cascade_caches()
+    res_cand = V.containment_candidates(sigs, capped, 0.25)
+    resident = V.containment_verified(res_cand, files, capped)
+    assert len(V._CASCADE_CACHES) == 0
+    plan = physical_plan(resident)
+    for node in ("MapInPandas", "PythonMapInArrow", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert _containment_rows(resident) == capped_rows
+
+    # the fingerprint rows fit the budget, the pair codes do not
+    monkeypatch.setattr(V, "RESIDENT_BYTES", 8 * n_fp + 1)
+    handed_over = V.containment_candidates(
+        sigs, capped, 0.25, persisted=internal, n_fp=n_fp
+    )
+    assert "Generate explode" in physical_plan(handed_over)
+    assert cand_rows(handed_over) == cand_rows(res_cand)
+    # the candidate rows fit, their contents do not
+    monkeypatch.setattr(V, "RESIDENT_BYTES", 8 * res_cand.count() + 1)
+    handed_over = V.containment_verified(
+        res_cand, files, capped, persisted=internal
+    )
+    assert "MapInPandas" in physical_plan(handed_over)
+    assert _containment_rows(handed_over) == capped_rows
+    for df in internal:
+        df.unpersist()
+    sigs.unpersist()
+    files.unpersist()
