@@ -368,7 +368,7 @@ def run_pipeline_checkpointed(
     from sketchy_spark.operators.cluster import assign_clusters
     from sketchy_spark.operators.lsh import candidate_pairs, exact_dup_edges
     from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import verified_pairs
+    from sketchy_spark.operators.verify import verified_pairs_cascade
     from sketchy_spark.pipeline import containment_pairs
 
     spark = files.sparkSession
@@ -381,12 +381,17 @@ def run_pipeline_checkpointed(
     held: list[DataFrame] = []
 
     def _edges():
-        # candidate_pairs is lazy (single-evaluation contract) but
-        # verified_pairs broadcasts the pair frame twice; persist it for
-        # the duration of the stage write, released right after.
+        # candidate_pairs is lazy (single-evaluation contract) but the
+        # cascade reads the pair frame more than once; persist it for the
+        # duration of the stage write, released right after with the
+        # scan-side cascade's own caches. The signature count comes from
+        # the stage manifest, so sizing the cascade runs no count job.
         cand = candidate_pairs(signatures, cfg).persist()
         held.append(cand)
-        ver = verified_pairs(cand, signatures, cfg)
+        ver = verified_pairs_cascade(
+            cand, signatures, cfg,
+            n_files=store.manifest("signatures")["rows"], persisted=held,
+        )
         return (
             exact_dup_edges(signatures)
             .unionByName(ver.select("a_id", "b_id"))

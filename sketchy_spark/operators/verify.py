@@ -1,26 +1,33 @@
 """Candidate verification (G2/G3/G4): Jaccard estimate, SimHash distance,
 exact-substring containment.
 
-Jaccard verification has one kernel, :func:`verified_pairs`: the
+Jaccard verification has one kernel, :func:`_bottom_s_jaccard`: the
 reference's two-pointer sorted merge (src/sketchy.rs:419-459) over the
-already-sorted bottom-s sigs (:func:`_bottom_s_jaccard`), ~30us per pair.
+already-sorted bottom-s sigs, ~30us per pair. :func:`verified_pairs`
+runs it as a ``mapInPandas`` stage, the cascade's scan-side exact stage.
 :func:`verified_pairs_sql` computes the same estimator with built-in
 array SQL (Catalyst builds hash sets per row, ~ms per 1000-element pair);
 it stays as the oracle the kernel is tested against.
 
-Both passes pick where they run by one rule. :func:`verified_pairs_cascade`
-puts a cheap OPH slot-match stage in front of the kernel; the containment
-pass is :func:`containment_candidates` then :func:`containment_verified`.
-While a pass's working set fits one 30 MB budget (``RESIDENT_BYTES``) it
-runs on the driver, as the reference scans its in-memory sketch
-collection (src/sketchy.rs:81): the cascade starts one Python UDF stage
-(the borderline re-sketch), the containment pass none, and neither
+Three passes pick where they run by one rule.
+:func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in
+front of the kernel; every Jaccard edge in the package comes from it.
+The containment pass is :func:`containment_candidates` then
+:func:`containment_verified`. The incremental batch
+(``streaming/incremental.py``) bands, anchors and verifies each arrival
+against the stored signatures, running the cascade's numpy core
+(:func:`_cascade_core`) on one collect. While a pass's working set fits
+one 30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
+reference scans its in-memory sketch collection (src/sketchy.rs:81): the
+cascade starts one Python UDF stage (the borderline re-sketch), the
+containment pass and the incremental batch none, and none of them
 persists anything. Above the budget each runs scan-side on executors,
-and a driver run that finds it would overflow hands over to that path.
-Each pass takes a ``resident`` override. On small traffic every Python
-task costs a fixed ~180 ms before user code runs (worker file setup
-re-reads ~16 zip directories, see the cascade's docstring), so fewer
-Python stages beat faster kernels there.
+and a driver run that finds it would overflow hands over to that path,
+which returns the same rows. The cascade and the containment pass take a
+``resident`` override; the incremental batch is driven by the budget
+alone. On small traffic every Python task costs a fixed ~180 ms before
+user code runs (worker file setup re-reads ~16 zip directories, see the
+cascade's docstring), so fewer Python stages beat faster kernels there.
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
@@ -121,6 +128,9 @@ _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
 # B/file). Within it the cascade runs on the driver (_driver_cascade);
 # above it, on executors (_scan_side_cascade).
 RESIDENT_BYTES = 30_000_000
+# Cascade stage 1's half-width around tau: est >= tau + margin accepts,
+# est < tau - margin rejects, the band between goes to the exact stage.
+CASCADE_MARGIN = 0.15
 # Pairs per numpy block in the driver's stage 1: bounds the two gathered
 # (block, num_perm) int32 temporaries to ~64 MB at any pair count.
 _BLOCK_PAIRS = 1 << 16
@@ -216,7 +226,7 @@ def verified_pairs(
 
 def verified_pairs_cascade(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    margin: float = 0.15, files: DataFrame | None = None,
+    margin: float = CASCADE_MARGIN, files: DataFrame | None = None,
     n_files: int | None = None, resident: bool | None = None,
     attach_ids: bool = True, persisted: list | None = None,
 ) -> DataFrame:
@@ -330,20 +340,18 @@ def _driver_cascade(
     files: DataFrame | None, sig_budget: int | None,
 ) -> DataFrame | None:
     """The resident cascade, evaluated on the driver (see
-    :func:`verified_pairs_cascade`). ``sig_budget``: bytes left for the
-    borderline sigs (None: no cap); returns None when they exceed it."""
+    :func:`verified_pairs_cascade`): the collects around
+    :func:`_cascade_core`. ``sig_budget``: bytes left for the borderline
+    sigs (None: no cap); returns None when they exceed it."""
     spark = sigs.sparkSession
     a_col, b_col, key, key_type = _key_cols(pairs)
-    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
     schema = _verified_schema(a_col, b_col, key_type)
 
     # Arrow-native collect: the fixed-width sig_perm lists flatten into
     # an (n, num_perm) matrix zero-copy — no pandas object column.
     tbl = sigs.select(key, "sig_perm", "simhash", "n_shingles").toArrow()
     keys, first = np.unique(tbl[key].to_numpy(), return_index=True)
-    mat = np.asarray(tbl["sig_perm"].combine_chunks().flatten()).reshape(
-        -1, num_perm
-    )[first]
+    mat = _sig_perm_matrix(tbl, cfg)[first]
     sim = tbl["simhash"].to_numpy()[first]
     nsh = tbl["n_shingles"].to_numpy()[first]
     index = pd.Index(keys)
@@ -356,6 +364,70 @@ def _driver_cascade(
     if not a.size:
         return spark.createDataFrame([], schema)
 
+    got = _cascade_core(
+        mat, sim, nsh, ai, bi, cfg, margin, sig_budget,
+        _sig_fetcher(sigs, files, cfg, key, key_type, keys),
+    )
+    if got is None:
+        return None
+    keep, jac, ham = got
+    return spark.createDataFrame(
+        pd.DataFrame({
+            a_col: a[keep], b_col: b[keep],
+            "jaccard": jac[keep], "hamming": ham[keep],
+        }),
+        schema,
+    )
+
+
+def _sig_perm_matrix(tbl, cfg: SketchConfig) -> np.ndarray:
+    """The (rows, num_perm) int32 matrix of an Arrow ``sig_perm`` column,
+    flattened without a pandas object column."""
+    return np.asarray(tbl["sig_perm"].combine_chunks().flatten()).reshape(
+        -1, cfg.num_perm
+    )
+
+
+def _sig_fetcher(
+    sigs: DataFrame, files: DataFrame | None, cfg: SketchConfig,
+    key: str, key_type: str, keys: np.ndarray,
+):
+    """``fetch(pos) -> {pos: sig}`` for :func:`_cascade_core`: ONE Arrow
+    collect of the bottom-s sigs of the files ``keys[pos]`` (``keys``
+    sorted, as ``np.unique`` returns them), read from ``sigs`` when it
+    carries ``sig`` and re-sketched from ``files`` otherwise."""
+    index = pd.Index(keys)
+
+    def fetch(pos: np.ndarray) -> dict:
+        wanted = sigs.sparkSession.createDataFrame(
+            pd.DataFrame({key: keys[pos]}), f"{key} {key_type}"
+        )
+        got = (
+            _borderline_sigs(wanted, sigs, files, cfg)
+            .select(key, "sig")
+            .toArrow()
+        )
+        return dict(
+            zip(index.get_indexer(got[key].to_numpy()), got["sig"].to_numpy())
+        )
+
+    return fetch
+
+
+def _cascade_core(
+    mat: np.ndarray, sim: np.ndarray, nsh: np.ndarray, ai: np.ndarray,
+    bi: np.ndarray, cfg: SketchConfig, margin: float,
+    sig_budget: int | None, fetch,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """Both cascade stages in numpy over the pairs of matrix rows
+    (``ai``, ``bi``) -> (keep, jaccard, hamming) per pair.
+
+    Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
+    the borderline band (and every small-doc pair) gets its rows' sigs
+    from ``fetch`` (see :func:`_sig_fetcher`) and :func:`_bottom_s_jaccard`.
+    Returns None, before fetching, when those sigs (8 * s B per file)
+    exceed ``sig_budget`` (None: no cap)."""
+    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
     blocks = [
         _slot_estimates(
             mat[ai[sl]], mat[bi[sl]], sim[ai[sl]], sim[bi[sl]],
@@ -363,7 +435,7 @@ def _driver_cascade(
         )
         for sl in (
             slice(lo, lo + _BLOCK_PAIRS)
-            for lo in range(0, a.size, _BLOCK_PAIRS)
+            for lo in range(0, ai.size, _BLOCK_PAIRS)
         )
     ]
     est, ham, small = (np.concatenate(x) for x in zip(*blocks))
@@ -375,17 +447,7 @@ def _driver_cascade(
         wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
         if sig_budget is not None and 8 * cfg.s * wanted_pos.size > sig_budget:
             return None
-        wanted = spark.createDataFrame(
-            pd.DataFrame({key: keys[wanted_pos]}), f"{key} {key_type}"
-        )
-        got = (
-            _borderline_sigs(wanted, sigs, files, cfg)
-            .select(key, "sig")
-            .toArrow()
-        )
-        sig_of = dict(
-            zip(index.get_indexer(got[key].to_numpy()), got["sig"].to_numpy())
-        )
+        sig_of = fetch(wanted_pos)
         jac = est.copy()
         jac[border] = _bottom_s_jaccard(
             [sig_of.get(i, _NO_SIG) for i in ai[border]],
@@ -393,14 +455,7 @@ def _driver_cascade(
             cfg.s,
         )
         keep = accept | (border & (jac >= tau))
-
-    return spark.createDataFrame(
-        pd.DataFrame({
-            a_col: a[keep], b_col: b[keep],
-            "jaccard": jac[keep], "hamming": ham[keep],
-        }),
-        schema,
-    )
+    return keep, jac, ham
 
 
 def _scan_side_cascade(
@@ -636,12 +691,11 @@ def _driver_containment_candidates(
         if 8 * int((m * (m - 1) // 2).sum()) > budget:
             return None
 
-    codes = [np.empty(0, dtype=np.int64)]
-    for m in np.unique(sizes[kept]):
-        groups = member[starts[kept & (sizes == m)][:, None] + np.arange(m)]
-        i, j = np.triu_indices(m, 1)  # members sort by rank: a < b
-        codes.append((groups[:, i] * n + groups[:, j]).ravel())
-    codes, shared = np.unique(np.concatenate(codes), return_counts=True)
+    # members sort by rank within a group, so each code has a < b
+    codes, shared = np.unique(
+        _group_pair_codes(member, starts[kept], sizes[kept], n),
+        return_counts=True,
+    )
     a, b = np.divmod(codes, n)
     cont = shared / np.maximum(np.minimum(n_fp[a], n_fp[b]), 1)
     keep = cont >= threshold
@@ -653,6 +707,22 @@ def _driver_containment_candidates(
         }),
         _CANDIDATE_SCHEMA,
     )
+
+
+def _group_pair_codes(
+    member: np.ndarray, starts: np.ndarray, sizes: np.ndarray, n: int
+) -> np.ndarray:
+    """Pair codes ``x * n + y`` for every i < j pair of positions inside
+    each group ``member[start:start + size]``, emitted size by size with
+    ``np.triu_indices`` (no Python loop over groups). ``n`` bounds the
+    member values; the caller sizes the output, sum of m(m-1)/2 codes,
+    before calling."""
+    codes = [np.empty(0, dtype=np.int64)]
+    for m in np.unique(sizes):
+        groups = member[starts[sizes == m][:, None] + np.arange(m)]
+        i, j = np.triu_indices(m, 1)
+        codes.append((groups[:, i] * n + groups[:, j]).ravel())
+    return np.concatenate(codes)
 
 
 def _scan_side_containment_candidates(

@@ -23,10 +23,20 @@ already-stored signatures without duplicating rows (the r1 crash-window
 bug: promoting a rewritten sig_all before the edges marker permanently
 double-counted the batch).
 
-Per-batch driver work is kept fixed and small: a batch bands the new and
-the previous signatures once each (the accumulated band table is their
-union), collects its hot band-key set in one job, and reads every stage
-against the Spark schema its manifest recorded, so no read runs a
+Per-batch work follows the verify passes' resident rule
+(operators/verify.py): while the accumulated store fits the 30 MB
+``RESIDENT_BYTES`` budget, judged from the stage manifests' row counts,
+the batch's edges come from ONE Arrow collect of the stored signatures
+(sig_perm, simhash, n_shingles, sha256, an is-new flag and the band keys
+of ``band_keys_expr``), as the reference re-ranks its in-memory sketch
+collection on every arrival (src/sketchy.rs:81). The driver runs the
+new x all band join, the exact-sha anchors and the cascade's numpy core
+on it, fetches the borderline files' stored ``sig`` with one more
+collect, and writes the edges stage from a local frame: the sketch is
+the batch's only Python stage. Above the budget, or when the pair codes
+or the borderline sigs would overflow it, the batch hands over to the
+same computation as Spark stages, with identical rows. Every stage is
+read against the Spark schema its manifest recorded, so no read runs a
 schema-inference job (checkpoint.py ``read_stage``).
 
 True sub-second streaming would swap the batch source for
@@ -36,15 +46,38 @@ resumable incremental batches, which is what this is.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from sketchy_spark.checkpoint import CheckpointStore
 from sketchy_spark.config import SketchConfig
+from sketchy_spark.operators import verify
 from sketchy_spark.operators.cluster import assign_clusters
-from sketchy_spark.operators.lsh import band_table, hot_band_keys
+from sketchy_spark.operators.lsh import (
+    band_keys_expr,
+    band_table,
+    hot_band_keys,
+)
 from sketchy_spark.operators.sketch import sketch_files
-from sketchy_spark.operators.verify import verified_pairs
+
+# Unused here, but perfbench/spans.py wraps this module's name for it.
+from sketchy_spark.operators.verify import verified_pairs  # noqa: F401
+
+# Columns of the resident batch's one collect, besides is_new/band_keys.
+_RESIDENT_COLS = ["file_id", "sha256", "sig_perm", "simhash", "n_shingles"]
+
+
+def _resident_row_bytes(cfg: SketchConfig) -> int:
+    """Driver bytes per stored file in the resident batch's collect:
+    sig_perm (4 B a slot), band keys (8 B a band), simhash, n_shingles
+    and the flag (24 B), the sha256 hex (64 B) and the file_id (counted
+    as 64 B)."""
+    return cfg.num_perm * 4 + 8 * cfg.bands + 24 + 64 + 64
 
 
 def _new_vs_all_candidates(
@@ -165,6 +198,136 @@ def _incremental_exact_edges(
         .join(anchors, "sha256")
         .where(F.col("file_id") != F.col("hub"))
         .select(F.col("hub").alias("a_id"), F.col("file_id").alias("b_id"))
+    )
+
+
+class _Collected(NamedTuple):
+    """The resident batch's one Arrow collect, with its file ranks."""
+
+    tbl: pa.Table
+    ids: np.ndarray     # distinct file_ids in string order
+    first: np.ndarray   # each id's first row
+    rank: np.ndarray    # each row's index into ids: rank order is id order
+    is_new: np.ndarray  # each row's batch flag
+
+
+def _resident_collect(
+    new_sigs: DataFrame, prev_sigs: DataFrame | None, cfg: SketchConfig
+) -> _Collected:
+    """ONE Arrow collect of the stored signature rows the batch needs:
+    ``file_id, sha256, sig_perm, simhash, n_shingles`` of the previous
+    and the new stages, an ``is_new`` flag and the ``band_keys`` of
+    :func:`band_keys_expr` (the one band-hash implementation)."""
+    src = new_sigs.select(*_RESIDENT_COLS, F.lit(True).alias("is_new"))
+    if prev_sigs is not None:
+        src = prev_sigs.select(
+            *_RESIDENT_COLS, F.lit(False).alias("is_new")
+        ).unionByName(src)
+    tbl = src.select("*", band_keys_expr(cfg).alias("band_keys")).toArrow()
+    ids, first, rank = np.unique(
+        tbl["file_id"].to_numpy(), return_index=True, return_inverse=True
+    )
+    return _Collected(tbl, ids, first, rank, tbl["is_new"].to_numpy())
+
+
+def _driver_candidates(
+    c: _Collected, cfg: SketchConfig, budget: int
+) -> tuple[np.ndarray, np.ndarray, int] | None:
+    """:func:`_new_vs_all_candidates` on the driver -> (a, b, budget
+    left): rank pairs with a < b, the same set under the same hot-key and
+    hub rule. The (band key, row) memberships sort into groups; a cold
+    group with a new member emits its row pairs that touch a new row, a
+    hot group (> cap members) a star from each new member to the band's
+    hub: the pre-batch minimum if the band has prior members, else the
+    batch minimum. Returns None when the pair codes, 8 B each, sized from
+    the group sizes before any is emitted, exceed ``budget``."""
+    rank, is_new, n = c.rank, c.is_new, c.ids.size
+    bkeys = np.asarray(c.tbl["band_keys"].combine_chunks().flatten())
+    row = np.repeat(np.arange(rank.size), cfg.bands)
+    order = np.lexsort((row, bkeys))
+    bkeys, row = bkeys[order], row[order]
+    _, starts, sizes = np.unique(bkeys, return_index=True, return_counts=True)
+    r, nw = rank[row], is_new[row]
+    hot = sizes > cfg.band_skew_cap
+    has_new = np.add.reduceat(nw.astype(np.int64), starts) > 0
+    cold = ~hot & has_new & (sizes >= 2)
+    m = sizes[cold]
+    star = np.repeat(hot, sizes) & nw
+    budget -= 8 * (int((m * (m - 1) // 2).sum()) + int(star.sum()))
+    if budget < 0:
+        return None
+
+    x, y = np.divmod(
+        verify._group_pair_codes(row, starts[cold], sizes[cold], rank.size),
+        rank.size,
+    )
+    touch = is_new[x] | is_new[y]
+    ca, cb = rank[x[touch]], rank[y[touch]]
+    prev_min = np.minimum.reduceat(np.where(nw, n, r), starts)
+    new_min = np.minimum.reduceat(np.where(nw, r, n), starts)
+    hub = np.repeat(np.where(prev_min < n, prev_min, new_min), sizes)
+    star &= r != hub
+    a = np.concatenate([np.minimum(ca, cb), np.minimum(r[star], hub[star])])
+    b = np.concatenate([np.maximum(ca, cb), np.maximum(r[star], hub[star])])
+    a, b = np.divmod(np.unique(a[a != b] * n + b[a != b]), n)
+    return a, b, budget
+
+
+def _driver_exact_edges(c: _Collected) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_incremental_exact_edges` on the driver -> (hub, member)
+    ranks: each new file links to its sha group's pre-batch minimum, else
+    the batch minimum (unnormalized, as the Spark form writes them)."""
+    rank, is_new, n = c.rank, c.is_new, c.ids.size
+    _, sha = np.unique(c.tbl["sha256"].to_numpy(), return_inverse=True)
+    prev_min = np.full(sha.max() + 1 if sha.size else 0, n)
+    new_min = prev_min.copy()
+    np.minimum.at(prev_min, sha[~is_new], rank[~is_new])
+    np.minimum.at(new_min, sha[is_new], rank[is_new])
+    hub = np.where(prev_min < n, prev_min, new_min)[sha[is_new]]
+    member = rank[is_new]
+    return hub[hub != member], member[hub != member]
+
+
+def _resident_batch_edges(
+    new_sigs: DataFrame, prev_sigs: DataFrame | None, all_sigs: DataFrame,
+    cfg: SketchConfig, budget: int,
+) -> DataFrame | None:
+    """The batch's edges stage computed on the driver, as a local frame:
+    the rows the hand-over path writes (:func:`_new_vs_all_candidates`
+    verified by :func:`verified_pairs_cascade`, plus
+    :func:`_incremental_exact_edges`), from :func:`_resident_collect`.
+    The cascade's borderline files get their ``sig`` from the stored
+    stages with one ``left_semi`` collect; nothing is re-sketched.
+
+    ``budget``: driver bytes left after the collect. Returns None, for
+    the caller to hand over to the Spark path, when the pair codes or the
+    borderline sigs (8 * s B per file) would overflow it."""
+    c = _resident_collect(new_sigs, prev_sigs, cfg)
+    got = _driver_candidates(c, cfg, budget)
+    if got is None:
+        return None
+    a, b, budget = got
+    n = c.ids.size
+    verified = a * n + b
+    if a.size:
+        kept = verify._cascade_core(
+            verify._sig_perm_matrix(c.tbl, cfg)[c.first],
+            c.tbl["simhash"].to_numpy()[c.first],
+            c.tbl["n_shingles"].to_numpy()[c.first],
+            a, b, cfg, verify.CASCADE_MARGIN, budget,
+            verify._sig_fetcher(
+                all_sigs, None, cfg, "file_id", "string", c.ids
+            ),
+        )
+        if kept is None:
+            return None
+        verified = verified[kept[0]]
+    hub, member = _driver_exact_edges(c)
+    edges = np.unique(np.concatenate([verified, hub * n + member]))
+    ea, eb = np.divmod(edges, n)
+    return new_sigs.sparkSession.createDataFrame(
+        pd.DataFrame({"a_id": c.ids[ea], "b_id": c.ids[eb]}),
+        "a_id string, b_id string",
     )
 
 
@@ -385,7 +548,28 @@ class IncrementalDedup:
 
     # -- ingest ----------------------------------------------------------
     def ingest_batch(self, batch_id: int, files: DataFrame) -> None:
-        """Sketch + band-join one arriving batch against the store.
+        """Sketch one arriving batch, then band-join, verify and anchor
+        it against the store, and write its edges stage.
+
+        Where the edges are computed follows the verify passes' rule
+        (``operators.verify.RESIDENT_BYTES``, 30 MB), decided from the
+        stage manifests' row counts before any Spark action:
+
+        - Resident, while the stored rows fit at
+          :func:`_resident_row_bytes` each (sig_perm, band keys, simhash,
+          n_shingles, sha256 and file_id; ~0.9 KB at the defaults): ONE
+          Arrow collect of the previous and new signature stages
+          (:func:`_resident_collect`) feeds the new x all band join, the
+          exact-sha anchors and the cascade on the driver, plus one
+          ``left_semi`` collect of the borderline files' stored ``sig``.
+          The edges stage is written from one local frame; the sketch is
+          the batch's only Python stage.
+        - Hand-over, above the budget or when the pair codes (8 B each)
+          or the borderline sigs (8 * s B per file) would overflow what
+          the collect left: :func:`_new_vs_all_candidates`,
+          :func:`verified_pairs_cascade` scan-side and
+          :func:`_incremental_exact_edges` as Spark stages. Both paths
+          write identical rows.
 
         Idempotent: the batch's edges stage is the single completion
         marker; a finished batch returns immediately, a half-finished one
@@ -420,12 +604,30 @@ class IncrementalDedup:
             if prev_sigs is not None
             else new_sigs
         )
-        cand = _new_vs_all_candidates(new_sigs, prev_sigs, self.cfg)
-        ver = verified_pairs(cand, all_sigs, self.cfg).select("a_id", "b_id")
-        exact = _incremental_exact_edges(new_sigs, prev_sigs)
-        self.store.write_stage(
-            stage_edge, ver.unionByName(exact).distinct()
+        # the fit is decided from the stage manifests' row counts: no
+        # Spark action runs before the one collect
+        n_rows = sum(
+            self.store.manifest(s)["rows"] for s in prev_stages + [stage_sig]
         )
+        budget = verify.RESIDENT_BYTES - n_rows * _resident_row_bytes(
+            self.cfg
+        )
+        edges = None
+        if budget > 0:
+            edges = _resident_batch_edges(
+                new_sigs, prev_sigs, all_sigs, self.cfg, budget
+            )
+        held: list[DataFrame] = []
+        if edges is None:
+            cand = _new_vs_all_candidates(new_sigs, prev_sigs, self.cfg)
+            ver = verify.verified_pairs_cascade(
+                cand, all_sigs, self.cfg, resident=False, persisted=held
+            ).select("a_id", "b_id")
+            exact = _incremental_exact_edges(new_sigs, prev_sigs)
+            edges = ver.unionByName(exact).distinct()
+        self.store.write_stage(stage_edge, edges)
+        for df in held:  # the stage is written; the caches served it
+            df.unpersist()
         if self.compact_every:
             tail = [
                 s for s in self.view_stages("edges") if "_batch_" in s

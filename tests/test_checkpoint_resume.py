@@ -45,6 +45,11 @@ def test_checkpoint_run_and_resume(spark, tmp_path):
     assert third["resumed"] == {s: True for s in STAGES}
     assert _pairs(third["clusters"]) == pairs1
 
+    # one verifier: the checkpointed clusters equal the plain pipeline's
+    plain = run_pipeline(files, CFG, with_containment=False)
+    assert _pairs(plain.clusters) == pairs1
+    plain.unpersist()
+
 
 def test_manifest_lineage(spark, tmp_path):
     files = corpus_df(spark, 200)
@@ -475,6 +480,24 @@ def test_read_stage_pins_recorded_schema(spark, tmp_path):
         assert legacy.count() == store.manifest(stage)["rows"]
 
 
+def _clique(names):
+    """Near-duplicate files sharing one 120-line body, each with its own
+    last line: above cap 8 their common band keys are hot."""
+    import pandas as pd
+
+    base = "\n".join(
+        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
+    )
+    return pd.DataFrame(
+        [
+            ("org/clique", f"src/{m}.py", f"c{m}", "py",
+             base + f"\n# member {m}")
+            for m in names
+        ],
+        columns=["repo", "path", "commit", "lang", "content"],
+    )
+
+
 def _band_truth(new_bands, prev_bands, cap):
     """Pandas truth for the incremental candidate set, from collected
     (file_id, band_key) band tables: all pairs over cold keys that touch
@@ -504,37 +527,29 @@ def _band_truth(new_bands, prev_bands, cap):
 
 
 def test_new_vs_all_candidates_match_band_truth(spark):
-    """The incremental candidate set equals a pandas truth built from the
-    collected band tables, with hot keys present (cap 8, a new arrival
-    that is the global minimum of every hot band) and with an empty hot
-    set (default cap), whose plan joins no hot-key frame."""
+    """The incremental candidate set, from the Spark band join and from
+    the driver's, equals a pandas truth built from the collected band
+    tables, with hot keys present (cap 8, a new arrival that is the
+    global minimum of every hot band) and with an empty hot set (default
+    cap), whose Spark plan joins no hot-key frame."""
     import pandas as pd
 
     from sketchy_spark.corpus import corpus_pandas
     from sketchy_spark.operators.lsh import band_table
     from sketchy_spark.operators.sketch import sketch_files
+    from sketchy_spark.operators.verify import RESIDENT_BYTES
     from sketchy_spark.plans.explain import physical_plan
-    from sketchy_spark.streaming.incremental import _new_vs_all_candidates
-
-    base = "\n".join(
-        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
+    from sketchy_spark.streaming.incremental import (
+        _driver_candidates,
+        _new_vs_all_candidates,
+        _resident_collect,
     )
-
-    def clique(names):
-        return pd.DataFrame(
-            [
-                ("org/clique", f"src/{m}.py", f"c{m}", "py",
-                 base + f"\n# member {m}")
-                for m in names
-            ],
-            columns=["repo", "path", "commit", "lang", "content"],
-        )
 
     corpus = corpus_pandas(160)[["repo", "path", "commit", "lang", "content"]]
     prev_pdf = pd.concat(
-        [corpus.iloc[::2], clique([f"m{i}" for i in range(10, 30)])]
+        [corpus.iloc[::2], _clique([f"m{i}" for i in range(10, 30)])]
     )
-    new_pdf = pd.concat([corpus.iloc[1::2], clique(["a0", "a1", "a2"])])
+    new_pdf = pd.concat([corpus.iloc[1::2], _clique(["a0", "a1", "a2"])])
 
     for cap, expect_hot in ((8, True), (CFG.band_skew_cap, False)):
         cfg = SketchConfig(band_skew_cap=cap)
@@ -549,6 +564,10 @@ def test_new_vs_all_candidates_match_band_truth(spark):
         cand = _new_vs_all_candidates(new, prev, cfg)
         got = {(r["a_id"], r["b_id"]) for r in cand.collect()}
         assert got == want
+        collected = _resident_collect(new, prev, cfg)
+        a, b, _ = _driver_candidates(collected, cfg, RESIDENT_BYTES)
+        ids = collected.ids
+        assert set(zip(ids[a], ids[b])) == want
         plan = physical_plan(cand)
         hot_joins = "LeftAnti" in plan or "LeftSemi" in plan
         assert hot_joins == expect_hot, plan
@@ -556,6 +575,63 @@ def test_new_vs_all_candidates_match_band_truth(spark):
             assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in got
         prev.unpersist()
         new.unpersist()
+
+
+def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
+    """The resident batch (one Arrow collect, driver band join, anchors
+    and cascade) writes the same edges stage rows as the hand-over Spark
+    path (``RESIDENT_BYTES`` = 0) for every batch, and the same clusters.
+    The planted corpus arrives in 3 interleaved batches with
+    ``compact_every=2``, beside an over-cap clique (cap 8) whose later
+    arrivals include a new global minimum of its hot bands, so hot-band
+    hubs with prior members decide star edges that verify. The resident
+    edges frame runs no Python stage."""
+    import pandas as pd
+
+    from sketchy_spark.corpus import corpus_pandas
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.plans.explain import physical_plan
+
+    corpus = corpus_pandas(N)[["repo", "path", "commit", "lang", "content"]]
+    clique = _clique([f"m{i}" for i in range(10, 30)] + ["a1", "a0"])
+    batches = [
+        pd.concat([corpus.iloc[0::3], clique.iloc[:20]]),
+        pd.concat([corpus.iloc[1::3], clique.iloc[20:21]]),
+        pd.concat([corpus.iloc[2::3], clique.iloc[21:]]),
+    ]
+    cfg = SketchConfig(band_skew_cap=8)
+
+    def ingest(name):
+        store = CheckpointStore(str(tmp_path / name), cfg.config_hash)
+        plans = {}
+        orig = CheckpointStore.write_stage
+
+        def write_stage(self, stage, df, meta=None):
+            if stage.startswith("edges_batch_"):
+                plans[stage] = physical_plan(df)
+            return orig(self, stage, df, meta)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(CheckpointStore, "write_stage", write_stage)
+            inc = IncrementalDedup(spark, store, cfg, compact_every=2)
+            for b, pdf in enumerate(batches):
+                inc.ingest_batch(b, spark.createDataFrame(pdf))
+        edges = {
+            s: sorted(tuple(r) for r in store.read_stage(spark, s).collect())
+            for s in plans
+        }
+        return edges, _pairs(inc.clusters()), plans
+
+    resident, res_pairs, res_plans = ingest("resident")
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", 0)
+        handed, hand_pairs, hand_plans = ingest("handover")
+    assert sorted(resident) == [f"edges_batch_{b:05d}" for b in range(3)]
+    assert resident == handed
+    assert res_pairs == hand_pairs
+    assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in res_pairs
+    assert not any("MapInPandas" in p for p in res_plans.values())
+    assert all("MapInPandas" in p for p in hand_plans.values())
 
 
 def test_checkpointed_containment_matches_plain(spark, tmp_path):
