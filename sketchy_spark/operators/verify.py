@@ -25,9 +25,11 @@ persists anything. Above the budget each runs scan-side on executors,
 and a driver run that finds it would overflow hands over to that path,
 which returns the same rows. The cascade and the containment pass take a
 ``resident`` override; the incremental batch is driven by the budget
-alone. On small traffic every Python task costs a fixed ~180 ms before
-user code runs (worker file setup re-reads ~16 zip directories, see the
-cascade's docstring), so fewer Python stages beat faster kernels there.
+alone. On small traffic the driver path wins on Spark job and stage
+overhead: each job and stage costs scheduling time whatever its size,
+and each Python task still costs ~60 core-ms before user code runs
+(``sketchy_spark/worker_daemon.py`` cut that from ~180 ms), so fewer
+Spark stages beat faster kernels there.
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
@@ -259,12 +261,11 @@ def verified_pairs_cascade(
       Arrow, runs both stages in numpy and returns a local frame. The
       only Spark work is the collects and ONE re-sketch of the borderline
       files; no Python UDF stage runs besides that re-sketch, and nothing
-      persists. On small traffic each Python task costs a fixed ~180 ms
-      before user code runs (``pyspark.worker_util.setup_spark_files``
-      calls ``importlib.invalidate_caches()``, which on CPython 3.11
-      re-reads ~16 zip directories: the pyspark.zip subpackages and the
-      spark-core jar), so the number of Python stages, not the kernels,
-      sets the cost there.
+      persists. On small traffic the number of Spark jobs and stages,
+      not the kernels, sets the cost: each carries fixed scheduling
+      overhead, and each Python task still costs ~60 core-ms before user
+      code runs (down from ~180 ms since ``sketchy_spark.worker_daemon``
+      stopped every task re-reading ~16 zip directories).
     - Scan-side (``resident=False``, or above the budget): executors
       attach both sides by scan-side joins and run stage 1 and
       :func:`verified_pairs` as ``mapInPandas`` stages. The borderline

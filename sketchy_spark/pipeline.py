@@ -113,10 +113,10 @@ def run_pipeline(
     # Within the cascade's 30 MB budget (signature matrix + candidate
     # pairs + borderline sigs) the cascade runs on the driver: the only
     # Python stage it starts is one re-sketch of the borderline files,
-    # and its result is a local frame. Every Python task costs a fixed
-    # ~180 ms of worker file setup, so at dup-dense sizes that is what
-    # the verify layer's wall time tracks. Above the budget it runs
-    # scan-side on executors (operators/verify.py).
+    # and its result is a local frame. At dup-dense sizes the verify
+    # layer's wall time tracks its Spark job and stage overhead (plus
+    # ~60 core-ms per Python task), not its kernels. Above the budget it
+    # runs scan-side on executors (operators/verify.py).
     verified_fid = verified_pairs_cascade(
         fid_candidates, signatures, cfg, files=files, n_files=n_files,
         attach_ids=False, persisted=internal,

@@ -301,21 +301,22 @@ def test_minima_cache_refuses_oversized_entry():
 def test_release_cascade_caches_reclaims_storage(spark):
     """VERDICT r4 #8: ad-hoc scan-side cascades (no ``persisted`` list)
     park their required persists in _CASCADE_CACHES;
-    release_cascade_caches() must actually unpersist them — the JVM's
-    persistent-RDD registry shrinks back to its pre-call footprint, so
-    repeated ad-hoc use in a long-lived session cannot accumulate
-    executor storage. The resident cascade runs on the driver and
-    persists nothing."""
+    release_cascade_caches() must actually unpersist them: every RDD the
+    call persisted leaves the JVM's persistent-RDD registry, and the
+    caller's own cache stays. So repeated ad-hoc use in a long-lived
+    session cannot accumulate executor storage. The resident cascade
+    runs on the driver and persists nothing. The test compares RDD ids,
+    not registry sizes: the JVM context cleaner may unpersist earlier
+    tests' unreachable caches at any point."""
     import pandas as pd
 
     from sketchy_spark.operators import verify as V
     from sketchy_spark.operators.lsh import candidate_pairs_fid
 
-    def n_persistent():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     V.release_cascade_caches()  # clean slate from earlier tests
-    base_rdds = n_persistent()
     rows = [
         ("org/r", f"f{i}.py", f"c{i}", "py",
          "\n".join(f"def g_{i}_{j}(): return {i + j}" for j in range(60)))
@@ -326,22 +327,31 @@ def test_release_cascade_caches_reclaims_storage(spark):
             rows, columns=["repo", "path", "commit", "lang", "content"]
         )
     )
+    before_sigs = persistent_ids()
     sigs = sketch_files(files, CFG).cache()
     n = sigs.count()
+    sigs_ids = persistent_ids() - before_sigs
+    assert sigs_ids
     cand = candidate_pairs_fid(sigs, CFG)
     # resident ad-hoc call: evaluated on the driver, nothing retained
+    before = persistent_ids()
     V.verified_pairs_cascade(cand, sigs, CFG, n_files=n, resident=True).count()
     assert len(V._CASCADE_CACHES) == 0
+    assert not persistent_ids() - before
     # scan-side ad-hoc call: no persisted list -> caches tracked module-side
     V.verified_pairs_cascade(
         cand, sigs, CFG, n_files=n, resident=False
     ).count()
     assert len(V._CASCADE_CACHES) > 0
-    assert n_persistent() > base_rdds + 1  # sigs cache + cascade persists
+    call_ids = persistent_ids() - before
+    assert call_ids  # the cascade's persists
     V.release_cascade_caches()
     assert len(V._CASCADE_CACHES) == 0
+    after = persistent_ids()
+    assert not call_ids & after  # all of the call's RDDs unpersisted
+    assert sigs_ids <= after  # and nothing of the caller's
     sigs.unpersist(blocking=True)
-    assert n_persistent() <= base_rdds
+    assert not sigs_ids & persistent_ids()
 
 
 def test_resident_cascade_matches_scan_side(spark, monkeypatch):
