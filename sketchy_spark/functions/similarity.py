@@ -352,7 +352,7 @@ def ann_params(
 
 def ann_multiprobe(
     emb: DataFrame, threshold: float = 0.9, bits: int | None = None,
-    probes: int | None = None, n: int | None = None, dim: int | None = None,
+    probes: int | None = None, n: int | None = None,
 ) -> DataFrame:
     """Multi-probe sign-LSH near-neighbor pairs (VERDICT r1 #10): OR of
     ``probes`` bucket tables, each over a rotated dim window, then exact
@@ -370,11 +370,6 @@ def ann_multiprobe(
     ``bits``/``probes`` remain for fixtures: the low-threshold oracle
     uses b=4/T=12 at c=0.45, where ann_params(0.45, max_probes=12)
     reproduces exactly that pair.
-
-    ``dim`` (embedding width, measured as the minimum row width when
-    omitted) feeds ann_params' probe-diversity cap. The derivation scans
-    ``emb`` once for whichever of ``n`` and ``dim`` the caller left out,
-    and not at all when it passes both.
     """
     # Plan note (r4): the simhash first-matching-band rewrite
     # (sql_dedup.py) was tried here — one (probe, bucket) self-join with
@@ -391,20 +386,17 @@ def ann_multiprobe(
     # sparse config; the fan-out/dedup economics are unchanged because
     # the join key stays 12 bytes and distinct still collapses the OR).
     if bits is None or probes is None:
-        # ONE aggregate job yields the derivation inputs the caller did
-        # not pass: n (density criterion) and the embedding width
-        # (probe-diversity cap — min() so ragged widths cap
-        # conservatively)
-        aggs = []
+        # ONE aggregate job yields both derivation inputs: n (density
+        # criterion) and the embedding width (probe-diversity cap —
+        # min() so ragged widths cap conservatively). Same single-job
+        # cost as the count() this replaces.
+        row = emb.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("embedding")).alias("dim"),
+        ).first()
         if n is None:
-            aggs.append(F.count(F.lit(1)).alias("n"))
-        if dim is None:
-            aggs.append(F.min(F.size("embedding")).alias("dim"))
-        if aggs:
-            row = emb.agg(*aggs).first()
-            n = row["n"] if n is None else n
-            dim = row["dim"] if dim is None else dim
-        d_bits, d_probes = ann_params(threshold, n=n, dim=dim)
+            n = row["n"]  # one scan; feeds the density criterion
+        d_bits, d_probes = ann_params(threshold, n=n, dim=row["dim"])
         bits = d_bits if bits is None else bits
         probes = d_probes if probes is None else probes
     # per-vector bucket array: kept as the interpreted fold (evaluated n

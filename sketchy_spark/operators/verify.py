@@ -25,11 +25,10 @@ persists anything. Above the budget each runs scan-side on executors,
 and a driver run that finds it would overflow hands over to that path,
 which returns the same rows. The cascade and the containment pass take a
 ``resident`` override; the incremental batch is driven by the budget
-alone. On small traffic the driver path wins on Spark job and stage
-overhead: each job and stage costs scheduling time whatever its size,
-and each Python task still costs ~60 core-ms before user code runs
-(``sketchy_spark/worker_daemon.py`` cut that from ~180 ms), so fewer
-Spark stages beat faster kernels there.
+alone. On small traffic the driver path is the faster one because it
+starts fewer Spark jobs, stages and Python tasks, each of which carries
+a fixed cost whatever its size; the kernels are not what sets the cost
+there (ROADMAP.md records the driver vs scan-side timings).
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
@@ -261,11 +260,9 @@ def verified_pairs_cascade(
       Arrow, runs both stages in numpy and returns a local frame. The
       only Spark work is the collects and ONE re-sketch of the borderline
       files; no Python UDF stage runs besides that re-sketch, and nothing
-      persists. On small traffic the number of Spark jobs and stages,
-      not the kernels, sets the cost: each carries fixed scheduling
-      overhead, and each Python task still costs ~60 core-ms before user
-      code runs (down from ~180 ms since ``sketchy_spark.worker_daemon``
-      stopped every task re-reading ~16 zip directories).
+      persists. On small traffic the number of Spark jobs, stages and
+      Python tasks, not the kernels, sets the cost: each carries a fixed
+      scheduling and worker-setup cost whatever its size.
     - Scan-side (``resident=False``, or above the budget): executors
       attach both sides by scan-side joins and run stage 1 and
       :func:`verified_pairs` as ``mapInPandas`` stages. The borderline

@@ -114,9 +114,9 @@ def run_pipeline(
     # pairs + borderline sigs) the cascade runs on the driver: the only
     # Python stage it starts is one re-sketch of the borderline files,
     # and its result is a local frame. At dup-dense sizes the verify
-    # layer's wall time tracks its Spark job and stage overhead (plus
-    # ~60 core-ms per Python task), not its kernels. Above the budget it
-    # runs scan-side on executors (operators/verify.py).
+    # layer's wall time tracks the fixed cost of its Spark jobs, stages
+    # and Python tasks, not its kernels. Above the budget it runs
+    # scan-side on executors (operators/verify.py).
     verified_fid = verified_pairs_cascade(
         fid_candidates, signatures, cfg, files=files, n_files=n_files,
         attach_ids=False, persisted=internal,

@@ -93,12 +93,11 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SKETCHY_UI", "false"))
         # Python workers fork from sketchy_spark.worker_daemon: upstream
         # pyspark.daemon, except that each task's setup refreshes only
-        # the import paths it added instead of every zipimporter on the
-        # worker path. An identity mapInPandas task's cost over the
-        # JVM-only job fell from 175-275 to 57-60 core-ms (4-core host). A
-        # fixed constant: overriding it, or spark.python.use.daemon=false,
-        # brings the old per-task cost back. Executor workers import the
-        # module from the PYTHONPATH set below.
+        # the import finders under its SparkFiles directory instead of
+        # every zipimporter on the worker path. Keep it set: overriding
+        # it, or spark.python.use.daemon=false, brings back the blanket
+        # per-task refresh. Executor workers import the module from the
+        # PYTHONPATH set below.
         .config("spark.python.daemon.module", "sketchy_spark.worker_daemon")
         # Multi-executor masters (local-cluster / standalone): executor
         # python workers need the package on their import path — the

@@ -214,42 +214,6 @@ def test_ann_multiprobe_derivation_reads_dim(spark):
     out.collect()
 
 
-def test_ann_multiprobe_known_n_and_dim_run_no_job(spark):
-    """A caller that passes both derivation inputs (n and dim) gets the
-    same derived plan with no Spark job; passing n alone still measures
-    dim."""
-    import pyspark.sql.functions as F
-
-    from sketchy_spark.functions import similarity as sim
-
-    # ids i and i + 100 share a vector: 100 pairs at cosine 1
-    emb = spark.range(200).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d -> "
-            "cast(pmod(xxhash64(id % 100, d), 200) as float) / 100.0 - 1.0)"
-        ).alias("embedding"),
-    )
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_for(group, **kw):
-        sc.setJobGroup(group, "ann_multiprobe derivation")
-        try:
-            out = sim.ann_multiprobe(emb, threshold=0.9, **kw)
-            return out, list(tracker.getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-
-    known, jobs = jobs_for(f"ann-known-{id(emb)}", n=200, dim=64)
-    assert jobs == [], jobs
-    _, n_only_jobs = jobs_for(f"ann-n-only-{id(emb)}", n=200)
-    assert n_only_jobs
-    rows = sorted(known.collect())
-    assert len(rows) >= 100
-    assert rows == sorted(sim.ann_multiprobe(emb, threshold=0.9).collect())
-
-
 def test_ann_multiprobe_sparse_default_recall(spark):
     """VERDICT r4 #1 done-criterion: the DEFAULT ann_multiprobe call
     (threshold 0.9, bits/probes derived -> 1024-way buckets) reaches

@@ -16,33 +16,30 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 def test_tasks_run_with_the_targeted_importlib(spark):
-    """Inside a task, worker_util's importlib is the stand-in and its
-    add_path records; the daemon conf is what get_spark set."""
+    """Inside a task, worker_util's importlib is the stand-in; the daemon
+    conf is what get_spark set."""
 
     def probe(_):
         from pyspark import worker_util
 
         from sketchy_spark import worker_daemon as wd
 
-        yield (
-            isinstance(worker_util.importlib, wd.TargetedImportlib),
-            worker_util.add_path is wd._recording_add_path,
-        )
+        yield isinstance(worker_util.importlib, wd.TargetedImportlib)
 
     sc = spark.sparkContext
     assert sc.getConf().get("spark.python.daemon.module") == (
         "sketchy_spark.worker_daemon"
     )
     got = sc.parallelize(range(4), 4).mapPartitions(probe).collect()
-    assert got == [(True, True)] * 4
+    assert got == [True] * 4
 
 
 def test_upstream_setup_spark_files_still_adds_paths_and_invalidates(spark):
     """The daemon replaces the blanket refresh inside
-    pyspark.worker_util.setup_spark_files. Pin that call site in the
-    worker's copy of pyspark, so an upgrade that moves it fails here
-    instead of silently bringing the per-task cost back (or dropping
-    the refresh the stand-in performs)."""
+    pyspark.worker_util.setup_spark_files and reads the SparkFiles root
+    that function stores. Pin both in the worker's copy of pyspark, so
+    an upgrade that moves them fails here instead of silently bringing
+    the per-task cost back (or narrowing the refresh to a stale root)."""
 
     def source(_):
         import inspect
@@ -56,6 +53,7 @@ def test_upstream_setup_spark_files_still_adds_paths_and_invalidates(spark):
     path, src = spark.sparkContext.parallelize([0], 1).mapPartitions(
         source
     ).collect()[0]
+    assert "SparkFiles._root_directory = spark_files_dir" in src, path
     assert "add_path(spark_files_dir)" in src, path
     assert "add_path(os.path.join(spark_files_dir, filename))" in src, path
     assert "importlib.invalidate_caches()" in src, path
@@ -112,11 +110,14 @@ class _CountingFinder:
         self.refreshed += 1
 
 
-def test_refresh_touches_only_recorded_paths(monkeypatch, tmp_path):
-    """invalidate_caches() refreshes the finders keyed at or under the
-    paths add_path recorded since the last call, drops a negative (None)
-    entry among them, and leaves every other finder alone."""
-    monkeypatch.setattr(sys, "path", list(sys.path))
+def test_refresh_touches_only_the_spark_files_root(monkeypatch, tmp_path):
+    """invalidate_caches() refreshes the path finders keyed at or under
+    the SparkFiles root and leaves every other path finder alone; as
+    upstream, it refreshes the other meta path finders and drops every
+    negative (None) and relative-path entry. With no root recorded it is
+    upstream's refresh."""
+    from pyspark.core.files import SparkFiles
+
     root = str(tmp_path / "files")
     keys = {
         "root": root,
@@ -128,30 +129,47 @@ def test_refresh_touches_only_recorded_paths(monkeypatch, tmp_path):
     finders = {k: _CountingFinder() for k in keys}
     cache = dict(sys.path_importer_cache)
     cache.update({keys[k]: f for k, f in finders.items()})
-    missing = os.path.join(root, "later.zip")
-    cache[missing] = None
+    negatives = [os.path.join(root, "later.zip"), str(tmp_path / "gone")]
+    for key in negatives:
+        cache[key] = None
+    cache["relative/dir"] = _CountingFinder()
     monkeypatch.setattr(sys, "path_importer_cache", cache)
+    meta = _CountingFinder()
+    monkeypatch.setattr(sys, "meta_path", [meta] + sys.meta_path)
 
-    worker_daemon._recording_add_path(root)
-    assert sys.path[1] == root
+    monkeypatch.setattr(SparkFiles, "_root_directory", root)
     worker_daemon.TargetedImportlib().invalidate_caches()
+    assert meta.refreshed == 1
     assert {k: f.refreshed for k, f in finders.items()} == {
         "root": 1, "zip": 1, "zip_pkg": 1, "sibling": 0, "elsewhere": 0,
     }
-    assert missing not in cache
-    # the record is per call: nothing was added since, nothing refreshes
+    assert not set(negatives + ["relative/dir"]) & set(cache)
+
+    monkeypatch.setattr(SparkFiles, "_root_directory", None)
     worker_daemon.TargetedImportlib().invalidate_caches()
-    assert finders["root"].refreshed == 1
+    assert {k: f.refreshed for k, f in finders.items()} == {
+        "root": 2, "zip": 2, "zip_pkg": 2, "sibling": 1, "elsewhere": 1,
+    }
+
+
+def _keep_mtime(directory, write):
+    """Run ``write`` and restore ``directory``'s mtime, as a
+    coarse-mtime filesystem would leave it."""
+    st = os.stat(directory)
+    write()
+    os.utime(directory, ns=(st.st_atime_ns, st.st_mtime_ns))
 
 
 def test_refresh_finds_a_module_an_unchanged_mtime_hides(
     monkeypatch, tmp_path
 ):
-    """Why the recorded paths still need a refresh: a path finder
+    """Why the SparkFiles root still needs a refresh: a path finder
     re-lists its directory only when the directory's mtime changes, and
     a file can arrive without changing it (coarse-mtime filesystems).
     After the refresh the new module imports."""
     import importlib
+
+    from pyspark.core.files import SparkFiles
 
     monkeypatch.setattr(sys, "path", list(sys.path))
     monkeypatch.setattr(
@@ -159,20 +177,56 @@ def test_refresh_finds_a_module_an_unchanged_mtime_hides(
     )
     root = tmp_path / "files"
     root.mkdir()
+    sys.path.insert(1, str(root))
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(root))
     name = f"sketchy_late_{uuid.uuid4().hex[:8]}"
-    worker_daemon._recording_add_path(str(root))
-    worker_daemon.TargetedImportlib().invalidate_caches()
     assert importlib.util.find_spec(name) is None  # lists the empty dir
-    st = os.stat(root)
-    (root / f"{name}.py").write_text("VALUE = 7\n")
-    os.utime(root, ns=(st.st_atime_ns, st.st_mtime_ns))
+    _keep_mtime(
+        root, lambda: (root / f"{name}.py").write_text("VALUE = 7\n")
+    )
     assert importlib.util.find_spec(name) is None  # stale listing
-    worker_daemon._recording_add_path(str(root))
     worker_daemon.TargetedImportlib().invalidate_caches()
     try:
         assert importlib.import_module(name).VALUE == 7
     finally:
         sys.modules.pop(name, None)
+
+
+def test_refresh_recomputes_namespace_package_paths(monkeypatch, tmp_path):
+    """A namespace-package portion that appears under the SparkFiles
+    root after the package was imported (sc.addFile of a directory, an
+    extracted archive), with sys.path unchanged, imports after the
+    refresh: as upstream, the refresh makes namespace packages recompute
+    their __path__."""
+    import importlib
+
+    from pyspark.core.files import SparkFiles
+
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(
+        sys, "path_importer_cache", dict(sys.path_importer_cache)
+    )
+    ns = f"sketchy_ns_{uuid.uuid4().hex[:8]}"
+    elsewhere = tmp_path / "elsewhere"
+    (elsewhere / ns).mkdir(parents=True)
+    (elsewhere / ns / "a.py").write_text("VALUE = 1\n")
+    root = tmp_path / "files"
+    root.mkdir()
+    sys.path[1:1] = [str(root), str(elsewhere)]
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(root))
+    try:
+        assert importlib.import_module(f"{ns}.a").VALUE == 1
+
+        def portion():
+            (root / ns).mkdir()
+            (root / ns / "b.py").write_text("VALUE = 2\n")
+
+        _keep_mtime(root, portion)
+        worker_daemon.TargetedImportlib().invalidate_caches()
+        assert importlib.import_module(f"{ns}.b").VALUE == 2
+    finally:
+        for m in (ns, f"{ns}.a", f"{ns}.b"):
+            sys.modules.pop(m, None)
 
 
 _CLUSTER_SCRIPT = textwrap.dedent(
