@@ -395,9 +395,11 @@ def _merge_trials(new: dict[str, list[float]]) -> dict[str, list[float]]:
 def run_pipeline_staged(spark, corpus_path: str, n: int) -> dict:
     """Per-stage wall decomposition of the dedup pipeline (VERDICT r4 #6).
 
-    Attribution note: run_pipeline construction EAGERLY runs the hot-key
-    job (which materializes the sketch UDF into the signature cache),
-    the n_files count, and the cascade's adaptive sizing collects — so
+    Attribution note: run_pipeline construction EAGERLY runs the
+    signature count (which materializes the sketch UDF into the
+    signature cache), the hot-key job and the cascade's adaptive sizing
+    collects (below the resident budget, the whole driver edges stage) —
+    so
     the first bucket is sketch + candidates + most of the verify, not
     the sketch alone; the 'edges' bucket is the remaining union+distinct
     tail. Growth RATIOS between scales are still apples-to-apples (same

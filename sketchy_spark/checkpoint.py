@@ -188,6 +188,15 @@ def _stage_ident(catalog: str, namespace: str, stage: str) -> str:
     return f"{catalog}.{namespace}.ckpt_{safe}"
 
 
+def _same_session(a: SparkSession, b: SparkSession) -> bool:
+    """Whether two session handles wrap the same JVM session."""
+    if a is b:
+        return True
+    ja = getattr(a, "_jsparkSession", None)
+    jb = getattr(b, "_jsparkSession", None)
+    return ja is not None and jb is not None and ja.equals(jb)
+
+
 class IcebergCheckpointStore(_StoreBase):
     """CheckpointStore contract over real Iceberg tables (SURVEY §7 hard
     part 6). Selected by :func:`make_store` only when the runtime has the
@@ -328,7 +337,9 @@ class IcebergCheckpointStore(_StoreBase):
         # catalog holds the tables. The parquet shim honors the
         # parameter, so a caller handing a DIFFERENT session here would
         # silently diverge between backends (ADVICE r5): refuse loudly.
-        if spark is not None and spark is not self.spark:
+        # Sessions compare by their JVM session, so another Python
+        # wrapper of the store's session is accepted.
+        if spark is not None and not _same_session(spark, self.spark):
             raise ValueError(
                 "IcebergCheckpointStore serves reads through the session "
                 "that owns its catalog; pass that session (or None)"

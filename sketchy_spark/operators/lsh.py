@@ -24,10 +24,12 @@ skew.
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from sketchy_spark.config import SketchConfig
+from sketchy_spark.operators.verify import _group_pair_codes
 
 
 def with_fid(signatures: DataFrame) -> DataFrame:
@@ -54,6 +56,27 @@ def exact_dup_edges_fid(signatures: DataFrame) -> DataFrame:
         .where(F.col("fid") != F.col("hub"))
         .select(F.col("hub").alias("a_fid"), F.col("fid").alias("b_fid"))
     )
+
+
+def driver_exact_edges(
+    sha256: np.ndarray, rank: np.ndarray, new: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`exact_dup_edges_fid` on one driver collect -> (hub, member)
+    file ranks: each row's file links to its sha group's minimum rank.
+    Given ``new`` (a row flag, the incremental batch's), only new rows
+    link, to the group's pre-batch minimum when the sha was seen before,
+    else to the batch minimum (unnormalized, as ``streaming/
+    incremental.py``'s Spark form writes them)."""
+    n = int(rank.max()) + 1 if rank.size else 0
+    is_new = np.ones(rank.size, dtype=bool) if new is None else new
+    _, sha = np.unique(sha256, return_inverse=True)
+    prev_min = np.full(sha.max() + 1 if sha.size else 0, n)
+    new_min = prev_min.copy()
+    np.minimum.at(prev_min, sha[~is_new], rank[~is_new])
+    np.minimum.at(new_min, sha[is_new], rank[is_new])
+    hub = np.where(prev_min < n, prev_min, new_min)[sha[is_new]]
+    member = rank[is_new]
+    return hub[hub != member], member[hub != member]
 
 
 def band_keys_expr(cfg: SketchConfig):
@@ -217,16 +240,13 @@ def candidate_pairs_fid(
         # keys) — so it inlines as literal expressions, removing every
         # broadcast-build job and re-evaluation of the count subtree.
         # This collect doubles as the eager materialization barrier for
-        # the band cache AND (through it) the caller's signature cache —
-        # it is deliberately the pipeline's FIRST action, so a single job
-        # covers sketch UDF + cache write + band shuffle + hot scan; the
-        # pipeline's n_files count afterwards reads the populated cache
-        # (memory scan, not a second UDF pass). NOTE a tempting fusion —
-        # unioning a global-count branch onto this collect — re-executes
-        # the whole sketch scan instead: mapInPandas subtrees are
-        # non-deterministic, so Spark will not reuse their exchanges
-        # across union branches, and the cache is still cold (measured:
-        # input bytes 12.8 GB -> 21 GB). Keep this single-branch.
+        # the band cache, in the same job as the band shuffle. The
+        # pipeline's signature aggregate, which runs before it, has
+        # already populated the caller's signature cache, so the band
+        # projection reads memory, not a second sketch pass. Keep this
+        # collect single-branch: mapInPandas subtrees are
+        # non-deterministic, so Spark does not reuse their exchanges
+        # across union branches.
         hot_rows = (
             bands.groupBy("band_key")
             .agg(F.count("*").alias("cnt"))
@@ -330,6 +350,109 @@ def candidate_pairs_fid(
         out.count()
         persisted.append(out)
     return out
+
+
+def driver_band_pairs(
+    band_keys, rank: np.ndarray, cfg: SketchConfig, budget: int,
+    hot_stars, new: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, int] | None:
+    """The band join on one driver collect -> (a, b, budget left):
+    distinct file-rank pairs with a < b.
+
+    ``band_keys``: the Arrow list column of :func:`band_keys_expr`, one
+    list per collected row; ``rank``: each row's file rank (duplicate
+    rows of a file share one). The (band key, row) memberships sort
+    into groups once. A cold group (at most ``cfg.band_skew_cap``
+    members) emits every pair of its rows; given ``new`` (a row flag),
+    only the pairs that touch a new row. A hot group is left to
+    ``hot_stars(row, starts, sizes, hot)``, which returns rank pairs, at
+    most one per hot membership of a new row. The hot rule is the one
+    place the two driver joins differ:
+
+    - :func:`salted_stars`, the plain pipeline's, is
+      :func:`candidate_pairs_fid`'s rule;
+    - :func:`hub_stars`, the incremental batch's, pairs each new member
+      with a hub that the batch keeps stable across arrivals.
+
+    Returns None when the pair codes, 8 B each, sized from the group
+    sizes before any is emitted, exceed ``budget``."""
+    n = int(rank.max()) + 1 if rank.size else 0
+    row = np.repeat(np.arange(rank.size), cfg.bands)
+    bkeys = np.asarray(band_keys.combine_chunks().flatten())
+    order = np.lexsort((row, bkeys))
+    bkeys, row = bkeys[order], row[order]
+    _, starts, sizes = np.unique(bkeys, return_index=True, return_counts=True)
+    emits = np.ones(rank.size, dtype=bool) if new is None else new
+    em = emits[row]
+    hot = sizes > cfg.band_skew_cap
+    has_new = np.add.reduceat(em.astype(np.int64), starts) > 0
+    cold = ~hot & has_new & (sizes >= 2)
+    m = sizes[cold]
+    budget -= 8 * (
+        int((m * (m - 1) // 2).sum()) + int((np.repeat(hot, sizes) & em).sum())
+    )
+    if budget < 0:
+        return None
+
+    x, y = np.divmod(
+        _group_pair_codes(row, starts[cold], sizes[cold], rank.size),
+        rank.size,
+    )
+    touch = emits[x] | emits[y]
+    ha, hb = hot_stars(row, starts, sizes, hot)
+    a = np.concatenate([rank[x[touch]], ha])
+    b = np.concatenate([rank[y[touch]], hb])
+    lo, hi = np.minimum(a, b), np.maximum(a, b)
+    a, b = np.divmod(np.unique(lo[lo != hi] * n + hi[lo != hi]), n)
+    return a, b, budget
+
+
+def salted_stars(rank: np.ndarray, salt_hash: np.ndarray, cap: int):
+    """:func:`candidate_pairs_fid`'s hot rule for
+    :func:`driver_band_pairs`: a hot band's members split into
+    ceil(count / cap) salt groups by ``salt_hash`` (each row's
+    ``xxhash64(fid)``; numpy's ``%`` by a positive divisor is Spark's
+    ``pmod``), each member pairs with its salt group's minimum, and each
+    salt-group minimum with the band's minimum."""
+
+    def stars(row, starts, sizes, hot):
+        h = np.repeat(hot, sizes)
+        gid = np.repeat(np.arange(sizes.size), sizes)[h]
+        r = rank[row[h]]
+        nsalt = -(-sizes[gid] // cap)
+        width = int(nsalt.max()) if nsalt.size else 1
+        sub, inv = np.unique(
+            gid * width + salt_hash[row[h]] % nsalt, return_inverse=True
+        )
+        smin = np.full(sub.size, np.iinfo(np.int64).max)
+        np.minimum.at(smin, inv, r)
+        band_min = np.minimum.reduceat(rank[row], starts)[sub // width]
+        star, chain = r != smin[inv], smin != band_min
+        return (
+            np.concatenate([smin[inv][star], band_min[chain]]),
+            np.concatenate([r[star], smin[chain]]),
+        )
+
+    return stars
+
+
+def hub_stars(rank: np.ndarray, is_new: np.ndarray):
+    """The incremental batch's hot rule for :func:`driver_band_pairs`
+    (``_new_vs_all_candidates`` in ``streaming/incremental.py`` is its
+    Spark form): each new member of a hot band pairs with the band's hub,
+    its pre-batch minimum if the band has prior members, else its batch
+    minimum."""
+    n = int(rank.max()) + 1 if rank.size else 0
+
+    def stars(row, starts, sizes, hot):
+        r, nw = rank[row], is_new[row]
+        prev_min = np.minimum.reduceat(np.where(nw, n, r), starts)
+        new_min = np.minimum.reduceat(np.where(nw, r, n), starts)
+        hub = np.repeat(np.where(prev_min < n, prev_min, new_min), sizes)
+        star = np.repeat(hot, sizes) & nw & (r != hub)
+        return r[star], hub[star]
+
+    return stars
 
 
 def attach_file_ids(

@@ -9,26 +9,29 @@ runs it as a ``mapInPandas`` stage, the cascade's scan-side exact stage.
 array SQL (Catalyst builds hash sets per row, ~ms per 1000-element pair);
 it stays as the oracle the kernel is tested against.
 
-Three passes pick where they run by one rule.
+Four passes pick where they run by one rule.
 :func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in
 front of the kernel; every Jaccard edge in the package comes from it.
 The containment pass is :func:`containment_candidates` then
-:func:`containment_verified`. The incremental batch
-(``streaming/incremental.py``) bands, anchors and verifies each arrival
-against the stored signatures, running the cascade's numpy core
-(:func:`_cascade_core`) on one collect. While a pass's working set fits
+:func:`containment_verified`. The plain pipeline's edges stage
+(``pipeline.py``) and the incremental batch (``streaming/incremental.py``)
+each band, anchor and verify from one collect of the signatures,
+running the cascade's numpy core (:func:`_cascade_core`); the plain
+stage also labels the clusters there. While a pass's working set fits
 one 30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
 reference scans its in-memory sketch collection (src/sketchy.rs:81): the
-cascade starts one Python UDF stage (the borderline re-sketch), the
-containment pass and the incremental batch none, and none of them
-persists anything. Above the budget each runs scan-side on executors,
-and a driver run that finds it would overflow hands over to that path,
-which returns the same rows. The cascade and the containment pass take a
-``resident`` override; the incremental batch is driven by the budget
-alone. On small traffic the driver path is the faster one because it
-starts fewer Spark jobs, stages and Python tasks, each of which carries
-a fixed cost whatever its size; the kernels are not what sets the cost
-there (ROADMAP.md records the driver vs scan-side timings).
+cascade and the plain edges stage start one Python UDF stage (the
+borderline re-sketch), the containment pass and the incremental batch
+none, and none of them persists anything. Above the budget each runs
+scan-side on executors, and a driver run that finds it would overflow
+hands over to that path, which returns the same rows. The cascade and
+the containment pass take a ``resident`` override; the two edges
+stages are driven by the budget alone, read at call time, so setting it
+to 0 drives their Spark stages. On small traffic the driver path is the
+faster one because it starts fewer Spark jobs, stages and Python tasks,
+each of which carries a fixed cost whatever its size; the kernels are
+not what sets the cost there (ROADMAP.md records the driver vs
+scan-side timings).
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there

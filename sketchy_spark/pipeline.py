@@ -2,29 +2,49 @@
 
 files(repo, path, commit, lang, content)
   -> sketch (mapInPandas, the only UDF stage)
-  -> signatures            [narrow table: content pruned]
-  -> exact edges (sha256)  + LSH candidates -> Jaccard-verified pairs
+  -> signatures            [narrow table: content pruned, cached]
+  -> edges: LSH candidates -> Jaccard-verified pairs, + exact (sha256)
   -> connected components  -> clusters
   -> containment pairs     [fingerprint candidates -> substring verification]
 
 The Spark re-expression of `sketchy predict` end-to-end (SURVEY §3.1),
 with the all-pairs kernel replaced by LSH (G1) and ranking replaced by
 clustering (the dedup graft's goal).
+
+The edges and clusters follow the verify passes' resident rule
+(operators/verify.py, one ``RESIDENT_BYTES`` budget). While the cached
+signature rows fit it, at :func:`_resident_row_bytes` each, ONE Arrow
+collect feeds the band join, the exact-sha edges, the cascade and the
+union-find on the driver, as the reference ranks its in-memory sketch
+collection in one pass (src/sketchy.rs:81): the sketch and the cascade's
+borderline re-sketch are then the run's only Python stages. Above the
+budget, or when the pair codes or the borderline sigs would overflow
+what the collect left, the run hands over to Spark stages
+(:func:`candidate_pairs_fid`, :func:`verified_pairs_cascade`,
+:func:`exact_dup_edges_fid`, :func:`assign_clusters_fid`), with
+identical rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from sketchy_spark.config import DEFAULT_CONFIG, SketchConfig
-from sketchy_spark.operators.cluster import assign_clusters_fid
+from sketchy_spark.operators import verify
+from sketchy_spark.operators.cluster import assign_clusters_fid, min_labels
 from sketchy_spark.operators.lsh import (
     attach_file_ids,
+    band_keys_expr,
     candidate_pairs_fid,
+    driver_band_pairs,
+    driver_exact_edges,
     exact_dup_edges_fid,
+    salted_stars,
     with_fid,
 )
 from sketchy_spark.operators.sketch import sketch_files
@@ -63,7 +83,7 @@ def run_pipeline(
     cache_signatures: bool = True,
     range_partition: bool = False,
 ) -> PipelineResult:
-    """Run the full dedup pipeline lazily; materialization points are the
+    """Run the full dedup pipeline; materialization points are the
     caller's choice (tests collect; bench writes; checkpointed runs go
     through streaming/incremental.py).
 
@@ -75,6 +95,11 @@ def run_pipeline(
     per-task working sets coherent. Off by default in local mode (a
     content-width shuffle only pays for itself on multi-executor runs
     where locality persists across stages).
+
+    With ``cache_signatures`` (the default) the edges and clusters run on
+    the driver while the signature rows fit the resident budget (module
+    docstring) and come back as local frames; without it, as Spark
+    stages.
     """
     if range_partition:
         files = files.repartitionByRange("lang", "repo")
@@ -85,49 +110,162 @@ def run_pipeline(
     signatures = with_fid(
         sketch_files(files, cfg, with_sig=False, with_fp=with_containment)
     )
-    if cache_signatures:
-        # signatures feed 3+ downstream stages; recomputing the UDF stage
-        # per consumer would triple the dominant cost. The cache is
-        # populated by candidate_pairs_fid's hot-key collect — the FIRST
-        # action below — in the same job that shuffles the band table, so
-        # no separate eager count pass runs (one barrier fewer; that job
-        # also reports n_files for the cascade's resident sizing).
-        signatures = signatures.cache()
-
-    # The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
-    # operators/lsh.py); file_id strings attach once, to final outputs.
-    # ``internal`` collects every frame the stages persist (band cache,
-    # candidate pairs, and the scan-side cascade estimates, containment
-    # groups and staged pairs) so unpersist() can release them.
+    # ``internal`` collects every frame the Spark stages persist (band
+    # cache, candidate pairs, verified pairs, and the scan-side cascade
+    # estimates, containment groups and staged pairs) so unpersist() can
+    # release them. The resident stages persist nothing.
     internal: list[DataFrame] = []
-    fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
-    # the cache is populated by the candidate stage's first action, so
-    # this count is a memory scan (cheap), not a second sketch pass; the
-    # same job sums the fingerprint rows that size the containment pass
     n_files = n_fp = None
     if cache_signatures:
+        # signatures feed every later stage; recomputing the UDF stage
+        # per consumer would multiply the dominant cost. This aggregate
+        # is the run's first action: it populates the cache and, in the
+        # same job, counts the rows that size the resident stage and the
+        # cascade, and the fingerprint rows that size the containment
+        # pass. Every later read of the signatures is a memory scan.
+        signatures = signatures.cache()
         n_files, n_fp = signatures.agg(
             F.count("*"),
             F.sum(F.size("fingerprints")) if with_containment else F.lit(0),
         ).first()
-    # Within the cascade's 30 MB budget (signature matrix + candidate
-    # pairs + borderline sigs) the cascade runs on the driver: the only
-    # Python stage it starts is one re-sketch of the borderline files,
-    # and its result is a local frame. At dup-dense sizes the verify
-    # layer's wall time tracks the fixed cost of its Spark jobs, stages
-    # and Python tasks, not its kernels. Above the budget it runs
-    # scan-side on executors (operators/verify.py).
+    # _resident_edges reads verify.RESIDENT_BYTES at call time, so a
+    # caller that sets it to 0 drives the Spark stages.
+    stage = None
+    if n_files is not None:
+        stage = _resident_edges(signatures, files, cfg, n_files)
+    if stage is None:
+        stage = _spark_edges(signatures, files, cfg, n_files, internal)
+    candidates, verified, edges, clusters = stage
+
+    if with_containment:
+        cont = containment_pairs(
+            signatures, files, cfg, persisted=internal, n_fp=n_fp
+        )
+    else:
+        cont = signatures.sparkSession.createDataFrame([], CONTAINMENT_SCHEMA)
+    return PipelineResult(
+        signatures, candidates, verified, clusters, cont, edges,
+        persisted=tuple(internal),
+    )
+
+
+def _resident_row_bytes(cfg: SketchConfig) -> int:
+    """Driver bytes per signature row in the resident stage's collect:
+    sig_perm (4 B a slot), band keys (8 B a band), fid, its salt hash,
+    simhash and n_shingles (32 B), the sha256 hex (64 B) and the file_id
+    (counted as 64 B): ~0.93 KB at the defaults."""
+    return 4 * cfg.num_perm + 8 * cfg.bands + 32 + 64 + 64
+
+
+def _resident_edges(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
+    n_files: int,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None:
+    """(candidates, verified, edges, clusters) computed on the driver as
+    local frames, with the schemas and rows of :func:`_spark_edges`.
+
+    ONE Arrow collect of the cached signatures feeds
+    :func:`driver_band_pairs` under :func:`candidate_pairs_fid`'s salted
+    hot rule, the :func:`exact_dup_edges_fid` star to each sha group's
+    minimum fid, the cascade core (one borderline re-sketch) and the
+    union-find, which labels each file with its min-fid member's
+    file_id. Returns None, for the caller to hand over to the Spark
+    stages, when the rows do not fit ``verify.RESIDENT_BYTES`` or the
+    pair codes or the borderline sigs would overflow what they left."""
+    budget = verify.RESIDENT_BYTES - n_files * _resident_row_bytes(cfg)
+    if budget <= 0:
+        return None
+    tbl = signatures.select(
+        "fid", "file_id", "sha256", "sig_perm", "simhash", "n_shingles",
+        band_keys_expr(cfg).alias("band_keys"),
+        F.xxhash64("fid").alias("salt_hash"),
+    ).toArrow()
+    # file ranks in fid order, so rank order is a_fid < b_fid order
+    fids, first, rank = np.unique(
+        tbl["fid"].to_numpy(), return_index=True, return_inverse=True
+    )
+    n = fids.size
+    got = driver_band_pairs(
+        tbl["band_keys"], rank, cfg, budget,
+        salted_stars(rank, tbl["salt_hash"].to_numpy(), cfg.band_skew_cap),
+    )
+    if got is None:
+        return None
+    ca, cb, budget = got
+    va, vb, jac, ham = ca, cb, np.empty(0), np.empty(0, dtype=np.int64)
+    if ca.size:
+        kept = verify._cascade_core(
+            verify._sig_perm_matrix(tbl, cfg)[first],
+            tbl["simhash"].to_numpy()[first],
+            tbl["n_shingles"].to_numpy()[first],
+            ca, cb, cfg, verify.CASCADE_MARGIN, budget,
+            verify._sig_fetcher(signatures, files, cfg, "fid", "long", fids),
+        )
+        if kept is None:
+            return None
+        keep, jac, ham = kept
+        va, vb, jac, ham = ca[keep], cb[keep], jac[keep], ham[keep]
+
+    hub, member = driver_exact_edges(tbl["sha256"].to_numpy(), rank)
+    ea, eb = np.divmod(
+        np.unique(np.concatenate([va * n + vb, hub * n + member])), n
+    )
+    names = tbl["file_id"].to_numpy()[first]
+
+    def id_pairs(a, b, **cols):
+        sa, sb = names[a], names[b]
+        lo = sa <= sb
+        return pd.DataFrame({
+            "a_id": np.where(lo, sa, sb), "b_id": np.where(lo, sb, sa),
+            **cols,
+        })
+
+    spark = signatures.sparkSession
+    return (
+        spark.createDataFrame(id_pairs(ca, cb), "a_id string, b_id string"),
+        spark.createDataFrame(
+            id_pairs(va, vb, jaccard=jac, hamming=ham),
+            verify._verified_schema("a_id", "b_id", "string"),
+        ),
+        spark.createDataFrame(
+            pd.DataFrame({"a_fid": fids[ea], "b_fid": fids[eb]}),
+            "a_fid long, b_fid long",
+        ),
+        spark.createDataFrame(
+            pd.DataFrame({
+                "file_id": tbl["file_id"].to_numpy(),
+                "cluster_id": names[min_labels(ea, eb, n)[rank]],
+            }),
+            "file_id string, cluster_id string",
+        ),
+    )
+
+
+def _spark_edges(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
+    n_files: int | None, internal: list,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(candidates, verified, edges, clusters) as Spark stages: the
+    scale path, and the resident stage's hand-over.
+
+    The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
+    operators/lsh.py); file_id strings attach once, to final outputs.
+    The cascade picks its own placement by the same budget (signature
+    matrix + candidate pairs + borderline sigs): within it, on the
+    driver; above it, scan-side on executors (operators/verify.py)."""
+    fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
     verified_fid = verified_pairs_cascade(
         fid_candidates, signatures, cfg, files=files, n_files=n_files,
         attach_ids=False, persisted=internal,
     ).persist()  # consumed by edges AND exposed as .verified
-    edges_fid = (
+    internal.append(verified_fid)
+    edges = (
         exact_dup_edges_fid(signatures)
         .unionByName(verified_fid.select("a_fid", "b_fid"))
         .distinct()
         .persist()  # connected_components probes size + labels
     )
-    clusters = assign_clusters_fid(signatures, edges_fid)
+    clusters = assign_clusters_fid(signatures, edges)
 
     # public result keeps the string pair contract (lazy attachment)
     candidates = attach_file_ids(fid_candidates, signatures).select(
@@ -140,18 +278,7 @@ def run_pipeline(
         "jaccard",
         "hamming",
     )
-    edges = edges_fid
-
-    if with_containment:
-        cont = containment_pairs(
-            signatures, files, cfg, persisted=internal, n_fp=n_fp
-        )
-    else:
-        cont = signatures.sparkSession.createDataFrame([], CONTAINMENT_SCHEMA)
-    return PipelineResult(
-        signatures, candidates, verified, clusters, cont, edges,
-        persisted=(verified_fid, *internal),
-    )
+    return candidates, verified, edges, clusters
 
 
 def containment_pairs(

@@ -61,7 +61,10 @@ from sketchy_spark.operators.cluster import assign_clusters
 from sketchy_spark.operators.lsh import (
     band_keys_expr,
     band_table,
+    driver_band_pairs,
+    driver_exact_edges,
     hot_band_keys,
+    hub_stars,
 )
 from sketchy_spark.operators.sketch import sketch_files
 
@@ -235,57 +238,13 @@ def _driver_candidates(
 ) -> tuple[np.ndarray, np.ndarray, int] | None:
     """:func:`_new_vs_all_candidates` on the driver -> (a, b, budget
     left): rank pairs with a < b, the same set under the same hot-key and
-    hub rule. The (band key, row) memberships sort into groups; a cold
-    group with a new member emits its row pairs that touch a new row, a
-    hot group (> cap members) a star from each new member to the band's
-    hub: the pre-batch minimum if the band has prior members, else the
-    batch minimum. Returns None when the pair codes, 8 B each, sized from
-    the group sizes before any is emitted, exceed ``budget``."""
-    rank, is_new, n = c.rank, c.is_new, c.ids.size
-    bkeys = np.asarray(c.tbl["band_keys"].combine_chunks().flatten())
-    row = np.repeat(np.arange(rank.size), cfg.bands)
-    order = np.lexsort((row, bkeys))
-    bkeys, row = bkeys[order], row[order]
-    _, starts, sizes = np.unique(bkeys, return_index=True, return_counts=True)
-    r, nw = rank[row], is_new[row]
-    hot = sizes > cfg.band_skew_cap
-    has_new = np.add.reduceat(nw.astype(np.int64), starts) > 0
-    cold = ~hot & has_new & (sizes >= 2)
-    m = sizes[cold]
-    star = np.repeat(hot, sizes) & nw
-    budget -= 8 * (int((m * (m - 1) // 2).sum()) + int(star.sum()))
-    if budget < 0:
-        return None
-
-    x, y = np.divmod(
-        verify._group_pair_codes(row, starts[cold], sizes[cold], rank.size),
-        rank.size,
+    hub rule (:func:`~sketchy_spark.operators.lsh.driver_band_pairs` over
+    the new rows, with :func:`~sketchy_spark.operators.lsh.hub_stars`).
+    Returns None when the pair codes, 8 B each, exceed ``budget``."""
+    return driver_band_pairs(
+        c.tbl["band_keys"], c.rank, cfg, budget,
+        hub_stars(c.rank, c.is_new), new=c.is_new,
     )
-    touch = is_new[x] | is_new[y]
-    ca, cb = rank[x[touch]], rank[y[touch]]
-    prev_min = np.minimum.reduceat(np.where(nw, n, r), starts)
-    new_min = np.minimum.reduceat(np.where(nw, r, n), starts)
-    hub = np.repeat(np.where(prev_min < n, prev_min, new_min), sizes)
-    star &= r != hub
-    a = np.concatenate([np.minimum(ca, cb), np.minimum(r[star], hub[star])])
-    b = np.concatenate([np.maximum(ca, cb), np.maximum(r[star], hub[star])])
-    a, b = np.divmod(np.unique(a[a != b] * n + b[a != b]), n)
-    return a, b, budget
-
-
-def _driver_exact_edges(c: _Collected) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`_incremental_exact_edges` on the driver -> (hub, member)
-    ranks: each new file links to its sha group's pre-batch minimum, else
-    the batch minimum (unnormalized, as the Spark form writes them)."""
-    rank, is_new, n = c.rank, c.is_new, c.ids.size
-    _, sha = np.unique(c.tbl["sha256"].to_numpy(), return_inverse=True)
-    prev_min = np.full(sha.max() + 1 if sha.size else 0, n)
-    new_min = prev_min.copy()
-    np.minimum.at(prev_min, sha[~is_new], rank[~is_new])
-    np.minimum.at(new_min, sha[is_new], rank[is_new])
-    hub = np.where(prev_min < n, prev_min, new_min)[sha[is_new]]
-    member = rank[is_new]
-    return hub[hub != member], member[hub != member]
 
 
 def _resident_batch_edges(
@@ -322,7 +281,9 @@ def _resident_batch_edges(
         if kept is None:
             return None
         verified = verified[kept[0]]
-    hub, member = _driver_exact_edges(c)
+    hub, member = driver_exact_edges(
+        c.tbl["sha256"].to_numpy(), c.rank, c.is_new
+    )
     edges = np.unique(np.concatenate([verified, hub * n + member]))
     ea, eb = np.divmod(edges, n)
     return new_sigs.sparkSession.createDataFrame(
@@ -374,9 +335,12 @@ class IncrementalDedup:
         dfs = [self.store.read_stage(rs, s) for s in stages]
         if not dfs:
             return None
+        # stages sketched before the store dropped winnow fingerprints
+        # still carry them: a mixed union keeps the column, null where
+        # a stage lacks it
         out = dfs[0]
         for d in dfs[1:]:
-            out = out.unionByName(d)
+            out = out.unionByName(d, allowMissingColumns=True)
         return out
 
     def _compacts(self, kind: str) -> list[tuple[int, set[int], str]]:
@@ -581,8 +545,10 @@ class IncrementalDedup:
         if self.store.is_complete(stage_edge):
             return  # terminal marker present -> fully ingested
 
+        # nothing on the incremental path reads winnow fingerprints
         new_sigs, _ = self.store.get_or_compute(
-            self.spark, stage_sig, lambda: sketch_files(files, self.cfg)
+            self.spark, stage_sig,
+            lambda: sketch_files(files, self.cfg, with_fp=False),
         )
         # "prev" = every OTHER ingested batch, by INGEST-TIME order, not
         # id order: an out-of-order BACKFILL (id below already-ingested
@@ -600,7 +566,7 @@ class IncrementalDedup:
         ]
         prev_sigs = self._union(prev_stages)
         all_sigs = (
-            prev_sigs.unionByName(new_sigs)
+            prev_sigs.unionByName(new_sigs, allowMissingColumns=True)
             if prev_sigs is not None
             else new_sigs
         )

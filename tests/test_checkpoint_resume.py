@@ -91,6 +91,55 @@ def test_incremental_equals_single_shot(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("resident", [True, False])
+def test_incremental_resumes_store_with_fingerprint_stages(
+    spark, tmp_path, monkeypatch, resident
+):
+    """Batches are sketched without winnow fingerprints, which nothing on
+    the incremental path reads. A store whose earlier batch stages carry
+    them still resumes: later batches (resident, and handed over to Spark
+    stages with ``RESIDENT_BYTES`` = 0) ingest against the mixed stages,
+    compaction folds both kinds, and the clusters equal the single-shot
+    run's."""
+    import sketchy_spark.streaming.incremental as incremental
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.operators.sketch import sketch_files
+
+    if not resident:
+        monkeypatch.setattr(V, "RESIDENT_BYTES", 0)
+    files = corpus_df(spark, 300).cache()
+    batched = files.withColumn(
+        "batch", F.abs(F.hash(F.concat_ws("/", "repo", "path"))) % 3
+    ).cache()
+
+    def batch(b):
+        return batched.where(F.col("batch") == b).drop("batch")
+
+    store = CheckpointStore(str(tmp_path / "mixed"), CFG.config_hash)
+    with monkeypatch.context() as mp:  # a store written with fingerprints
+        mp.setattr(
+            incremental, "sketch_files", lambda f, cfg, **kw: sketch_files(f, cfg)
+        )
+        IncrementalDedup(spark, store, CFG).ingest_batch(0, batch(0))
+    inc = IncrementalDedup(spark, store, CFG)  # resumed run
+    for b in (0, 1, 2):
+        inc.ingest_batch(b, batch(b))
+
+    def columns(stage):
+        return store.read_stage(spark, stage).columns
+
+    assert "fingerprints" in columns("sig_batch_00000")
+    assert "fingerprints" not in columns("sig_batch_00001")
+    assert inc.compact()
+    assert inc.view_stages("sig") == ["sig_compact_00002"]
+    assert inc.signatures().count() == 300
+    single = run_pipeline(files, CFG, with_containment=False)
+    assert _pairs(inc.clusters()) == _pairs(single.clusters)
+    single.unpersist()
+    batched.unpersist()
+    files.unpersist()
+
+
 def test_incremental_resume_skips_done_batches(spark, tmp_path):
     files = corpus_df(spark, 200).cache()
     store = CheckpointStore(str(tmp_path / "inc2"), CFG.config_hash)

@@ -334,6 +334,34 @@ def test_read_stage_refuses_foreign_session(fake_store, spark):
         store.read_stage(spark, "signatures")  # the real session, not fs
 
 
+def test_read_stage_compares_jvm_sessions(spark, tmp_path):
+    """The foreign-session guard compares the JVM sessions behind the
+    handles: a second Python wrapper of the store's session reads, and
+    ``newSession()`` (same context, its own JVM session) is refused. The
+    stage table is a parquet table in the session catalog."""
+    from pyspark.sql import SparkSession
+
+    path = tmp_path / "guard"
+    spark.createDataFrame([("a", "b")], "a_id string, b_id string").write.parquet(
+        str(path)
+    )
+    spark.sql(
+        f"CREATE TABLE default.ckpt_guard USING parquet LOCATION '{path}'"
+    )
+    try:
+        store = IcebergCheckpointStore(
+            spark, "spark_catalog", "default", CFG.config_hash
+        )
+        wrapper = SparkSession(spark.sparkContext, spark._jsparkSession)
+        assert wrapper is not spark
+        rows = store.read_stage(wrapper, "guard").collect()
+        assert [tuple(r) for r in rows] == [("a", "b")]
+        with pytest.raises(ValueError, match="owns its catalog"):
+            store.read_stage(spark.newSession(), "guard")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS default.ckpt_guard")
+
+
 def test_pipeline_checkpoint_resume_on_iceberg_path(fake_store, spark):
     """The shim's flagship resume test replayed on the Iceberg code path:
     first run computes all 4 stages, a second run resumes all 4, and the

@@ -161,3 +161,117 @@ def test_unpersist_releases_every_pipeline_cache(spark):
     assert n_persistent() > base
     res.unpersist()
     assert n_persistent() == base
+
+
+def _python_nodes(spark, group):
+    """Output descriptions of the ``MapInPandas`` nodes that received
+    rows in the SQL executions of job group ``group``: a node whose
+    subtree a cached table serves reports no data sent to Python."""
+    group_jobs = {
+        str(j) for j in spark.sparkContext.statusTracker()
+        .getJobIdsForGroup(group)
+    }
+    sql = spark._jsparkSession.sharedState().statusStore()
+    ran = []
+    execs = sql.executionsList().iterator()
+    while execs.hasNext():
+        e = execs.next()
+        if not group_jobs & set(e.jobs().keySet().mkString(",").split(",")):
+            continue
+        values = sql.executionMetrics(e.executionId())
+        nodes = sql.planGraph(e.executionId()).allNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            if node.name() != "MapInPandas":
+                continue
+            metrics = node.metrics().iterator()
+            while metrics.hasNext():
+                m = metrics.next()
+                if m.name() != "data sent to Python workers":
+                    continue
+                v = values.get(m.accumulatorId())
+                if v.isDefined() and v.get() != "0.0 B":
+                    ran.append(node.desc())
+    return ran
+
+
+def _is_sketch(desc):
+    # the sketch UDF reads content and emits n_shingles
+    return "content#" in desc and "n_shingles#" in desc
+
+
+def test_resident_edges_match_spark_path(spark, monkeypatch):
+    """The plain pipeline's resident stage (one Arrow collect: band join,
+    exact-sha edges, cascade, union-find) gives the same clusters,
+    candidates, verified and edges rows as its Spark stages
+    (``RESIDENT_BYTES`` = 0). The corpus is the planted corpus plus an
+    over-cap near-dup clique at cap 8 (20 members, salt fan-out 3), two
+    empty files, which have no shingles, so their only link is the
+    exact-sha edge, and singletons. The resident run's only Python
+    stages are the sketch and the borderline re-sketch, and its frames
+    are local."""
+    import numpy as np
+    import pandas as pd
+
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.operators.lsh import band_table, hot_band_keys
+    from sketchy_spark.plans.explain import physical_plan
+
+    cfg = SketchConfig(band_skew_cap=8)
+    cols = ["repo", "path", "commit", "lang", "content"]
+    body = "\n".join(f"def fn_{i}(x): return x + {i * 7}" for i in range(120))
+    rng = np.random.default_rng(5)
+    extra = pd.DataFrame(
+        [("org/clique", f"src/m{m}.py", "c", "py", body + f"\n# member {m}")
+         for m in range(20)]
+        + [("org/tiny", f"t{i}.py", "c", "py", "") for i in range(2)]
+        + [("org/solo", f"s{i}.py", "c", "py", rng.bytes(900).hex())
+           for i in range(3)],
+        columns=cols,
+    )
+    pdf = pd.concat([corpus_pandas(600)[cols], extra], ignore_index=True)
+    files = spark.createDataFrame(pdf).cache()
+
+    def run(group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "resident edges parity")
+        try:
+            res = run_pipeline(files, cfg, with_containment=False)
+            rows = {
+                k: sorted(tuple(r) for r in getattr(res, k).collect())
+                for k in ("clusters", "candidates", "verified", "edges")
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return res, rows
+
+    res, resident = run("resident-edges")
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", 0)
+        handed_res, handed = run("handed-over-edges")
+    assert resident == handed
+
+    bands = band_table(res.signatures, cfg, id_col="fid")
+    assert hot_band_keys(bands, cfg.band_skew_cap).count() > 0
+    labels = dict(resident["clusters"])
+    assert len({labels[f"org/clique/src/m{m}.py"] for m in range(20)}) == 1
+    tiny = ("org/tiny/t0.py", "org/tiny/t1.py")
+    assert tiny in resident["candidates"]
+    assert tiny not in {r[:2] for r in resident["verified"]}
+    assert labels[tiny[0]] == labels[tiny[1]]
+    for i in range(3):
+        assert labels[f"org/solo/s{i}.py"] == f"org/solo/s{i}.py"
+
+    ran = _python_nodes(spark, "resident-edges")
+    assert len(ran) == 2 and all(map(_is_sketch, ran)), ran
+    assert not all(map(_is_sketch, _python_nodes(spark, "handed-over-edges")))
+    # the resident frames are local; the Spark stages' plans read the
+    # signature cache, whose plan holds the sketch
+    frames = ("clusters", "candidates", "verified", "edges")
+    plans = [physical_plan(getattr(res, k)) for k in frames]
+    assert not any("MapInPandas" in p for p in plans)
+    plans = [physical_plan(getattr(handed_res, k)) for k in frames]
+    assert all("MapInPandas" in p for p in plans)
+    res.unpersist()
+    handed_res.unpersist()
+    files.unpersist()
