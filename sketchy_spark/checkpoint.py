@@ -11,6 +11,10 @@ keeps tests hermetic in the sandbox.
 Resume contract: a completed stage (manifest status=complete, matching
 config_hash) is read back, not recomputed; an incomplete/missing stage
 recomputes. Stage outputs are immutable once complete.
+
+The store only keeps tables; what goes in them is its callers' business:
+``pipeline.run_pipeline(store=...)`` writes the :data:`STAGES` of one
+run, and ``streaming.incremental.IncrementalDedup`` its per-batch stages.
 """
 
 from __future__ import annotations
@@ -20,7 +24,6 @@ import shutil
 import time
 from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -360,7 +363,7 @@ def make_store(
     """Checkpoint-store factory: a real Iceberg store when the runtime
     provides the jar + a configured Iceberg catalog, else the parquet
     shim rooted at ``root``. Same API either way, so
-    run_pipeline_checkpointed and the incremental ingest are
+    ``pipeline.run_pipeline(store=...)`` and the incremental ingest are
     backend-agnostic."""
     cats = iceberg_catalogs(spark)
     if cats:
@@ -368,63 +371,6 @@ def make_store(
     return CheckpointStore(root, config_hash)
 
 
+# The stages ``pipeline.run_pipeline(store=...)`` writes, in run order:
+# invalidate_from(STAGES, s) drops s and every stage computed from it.
 STAGES = ["signatures", "edges", "clusters", "containment"]
-
-
-def run_pipeline_checkpointed(
-    files: DataFrame, cfg, store: CheckpointStore
-) -> dict:
-    """Checkpointed end-to-end run; each completed stage is skipped on
-    resume. Returns {stage: DataFrame} plus a ``resumed`` map."""
-    from sketchy_spark.operators.cluster import assign_clusters
-    from sketchy_spark.operators.lsh import candidate_pairs, exact_dup_edges
-    from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import verified_pairs_cascade
-    from sketchy_spark.pipeline import containment_pairs
-
-    spark = files.sparkSession
-    resumed: dict[str, bool] = {}
-
-    signatures, resumed["signatures"] = store.get_or_compute(
-        spark, "signatures", lambda: sketch_files(files, cfg)
-    )
-
-    held: list[DataFrame] = []
-
-    def _edges():
-        # candidate_pairs is lazy (single-evaluation contract) but the
-        # cascade reads the pair frame more than once; persist it for the
-        # duration of the stage write, released right after with the
-        # scan-side cascade's own caches. The signature count comes from
-        # the stage manifest, so sizing the cascade runs no count job.
-        cand = candidate_pairs(signatures, cfg).persist()
-        held.append(cand)
-        ver = verified_pairs_cascade(
-            cand, signatures, cfg,
-            n_files=store.manifest("signatures")["rows"], persisted=held,
-        )
-        return (
-            exact_dup_edges(signatures)
-            .unionByName(ver.select("a_id", "b_id"))
-            .distinct()
-        )
-
-    edges, resumed["edges"] = store.get_or_compute(spark, "edges", _edges)
-    for df in held:  # stage parquet is written; the cache served its job
-        df.unpersist()
-
-    clusters, resumed["clusters"] = store.get_or_compute(
-        spark, "clusters", lambda: assign_clusters(signatures, edges)
-    )
-    containment, resumed["containment"] = store.get_or_compute(
-        spark,
-        "containment",
-        lambda: containment_pairs(signatures, files, cfg),
-    )
-    return {
-        "signatures": signatures,
-        "edges": edges,
-        "clusters": clusters,
-        "containment": containment,
-        "resumed": resumed,
-    }

@@ -84,30 +84,25 @@ def main(argv: list[str] | None = None) -> int:
 
         files = corpus_df(spark, args.synthetic)
 
+    from sketchy_spark.checkpoint import make_store
+    from sketchy_spark.pipeline import run_pipeline
+
     out = Path(args.output)
+    store = None
     if args.checkpoint:
-        from sketchy_spark.checkpoint import CheckpointStore, run_pipeline_checkpointed
-
-        store = CheckpointStore(args.checkpoint, cfg.config_hash)
-        res = run_pipeline_checkpointed(files, cfg, store)
-        clusters, containment = res["clusters"], res["containment"]
-        resumed = res["resumed"]
-    else:
-        from sketchy_spark.pipeline import run_pipeline
-
-        r = run_pipeline(files, cfg, with_containment=args.containment)
-        clusters, containment = r.clusters, r.containment
-        resumed = None
-
-    clusters.write.mode("overwrite").parquet(str(out / "clusters"))
-    if args.containment or args.checkpoint:
-        containment.write.mode("overwrite").parquet(str(out / "containment"))
+        store = make_store(spark, args.checkpoint, cfg.config_hash)
+    r = run_pipeline(
+        files, cfg, with_containment=args.containment, store=store
+    )
+    r.clusters.write.mode("overwrite").parquet(str(out / "clusters"))
+    if args.containment:
+        r.containment.write.mode("overwrite").parquet(str(out / "containment"))
     n = spark.read.parquet(str(out / "clusters")).count()
     summary = {
         "rows": n,
         "wall_sec": round(time.time() - t0, 2),
         "config_hash": cfg.config_hash,
-        "resumed": resumed,
+        "resumed": r.resumed,
         "output": str(out),
     }
     print(json.dumps(summary))

@@ -24,7 +24,10 @@ I64_SHIFT = 1 << 63  # order-preserving uint64 -> int64 shift (SURVEY §4.2)
 # packed to array<int> (low 32 bits of the OPH value) — a v1 store
 # (array<long>, full 64 bits) unioned with v2 batches would never match
 # band keys across the boundary, silently losing cross-batch recall.
-SIG_FORMAT_VERSION = 2
+# v3: the pipeline's stages are slim and fid-keyed (no ``sig`` column;
+# edges are (a_fid, b_fid)) — a v2 store's (a_id, b_id) edges must not
+# resume into a reader that expects fids.
+SIG_FORMAT_VERSION = 3
 
 
 @dataclass(frozen=True)

@@ -4,9 +4,14 @@ Iterative min-label propagation in the DataFrame API: each round every
 vertex takes the minimum label among itself and its neighbors; fixpoint
 when no label changes. Duplicate clusters are small and dense (diameter
 a few hops), so convergence is fast; ``localCheckpoint`` each round cuts
-the join lineage (SURVEY §4.3). Cluster id = lexicographic min member —
-deterministic, unlike the reference's HashMap-order consensus ties
-(src/sketchy.rs:408).
+the join lineage (SURVEY §4.3).
+
+Label rule: a cluster's ``cluster_id`` is the least file_id (string
+order) among its members, whichever key the components ran on — string
+ids here, fid longs in :func:`assign_clusters_fid` and the pipeline's
+driver stage. Plain, stored, resumed and incremental runs therefore label
+the same cluster the same way; the reference breaks consensus ties in
+HashMap order instead (src/sketchy.rs:408).
 """
 
 from __future__ import annotations
@@ -53,19 +58,6 @@ def connected_components(
     return _distributed_components(edges, max_iter, check_every)
 
 
-def _timing(label: str, t0: float) -> None:
-    import os
-    import sys
-    import time
-
-    if os.environ.get("SKETCHY_TIMING"):
-        print(
-            f"[timing] {label}: {time.time() - t0:.2f}s",
-            file=sys.stderr,
-            flush=True,
-        )
-
-
 def min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
     """Each vertex 0..n-1's component label over the edges (``a``,
     ``b``): the least vertex in its component.
@@ -92,19 +84,14 @@ def min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Collect edges (Arrow), union-find over factorized int ids, return
     labels. Deterministic: cluster label = lexicographic min member."""
-    import time
-
     import pandas as pd
 
-    t0 = time.time()
     pdf = edges.select("a_id", "b_id").toPandas()  # Arrow transfer
-    _timing("uf.toPandas", t0)
     spark = edges.sparkSession
     if len(pdf) == 0:
         return spark.createDataFrame(
             [], "file_id string, cluster_id string"
         )
-    t0 = time.time()
     codes, uniques = pd.factorize(
         pd.concat([pdf["a_id"], pdf["b_id"]], ignore_index=True)
     )
@@ -124,11 +111,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         members = pd.DataFrame({"file_id": uniques, "root": parent})
         label = members.groupby("root")["file_id"].transform("min")
         out = pd.DataFrame({"file_id": uniques, "cluster_id": label})
-    _timing("uf.unionfind+label", t0)
-    t0 = time.time()
-    df = spark.createDataFrame(out)  # Arrow path, not row pickling
-    _timing("uf.createDataFrame", t0)
-    return df
+    return spark.createDataFrame(out)  # Arrow path, not row pickling
 
 
 # The off-round-checkpoint plan tree grows ~4x per unchecked round (see
@@ -266,9 +249,10 @@ def assign_clusters_fid(
 ) -> DataFrame:
     """Cluster assignment from fid-keyed edges (a_fid, b_fid): connected
     components run entirely on int64 labels (cheap compares, 16-byte
-    shuffle rows); the string cluster label — the minimum-fid member's
-    file_id — attaches afterwards via one broadcast-size join per root.
-    Output contract matches :func:`assign_clusters`:
+    shuffle rows); the string cluster label — the least file_id among
+    each root's members (the module's label rule) — attaches afterwards
+    via one broadcast-size join per root. Output contract matches
+    :func:`assign_clusters`:
     (file_id, cluster_id) with singletons labeled by their own file_id,
     and the same partition invariant — every distinct input file_id in
     exactly one output row.
@@ -299,11 +283,9 @@ def assign_clusters_fid(
     ).select(F.col("file_id").alias("fid"), F.col("cluster_id").alias("root"))
     slim = signatures.select("fid", "file_id")
     root_names = (
-        cc.select(F.col("root").alias("fid")).distinct()
-        .join(slim, "fid")
-        .select(
-            F.col("fid").alias("root"), F.col("file_id").alias("root_name")
-        )
+        cc.join(slim, "fid")
+        .groupBy("root")
+        .agg(F.min("file_id").alias("root_name"))
     )
     # duplicate-edge vertices ≪ corpus: when the edge set is small enough
     # for the driver union-find, broadcast the label map into the big

@@ -40,8 +40,9 @@ def with_fid(signatures: DataFrame) -> DataFrame:
 
 
 def exact_dup_edges_fid(signatures: DataFrame) -> DataFrame:
-    """Star edges (a_fid, b_fid) within identical-sha256 groups — the fid
-    twin of :func:`exact_dup_edges`, shuffling (sha256, fid) rows only.
+    """Star edges (a_fid, b_fid) within identical-sha256 groups: each
+    member links to its group's minimum fid, so exact duplicates connect
+    in O(group) edges, shuffling (sha256, fid) rows only.
 
     Needed despite LSH catching identical content too: degenerate
     identical files (empty / shorter than a shingle) have no shingles, so
@@ -472,37 +473,4 @@ def attach_file_ids(
         fid_pairs.join(a, "a_fid")
         .join(b, "b_fid")
         .select("a_id", "b_id", *other)
-    )
-
-
-def candidate_pairs(
-    signatures: DataFrame, cfg: SketchConfig, cache_bands: bool = True
-) -> DataFrame:
-    """Distinct candidate (a_id, b_id) strings with a_id < b_id (public
-    form; heavy lifting happens on fid longs — see candidate_pairs_fid)."""
-    pairs = attach_file_ids(candidate_pairs_fid(signatures, cfg), signatures)
-    # fid order and string order can disagree; normalize to a_id < b_id
-    return pairs.select(
-        F.least("a_id", "b_id").alias("a_id"),
-        F.greatest("a_id", "b_id").alias("b_id"),
-    ).distinct()
-
-
-def exact_dup_edges(signatures: DataFrame) -> DataFrame:
-    """Star edges (member -> group-min) within identical-sha256 groups.
-
-    Exact duplicates connect in O(group) edges instead of O(group²) pairs —
-    the cheap path the LSH join never needs to see. Analogue of the
-    self-match == s invariant (docs/index.md:149): identical content is a
-    duplicate by definition. One slim window shuffle — no driver-side
-    broadcast build (a ~sha256-cardinality broadcast is serial time).
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("sha256")
-    return (
-        signatures.select("sha256", "file_id")
-        .withColumn("hub", F.min("file_id").over(w))
-        .where(F.col("file_id") != F.col("hub"))
-        .select(F.col("hub").alias("a_id"), F.col("file_id").alias("b_id"))
     )

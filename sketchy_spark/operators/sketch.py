@@ -134,8 +134,8 @@ def sketch_files(
     ``with_sig=False`` omits the bottom-s ``sig`` column (8 KB/row at
     s=1000 — the bulk of Arrow transfer and cache footprint). The
     pipeline's cascade re-sketches just the borderline files with
-    ``with_sig=True``; the full table remains the checkpointed/parity
-    form (SURVEY §1.2).
+    ``with_sig=True``; the full table remains the parity form (SURVEY
+    §1.2).
     """
     prepared = files.select(
         F.concat_ws("/", "repo", "path").alias("file_id"),

@@ -23,6 +23,11 @@ what the collect left, the run hands over to Spark stages
 (:func:`candidate_pairs_fid`, :func:`verified_pairs_cascade`,
 :func:`exact_dup_edges_fid`, :func:`assign_clusters_fid`), with
 identical rows.
+
+Every run labels a cluster by its least file_id (string order), the
+rule of operators/cluster.py, whether its clusters come from the driver
+stage, from :func:`assign_clusters_fid` or from a checkpoint store
+(``run_pipeline(store=...)``).
 """
 
 from __future__ import annotations
@@ -59,12 +64,13 @@ from sketchy_spark.operators.verify import (
 @dataclass
 class PipelineResult:
     signatures: DataFrame
-    candidates: DataFrame
-    verified: DataFrame
+    candidates: DataFrame | None  # None when the edges stage was resumed
+    verified: DataFrame | None  # None when the edges stage was resumed
     clusters: DataFrame
     containment: DataFrame
     edges: DataFrame | None = None
     persisted: tuple = ()  # internal fid frames to release on unpersist
+    resumed: dict | None = None  # stage -> read back (store runs only)
 
     def unpersist(self) -> None:
         """Release every frame the pipeline persisted (bench hygiene)."""
@@ -82,10 +88,11 @@ def run_pipeline(
     with_containment: bool = True,
     cache_signatures: bool = True,
     range_partition: bool = False,
+    store=None,
 ) -> PipelineResult:
     """Run the full dedup pipeline; materialization points are the
-    caller's choice (tests collect; bench writes; checkpointed runs go
-    through streaming/incremental.py).
+    caller's choice (tests collect; bench writes; a ``store`` checkpoints
+    every stage).
 
     ``range_partition=True`` inserts ``repartitionByRange('lang','repo')``
     at ingest (north-star partitioning): co-locates same-language/repo
@@ -100,16 +107,43 @@ def run_pipeline(
     the driver while the signature rows fit the resident budget (module
     docstring) and come back as local frames; without it, as Spark
     stages.
+
+    ``store`` (a :mod:`sketchy_spark.checkpoint` store) makes the run
+    resumable: each stage of ``checkpoint.STAGES`` — the slim fid-keyed
+    signatures, the ``(a_fid, b_fid)`` edges, the clusters and, with
+    ``with_containment``, the containment pairs — goes through
+    ``store.get_or_compute``, so a stage the store holds complete is read
+    back and any other is computed by the same code as a run without a
+    store, then written and read back. ``resumed`` maps each of those
+    stages to whether it was read back; ``candidates`` and ``verified``
+    are None when the edges stage was. Clusters recomputed over resumed
+    edges come from :func:`assign_clusters_fid`, with the same labels
+    (module docstring).
     """
     if range_partition:
         files = files.repartitionByRange("lang", "repo")
+    resumed = None if store is None else {}
+
+    def stage(name, compute):
+        if store is None:
+            return compute()
+        df, resumed[name] = store.get_or_compute(
+            files.sparkSession, name, compute
+        )
+        return df
+
     # Slim sketch pass: the bottom-s sig column (8 KB/row) is only ever
     # read for borderline pairs, which the cascade re-sketches on demand —
     # the cached working set stays ~2 KB/row. Winnow fingerprints are
-    # skipped entirely when the containment pass is off.
-    signatures = with_fid(
-        sketch_files(files, cfg, with_sig=False, with_fp=with_containment)
+    # skipped when the containment pass is off, unless the stage is
+    # stored, where a later run with the pass may resume it.
+    sketch = with_fid(
+        sketch_files(
+            files, cfg, with_sig=False,
+            with_fp=with_containment or store is not None,
+        )
     )
+    signatures = stage("signatures", lambda: sketch)
     # ``internal`` collects every frame the Spark stages persist (band
     # cache, candidate pairs, verified pairs, and the scan-side cascade
     # estimates, containment groups and staged pairs) so unpersist() can
@@ -119,33 +153,52 @@ def run_pipeline(
     if cache_signatures:
         # signatures feed every later stage; recomputing the UDF stage
         # per consumer would multiply the dominant cost. This aggregate
-        # is the run's first action: it populates the cache and, in the
-        # same job, counts the rows that size the resident stage and the
-        # cascade, and the fingerprint rows that size the containment
-        # pass. Every later read of the signatures is a memory scan.
+        # is the run's first action after any stage write: it populates
+        # the cache and, in the same job, counts the rows that size the
+        # resident stage and the cascade, and the fingerprint rows that
+        # size the containment pass. Every later read of the signatures
+        # is a memory scan.
         signatures = signatures.cache()
         n_files, n_fp = signatures.agg(
             F.count("*"),
             F.sum(F.size("fingerprints")) if with_containment else F.lit(0),
         ).first()
-    # _resident_edges reads verify.RESIDENT_BYTES at call time, so a
-    # caller that sets it to 0 drives the Spark stages.
-    stage = None
-    if n_files is not None:
-        stage = _resident_edges(signatures, files, cfg, n_files)
-    if stage is None:
-        stage = _spark_edges(signatures, files, cfg, n_files, internal)
-    candidates, verified, edges, clusters = stage
+
+    # (candidates, verified, edges, clusters) when the edges stage is
+    # computed in this run; empty when the store resumed it.
+    fresh: list = []
+
+    def compute_edges():
+        # _resident_edges reads verify.RESIDENT_BYTES at call time, so a
+        # caller that sets it to 0 drives the Spark stages.
+        got = None
+        if n_files is not None:
+            got = _resident_edges(signatures, files, cfg, n_files)
+        if got is None:
+            got = _spark_edges(signatures, files, cfg, n_files, internal)
+        fresh.extend(got)
+        return fresh[2]
+
+    edges = stage("edges", compute_edges)
+    candidates, verified, _, fresh_clusters = fresh or (None,) * 4
+    clusters = stage(
+        "clusters",
+        lambda: fresh_clusters if fresh
+        else assign_clusters_fid(signatures, edges),
+    )
 
     if with_containment:
-        cont = containment_pairs(
-            signatures, files, cfg, persisted=internal, n_fp=n_fp
+        cont = stage(
+            "containment",
+            lambda: containment_pairs(
+                signatures, files, cfg, persisted=internal, n_fp=n_fp
+            ),
         )
     else:
         cont = signatures.sparkSession.createDataFrame([], CONTAINMENT_SCHEMA)
     return PipelineResult(
         signatures, candidates, verified, clusters, cont, edges,
-        persisted=tuple(internal),
+        persisted=tuple(internal), resumed=resumed,
     )
 
 
@@ -168,7 +221,7 @@ def _resident_edges(
     :func:`driver_band_pairs` under :func:`candidate_pairs_fid`'s salted
     hot rule, the :func:`exact_dup_edges_fid` star to each sha group's
     minimum fid, the cascade core (one borderline re-sketch) and the
-    union-find, which labels each file with its min-fid member's
+    union-find, which labels each file with its component's least
     file_id. Returns None, for the caller to hand over to the Spark
     stages, when the rows do not fit ``verify.RESIDENT_BYTES`` or the
     pair codes or the borderline sigs would overflow what they left."""
@@ -211,6 +264,11 @@ def _resident_edges(
         np.unique(np.concatenate([va * n + vb, hub * n + member])), n
     )
     names = tbl["file_id"].to_numpy()[first]
+    # label rule (operators/cluster.py): each component's least file_id
+    labels = min_labels(ea, eb, n)
+    uniq, srank = np.unique(names, return_inverse=True)
+    least = np.full(n, n)
+    np.minimum.at(least, labels, srank)
 
     def id_pairs(a, b, **cols):
         sa, sb = names[a], names[b]
@@ -234,7 +292,7 @@ def _resident_edges(
         spark.createDataFrame(
             pd.DataFrame({
                 "file_id": tbl["file_id"].to_numpy(),
-                "cluster_id": names[min_labels(ea, eb, n)[rank]],
+                "cluster_id": uniq[least[labels][rank]],
             }),
             "file_id string, cluster_id string",
         ),
@@ -286,8 +344,7 @@ def containment_pairs(
     persisted: list | None = None, n_fp: int | None = None,
 ) -> DataFrame:
     """The containment pass (G3): fingerprint candidates, then
-    substring verification — the one stage both the plain and the
-    checkpointed pipeline run. ``n_fp``: the signatures' total
+    substring verification. ``n_fp``: the signatures' total
     fingerprint count if known (see
     :func:`~sketchy_spark.operators.verify.containment_candidates`).
 

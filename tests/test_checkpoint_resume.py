@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from sketchy_spark.checkpoint import STAGES, CheckpointStore, run_pipeline_checkpointed
+from sketchy_spark.checkpoint import STAGES, CheckpointStore
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_df, truth_dup_pairs, truth_pandas
 from sketchy_spark.pipeline import run_pipeline
@@ -28,22 +28,22 @@ def test_checkpoint_run_and_resume(spark, tmp_path):
     files = corpus_df(spark, N).cache()
     store = CheckpointStore(str(tmp_path / "ckpt"), CFG.config_hash)
 
-    first = run_pipeline_checkpointed(files, CFG, store)
-    assert first["resumed"] == {s: False for s in STAGES}
-    pairs1 = _pairs(first["clusters"])
+    first = run_pipeline(files, CFG, store=store)
+    assert first.resumed == {s: False for s in STAGES}
+    pairs1 = _pairs(first.clusters)
 
     # simulate a crash after 'edges': drop later stages, rerun
     store.invalidate_from(STAGES, "clusters")
-    second = run_pipeline_checkpointed(files, CFG, store)
-    assert second["resumed"]["signatures"] is True
-    assert second["resumed"]["edges"] is True
-    assert second["resumed"]["clusters"] is False
-    assert _pairs(second["clusters"]) == pairs1
+    second = run_pipeline(files, CFG, store=store)
+    assert second.resumed["signatures"] is True
+    assert second.resumed["edges"] is True
+    assert second.resumed["clusters"] is False
+    assert _pairs(second.clusters) == pairs1
 
     # full resume: everything skipped, identical output
-    third = run_pipeline_checkpointed(files, CFG, store)
-    assert third["resumed"] == {s: True for s in STAGES}
-    assert _pairs(third["clusters"]) == pairs1
+    third = run_pipeline(files, CFG, store=store)
+    assert third.resumed == {s: True for s in STAGES}
+    assert _pairs(third.clusters) == pairs1
 
     # one verifier: the checkpointed clusters equal the plain pipeline's
     plain = run_pipeline(files, CFG, with_containment=False)
@@ -54,22 +54,44 @@ def test_checkpoint_run_and_resume(spark, tmp_path):
 def test_manifest_lineage(spark, tmp_path):
     files = corpus_df(spark, 200)
     store = CheckpointStore(str(tmp_path / "c2"), CFG.config_hash)
-    run_pipeline_checkpointed(files, CFG, store)
+    run_pipeline(files, CFG, store=store)
     m = store.manifest("signatures")
     assert m["status"] == "complete"
     assert m["rows"] == 200
     # per-partition lineage present and consistent (G7)
     assert sum(p["rows"] for p in m["partitions"]) == 200
     assert m["config_hash"] == CFG.config_hash
+    # the stored stage is the slim sketch: no 8 KB bottom-s column
+    cols = store.read_stage(spark, "signatures").columns
+    assert "fid" in cols and "sig" not in cols
 
 
-def test_config_change_invalidates(spark, tmp_path):
+def test_config_change_invalidates(spark, tmp_path, monkeypatch):
     files = corpus_df(spark, 200)
     store = CheckpointStore(str(tmp_path / "c3"), CFG.config_hash)
-    run_pipeline_checkpointed(files, CFG, store)
+    run_pipeline(files, CFG, store=store)
     other = SketchConfig(seed=42)
     store2 = CheckpointStore(str(tmp_path / "c3"), other.config_hash)
     assert not store2.is_complete("signatures")
+
+    # A store marked complete under the v2 format (the string-keyed
+    # stages: full signatures, (a_id, b_id) edges) is not resumed.
+    import sketchy_spark.config as config
+
+    with monkeypatch.context() as mp:
+        mp.setattr(config, "SIG_FORMAT_VERSION", 2)
+        v2_hash = CFG.config_hash
+    assert v2_hash != CFG.config_hash
+    v2 = CheckpointStore(str(tmp_path / "v2"), v2_hash)
+    pair = spark.createDataFrame([("a", "b")], "a_id string, b_id string")
+    for s in STAGES:
+        v2.write_stage(s, pair)
+    store3 = CheckpointStore(str(tmp_path / "v2"), CFG.config_hash)
+    assert not any(store3.is_complete(s) for s in STAGES)
+    r = run_pipeline(files, CFG, store=store3)
+    assert r.resumed == {s: False for s in STAGES}
+    assert r.edges.columns == ["a_fid", "b_fid"]
+    r.unpersist()
 
 
 def test_incremental_equals_single_shot(spark, tmp_path):
@@ -89,6 +111,67 @@ def test_incremental_equals_single_shot(spark, tmp_path):
         inc.ingest_batch(b, batched.where(F.col("batch") == b).drop("batch"))
     got = _pairs(inc.clusters())
     assert got == want
+
+
+def test_one_label_across_runs(spark, tmp_path, monkeypatch):
+    """One label rule on every path: the plain run (driver stage, and
+    Spark stages with ``RESIDENT_BYTES`` = 0), a fresh store run, store
+    runs resumed after the edges and after the clusters stage were
+    dropped, and a 5-batch incremental ingest give identical
+    ``(file_id, cluster_id)`` rows, each label its cluster's least
+    file_id."""
+    from sketchy_spark.operators import verify as V
+
+    files = corpus_df(spark, N).cache()
+
+    def rows(r):
+        got = sorted(tuple(x) for x in r.clusters.collect())
+        r.unpersist()
+        return got
+
+    runs = {"plain": rows(run_pipeline(files, CFG, with_containment=False))}
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", 0)
+        runs["spark stages"] = rows(
+            run_pipeline(files, CFG, with_containment=False)
+        )
+
+    store = CheckpointStore(str(tmp_path / "ckpt"), CFG.config_hash)
+    for name, drop, want in [
+        ("fresh store", None, {s: False for s in STAGES}),
+        ("edges dropped", "edges", {"signatures": True, "edges": False,
+                                    "clusters": False, "containment": False}),
+        ("clusters dropped", "clusters", {"signatures": True, "edges": True,
+                                          "clusters": False,
+                                          "containment": False}),
+    ]:
+        if drop:
+            store.invalidate_from(STAGES, drop)
+        r = run_pipeline(files, CFG, store=store)
+        assert r.resumed == want, name
+        runs[name] = rows(r)
+
+    inc = IncrementalDedup(
+        spark, CheckpointStore(str(tmp_path / "inc"), CFG.config_hash), CFG
+    )
+    batched = files.withColumn(
+        "batch", F.abs(F.hash(F.concat_ws("/", "repo", "path"))) % 5
+    ).cache()
+    for b in range(5):
+        inc.ingest_batch(b, batched.where(F.col("batch") == b).drop("batch"))
+    runs["incremental"] = sorted(tuple(x) for x in inc.clusters().collect())
+
+    want = runs["plain"]
+    assert len(want) == N
+    for name, got in runs.items():
+        assert got == want, name
+    least: dict = {}
+    for fid, cid in want:
+        least[cid] = min(least.get(cid, fid), fid)
+    assert all(cid == least[cid] for _, cid in want)
+    assert len(least) < N  # the corpus has multi-file clusters
+    batched.unpersist()
+    files.unpersist()
 
 
 @pytest.mark.parametrize("resident", [True, False])
@@ -698,5 +781,5 @@ def test_checkpointed_containment_matches_plain(spark, tmp_path):
     want = rows(plain.containment)
     plain.unpersist()
     store = CheckpointStore(str(tmp_path / "cont"), CFG.config_hash)
-    got = rows(run_pipeline_checkpointed(files, CFG, store)["containment"])
+    got = rows(run_pipeline(files, CFG, store=store).containment)
     assert got == want and len(want) > 0

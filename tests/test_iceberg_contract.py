@@ -19,13 +19,10 @@ import re
 
 import pytest
 
-from sketchy_spark.checkpoint import (
-    STAGES,
-    IcebergCheckpointStore,
-    run_pipeline_checkpointed,
-)
+from sketchy_spark.checkpoint import STAGES, IcebergCheckpointStore
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_df, truth_dup_pairs, truth_pandas
+from sketchy_spark.pipeline import run_pipeline
 from sketchy_spark.streaming.incremental import IncrementalDedup
 
 CFG = SketchConfig()
@@ -368,12 +365,12 @@ def test_pipeline_checkpoint_resume_on_iceberg_path(fake_store, spark):
     resumed clusters carry the planted dup pairs."""
     store, fs = fake_store
     files = corpus_df(spark, 300).cache()
-    first = run_pipeline_checkpointed(files, CFG, store)
-    assert first["resumed"] == {s: False for s in STAGES}
-    second = run_pipeline_checkpointed(files, CFG, store)
-    assert second["resumed"] == {s: True for s in STAGES}
+    first = run_pipeline(files, CFG, store=store)
+    assert first.resumed == {s: False for s in STAGES}
+    second = run_pipeline(files, CFG, store=store)
+    assert second.resumed == {s: True for s in STAGES}
     got = {}
-    for r in second["clusters"].collect():
+    for r in second.clusters.collect():
         got.setdefault(r["cluster_id"], []).append(r["file_id"])
     pairs = set()
     for ms in got.values():

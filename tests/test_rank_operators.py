@@ -7,7 +7,12 @@ import pytest
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_pandas
-from sketchy_spark.operators.lsh import band_table, candidate_pairs, exact_dup_edges
+from sketchy_spark.operators.lsh import (
+    attach_file_ids,
+    band_table,
+    candidate_pairs_fid,
+    exact_dup_edges_fid,
+)
 from sketchy_spark.operators.rank import (
     MissingMetadataError,
     congruence_check,
@@ -157,13 +162,13 @@ def test_lsh_recall_vs_bruteforce(spark, sigs):
             union = len(arrs[i]) + len(arrs[j]) - inter
             if union and inter / union >= CFG.jaccard_threshold:
                 true_pairs.add(tuple(sorted((ids[i], ids[j]))))
-    cand = {
-        tuple(sorted((r["a_id"], r["b_id"])))
-        for r in candidate_pairs(sigs, CFG).collect()
-    }
-    exact = {
-        tuple(sorted((r["a_id"], r["b_id"])))
-        for r in exact_dup_edges(sigs).collect()
-    }
+    def id_pairs(fid_pairs):
+        return {
+            tuple(sorted((r["a_id"], r["b_id"])))
+            for r in attach_file_ids(fid_pairs, sigs).collect()
+        }
+
+    cand = id_pairs(candidate_pairs_fid(sigs, CFG))
+    exact = id_pairs(exact_dup_edges_fid(sigs))
     missed = true_pairs - cand - exact
     assert len(missed) / max(1, len(true_pairs)) <= 0.01, missed

@@ -77,10 +77,13 @@ def test_signature_pipeline_plan_properties(spark):
     files = corpus_df(spark, 200)
     sigs = sketch_files(files, CFG)
     # content never crosses a shuffle after the sketch UDF
-    from sketchy_spark.operators.lsh import candidate_pairs
+    from sketchy_spark.operators.lsh import (
+        attach_file_ids,
+        candidate_pairs_fid,
+    )
     from sketchy_spark.plans.explain import physical_plan
 
-    cand = candidate_pairs(sigs, CFG, cache_bands=False)
+    cand = attach_file_ids(candidate_pairs_fid(sigs, CFG), sigs)
     assert not column_crosses_shuffle(cand, "content")
     assert wholestage_codegen_spans(cand) > 0
     # the candidate stage's claim: every heavy shuffle moves 16-byte fid
@@ -89,8 +92,6 @@ def test_signature_pipeline_plan_properties(spark):
     # hot-key count groupBy + cold groupBy + hot salt groupBy + hub
     # groupBy + pair distinct = 5 (of which only count/cold/distinct
     # carry full-size data; the hot ones see the boilerplate subset).
-    from sketchy_spark.operators.lsh import candidate_pairs_fid
-
     fid_plan = physical_plan(candidate_pairs_fid(sigs, CFG)).split(
         "== Initial Plan =="
     )[0]

@@ -4,7 +4,7 @@ import pytest
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_pandas
-from sketchy_spark.operators.lsh import candidate_pairs
+from sketchy_spark.operators.lsh import attach_file_ids, candidate_pairs_fid
 from sketchy_spark.operators.sketch import sketch_files
 from sketchy_spark.operators.verify import verified_pairs, verified_pairs_sql
 
@@ -15,7 +15,7 @@ def test_arrow_and_sql_verify_agree(spark):
     sigs = sketch_files(
         spark.createDataFrame(corpus_pandas(400)), CFG
     ).cache()
-    cand = candidate_pairs(sigs, CFG).cache()
+    cand = attach_file_ids(candidate_pairs_fid(sigs, CFG), sigs).cache()
     arrow = {
         (r["a_id"], r["b_id"]): (round(r["jaccard"], 9), r["hamming"])
         for r in verified_pairs(cand, sigs, CFG).collect()
