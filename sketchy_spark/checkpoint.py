@@ -15,6 +15,19 @@ recomputes. Stage outputs are immutable once complete.
 The store only keeps tables; what goes in them is its callers' business:
 ``pipeline.run_pipeline(store=...)`` writes the :data:`STAGES` of one
 run, and ``streaming.incremental.IncrementalDedup`` its per-batch stages.
+
+A stage moves as a Spark DataFrame or as a ``pyarrow.Table``. The
+parquet shim writes a DataFrame with a Spark job, one part file per
+write task, and moves everything else with Arrow on the driver, with no
+Spark job: a table is written by ``pq.write_table`` as one part file,
+:meth:`~CheckpointStore.read_table` reads columns (and a row filter)
+through ``pyarrow.dataset``, and :meth:`~CheckpointStore.concat_stages`
+folds stages into one with a streaming ``pyarrow.dataset`` rewrite.
+:meth:`~CheckpointStore.read_stage` returns a DataFrame either way. The
+Iceberg store has no driver-side file access, so it moves all of these
+through its session: a table becomes a local frame before
+``writeTo``, ``read_table`` is ``read_stage(...).toArrow()``, and
+``concat_stages`` is a union written by ``createOrReplace``.
 """
 
 from __future__ import annotations
@@ -22,14 +35,21 @@ from __future__ import annotations
 import json
 import shutil
 import time
+from functools import reduce
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 MANIFEST_DIR = "_manifest"
 # Footer key under which Spark's parquet writer stores the row schema.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# The one part file of a stage written on the driver (write task 0).
+ARROW_PART = "part-00000-arrow.parquet"
 
 
 class _StoreBase:
@@ -88,9 +108,13 @@ class CheckpointStore(_StoreBase):
         return str(self.root / stage)
 
     def write_stage(
-        self, stage: str, df: DataFrame, meta: dict | None = None
+        self, stage: str, df: DataFrame | pa.Table, meta: dict | None = None
     ) -> None:
         """Write a stage table + manifest with per-WRITE-TASK lineage.
+
+        A DataFrame is written by Spark; a ``pyarrow.Table`` by
+        ``pq.write_table`` on the driver, as one part file (task 0), with
+        no Spark job.
 
         Each parquet part file is the output of exactly one write task,
         so lineage = (part file, row count from its parquet footer) audits
@@ -103,33 +127,46 @@ class CheckpointStore(_StoreBase):
         (e.g. the compaction's folded-batch set) — the writer's own
         bookkeeping, opaque to the store.
 
-        ``schema``: the Spark schema (StructType JSON) Spark records in
-        every part footer under ``SPARK_SCHEMA_KEY``, taken from the
-        first footer already opened for lineage; :meth:`read_stage`
-        pins it so a read runs no schema-inference job.
+        ``schema``: the Spark schema (StructType JSON) of the first part
+        file: the one Spark records in its footer under
+        ``SPARK_SCHEMA_KEY``, else ``from_arrow_schema`` of its Arrow
+        schema. :meth:`read_stage` pins it so a read runs no
+        schema-inference job.
         """
         t0 = time.time()
-        path = self.stage_path(stage)
-        tmp = path + ".tmp"
+        tmp = self.stage_path(stage) + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        import pyarrow.parquet as pq
+        if isinstance(df, pa.Table):
+            Path(tmp).mkdir(parents=True)
+            pq.write_table(df, f"{tmp}/{ARROW_PART}")
+        else:
+            df.write.mode("overwrite").parquet(tmp)
+        self._commit(stage, tmp, t0, meta)
 
+    def _commit(
+        self, stage: str, tmp: str, t0: float, meta: dict | None
+    ) -> None:
+        """Move the written ``tmp`` directory into place and write the
+        stage's manifest (see :meth:`write_stage`)."""
         lineage = []
         schema = None
         for part in sorted(Path(tmp).glob("part-*.parquet")):
-            footer = pq.ParquetFile(part).metadata
+            pf = pq.ParquetFile(part)
             lineage.append(
                 {
                     "file": part.name,
                     "task_id": int(part.name.split("-")[1]),
-                    "rows": footer.num_rows,
+                    "rows": pf.metadata.num_rows,
                 }
             )
-            raw = (footer.metadata or {}).get(SPARK_SCHEMA_KEY)
-            if schema is None and raw:
-                schema = json.loads(raw)
+            if schema is None:
+                raw = (pf.metadata.metadata or {}).get(SPARK_SCHEMA_KEY)
+                schema = (
+                    json.loads(raw) if raw
+                    else from_arrow_schema(pf.schema_arrow).jsonValue()
+                )
         n_rows = sum(e["rows"] for e in lineage)
+        path = self.stage_path(stage)
         shutil.rmtree(path, ignore_errors=True)
         Path(tmp).rename(path)
         self._manifest_path(stage).write_text(
@@ -147,6 +184,42 @@ class CheckpointStore(_StoreBase):
                 }
             )
         )
+
+    def _dataset(self, stage: str) -> ds.Dataset:
+        # the default ignore prefixes skip Spark's _SUCCESS and .crc files
+        return ds.dataset(self.stage_path(stage), format="parquet")
+
+    def read_table(
+        self, stage: str, columns: list[str], filter=None
+    ) -> pa.Table:
+        """The stage's ``columns``, with the rows ``filter`` (a
+        ``pyarrow.dataset`` expression) keeps, read on the driver through
+        ``pyarrow.dataset``: no Spark job."""
+        return self._dataset(stage).to_table(columns=columns, filter=filter)
+
+    def concat_stages(
+        self, sources: list[str], dest: str, meta: dict | None = None
+    ) -> None:
+        """Write stage ``dest`` as the rows of every ``sources`` stage:
+        a streaming ``pyarrow.dataset`` rewrite into one part file on the
+        driver, one record batch in memory at a time, with no Spark job.
+        Schemas unify permissively: a column some sources lack reads null
+        and types widen, so stages sketched before the store dropped
+        winnow fingerprints fold with later ones."""
+        t0 = time.time()
+        parts = [self._dataset(s) for s in sources]
+        # unify_schemas keeps the first source's metadata, whose Spark
+        # footer schema would misdescribe the union
+        schema = pa.unify_schemas(
+            [p.schema for p in parts], promote_options="permissive"
+        ).remove_metadata()
+        tmp = self.stage_path(dest) + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        Path(tmp).mkdir(parents=True)
+        with pq.ParquetWriter(f"{tmp}/{ARROW_PART}", schema) as out:
+            for batch in ds.dataset(parts, schema=schema).to_batches():
+                out.write_batch(batch)
+        self._commit(dest, tmp, t0, meta)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
         """Read a stage against the schema its manifest recorded — no
@@ -304,7 +377,7 @@ class IcebergCheckpointStore(_StoreBase):
         return {r["key"]: r["value"] for r in rows}
 
     def write_stage(
-        self, stage: str, df: DataFrame, meta: dict | None = None
+        self, stage: str, df: DataFrame | pa.Table, meta: dict | None = None
     ) -> None:
         """One ATOMIC createOrReplace commit carrying the completion
         properties (ADVICE r4): the former separate ALTER TABLE left a
@@ -312,10 +385,13 @@ class IcebergCheckpointStore(_StoreBase):
         'complete' marker (old config_hash) on freshly replaced data —
         a later run at the old hash would wrongly resume from it. With
         the properties on the writeTo builder itself, status=complete
-        exists only in the same snapshot commit as the data."""
+        exists only in the same snapshot commit as the data. A
+        ``pyarrow.Table`` is written as a local frame of the store's
+        session."""
         self._create_or_replace(
             self._ident(stage),
-            df,
+            self.spark.createDataFrame(df) if isinstance(df, pa.Table)
+            else df,
             {
                 "sketchy.status": "complete",
                 "sketchy.stage": stage,
@@ -348,6 +424,30 @@ class IcebergCheckpointStore(_StoreBase):
                 "that owns its catalog; pass that session (or None)"
             )
         return self.spark.read.table(self._ident(stage))
+
+    def read_table(
+        self, stage: str, columns: list[str], filter=None
+    ) -> pa.Table:
+        """:meth:`CheckpointStore.read_table` through the store's
+        session; ``filter`` applies to the collected table, so it may
+        name only ``columns``."""
+        tbl = self.read_stage(None, stage).select(*columns).toArrow()
+        return tbl if filter is None else tbl.filter(filter)
+
+    def concat_stages(
+        self, sources: list[str], dest: str, meta: dict | None = None
+    ) -> None:
+        """:meth:`CheckpointStore.concat_stages` as a union of the source
+        tables (a column some lack reads null) written by one
+        createOrReplace."""
+        self.write_stage(
+            dest,
+            reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [self.read_stage(None, s) for s in sources],
+            ),
+            meta,
+        )
 
     def invalidate_from(self, stages: list[str], failed: str) -> None:
         for s in stages[stages.index(failed):]:

@@ -27,7 +27,9 @@ I64_SHIFT = 1 << 63  # order-preserving uint64 -> int64 shift (SURVEY §4.2)
 # v3: the pipeline's stages are slim and fid-keyed (no ``sig`` column;
 # edges are (a_fid, b_fid)) — a v2 store's (a_id, b_id) edges must not
 # resume into a reader that expects fids.
-SIG_FORMAT_VERSION = 3
+# v4: incremental ``sig_batch`` stages store ``band_keys``, which the
+# resident batch reads instead of computing them.
+SIG_FORMAT_VERSION = 4
 
 
 @dataclass(frozen=True)

@@ -523,9 +523,7 @@ def ann_ivf(
     the cell join is an equi-join on a single int key with expected
     occupancy n*P/C; verification joins are equi-joins on vec ids.
     No crossJoin against data rows anywhere — the only cross product is
-    against the C broadcast centroids. Multimodal note: this is the
-    scale path for any opaque-binary modality once an embedding column
-    exists (functions/multimodal.py feature stage).
+    against the C broadcast centroids.
     """
     if n_cells is None:
         if n is None:

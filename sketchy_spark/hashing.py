@@ -114,24 +114,6 @@ def murmur3_x64_128_low(keys: np.ndarray, seed: int = 0) -> np.ndarray:
     return h1
 
 
-def hash_u64_of_int(value: int, seed: int = 0) -> int:
-    """Deterministic u64 from an integer (for permutation constants)."""
-    key = np.frombuffer(int(value).to_bytes(8, "little"), dtype=np.uint8)
-    return int(murmur3_x64_128_low(key.reshape(1, 8), seed)[0])
-
-
-def perm_constants(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """(a, b) multiply-shift constants for k-permutation MinHash, derived
-    from murmur so they are stable across numpy versions."""
-    a = np.array(
-        [hash_u64_of_int(j, seed) | 1 for j in range(num_perm)], dtype=np.uint64
-    )
-    b = np.array(
-        [hash_u64_of_int(j, seed + 1) for j in range(num_perm)], dtype=np.uint64
-    )
-    return a, b
-
-
 def shingle_windows(content: bytes, k: int) -> np.ndarray:
     """(m, k) uint8 matrix of byte k-grams in positional order.
 
@@ -381,21 +363,6 @@ def scaled_filter(distinct_sorted: np.ndarray, max_hash: int) -> np.ndarray:
     return distinct_sorted[distinct_sorted < np.uint64(max_hash)]
 
 
-def perm_minhash(
-    distinct: np.ndarray, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """Fixed-width signature sig[j] = min_x (a[j]*x + b[j] mod 2^64).
-
-    Classic k-permutation form — O(d * num_perm) and memory-bandwidth
-    heavy (it materializes a (d, p) product). Kept as the reference
-    implementation; the production sketch path uses :func:`oph_minhash`.
-    """
-    if distinct.size == 0:
-        return np.full(a.shape[0], np.iinfo(np.uint64).max, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        return (distinct[:, None] * a[None, :] + b[None, :]).min(axis=0)
-
-
 def oph_minhash(distinct_sorted: np.ndarray, num_perm: int) -> np.ndarray:
     """One-permutation hashing (Li, Owen, Zhang 2012) with rotation
     densification: bucket hashes into ``num_perm`` bins by their top
@@ -462,16 +429,6 @@ def simhash64(distinct: np.ndarray) -> int:
         sums[j] = hist @ _BYTE_BITS
     majority = (2 * sums.ravel() >= n).astype(np.uint64)
     return int((majority << _BIT_SHIFTS).sum(dtype=np.uint64))
-
-
-def simhash_batch(all_distinct: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Batch form of :func:`simhash64` over concatenated distinct arrays
-    (``offsets`` = start index per doc)."""
-    ends = np.append(offsets[1:], all_distinct.size)
-    return np.array(
-        [simhash64(all_distinct[o:e]) for o, e in zip(offsets, ends)],
-        dtype=np.uint64,
-    )
 
 
 def _sliding_min(a: np.ndarray, w: int) -> np.ndarray:

@@ -81,9 +81,24 @@ def min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
         parent = nxt
 
 
+def least_member_labels(
+    names: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """Each vertex's ``cluster_id`` under the module's label rule, on the
+    driver: vertex i is named ``names[i]``, the edges (``a``, ``b``)
+    join vertex pairs, and the label is the least name in i's
+    component."""
+    n = names.size
+    root = min_labels(a, b, n)
+    uniq, srank = np.unique(names, return_inverse=True)
+    least = np.full(n, n)
+    np.minimum.at(least, root, srank)
+    return uniq[least[root]]
+
+
 def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Collect edges (Arrow), union-find over factorized int ids, return
-    labels. Deterministic: cluster label = lexicographic min member."""
+    """Collect edges (Arrow), union-find over factorized ids, return
+    labels. Deterministic: cluster label = least member."""
     import pandas as pd
 
     pdf = edges.select("a_id", "b_id").toPandas()  # Arrow transfer
@@ -95,23 +110,12 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     codes, uniques = pd.factorize(
         pd.concat([pdf["a_id"], pdf["b_id"]], ignore_index=True)
     )
+    names = np.asarray(uniques)
     n_edges = len(pdf)
-    parent = min_labels(codes[:n_edges], codes[n_edges:], len(uniques))
-    # deterministic label: min member per root. fid-keyed edges (the
-    # pipeline path) are int64 -> pure numpy scatter-min (a pandas
-    # groupby-transform here measured 1.5s at 1M edges, the largest
-    # driver-serial slice of the whole run); string ids keep the pandas
-    # path.
-    if np.issubdtype(np.asarray(uniques).dtype, np.integer):
-        u = np.asarray(uniques, dtype=np.int64)
-        lab = np.full(len(u), np.iinfo(np.int64).max)
-        np.minimum.at(lab, parent, u)
-        out = pd.DataFrame({"file_id": u, "cluster_id": lab[parent]})
-    else:
-        members = pd.DataFrame({"file_id": uniques, "root": parent})
-        label = members.groupby("root")["file_id"].transform("min")
-        out = pd.DataFrame({"file_id": uniques, "cluster_id": label})
-    return spark.createDataFrame(out)  # Arrow path, not row pickling
+    labels = least_member_labels(names, codes[:n_edges], codes[n_edges:])
+    return spark.createDataFrame(  # Arrow path, not row pickling
+        pd.DataFrame({"file_id": names, "cluster_id": labels})
+    )
 
 
 # The off-round-checkpoint plan tree grows ~4x per unchecked round (see

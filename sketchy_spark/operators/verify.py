@@ -5,9 +5,9 @@ Jaccard verification has one kernel, :func:`_bottom_s_jaccard`: the
 reference's two-pointer sorted merge (src/sketchy.rs:419-459) over the
 already-sorted bottom-s sigs, ~30us per pair. :func:`verified_pairs`
 runs it as a ``mapInPandas`` stage, the cascade's scan-side exact stage.
-:func:`verified_pairs_sql` computes the same estimator with built-in
-array SQL (Catalyst builds hash sets per row, ~ms per 1000-element pair);
-it stays as the oracle the kernel is tested against.
+The same estimator in built-in array SQL (Catalyst builds hash sets per
+row, ~ms per 1000-element pair) is the oracle the kernel is tested
+against, in ``tests/test_verify_paths.py``.
 
 Four passes pick where they run by one rule.
 :func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in
@@ -15,9 +15,10 @@ front of the kernel; every Jaccard edge in the package comes from it.
 The containment pass is :func:`containment_candidates` then
 :func:`containment_verified`. The plain pipeline's edges stage
 (``pipeline.py``) and the incremental batch (``streaming/incremental.py``)
-each band, anchor and verify from one collect of the signatures,
-running the cascade's numpy core (:func:`_cascade_core`); the plain
-stage also labels the clusters there. While a pass's working set fits
+each band, anchor and verify on the driver, running the cascade's numpy
+core (:func:`_cascade_core`): the plain stage from one collect of the
+cached signatures, which also labels the clusters, and the batch from
+Arrow reads of its stored signature stages. While a pass's working set fits
 one 30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
 reference scans its in-memory sketch collection (src/sketchy.rs:81): the
 cascade and the plain edges stage start one Python UDF stage (the
@@ -193,8 +194,9 @@ def verified_pairs(
 ) -> DataFrame:
     """Arrow-kernel Jaccard verification (default path; see module doc).
 
-    Estimator identical to :func:`verified_pairs_sql`: with
-    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. Sorted-merge per pair
+    Estimator identical to the array-SQL oracle of
+    ``tests/test_verify_paths.py``: with U = bottom_s(A ∪ B),
+    j ≈ |U ∩ A ∩ B| / |U|. Sorted-merge per pair
     (:func:`_bottom_s_jaccard`) plus vectorized simhash hamming.
     Accepts string- (a_id/b_id) or fid- (a_fid/b_fid) keyed pairs and
     returns the same key columns it was given.
@@ -541,53 +543,6 @@ def _scan_side_cascade(
         borderline, _borderline_sigs(wanted, sigs, files, cfg), cfg
     )
     return accepted.unionByName(refined)
-
-
-def verified_pairs_sql(
-    pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    broadcast_pairs: bool | None = None,
-) -> DataFrame:
-    """Estimate Jaccard per candidate pair; keep pairs >= tau.
-
-    Bottom-s estimator (unbiased for sets larger than s): with
-    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. The shifted-int64 storage
-    (SURVEY §4.2) makes ``array_sort``'s signed order equal unsigned hash
-    order, so slice-after-sort is exactly bottom-s of the union. For docs
-    with < s shingles the sketches are the full sets and the estimate is
-    exact. SimHash hamming distance is reported (filtering on it is the
-    caller's choice — G2 is a secondary signal, not a recall gate).
-    """
-    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
-    # materialize union_s as a column so the sort/union evaluates once per
-    # row instead of once per referencing expression
-    staged = df.select(
-        "a_id",
-        "b_id",
-        "a_sig",
-        "b_sig",
-        F.slice(F.array_sort(F.array_union("a_sig", "b_sig")), 1, cfg.s).alias(
-            "union_s"
-        ),
-        F.bit_count(
-            F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))
-        ).alias("hamming"),
-    )
-    inter3 = F.array_intersect(
-        F.array_intersect("union_s", "a_sig"), F.col("b_sig")
-    )
-    return (
-        staged.select(
-            "a_id",
-            "b_id",
-            "hamming",
-            F.when(
-                F.size("union_s") > 0,
-                F.size(inter3) / F.size("union_s"),
-            ).otherwise(F.lit(0.0)).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select("a_id", "b_id", "jaccard", "hamming")
-    )
 
 
 CONTAINMENT_SCHEMA = (

@@ -41,7 +41,10 @@ from pyspark.sql import DataFrame
 
 from sketchy_spark.config import DEFAULT_CONFIG, SketchConfig
 from sketchy_spark.operators import verify
-from sketchy_spark.operators.cluster import assign_clusters_fid, min_labels
+from sketchy_spark.operators.cluster import (
+    assign_clusters_fid,
+    least_member_labels,
+)
 from sketchy_spark.operators.lsh import (
     attach_file_ids,
     band_keys_expr,
@@ -264,11 +267,7 @@ def _resident_edges(
         np.unique(np.concatenate([va * n + vb, hub * n + member])), n
     )
     names = tbl["file_id"].to_numpy()[first]
-    # label rule (operators/cluster.py): each component's least file_id
-    labels = min_labels(ea, eb, n)
-    uniq, srank = np.unique(names, return_inverse=True)
-    least = np.full(n, n)
-    np.minimum.at(least, labels, srank)
+    labels = least_member_labels(names, ea, eb)
 
     def id_pairs(a, b, **cols):
         sa, sb = names[a], names[b]
@@ -292,7 +291,7 @@ def _resident_edges(
         spark.createDataFrame(
             pd.DataFrame({
                 "file_id": tbl["file_id"].to_numpy(),
-                "cluster_id": uniq[least[labels][rank]],
+                "cluster_id": labels[rank],
             }),
             "file_id string, cluster_id string",
         ),

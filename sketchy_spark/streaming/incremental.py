@@ -26,18 +26,24 @@ double-counted the batch).
 Per-batch work follows the verify passes' resident rule
 (operators/verify.py): while the accumulated store fits the 30 MB
 ``RESIDENT_BYTES`` budget, judged from the stage manifests' row counts,
-the batch's edges come from ONE Arrow collect of the stored signatures
-(sig_perm, simhash, n_shingles, sha256, an is-new flag and the band keys
-of ``band_keys_expr``), as the reference re-ranks its in-memory sketch
-collection on every arrival (src/sketchy.rs:81). The driver runs the
-new x all band join, the exact-sha anchors and the cascade's numpy core
-on it, fetches the borderline files' stored ``sig`` with one more
-collect, and writes the edges stage from a local frame: the sketch is
-the batch's only Python stage. Above the budget, or when the pair codes
-or the borderline sigs would overflow it, the batch hands over to the
-same computation as Spark stages, with identical rows. Every stage is
-read against the Spark schema its manifest recorded, so no read runs a
-schema-inference job (checkpoint.py ``read_stage``).
+the batch's one Spark job is its sketch write, which also stores each
+file's ``band_keys`` (:func:`band_keys_expr`, the one band-hash
+implementation), and the bytes after it move with Arrow on the driver,
+as the reference re-ranks its in-memory sketch collection on every
+arrival (src/sketchy.rs:81). On the parquet shim (checkpoint.py) that
+means no further Spark job: ``store.read_table`` reads the stored
+signature columns, the driver runs the new x all band join, the
+exact-sha anchors and the cascade's numpy core on them, one filtered
+``read_table`` per stage fetches the borderline files' stored ``sig``,
+the edges stage is written as an Arrow table, compaction is
+``store.concat_stages`` and :meth:`IncrementalDedup.clusters` labels the
+files on the driver. The Iceberg store moves the same tables through its
+session. Above the budget, or when the pair codes or the borderline sigs
+would overflow it, the batch hands over to the same computation as Spark
+stages, with identical rows, and the clusters come from
+:func:`assign_clusters`. Every stage is read back against the Spark
+schema its manifest recorded, so no read runs a schema-inference job
+(checkpoint.py ``read_stage``).
 
 True sub-second streaming would swap the batch source for
 ``readStream`` + ``applyInPandasWithState``; the north rule requires
@@ -51,13 +57,17 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from sketchy_spark.checkpoint import CheckpointStore
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.operators import verify
-from sketchy_spark.operators.cluster import assign_clusters
+from sketchy_spark.operators.cluster import (
+    assign_clusters,
+    least_member_labels,
+)
 from sketchy_spark.operators.lsh import (
     band_keys_expr,
     band_table,
@@ -71,16 +81,34 @@ from sketchy_spark.operators.sketch import sketch_files
 # Unused here, but perfbench/spans.py wraps this module's name for it.
 from sketchy_spark.operators.verify import verified_pairs  # noqa: F401
 
-# Columns of the resident batch's one collect, besides is_new/band_keys.
-_RESIDENT_COLS = ["file_id", "sha256", "sig_perm", "simhash", "n_shingles"]
+# Stored signature columns the resident batch reads.
+_RESIDENT_COLS = [
+    "file_id", "sha256", "sig_perm", "simhash", "n_shingles", "band_keys",
+]
+# Driver bytes counted for one file_id string.
+_ID_BYTES = 64
 
 
 def _resident_row_bytes(cfg: SketchConfig) -> int:
-    """Driver bytes per stored file in the resident batch's collect:
+    """Driver bytes per stored file in the resident batch's read:
     sig_perm (4 B a slot), band keys (8 B a band), simhash, n_shingles
-    and the flag (24 B), the sha256 hex (64 B) and the file_id (counted
-    as 64 B)."""
-    return cfg.num_perm * 4 + 8 * cfg.bands + 24 + 64 + 64
+    and the flag (24 B), the sha256 hex (64 B) and the file_id."""
+    return cfg.num_perm * 4 + 8 * cfg.bands + 24 + 64 + _ID_BYTES
+
+
+def _sig_stage(files: DataFrame, cfg: SketchConfig) -> DataFrame:
+    """A batch's ``sig_batch`` stage: the sketch without winnow
+    fingerprints, which nothing on the incremental path reads, plus the
+    ``band_keys`` of :func:`band_keys_expr`, computed in the same write
+    job."""
+    return sketch_files(files, cfg, with_fp=False).select(
+        "*", band_keys_expr(cfg).alias("band_keys")
+    )
+
+
+def _concat(tables: list[pa.Table]) -> pa.Table:
+    # stages written by Spark and by Arrow may differ in nullability
+    return pa.concat_tables(tables, promote_options="permissive")
 
 
 def _new_vs_all_candidates(
@@ -205,7 +233,7 @@ def _incremental_exact_edges(
 
 
 class _Collected(NamedTuple):
-    """The resident batch's one Arrow collect, with its file ranks."""
+    """The resident batch's stored rows, with their file ranks."""
 
     tbl: pa.Table
     ids: np.ndarray     # distinct file_ids in string order
@@ -214,23 +242,15 @@ class _Collected(NamedTuple):
     is_new: np.ndarray  # each row's batch flag
 
 
-def _resident_collect(
-    new_sigs: DataFrame, prev_sigs: DataFrame | None, cfg: SketchConfig
-) -> _Collected:
-    """ONE Arrow collect of the stored signature rows the batch needs:
-    ``file_id, sha256, sig_perm, simhash, n_shingles`` of the previous
-    and the new stages, an ``is_new`` flag and the ``band_keys`` of
-    :func:`band_keys_expr` (the one band-hash implementation)."""
-    src = new_sigs.select(*_RESIDENT_COLS, F.lit(True).alias("is_new"))
-    if prev_sigs is not None:
-        src = prev_sigs.select(
-            *_RESIDENT_COLS, F.lit(False).alias("is_new")
-        ).unionByName(src)
-    tbl = src.select("*", band_keys_expr(cfg).alias("band_keys")).toArrow()
+def _resident_collect(prev: list[pa.Table], new: pa.Table) -> _Collected:
+    """The rows of the previous stages' tables, then the new stage's
+    (each with :data:`_RESIDENT_COLS`), flagged and ranked by file_id."""
+    tbl = _concat([*prev, new])
     ids, first, rank = np.unique(
         tbl["file_id"].to_numpy(), return_index=True, return_inverse=True
     )
-    return _Collected(tbl, ids, first, rank, tbl["is_new"].to_numpy())
+    is_new = np.arange(tbl.num_rows) >= tbl.num_rows - new.num_rows
+    return _Collected(tbl, ids, first, rank, is_new)
 
 
 def _driver_candidates(
@@ -248,20 +268,23 @@ def _driver_candidates(
 
 
 def _resident_batch_edges(
-    new_sigs: DataFrame, prev_sigs: DataFrame | None, all_sigs: DataFrame,
-    cfg: SketchConfig, budget: int,
-) -> DataFrame | None:
-    """The batch's edges stage computed on the driver, as a local frame:
+    store, stages: list[str], cfg: SketchConfig, budget: int
+) -> pa.Table | None:
+    """The batch's edges stage computed on the driver, as an Arrow table:
     the rows the hand-over path writes (:func:`_new_vs_all_candidates`
     verified by :func:`verified_pairs_cascade`, plus
-    :func:`_incremental_exact_edges`), from :func:`_resident_collect`.
-    The cascade's borderline files get their ``sig`` from the stored
-    stages with one ``left_semi`` collect; nothing is re-sketched.
+    :func:`_incremental_exact_edges`), from the signature ``stages``,
+    the new batch's last. The cascade's borderline files get their
+    stored ``sig`` from one filtered ``read_table`` per stage; nothing
+    is re-sketched.
 
-    ``budget``: driver bytes left after the collect. Returns None, for
-    the caller to hand over to the Spark path, when the pair codes or the
+    ``budget``: driver bytes left after the read. Returns None, for the
+    caller to hand over to the Spark path, when the pair codes or the
     borderline sigs (8 * s B per file) would overflow it."""
-    c = _resident_collect(new_sigs, prev_sigs, cfg)
+    c = _resident_collect(
+        [store.read_table(s, _RESIDENT_COLS) for s in stages[:-1]],
+        store.read_table(stages[-1], _RESIDENT_COLS),
+    )
     got = _driver_candidates(c, cfg, budget)
     if got is None:
         return None
@@ -269,14 +292,25 @@ def _resident_batch_edges(
     n = c.ids.size
     verified = a * n + b
     if a.size:
+
+        def fetch(pos: np.ndarray) -> dict:
+            wanted = ds.field("file_id").isin(
+                pa.array(c.ids[pos], pa.string())
+            )
+            got = _concat([
+                store.read_table(s, ["file_id", "sig"], filter=wanted)
+                for s in stages
+            ])
+            return dict(zip(
+                np.searchsorted(c.ids, got["file_id"].to_numpy()),
+                got["sig"].to_numpy(),
+            ))
+
         kept = verify._cascade_core(
             verify._sig_perm_matrix(c.tbl, cfg)[c.first],
             c.tbl["simhash"].to_numpy()[c.first],
             c.tbl["n_shingles"].to_numpy()[c.first],
-            a, b, cfg, verify.CASCADE_MARGIN, budget,
-            verify._sig_fetcher(
-                all_sigs, None, cfg, "file_id", "string", c.ids
-            ),
+            a, b, cfg, verify.CASCADE_MARGIN, budget, fetch,
         )
         if kept is None:
             return None
@@ -284,12 +318,13 @@ def _resident_batch_edges(
     hub, member = driver_exact_edges(
         c.tbl["sha256"].to_numpy(), c.rank, c.is_new
     )
-    edges = np.unique(np.concatenate([verified, hub * n + member]))
-    ea, eb = np.divmod(edges, n)
-    return new_sigs.sparkSession.createDataFrame(
-        pd.DataFrame({"a_id": c.ids[ea], "b_id": c.ids[eb]}),
-        "a_id string, b_id string",
+    ea, eb = np.divmod(
+        np.unique(np.concatenate([verified, hub * n + member])), n
     )
+    return pa.table({
+        "a_id": pa.array(c.ids[ea], pa.string()),
+        "b_id": pa.array(c.ids[eb], pa.string()),
+    })
 
 
 def _stage_id(stage: str) -> int:
@@ -459,11 +494,9 @@ class IncrementalDedup:
         ):
             stage_edge = f"edges_compact_{k:05d}"
             if not self.store.is_complete(stage_edge):
-                self.store.write_stage(
+                self.store.concat_stages(
+                    [f"edges_batch_{i:05d}" for i in sorted(folded)],
                     stage_edge,
-                    self._union(
-                        [f"edges_batch_{i:05d}" for i in sorted(folded)]
-                    ),
                     meta={"fold_max": k, "folded": sorted(folded)},
                 )
                 return True
@@ -492,20 +525,14 @@ class IncrementalDedup:
             else []
         )
         prev_edge = [max(prev, key=lambda t: t[0])[2]] if prev else []
-        self.store.write_stage(
+        self.store.concat_stages(
+            prev_sig + [f"sig_batch_{i:05d}" for i in sorted(to_fold)],
             stage_sig,
-            self._union(
-                prev_sig
-                + [f"sig_batch_{i:05d}" for i in sorted(to_fold)]
-            ),
             meta=meta,
         )
-        self.store.write_stage(
+        self.store.concat_stages(
+            prev_edge + [f"edges_batch_{i:05d}" for i in sorted(to_fold)],
             stage_edge,
-            self._union(
-                prev_edge
-                + [f"edges_batch_{i:05d}" for i in sorted(to_fold)]
-            ),
             meta=meta,
         )
         return True
@@ -517,23 +544,24 @@ class IncrementalDedup:
 
         Where the edges are computed follows the verify passes' rule
         (``operators.verify.RESIDENT_BYTES``, 30 MB), decided from the
-        stage manifests' row counts before any Spark action:
+        stage manifests' row counts:
 
         - Resident, while the stored rows fit at
           :func:`_resident_row_bytes` each (sig_perm, band keys, simhash,
-          n_shingles, sha256 and file_id; ~0.9 KB at the defaults): ONE
-          Arrow collect of the previous and new signature stages
-          (:func:`_resident_collect`) feeds the new x all band join, the
-          exact-sha anchors and the cascade on the driver, plus one
-          ``left_semi`` collect of the borderline files' stored ``sig``.
-          The edges stage is written from one local frame; the sketch is
-          the batch's only Python stage.
+          n_shingles, sha256 and file_id; ~0.9 KB at the defaults): the
+          sketch write is the batch's one Spark job.
+          :func:`_resident_batch_edges` reads the previous and new
+          signature stages with ``store.read_table`` and runs the new x
+          all band join, the exact-sha anchors and the cascade on the
+          driver, fetching the borderline files' stored ``sig`` with one
+          filtered ``read_table`` per stage, and the edges stage is
+          written as an Arrow table.
         - Hand-over, above the budget or when the pair codes (8 B each)
           or the borderline sigs (8 * s B per file) would overflow what
-          the collect left: :func:`_new_vs_all_candidates`,
+          the read left: :func:`_new_vs_all_candidates`,
           :func:`verified_pairs_cascade` scan-side and
-          :func:`_incremental_exact_edges` as Spark stages. Both paths
-          write identical rows.
+          :func:`_incremental_exact_edges` as Spark stages over the
+          stored signature frames. Both paths write identical rows.
 
         Idempotent: the batch's edges stage is the single completion
         marker; a finished batch returns immediately, a half-finished one
@@ -544,12 +572,8 @@ class IncrementalDedup:
         stage_edge = f"edges_batch_{batch_id:05d}"
         if self.store.is_complete(stage_edge):
             return  # terminal marker present -> fully ingested
-
-        # nothing on the incremental path reads winnow fingerprints
-        new_sigs, _ = self.store.get_or_compute(
-            self.spark, stage_sig,
-            lambda: sketch_files(files, self.cfg, with_fp=False),
-        )
+        if not self.store.is_complete(stage_sig):
+            self.store.write_stage(stage_sig, _sig_stage(files, self.cfg))
         # "prev" = every OTHER ingested batch, by INGEST-TIME order, not
         # id order: an out-of-order BACKFILL (id below already-ingested
         # ids) must still pair against the higher-id batches already in
@@ -564,14 +588,6 @@ class IncrementalDedup:
         prev_stages = [
             s for s in self.view_stages("sig") if s != stage_sig
         ]
-        prev_sigs = self._union(prev_stages)
-        all_sigs = (
-            prev_sigs.unionByName(new_sigs, allowMissingColumns=True)
-            if prev_sigs is not None
-            else new_sigs
-        )
-        # the fit is decided from the stage manifests' row counts: no
-        # Spark action runs before the one collect
         n_rows = sum(
             self.store.manifest(s)["rows"] for s in prev_stages + [stage_sig]
         )
@@ -581,10 +597,17 @@ class IncrementalDedup:
         edges = None
         if budget > 0:
             edges = _resident_batch_edges(
-                new_sigs, prev_sigs, all_sigs, self.cfg, budget
+                self.store, prev_stages + [stage_sig], self.cfg, budget
             )
         held: list[DataFrame] = []
         if edges is None:
+            new_sigs = self._union([stage_sig])
+            prev_sigs = self._union(prev_stages)
+            all_sigs = (
+                prev_sigs.unionByName(new_sigs, allowMissingColumns=True)
+                if prev_sigs is not None
+                else new_sigs
+            )
             cand = _new_vs_all_candidates(new_sigs, prev_sigs, self.cfg)
             ver = verify.verified_pairs_cascade(
                 cand, all_sigs, self.cfg, resident=False, persisted=held
@@ -602,15 +625,45 @@ class IncrementalDedup:
                 self.compact()
 
     def clusters(self) -> DataFrame:
-        sigs = self.signatures()
-        if sigs is None:
+        """(file_id, cluster_id) for every stored signature row, each
+        label its component's least file_id (operators/cluster.py).
+
+        While the file_ids and edge endpoints fit
+        ``verify.RESIDENT_BYTES``, counted from the manifests, the store's
+        tables are read with ``read_table`` and labeled on the driver by
+        :func:`least_member_labels`, and the result is a local frame.
+        Above it, :func:`assign_clusters` runs over the raw stage union,
+        not the public :meth:`edges` view: CC dedupes its own edge table,
+        so the view's distinct shuffle would be paid twice. Its edge
+        count is the manifest sum, an upper bound under cross-stage
+        retry duplicates, which can only shift the strategy cutoff
+        toward the distributed (always-correct) path."""
+        sig_stages = self.view_stages("sig")
+        if not sig_stages:
             raise ValueError("no ingested batches")
-        # raw stage union, not the public edges() view: CC dedupes its own
-        # edge table, so the view's distinct shuffle would be paid twice.
-        # n_edges comes from the stage manifests' recorded row counts —
-        # one fewer driver-blocking count() per clusters() call
-        # (VERDICT r4 #7); the manifest sum is an upper bound under
-        # cross-stage retry duplicates, which can only shift the strategy
-        # cutoff toward the distributed (always-correct) path.
-        edges = self._union(self.view_stages("edges"))
-        return assign_clusters(sigs, edges, n_edges=self.n_edges())
+        edge_stages = self.view_stages("edges")
+        n_edges = self.n_edges()
+        n_rows = sum(self.store.manifest(s)["rows"] for s in sig_stages)
+        if (n_rows + 2 * n_edges) * _ID_BYTES > verify.RESIDENT_BYTES:
+            return assign_clusters(
+                self._union(sig_stages), self._union(edge_stages),
+                n_edges=n_edges,
+            )
+        names = _concat(
+            [self.store.read_table(s, ["file_id"]) for s in sig_stages]
+        )["file_id"].to_numpy()
+        ends = [names]
+        if edge_stages:
+            e = _concat([
+                self.store.read_table(s, ["a_id", "b_id"])
+                for s in edge_stages
+            ])
+            ends += [e["a_id"].to_numpy(), e["b_id"].to_numpy()]
+        ids, vertex = np.unique(np.concatenate(ends), return_inverse=True)
+        n = names.size
+        m = (vertex.size - n) // 2
+        labels = least_member_labels(ids, vertex[n:n + m], vertex[n + m:])
+        return self.spark.createDataFrame(
+            pd.DataFrame({"file_id": names, "cluster_id": labels[vertex[:n]]}),
+            "file_id string, cluster_id string",
+        )

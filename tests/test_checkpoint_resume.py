@@ -560,11 +560,20 @@ def test_clusters_skips_edge_count_action(spark, tmp_path):
     files.unpersist()
 
 
+def _sorted_rows(dicts):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in d.values())
+        for d in dicts
+    )
+
+
 def test_read_stage_pins_recorded_schema(spark, tmp_path):
-    """write_stage records the Spark schema from the part footers, so
+    """write_stage records the Spark schema from the part footers (from
+    the Arrow schema for a stage written from an Arrow table), so
     read_stage reads against it: same schema and rows as an inferring
-    read, and no schema-inference job. A manifest without the key (an
-    older store) still reads, by inference."""
+    read, and no schema-inference job. read_table gives the same rows,
+    for the Spark-written and the Arrow-written stages alike. A manifest
+    without the key (an older store) still reads, by inference."""
     import json
 
     from sketchy_spark.operators.sketch import sketch_files
@@ -580,9 +589,18 @@ def test_read_stage_pins_recorded_schema(spark, tmp_path):
             F.col("file_id").alias("a_id"), F.col("file_id").alias("b_id")
         ),
     )
+    # the same pairs written from an Arrow table: one part file on the
+    # driver, its schema from from_arrow_schema
+    store.write_stage(
+        "edges_batch_00001",
+        store.read_table("edges_batch_00000", ["a_id", "b_id"]),
+    )
+    assert len(store.manifest("edges_batch_00001")["partitions"]) == 1
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for stage in ("sig_batch_00000", "edges_batch_00000"):
+    for stage in (
+        "sig_batch_00000", "edges_batch_00000", "edges_batch_00001"
+    ):
         assert store.manifest(stage)["schema"]
         inferred = spark.read.parquet(store.stage_path(stage))
 
@@ -602,6 +620,10 @@ def test_read_stage_pins_recorded_schema(spark, tmp_path):
         assert sorted(pinned.select(key).collect()) == sorted(
             inferred.select(key).collect()
         )
+        # the driver's Arrow read gives the rows Spark reads
+        assert _sorted_rows(
+            store.read_table(stage, pinned.columns).to_pylist()
+        ) == _sorted_rows(r.asDict() for r in pinned.collect())
 
         path = store._manifest_path(stage)
         m = json.loads(path.read_text())
@@ -658,6 +680,16 @@ def _band_truth(new_bands, prev_bands, cap):
     return want, hot
 
 
+def _stage_table(sigs, cfg):
+    """The columns the resident batch reads from a stored sig stage."""
+    from sketchy_spark.operators.lsh import band_keys_expr
+    from sketchy_spark.streaming.incremental import _RESIDENT_COLS
+
+    return sigs.select(
+        "*", band_keys_expr(cfg).alias("band_keys")
+    ).select(*_RESIDENT_COLS).toArrow()
+
+
 def test_new_vs_all_candidates_match_band_truth(spark):
     """The incremental candidate set, from the Spark band join and from
     the driver's, equals a pandas truth built from the collected band
@@ -696,7 +728,9 @@ def test_new_vs_all_candidates_match_band_truth(spark):
         cand = _new_vs_all_candidates(new, prev, cfg)
         got = {(r["a_id"], r["b_id"]) for r in cand.collect()}
         assert got == want
-        collected = _resident_collect(new, prev, cfg)
+        collected = _resident_collect(
+            [_stage_table(prev, cfg)], _stage_table(new, cfg)
+        )
         a, b, _ = _driver_candidates(collected, cfg, RESIDENT_BYTES)
         ids = collected.ids
         assert set(zip(ids[a], ids[b])) == want
@@ -717,8 +751,9 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
     ``compact_every=2``, beside an over-cap clique (cap 8) whose later
     arrivals include a new global minimum of its hot bands, so hot-band
     hubs with prior members decide star edges that verify. The resident
-    edges frame runs no Python stage."""
+    edges stage is an Arrow table written on the driver."""
     import pandas as pd
+    import pyarrow as pa
 
     from sketchy_spark.corpus import corpus_pandas
     from sketchy_spark.operators import verify as V
@@ -740,7 +775,9 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
 
         def write_stage(self, stage, df, meta=None):
             if stage.startswith("edges_batch_"):
-                plans[stage] = physical_plan(df)
+                plans[stage] = (
+                    df if isinstance(df, pa.Table) else physical_plan(df)
+                )
             return orig(self, stage, df, meta)
 
         with monkeypatch.context() as mp:
@@ -762,8 +799,50 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
     assert resident == handed
     assert res_pairs == hand_pairs
     assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in res_pairs
-    assert not any("MapInPandas" in p for p in res_plans.values())
+    assert all(isinstance(p, pa.Table) for p in res_plans.values())
     assert all("MapInPandas" in p for p in hand_plans.values())
+
+
+def test_resident_ingest_runs_one_job_per_batch(spark, tmp_path):
+    """While the store fits the resident budget, a batch's one Spark job
+    is its sketch write: the stage reads, the borderline sigs, the edges
+    stage, compaction and the clusters move with Arrow on the driver.
+    Jobs are counted by job group over a 3-batch ingest with
+    ``compact_every=2`` (batch 1 compacts), a compact() that folds batch
+    2, and clusters(), which equal the single-shot run's."""
+    from sketchy_spark.corpus import corpus_pandas
+
+    corpus = corpus_pandas(N)[["repo", "path", "commit", "lang", "content"]]
+    batches = [spark.createDataFrame(corpus.iloc[b::3]) for b in range(3)]
+    store = CheckpointStore(str(tmp_path / "jobs"), CFG.config_hash)
+    inc = IncrementalDedup(spark, store, CFG, compact_every=2)
+    sc = spark.sparkContext
+    out = {}
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out[group] = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    for b, files in enumerate(batches):
+        run(f"jobs-batch-{b}", lambda: inc.ingest_batch(b, files))
+    run("jobs-compact", inc.compact)
+    run("jobs-clusters", inc.clusters)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # every job is counted
+    jobs = {
+        g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in out
+    }
+    assert jobs == {
+        "jobs-batch-0": 1, "jobs-batch-1": 1, "jobs-batch-2": 1,
+        "jobs-compact": 0, "jobs-clusters": 0,
+    }
+    assert out["jobs-compact"] is True
+    assert inc.view_stages("sig") == ["sig_compact_00002"]
+    single = run_pipeline(corpus_df(spark, N), CFG, with_containment=False)
+    assert _pairs(out["jobs-clusters"]) == _pairs(single.clusters)
+    single.unpersist()
 
 
 def test_checkpointed_containment_matches_plain(spark, tmp_path):

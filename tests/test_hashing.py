@@ -10,14 +10,52 @@ from sketchy_spark.hashing import (
     bottom_s,
     i64_to_u64,
     murmur3_x64_128_low,
-    perm_constants,
-    perm_minhash,
     scaled_filter,
     shingle_windows,
-    simhash_batch,
+    simhash64,
     u64_to_i64,
     winnow,
 )
+
+
+def hash_u64_of_int(value: int, seed: int = 0) -> int:
+    """Deterministic u64 from an integer (for permutation constants)."""
+    key = np.frombuffer(int(value).to_bytes(8, "little"), dtype=np.uint8)
+    return int(murmur3_x64_128_low(key.reshape(1, 8), seed)[0])
+
+
+def perm_constants(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """(a, b) multiply-shift constants for k-permutation MinHash, derived
+    from murmur so they are stable across numpy versions."""
+    a = np.array(
+        [hash_u64_of_int(j, seed) | 1 for j in range(num_perm)], dtype=np.uint64
+    )
+    b = np.array(
+        [hash_u64_of_int(j, seed + 1) for j in range(num_perm)], dtype=np.uint64
+    )
+    return a, b
+
+
+def perm_minhash(
+    distinct: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """Fixed-width signature sig[j] = min_x (a[j]*x + b[j] mod 2^64): the
+    classic k-permutation MinHash, the oracle the one-permutation
+    ``oph_minhash`` of the sketch stage stands in for."""
+    if distinct.size == 0:
+        return np.full(a.shape[0], np.iinfo(np.uint64).max, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        return (distinct[:, None] * a[None, :] + b[None, :]).min(axis=0)
+
+
+def simhash_batch(all_distinct: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """:func:`simhash64` over concatenated distinct arrays (``offsets`` =
+    start index per doc)."""
+    ends = np.append(offsets[1:], all_distinct.size)
+    return np.array(
+        [simhash64(all_distinct[o:e]) for o, e in zip(offsets, ends)],
+        dtype=np.uint64,
+    )
 
 
 def _h(s: bytes, seed: int = 0) -> int:

@@ -78,6 +78,11 @@ class FakeIcebergSpark:
     def read(self):
         return _FakeReader(self.cat)
 
+    def createDataFrame(self, data, schema=None):
+        # a local relation names no catalog table: the real session
+        # builds it, as the Iceberg session would
+        return self._real.createDataFrame(data, schema)
+
     def sql(self, q: str):
         self.transcript.append(" ".join(q.split()))
         s = self.transcript[-1]

@@ -1,17 +1,9 @@
-"""Sources/sinks, plan-shape assertions, multimodal stubs, streaming."""
+"""Sources/sinks, plan-shape assertions, streaming."""
 
-import numpy as np
 import pyspark.sql.functions as F
-import pytest
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_df, corpus_pandas
-from sketchy_spark.functions.multimodal import (
-    extract_features,
-    resize,
-    sample_frames,
-    synthetic_media,
-)
 from sketchy_spark.operators.sketch import sketch_files
 from sketchy_spark.plans.explain import (
     broadcast_join_count,
@@ -113,63 +105,6 @@ def test_signature_pipeline_plan_properties(spark):
     final_plan = physical_plan(cand).split("== Initial Plan ==")[0]
     n_exchanges = final_plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 8, final_plan
-
-
-# ------------------------------------------------------------- multimodal
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    return synthetic_media(spark, 60).cache()
-
-
-def test_feature_extraction_shape(media):
-    feats = extract_features(media, n_features=16)
-    rows = feats.collect()
-    assert len(rows) == 60
-    for r in rows[:5]:
-        assert len(r["feature"]) == 16
-        assert r["n_bytes"] == 256
-
-
-def test_feature_extraction_deterministic(spark, media):
-    a = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    b = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert a == b
-
-
-def test_resize_payload_shape(media):
-    out = resize(media, 16, 8).collect()
-    for r in out:
-        assert r["width"] == 16 and r["height"] == 8
-        assert len(r["payload"]) == 16 * 8
-
-
-def test_frame_sampling_only_video(media):
-    frames = sample_frames(media, every_n=10)
-    rows = frames.collect()
-    assert len(rows) == 20 * 3  # 20 video rows x frames 0,10,20
-    assert {r["frame_idx"] for r in rows} == {0, 10, 20}
-
-
-def test_real_decoder_raises_cleanly(spark, media):
-    with pytest.raises(Exception) as exc:
-        extract_features(media, decoder="pillow").collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-
-def test_multimodal_features_feed_ann(spark, media):
-    """The multimodal on-ramp: extracted features work as embeddings for
-    the similarity operators."""
-    from sketchy_spark.functions.similarity import cosine_topk_bruteforce
-
-    emb = extract_features(media).select(
-        F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding")
-    )
-    top = cosine_topk_bruteforce(emb, k=2, n_queries=5)
-    assert top.count() == 10
 
 
 # -------------------------------------------------------------- streaming

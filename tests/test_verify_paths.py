@@ -1,14 +1,60 @@
 """Arrow and SQL verification paths must agree exactly."""
 
+import pyspark.sql.functions as F
 import pytest
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_pandas
 from sketchy_spark.operators.lsh import attach_file_ids, candidate_pairs_fid
 from sketchy_spark.operators.sketch import sketch_files
-from sketchy_spark.operators.verify import verified_pairs, verified_pairs_sql
+from sketchy_spark.operators.verify import _with_sides, verified_pairs
 
 CFG = SketchConfig()
+
+
+def verified_pairs_sql(pairs, signatures, cfg, broadcast_pairs=None):
+    """The array-SQL oracle of ``verified_pairs``: estimate Jaccard per
+    candidate pair; keep pairs >= tau.
+
+    Bottom-s estimator (unbiased for sets larger than s): with
+    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. The shifted-int64 storage
+    (SURVEY §4.2) makes ``array_sort``'s signed order equal unsigned hash
+    order, so slice-after-sort is exactly bottom-s of the union. For docs
+    with < s shingles the sketches are the full sets and the estimate is
+    exact. SimHash hamming distance is reported (filtering on it is the
+    caller's choice — G2 is a secondary signal, not a recall gate).
+    """
+    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
+    # materialize union_s as a column so the sort/union evaluates once per
+    # row instead of once per referencing expression
+    staged = df.select(
+        "a_id",
+        "b_id",
+        "a_sig",
+        "b_sig",
+        F.slice(F.array_sort(F.array_union("a_sig", "b_sig")), 1, cfg.s).alias(
+            "union_s"
+        ),
+        F.bit_count(
+            F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))
+        ).alias("hamming"),
+    )
+    inter3 = F.array_intersect(
+        F.array_intersect("union_s", "a_sig"), F.col("b_sig")
+    )
+    return (
+        staged.select(
+            "a_id",
+            "b_id",
+            "hamming",
+            F.when(
+                F.size("union_s") > 0,
+                F.size(inter3) / F.size("union_s"),
+            ).otherwise(F.lit(0.0)).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= cfg.jaccard_threshold)
+        .select("a_id", "b_id", "jaccard", "hamming")
+    )
 
 
 def test_arrow_and_sql_verify_agree(spark):
