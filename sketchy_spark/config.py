@@ -29,7 +29,10 @@ I64_SHIFT = 1 << 63  # order-preserving uint64 -> int64 shift (SURVEY §4.2)
 # resume into a reader that expects fids.
 # v4: incremental ``sig_batch`` stages store ``band_keys``, which the
 # resident batch reads instead of computing them.
-SIG_FORMAT_VERSION = 4
+# v5: incremental stages are fid-keyed too — ``sig_batch`` stores ``fid``
+# and ``edges_batch`` holds (a_fid, b_fid) — and the unread
+# ``simhash_max_hamming`` field left the config.
+SIG_FORMAT_VERSION = 5
 
 
 @dataclass(frozen=True)
@@ -47,20 +50,19 @@ class SketchConfig:
     bands: int = 32             # LSH bands b
     rows_per_band: int = 4      # LSH rows r; b*r == num_perm
     jaccard_threshold: float = 0.7   # verification threshold tau
-    simhash_max_hamming: int = 8     # secondary simhash filter on candidates
     winnow_window: int = 50          # winnowing window (containment fingerprints)
     containment_threshold: float = 0.9  # |A∩B|/|A| for containment verdict
     min_content_len: int = 1
 
-    # salting for skewed band keys (SURVEY §4.1). Cold keys emit all
+    # hot band keys (SURVEY §4.1). Cold keys emit all
     # i<j pairs — O(cap²) worst case PER KEY — so the cap bounds junk
     # candidate volume, not just aggregate buffers: measured at 1.6M
     # files, boilerplate band keys sized 64..2000 generated ~3M spurious
     # pairs under a 2000 cap (cap² = 2M pairs from ONE near-cap key).
-    # Keys over the cap take salted star edges (O(group)); a true
+    # Keys over the cap take hub-star edges (O(group)); a true
     # near-dup clique over the cap stays one component because its
     # hub-star edges verify.
-    band_skew_cap: int = 64     # band keys with > cap members get salted stars
+    band_skew_cap: int = 64     # band keys with > cap members get hub stars
     fp_skew_cap: int = 200      # winnow fingerprints shared by > cap docs are
                                 # boilerplate, dropped before the containment join
 

@@ -40,7 +40,7 @@ _KEYWORDS = [
 _IDENTS = [f"sym_{i:03d}" for i in range(160)]
 
 # One global header shared by every boilerplate row in every block -> one
-# genuinely hot shingle region (exercises band-key salting + AQE skew join).
+# genuinely hot shingle region (exercises the hot band keys + AQE skew join).
 _LICENSE = (
     "// Licensed under the Apache License, Version 2.0 (the License); "
     "you may not use this file except in compliance with the License. "

@@ -9,30 +9,29 @@ The same estimator in built-in array SQL (Catalyst builds hash sets per
 row, ~ms per 1000-element pair) is the oracle the kernel is tested
 against, in ``tests/test_verify_paths.py``.
 
-Four passes pick where they run by one rule.
-:func:`verified_pairs_cascade` puts a cheap OPH slot-match stage in
-front of the kernel; every Jaccard edge in the package comes from it.
-The containment pass is :func:`containment_candidates` then
-:func:`containment_verified`. The plain pipeline's edges stage
-(``pipeline.py``) and the incremental batch (``streaming/incremental.py``)
-each band, anchor and verify on the driver, running the cascade's numpy
-core (:func:`_cascade_core`): the plain stage from one collect of the
-cached signatures, which also labels the clusters, and the batch from
-Arrow reads of its stored signature stages. While a pass's working set fits
-one 30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
-reference scans its in-memory sketch collection (src/sketchy.rs:81): the
-cascade and the plain edges stage start one Python UDF stage (the
-borderline re-sketch), the containment pass and the incremental batch
+Three passes pick where they run by one rule. The edges stage
+(``pipeline.py``: band join, exact-sha edges and the cascade, in the
+plain run and in each incremental batch) verifies with
+:func:`verified_pairs_cascade`, which puts a cheap OPH slot-match stage
+in front of the kernel; every Jaccard edge in the package comes from
+it. The containment pass is :func:`containment_candidates` then
+:func:`containment_verified`. While a pass's working set fits one
+30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
+reference scans its in-memory sketch collection (src/sketchy.rs:81):
+the edges stage runs the cascade's numpy core (:func:`_cascade_core`)
+over one Arrow table of the signatures and starts at most one Python
+UDF stage (the plain run's borderline re-sketch), the containment pass
 none, and none of them persists anything. Above the budget each runs
 scan-side on executors, and a driver run that finds it would overflow
-hands over to that path, which returns the same rows. The cascade and
-the containment pass take a ``resident`` override; the two edges
-stages are driven by the budget alone, read at call time, so setting it
-to 0 drives their Spark stages. On small traffic the driver path is the
-faster one because it starts fewer Spark jobs, stages and Python tasks,
-each of which carries a fixed cost whatever its size; the kernels are
-not what sets the cost there (ROADMAP.md records the driver vs
-scan-side timings).
+hands over to that path, which returns the same rows; there the
+cascade is always scan-side, because the edges stage has already
+declined the budget. The containment pass takes a ``resident``
+override; the edges stage is driven by the budget alone, read at call
+time, so setting it to 0 drives its Spark stages. On small traffic the
+driver path is the faster one because it starts fewer Spark jobs,
+stages and Python tasks, each of which carries a fixed cost whatever
+its size; the kernels are not what sets the cost there (ROADMAP.md
+records the driver vs scan-side timings).
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
@@ -56,7 +55,7 @@ from sketchy_spark.config import SketchConfig
 # Caches persisted by the scan-side cascade and containment pass for
 # callers that provided no ``persisted`` release list (ad-hoc / public
 # use): the persists are required for correctness (see the comments on
-# exchange reuse in _scan_side_cascade), so rather than leaking
+# exchange reuse in verified_pairs_cascade), so rather than leaking
 # anonymously they are tracked here. The resident paths persist nothing.
 # Long-lived sessions reclaim executor storage with
 # :func:`release_cascade_caches`.
@@ -127,11 +126,9 @@ def _with_sides(
 
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
 
-# The one driver-side byte budget that picks where the cascade runs. It
-# counts the slim signature matrix (num_perm * 4 + 24 B/file), the
-# candidate pairs (16 B/pair) and the borderline bottom-s sigs (8 * s
-# B/file). Within it the cascade runs on the driver (_driver_cascade);
-# above it, on executors (_scan_side_cascade).
+# The one driver-side byte budget that picks where the edges stage and
+# the containment pass run (module docstring): within it, on the driver;
+# above it, on executors.
 RESIDENT_BYTES = 30_000_000
 # Cascade stage 1's half-width around tau: est >= tau + margin accepts,
 # est < tau - margin rejects, the band between goes to the exact stage.
@@ -233,13 +230,13 @@ def verified_pairs(
 def verified_pairs_cascade(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
     margin: float = CASCADE_MARGIN, files: DataFrame | None = None,
-    n_files: int | None = None, resident: bool | None = None,
     attach_ids: bool = True, persisted: list | None = None,
 ) -> DataFrame:
     """Two-stage verification cascade (SURVEY G4: full estimator only for
-    borderline pairs). Returns string-keyed (a_id, b_id, jaccard, hamming)
-    by default; ``attach_ids=False`` keeps fid keys (the pipeline's
-    internal flow, which stays fid-typed through connected components).
+    borderline pairs), on executors. Returns string-keyed (a_id, b_id,
+    jaccard, hamming) by default; ``attach_ids=False`` keeps fid keys
+    (the pipeline's internal flow, which stays fid-typed through
+    connected components).
 
     Stage 1 reads only the 128-slot OPH signature (+simhash) per pair and
     computes est = matching_slots / num_perm. Pairs with
@@ -256,220 +253,20 @@ def verified_pairs_cascade(
     and goes straight to stage-2 exact verification (for such docs the
     bottom-s sketch is the full set, so stage 2 is exact).
 
-    Where it runs — the reference keeps every sketch in memory and scans
-    it per query (src/sketchy.rs:81):
+    Executors attach both sides by scan-side joins — broadcast the PAIR
+    ids, stream the signatures map-side — and run stage 1 and
+    :func:`verified_pairs` as ``mapInPandas`` stages, which scales with
+    workers (the 100 TB default). The driver form of both stages is
+    :func:`_cascade_core`, which the edges stage runs while it fits the
+    resident budget (module docstring).
 
-    - Resident (``resident=True``, or by default while the signature
-      matrix, the pairs and the borderline sigs fit ``RESIDENT_BYTES``,
-      30 MB): the driver collects the slim matrix and the pairs with
-      Arrow, runs both stages in numpy and returns a local frame. The
-      only Spark work is the collects and ONE re-sketch of the borderline
-      files; no Python UDF stage runs besides that re-sketch, and nothing
-      persists. On small traffic the number of Spark jobs, stages and
-      Python tasks, not the kernels, sets the cost: each carries a fixed
-      scheduling and worker-setup cost whatever its size.
-    - Scan-side (``resident=False``, or above the budget): executors
-      attach both sides by scan-side joins and run stage 1 and
-      :func:`verified_pairs` as ``mapInPandas`` stages. The borderline
-      count is known only after stage 1, so a driver run whose
-      borderline sigs overflow the budget hands over to this path.
-
-    ``n_files``: pass the already-known signature count (e.g. from the
-    pipeline's eager-cache count) to avoid a second full-table count —
-    each driver barrier is serial time that caps scaling efficiency.
-    ``persisted``: list receiving every frame the scan-side path
-    persists, for the caller to unpersist. Without it the caches are
-    tracked in a module registry instead — reclaim with
-    :func:`release_cascade_caches` in long-lived sessions. The resident
-    path persists nothing.
+    ``persisted``: list receiving every frame the call persists, for the
+    caller to unpersist. Without it the caches are tracked in a module
+    registry instead — reclaim with :func:`release_cascade_caches` in
+    long-lived sessions.
     """
-    _, _, key, _ = _key_cols(pairs)
+    a_col, b_col, key, key_type = _key_cols(pairs)
     sigs = _keyed_signatures(signatures, key)
-    sig_budget = None  # forced resident: no cap on the borderline sigs
-    if resident is None:
-        if n_files is None:
-            n_files = signatures.count()
-        sig_budget = RESIDENT_BYTES - n_files * (cfg.num_perm * 4 + 24)
-        if sig_budget > 0:
-            sig_budget -= 16 * pairs.count()
-        resident = sig_budget > 0
-
-    out = None
-    if resident:
-        out = _driver_cascade(pairs, sigs, cfg, margin, files, sig_budget)
-    if out is None:
-        out = _scan_side_cascade(pairs, sigs, cfg, margin, files, persisted)
-
-    if key == "fid" and attach_ids:
-        from sketchy_spark.operators.lsh import attach_file_ids
-
-        out = attach_file_ids(out, signatures).select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-            "jaccard",
-            "hamming",
-        )
-    return out
-
-
-def _borderline_sigs(
-    wanted: DataFrame, sigs: DataFrame, files: DataFrame | None,
-    cfg: SketchConfig,
-) -> DataFrame:
-    """Signatures WITH the bottom-s ``sig`` column for the keys in the
-    one-column frame ``wanted`` (fid or file_id). Slim signatures are
-    re-sketched from ``files`` for those files only — O(|borderline|),
-    not O(corpus) — without winnow fingerprints."""
-    key = wanted.columns[0]
-    if "sig" in sigs.columns:
-        return sigs.join(F.broadcast(wanted), key, "left_semi")
-    if files is None:
-        raise ValueError("signatures lack 'sig' and no files source given")
-    from sketchy_spark.operators.lsh import with_fid
-    from sketchy_spark.operators.sketch import sketch_files
-
-    file_key = F.concat_ws("/", "repo", "path")  # sketch_files' file_id
-    if key == "fid":
-        file_key = F.xxhash64(file_key)  # with_fid's hash of file_id
-    picked = files.join(
-        F.broadcast(wanted), file_key == wanted[key], "left_semi"
-    )
-    out = sketch_files(picked, cfg, with_sig=True, with_fp=False)
-    return with_fid(out) if key == "fid" else out
-
-
-def _driver_cascade(
-    pairs: DataFrame, sigs: DataFrame, cfg: SketchConfig, margin: float,
-    files: DataFrame | None, sig_budget: int | None,
-) -> DataFrame | None:
-    """The resident cascade, evaluated on the driver (see
-    :func:`verified_pairs_cascade`): the collects around
-    :func:`_cascade_core`. ``sig_budget``: bytes left for the borderline
-    sigs (None: no cap); returns None when they exceed it."""
-    spark = sigs.sparkSession
-    a_col, b_col, key, key_type = _key_cols(pairs)
-    schema = _verified_schema(a_col, b_col, key_type)
-
-    # Arrow-native collect: the fixed-width sig_perm lists flatten into
-    # an (n, num_perm) matrix zero-copy — no pandas object column.
-    tbl = sigs.select(key, "sig_perm", "simhash", "n_shingles").toArrow()
-    keys, first = np.unique(tbl[key].to_numpy(), return_index=True)
-    mat = _sig_perm_matrix(tbl, cfg)[first]
-    sim = tbl["simhash"].to_numpy()[first]
-    nsh = tbl["n_shingles"].to_numpy()[first]
-    index = pd.Index(keys)
-
-    ptbl = pairs.select(a_col, b_col).toArrow()
-    a, b = ptbl[a_col].to_numpy(), ptbl[b_col].to_numpy()
-    ai, bi = index.get_indexer(a), index.get_indexer(b)
-    found = (ai >= 0) & (bi >= 0)  # the scan-side joins drop the rest
-    a, b, ai, bi = a[found], b[found], ai[found], bi[found]
-    if not a.size:
-        return spark.createDataFrame([], schema)
-
-    got = _cascade_core(
-        mat, sim, nsh, ai, bi, cfg, margin, sig_budget,
-        _sig_fetcher(sigs, files, cfg, key, key_type, keys),
-    )
-    if got is None:
-        return None
-    keep, jac, ham = got
-    return spark.createDataFrame(
-        pd.DataFrame({
-            a_col: a[keep], b_col: b[keep],
-            "jaccard": jac[keep], "hamming": ham[keep],
-        }),
-        schema,
-    )
-
-
-def _sig_perm_matrix(tbl, cfg: SketchConfig) -> np.ndarray:
-    """The (rows, num_perm) int32 matrix of an Arrow ``sig_perm`` column,
-    flattened without a pandas object column."""
-    return np.asarray(tbl["sig_perm"].combine_chunks().flatten()).reshape(
-        -1, cfg.num_perm
-    )
-
-
-def _sig_fetcher(
-    sigs: DataFrame, files: DataFrame | None, cfg: SketchConfig,
-    key: str, key_type: str, keys: np.ndarray,
-):
-    """``fetch(pos) -> {pos: sig}`` for :func:`_cascade_core`: ONE Arrow
-    collect of the bottom-s sigs of the files ``keys[pos]`` (``keys``
-    sorted, as ``np.unique`` returns them), read from ``sigs`` when it
-    carries ``sig`` and re-sketched from ``files`` otherwise."""
-    index = pd.Index(keys)
-
-    def fetch(pos: np.ndarray) -> dict:
-        wanted = sigs.sparkSession.createDataFrame(
-            pd.DataFrame({key: keys[pos]}), f"{key} {key_type}"
-        )
-        got = (
-            _borderline_sigs(wanted, sigs, files, cfg)
-            .select(key, "sig")
-            .toArrow()
-        )
-        return dict(
-            zip(index.get_indexer(got[key].to_numpy()), got["sig"].to_numpy())
-        )
-
-    return fetch
-
-
-def _cascade_core(
-    mat: np.ndarray, sim: np.ndarray, nsh: np.ndarray, ai: np.ndarray,
-    bi: np.ndarray, cfg: SketchConfig, margin: float,
-    sig_budget: int | None, fetch,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Both cascade stages in numpy over the pairs of matrix rows
-    (``ai``, ``bi``) -> (keep, jaccard, hamming) per pair.
-
-    Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
-    the borderline band (and every small-doc pair) gets its rows' sigs
-    from ``fetch`` (see :func:`_sig_fetcher`) and :func:`_bottom_s_jaccard`.
-    Returns None, before fetching, when those sigs (8 * s B per file)
-    exceed ``sig_budget`` (None: no cap)."""
-    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
-    blocks = [
-        _slot_estimates(
-            mat[ai[sl]], mat[bi[sl]], sim[ai[sl]], sim[bi[sl]],
-            nsh[ai[sl]], nsh[bi[sl]], num_perm,
-        )
-        for sl in (
-            slice(lo, lo + _BLOCK_PAIRS)
-            for lo in range(0, ai.size, _BLOCK_PAIRS)
-        )
-    ]
-    est, ham, small = (np.concatenate(x) for x in zip(*blocks))
-    accept = ~small & (est >= tau + margin)
-    border = ~accept & (small | (est >= tau - margin))
-    keep, jac = accept, est
-
-    if border.any():
-        wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
-        if sig_budget is not None and 8 * cfg.s * wanted_pos.size > sig_budget:
-            return None
-        sig_of = fetch(wanted_pos)
-        jac = est.copy()
-        jac[border] = _bottom_s_jaccard(
-            [sig_of.get(i, _NO_SIG) for i in ai[border]],
-            [sig_of.get(i, _NO_SIG) for i in bi[border]],
-            cfg.s,
-        )
-        keep = accept | (border & (jac >= tau))
-    return keep, jac, ham
-
-
-def _scan_side_cascade(
-    pairs: DataFrame, sigs: DataFrame, cfg: SketchConfig, margin: float,
-    files: DataFrame | None, persisted: list | None,
-) -> DataFrame:
-    """The cascade on executors (see :func:`verified_pairs_cascade`):
-    stage 1 and stage 2 are ``mapInPandas`` stages over scan-side
-    attach joins — broadcast the PAIR ids, stream the cached signatures
-    map-side — which scales with workers (the 100 TB default)."""
-    a_col, b_col, key, key_type = _key_cols(pairs)
     tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
 
     def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -542,7 +339,96 @@ def _scan_side_cascade(
     refined = verified_pairs(
         borderline, _borderline_sigs(wanted, sigs, files, cfg), cfg
     )
-    return accepted.unionByName(refined)
+    out = accepted.unionByName(refined)
+    if key == "fid" and attach_ids:
+        from sketchy_spark.operators.lsh import attach_file_ids
+
+        out = attach_file_ids(out, signatures).select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+            "jaccard",
+            "hamming",
+        )
+    return out
+
+
+def _borderline_sigs(
+    wanted: DataFrame, sigs: DataFrame, files: DataFrame | None,
+    cfg: SketchConfig,
+) -> DataFrame:
+    """Signatures WITH the bottom-s ``sig`` column for the keys in the
+    one-column frame ``wanted`` (fid or file_id). Slim signatures are
+    re-sketched from ``files`` for those files only — O(|borderline|),
+    not O(corpus) — without winnow fingerprints."""
+    key = wanted.columns[0]
+    if "sig" in sigs.columns:
+        return sigs.join(F.broadcast(wanted), key, "left_semi")
+    if files is None:
+        raise ValueError("signatures lack 'sig' and no files source given")
+    from sketchy_spark.operators.lsh import with_fid
+    from sketchy_spark.operators.sketch import sketch_files
+
+    file_key = F.concat_ws("/", "repo", "path")  # sketch_files' file_id
+    if key == "fid":
+        file_key = F.xxhash64(file_key)  # with_fid's hash of file_id
+    picked = files.join(
+        F.broadcast(wanted), file_key == wanted[key], "left_semi"
+    )
+    out = sketch_files(picked, cfg, with_sig=True, with_fp=False)
+    return with_fid(out) if key == "fid" else out
+
+
+def _sig_perm_matrix(tbl, cfg: SketchConfig) -> np.ndarray:
+    """The (rows, num_perm) int32 matrix of an Arrow ``sig_perm`` column,
+    flattened without a pandas object column."""
+    return np.asarray(tbl["sig_perm"].combine_chunks().flatten()).reshape(
+        -1, cfg.num_perm
+    )
+
+
+def _cascade_core(
+    mat: np.ndarray, sim: np.ndarray, nsh: np.ndarray, ai: np.ndarray,
+    bi: np.ndarray, cfg: SketchConfig, margin: float,
+    sig_budget: int, fetch,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """Both cascade stages in numpy over the pairs of matrix rows
+    (``ai``, ``bi``) -> (keep, jaccard, hamming) per pair: the driver
+    form of :func:`verified_pairs_cascade`.
+
+    Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
+    the borderline band (and every small-doc pair) gets its rows' sigs
+    from ``fetch(rows) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
+    Returns None, before fetching, when those sigs (8 * s B per file)
+    exceed ``sig_budget``."""
+    tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
+    blocks = [
+        _slot_estimates(
+            mat[ai[sl]], mat[bi[sl]], sim[ai[sl]], sim[bi[sl]],
+            nsh[ai[sl]], nsh[bi[sl]], num_perm,
+        )
+        for sl in (
+            slice(lo, lo + _BLOCK_PAIRS)
+            for lo in range(0, ai.size, _BLOCK_PAIRS)
+        )
+    ]
+    est, ham, small = (np.concatenate(x) for x in zip(*blocks))
+    accept = ~small & (est >= tau + margin)
+    border = ~accept & (small | (est >= tau - margin))
+    keep, jac = accept, est
+
+    if border.any():
+        wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
+        if 8 * cfg.s * wanted_pos.size > sig_budget:
+            return None
+        sig_of = fetch(wanted_pos)
+        jac = est.copy()
+        jac[border] = _bottom_s_jaccard(
+            [sig_of.get(i, _NO_SIG) for i in ai[border]],
+            [sig_of.get(i, _NO_SIG) for i in bi[border]],
+            cfg.s,
+        )
+        keep = accept | (border & (jac >= tau))
+    return keep, jac, ham
 
 
 CONTAINMENT_SCHEMA = (

@@ -11,18 +11,23 @@ The Spark re-expression of `sketchy predict` end-to-end (SURVEY §3.1),
 with the all-pairs kernel replaced by LSH (G1) and ranking replaced by
 clustering (the dedup graft's goal).
 
-The edges and clusters follow the verify passes' resident rule
-(operators/verify.py, one ``RESIDENT_BYTES`` budget). While the cached
-signature rows fit it, at :func:`_resident_row_bytes` each, ONE Arrow
-collect feeds the band join, the exact-sha edges, the cascade and the
-union-find on the driver, as the reference ranks its in-memory sketch
-collection in one pass (src/sketchy.rs:81): the sketch and the cascade's
-borderline re-sketch are then the run's only Python stages. Above the
-budget, or when the pair codes or the borderline sigs would overflow
-what the collect left, the run hands over to Spark stages
-(:func:`candidate_pairs_fid`, :func:`verified_pairs_cascade`,
-:func:`exact_dup_edges_fid`, :func:`assign_clusters_fid`), with
-identical rows.
+The edges stage has one driver kernel, :func:`_resident_edges`, and one
+Spark form, :func:`_spark_edges`, each with a new-rows mask: the
+incremental batch (streaming/incremental.py) runs both over its
+fid-keyed store with its new rows marked, and a plain run is the batch
+over an empty store, where every row is new. The stage follows the
+verify passes' resident rule (operators/verify.py, one
+``RESIDENT_BYTES`` budget). While the signature rows fit it, at
+:func:`_resident_row_bytes` each, ONE Arrow table feeds the band join,
+the exact-sha edges and the cascade on the driver, as the reference
+re-ranks its in-memory sketch collection (src/sketchy.rs:81); a plain
+run gets it from one collect of the cached signatures, which also feeds
+the union-find, so the sketch and the cascade's borderline re-sketch are
+its only Python stages. Above the budget, or when the pair codes or the
+borderline sigs would overflow what the table left, the stage hands over
+to Spark stages (:func:`candidate_pairs_fid`,
+:func:`verified_pairs_cascade`, :func:`exact_dup_edges_fid`, then
+:func:`assign_clusters_fid`), with identical rows.
 
 Every run labels a cluster by its least file_id (string order), the
 rule of operators/cluster.py, whether its clusters come from the driver
@@ -36,8 +41,9 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from sketchy_spark.config import DEFAULT_CONFIG, SketchConfig
 from sketchy_spark.operators import verify
@@ -52,7 +58,6 @@ from sketchy_spark.operators.lsh import (
     driver_band_pairs,
     driver_exact_edges,
     exact_dup_edges_fid,
-    salted_stars,
     with_fid,
 )
 from sketchy_spark.operators.sketch import sketch_files
@@ -172,13 +177,13 @@ def run_pipeline(
     fresh: list = []
 
     def compute_edges():
-        # _resident_edges reads verify.RESIDENT_BYTES at call time, so a
-        # caller that sets it to 0 drives the Spark stages.
+        # the resident stage reads verify.RESIDENT_BYTES at call time, so
+        # a caller that sets it to 0 drives the Spark stages.
         got = None
         if n_files is not None:
-            got = _resident_edges(signatures, files, cfg, n_files)
+            got = _resident_frames(signatures, files, cfg, n_files)
         if got is None:
-            got = _spark_edges(signatures, files, cfg, n_files, internal)
+            got = (*_spark_edges(signatures, files, cfg, internal), None)
         fresh.extend(got)
         return fresh[2]
 
@@ -186,7 +191,7 @@ def run_pipeline(
     candidates, verified, _, fresh_clusters = fresh or (None,) * 4
     clusters = stage(
         "clusters",
-        lambda: fresh_clusters if fresh
+        lambda: fresh_clusters if fresh_clusters is not None
         else assign_clusters_fid(signatures, edges),
     )
 
@@ -205,68 +210,108 @@ def run_pipeline(
     )
 
 
+# The stored or collected signature columns the resident edges stage
+# reads (band_keys: band_keys_expr, computed in the sketch job).
+RESIDENT_COLS = [
+    "fid", "sha256", "sig_perm", "simhash", "n_shingles", "band_keys",
+]
+
+
 def _resident_row_bytes(cfg: SketchConfig) -> int:
-    """Driver bytes per signature row in the resident stage's collect:
-    sig_perm (4 B a slot), band keys (8 B a band), fid, its salt hash,
-    simhash and n_shingles (32 B), the sha256 hex (64 B) and the file_id
+    """Driver bytes per signature row in the resident edges stage:
+    sig_perm (4 B a slot), band keys (8 B a band), fid, simhash,
+    n_shingles and the new-row flag (32 B), the sha256 hex (64 B) and the
+    file_id that a plain run attaches and a batch's clusters read
     (counted as 64 B): ~0.93 KB at the defaults."""
     return 4 * cfg.num_perm + 8 * cfg.bands + 32 + 64 + 64
 
 
 def _resident_edges(
-    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
-    n_files: int,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None:
-    """(candidates, verified, edges, clusters) computed on the driver as
-    local frames, with the schemas and rows of :func:`_spark_edges`.
+    tbl: pa.Table, is_new: np.ndarray, cfg: SketchConfig, budget: int,
+    fetch,
+) -> tuple | None:
+    """The edges stage on the driver -> (first, rank, candidates,
+    verified, edges), or None.
 
-    ONE Arrow collect of the cached signatures feeds
-    :func:`driver_band_pairs` under :func:`candidate_pairs_fid`'s salted
-    hot rule, the :func:`exact_dup_edges_fid` star to each sha group's
-    minimum fid, the cascade core (one borderline re-sketch) and the
-    union-find, which labels each file with its component's least
-    file_id. Returns None, for the caller to hand over to the Spark
-    stages, when the rows do not fit ``verify.RESIDENT_BYTES`` or the
-    pair codes or the borderline sigs would overflow what they left."""
-    budget = verify.RESIDENT_BYTES - n_files * _resident_row_bytes(cfg)
-    if budget <= 0:
-        return None
-    tbl = signatures.select(
-        "fid", "file_id", "sha256", "sig_perm", "simhash", "n_shingles",
-        band_keys_expr(cfg).alias("band_keys"),
-        F.xxhash64("fid").alias("salt_hash"),
-    ).toArrow()
-    # file ranks in fid order, so rank order is a_fid < b_fid order
+    ``tbl`` holds :data:`RESIDENT_COLS`, one row per signature row, and
+    ``is_new`` flags its new rows (every row, in a plain run). Files rank
+    in fid order: ``rank`` maps each row to its file and ``first`` each
+    file to its first row. The pairs are rank pairs with a < b, each
+    touching a new row: the candidates (a, b) of
+    :func:`driver_band_pairs`, the verified (a, b, jaccard, hamming)
+    that the cascade core keeps, and the edges (a, b), those plus
+    :func:`driver_exact_edges`, as :func:`_spark_edges` computes them.
+    ``fetch(fids)`` returns the ``fid, sig`` rows of the cascade's
+    borderline files. ``budget``: driver bytes left after the table;
+    returns None, for the caller to hand over to :func:`_spark_edges`,
+    when the pair codes or the borderline sigs would overflow it."""
     fids, first, rank = np.unique(
         tbl["fid"].to_numpy(), return_index=True, return_inverse=True
     )
     n = fids.size
-    got = driver_band_pairs(
-        tbl["band_keys"], rank, cfg, budget,
-        salted_stars(rank, tbl["salt_hash"].to_numpy(), cfg.band_skew_cap),
-    )
+    got = driver_band_pairs(tbl["band_keys"], rank, cfg, budget, is_new)
     if got is None:
         return None
     ca, cb, budget = got
-    va, vb, jac, ham = ca, cb, np.empty(0), np.empty(0, dtype=np.int64)
+    keep, jac, ham = np.zeros(0, dtype=bool), np.empty(0), np.empty(0)
     if ca.size:
+
+        def fetch_rows(pos: np.ndarray) -> dict:
+            sigs = fetch(fids[pos])
+            return dict(zip(
+                np.searchsorted(fids, sigs["fid"].to_numpy()),
+                sigs["sig"].to_numpy(),
+            ))
+
         kept = verify._cascade_core(
             verify._sig_perm_matrix(tbl, cfg)[first],
             tbl["simhash"].to_numpy()[first],
             tbl["n_shingles"].to_numpy()[first],
-            ca, cb, cfg, verify.CASCADE_MARGIN, budget,
-            verify._sig_fetcher(signatures, files, cfg, "fid", "long", fids),
+            ca, cb, cfg, verify.CASCADE_MARGIN, budget, fetch_rows,
         )
         if kept is None:
             return None
         keep, jac, ham = kept
-        va, vb, jac, ham = ca[keep], cb[keep], jac[keep], ham[keep]
-
-    hub, member = driver_exact_edges(tbl["sha256"].to_numpy(), rank)
+    va, vb = ca[keep], cb[keep]
+    xa, xb = driver_exact_edges(tbl["sha256"].to_numpy(), rank, is_new)
     ea, eb = np.divmod(
-        np.unique(np.concatenate([va * n + vb, hub * n + member])), n
+        np.unique(np.concatenate([va * n + vb, xa * n + xb])), n
     )
+    return first, rank, (ca, cb), (va, vb, jac[keep], ham[keep]), (ea, eb)
+
+
+def _resident_frames(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
+    n_files: int,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None:
+    """A plain run's (candidates, verified, edges, clusters) as local
+    frames, with the schemas and rows of the Spark stages: ONE Arrow
+    collect of the cached signatures feeds :func:`_resident_edges`, every
+    row new, whose borderline files are re-sketched from ``files``, and
+    the union-find, which labels each file with its component's least
+    file_id. None when the stage hands over (see there)."""
+    budget = verify.RESIDENT_BYTES - n_files * _resident_row_bytes(cfg)
+    if budget <= 0:
+        return None
+    tbl = signatures.select(
+        "file_id", *RESIDENT_COLS[:-1], band_keys_expr(cfg).alias("band_keys")
+    ).toArrow()
+    spark = signatures.sparkSession
+
+    def fetch(fids: np.ndarray) -> pa.Table:
+        wanted = spark.createDataFrame(pd.DataFrame({"fid": fids}), "fid long")
+        return verify._borderline_sigs(
+            wanted, signatures, files, cfg
+        ).select("fid", "sig").toArrow()
+
+    got = _resident_edges(
+        tbl, np.ones(tbl.num_rows, dtype=bool), cfg, budget, fetch
+    )
+    if got is None:
+        return None
+    first, rank, (ca, cb), (va, vb, jac, ham), (ea, eb) = got
     names = tbl["file_id"].to_numpy()[first]
+    fids = tbl["fid"].to_numpy()[first]
     labels = least_member_labels(names, ea, eb)
 
     def id_pairs(a, b, **cols):
@@ -277,7 +322,6 @@ def _resident_edges(
             **cols,
         })
 
-    spark = signatures.sparkSession
     return (
         spark.createDataFrame(id_pairs(ca, cb), "a_id string, b_id string"),
         spark.createDataFrame(
@@ -299,30 +343,33 @@ def _resident_edges(
 
 
 def _spark_edges(
-    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
-    n_files: int | None, internal: list,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(candidates, verified, edges, clusters) as Spark stages: the
-    scale path, and the resident stage's hand-over.
+    signatures: DataFrame, files: DataFrame | None, cfg: SketchConfig,
+    internal: list, new: Column | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(candidates, verified, edges) as Spark stages: the scale path, and
+    the resident stage's hand-over. ``new`` marks the new rows (a
+    boolean Column; None: every row, the plain run), as the driver
+    kernel's mask does.
 
     The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
-    operators/lsh.py); file_id strings attach once, to final outputs.
-    The cascade picks its own placement by the same budget (signature
-    matrix + candidate pairs + borderline sigs): within it, on the
-    driver; above it, scan-side on executors (operators/verify.py)."""
-    fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
+    operators/lsh.py); file_id strings attach once, to the candidates and
+    verified outputs. The cascade runs scan-side: the edges stage has
+    already declined the budget. ``internal`` receives every persisted
+    frame, the edges included, for the caller to release."""
+    fid_candidates = candidate_pairs_fid(
+        signatures, cfg, persisted=internal, new=new
+    )
     verified_fid = verified_pairs_cascade(
-        fid_candidates, signatures, cfg, files=files, n_files=n_files,
-        attach_ids=False, persisted=internal,
+        fid_candidates, signatures, cfg, files=files, attach_ids=False,
+        persisted=internal,
     ).persist()  # consumed by edges AND exposed as .verified
-    internal.append(verified_fid)
     edges = (
-        exact_dup_edges_fid(signatures)
+        exact_dup_edges_fid(signatures, new)
         .unionByName(verified_fid.select("a_fid", "b_fid"))
         .distinct()
         .persist()  # connected_components probes size + labels
     )
-    clusters = assign_clusters_fid(signatures, edges)
+    internal += [verified_fid, edges]
 
     # public result keeps the string pair contract (lazy attachment)
     candidates = attach_file_ids(fid_candidates, signatures).select(
@@ -335,7 +382,7 @@ def _spark_edges(
         "jaccard",
         "hamming",
     )
-    return candidates, verified, edges, clusters
+    return candidates, verified, edges
 
 
 def containment_pairs(

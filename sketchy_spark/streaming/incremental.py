@@ -23,25 +23,34 @@ already-stored signatures without duplicating rows (the r1 crash-window
 bug: promoting a rewritten sig_all before the edges marker permanently
 double-counted the batch).
 
-Per-batch work follows the verify passes' resident rule
+Every stored key is a fid long (``with_fid``, operators/lsh.py): a
+``sig_batch`` stage carries each file's ``fid`` and ``band_keys``
+(:func:`band_keys_expr`, the one band-hash implementation), both
+computed in its sketch write job, and an ``edges_batch`` stage holds
+``(a_fid, b_fid)`` rows with a_fid < b_fid. A batch runs the plain
+pipeline's own edges stage (pipeline.py) over the stored signatures with
+its new rows marked: new x all candidates under the one hot-band rule
+(each new member of a hot band pairs with the band's pre-batch minimum),
+the cascade, and exact-sha edges from each new row to its sha group's
+pre-batch minimum.
+
+Where the stage runs follows the verify passes' resident rule
 (operators/verify.py): while the accumulated store fits the 30 MB
 ``RESIDENT_BYTES`` budget, judged from the stage manifests' row counts,
-the batch's one Spark job is its sketch write, which also stores each
-file's ``band_keys`` (:func:`band_keys_expr`, the one band-hash
-implementation), and the bytes after it move with Arrow on the driver,
-as the reference re-ranks its in-memory sketch collection on every
-arrival (src/sketchy.rs:81). On the parquet shim (checkpoint.py) that
-means no further Spark job: ``store.read_table`` reads the stored
-signature columns, the driver runs the new x all band join, the
-exact-sha anchors and the cascade's numpy core on them, one filtered
-``read_table`` per stage fetches the borderline files' stored ``sig``,
-the edges stage is written as an Arrow table, compaction is
-``store.concat_stages`` and :meth:`IncrementalDedup.clusters` labels the
-files on the driver. The Iceberg store moves the same tables through its
-session. Above the budget, or when the pair codes or the borderline sigs
-would overflow it, the batch hands over to the same computation as Spark
-stages, with identical rows, and the clusters come from
-:func:`assign_clusters`. Every stage is read back against the Spark
+the batch's one Spark job is its sketch write, and the bytes after it
+move with Arrow on the driver, as the reference re-ranks its in-memory
+sketch collection on every arrival (src/sketchy.rs:81). On the parquet
+shim (checkpoint.py) that means no further Spark job:
+``store.read_table`` reads the stored signature columns for the driver
+kernel (``pipeline._resident_edges``), one filtered ``read_table`` per
+stage fetches the borderline files' stored ``sig``, the edges stage is
+written as an Arrow table, compaction is ``store.concat_stages`` and
+:meth:`IncrementalDedup.clusters` labels the files on the driver. The
+Iceberg store moves the same tables through its session. Above the
+budget, or when the pair codes or the borderline sigs would overflow
+it, the batch hands over to the Spark form (``pipeline._spark_edges``),
+with identical rows, and the clusters come from
+:func:`assign_clusters_fid`. Every stage is read back against the Spark
 schema its manifest recorded, so no read runs a schema-inference job
 (checkpoint.py ``read_stage``).
 
@@ -51,8 +60,6 @@ resumable incremental batches, which is what this is.
 """
 
 from __future__ import annotations
-
-from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -65,43 +72,30 @@ from sketchy_spark.checkpoint import CheckpointStore
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.operators import verify
 from sketchy_spark.operators.cluster import (
-    assign_clusters,
+    assign_clusters_fid,
     least_member_labels,
 )
-from sketchy_spark.operators.lsh import (
-    band_keys_expr,
-    band_table,
-    driver_band_pairs,
-    driver_exact_edges,
-    hot_band_keys,
-    hub_stars,
-)
+from sketchy_spark.operators.lsh import band_keys_expr, with_fid
 from sketchy_spark.operators.sketch import sketch_files
+from sketchy_spark.pipeline import (
+    RESIDENT_COLS,
+    _resident_edges,
+    _resident_row_bytes,
+    _spark_edges,
+)
 
-# Unused here, but perfbench/spans.py wraps this module's name for it.
+# Unused here, but perfbench/spans.py wraps this module's names for them.
+from sketchy_spark.operators.cluster import assign_clusters  # noqa: F401
+from sketchy_spark.operators.lsh import band_table  # noqa: F401
 from sketchy_spark.operators.verify import verified_pairs  # noqa: F401
-
-# Stored signature columns the resident batch reads.
-_RESIDENT_COLS = [
-    "file_id", "sha256", "sig_perm", "simhash", "n_shingles", "band_keys",
-]
-# Driver bytes counted for one file_id string.
-_ID_BYTES = 64
-
-
-def _resident_row_bytes(cfg: SketchConfig) -> int:
-    """Driver bytes per stored file in the resident batch's read:
-    sig_perm (4 B a slot), band keys (8 B a band), simhash, n_shingles
-    and the flag (24 B), the sha256 hex (64 B) and the file_id."""
-    return cfg.num_perm * 4 + 8 * cfg.bands + 24 + 64 + _ID_BYTES
 
 
 def _sig_stage(files: DataFrame, cfg: SketchConfig) -> DataFrame:
     """A batch's ``sig_batch`` stage: the sketch without winnow
     fingerprints, which nothing on the incremental path reads, plus the
-    ``band_keys`` of :func:`band_keys_expr`, computed in the same write
-    job."""
-    return sketch_files(files, cfg, with_fp=False).select(
+    ``fid`` and the ``band_keys`` of :func:`band_keys_expr`, computed in
+    the same write job."""
+    return with_fid(sketch_files(files, cfg, with_fp=False)).select(
         "*", band_keys_expr(cfg).alias("band_keys")
     )
 
@@ -109,222 +103,6 @@ def _sig_stage(files: DataFrame, cfg: SketchConfig) -> DataFrame:
 def _concat(tables: list[pa.Table]) -> pa.Table:
     # stages written by Spark and by Arrow may differ in nullability
     return pa.concat_tables(tables, promote_options="permissive")
-
-
-def _new_vs_all_candidates(
-    new_sigs: DataFrame, prev_sigs: DataFrame | None, cfg: SketchConfig
-) -> DataFrame:
-    """Band join restricted to pairs touching a new file: the incremental
-    form of G1. Work is O(|new| x collision) instead of O(|all|²).
-
-    The batch bands each side once — ``new_bands`` and ``prev_bands``,
-    whose union is the accumulated band table — and collects its hot set
-    (> cap members in the accumulated corpus) in ONE job. An empty hot
-    set, the usual case, leaves a plain cold join: no anti-joins and no
-    hub branch. A non-empty one comes back as a small broadcast table
-    (the ``candidate_pairs_fid`` over-cap fallback's shape), so the
-    joins that consume it never re-plan the band aggregation.
-
-    Hot band keys are excluded from the all-pairs join and handled like
-    the batch path's salted stars (operators/lsh.py): each NEW member of
-    a hot band pairs with the band's hub, so an over-cap near-dup clique
-    keeps absorbing arrivals through its hub instead of silently
-    dropping them — O(|new|) extra candidates.
-
-    The hub MUST come from the pre-batch corpus when the band has prior
-    members: taking min(file_id) over the accumulated bands (old bug)
-    let a new arrival that sorts below all existing members become the
-    hub itself — it then matched the ``file_id != hub`` filter nowhere,
-    got zero edges, and every other new member linked only to it,
-    splitting the clique from its previously-ingested component. With a
-    pre-batch hub every new member (including a new global minimum)
-    links into the existing component; the batch-local minimum is the
-    hub only for bands with no prior members at all.
-    """
-    new_bands = band_table(new_sigs, cfg)
-    prev_bands = band_table(prev_sigs, cfg) if prev_sigs is not None else None
-    all_bands = (
-        prev_bands.unionByName(new_bands)
-        if prev_bands is not None
-        else new_bands
-    )
-    hot_keys = [
-        r["band_key"]
-        for r in hot_band_keys(all_bands, cfg.band_skew_cap).collect()
-    ]
-
-    new_cold, all_cold = new_bands, all_bands
-    if hot_keys:
-        hot = F.broadcast(
-            new_sigs.sparkSession.createDataFrame(
-                [(k,) for k in hot_keys], "band_key long"
-            )
-        )
-        new_cold = new_bands.join(hot, "band_key", "left_anti")
-        all_cold = all_bands.join(hot, "band_key", "left_anti")
-    n = new_cold.select(F.col("file_id").alias("n_id"), "band_key")
-    m = all_cold.select(F.col("file_id").alias("m_id"), "band_key")
-    pairs = (
-        n.join(m, "band_key")
-        .where(F.col("n_id") != F.col("m_id"))
-        .select(
-            F.least("n_id", "m_id").alias("a_id"),
-            F.greatest("n_id", "m_id").alias("b_id"),
-        )
-    )
-    if not hot_keys:
-        return pairs.distinct()
-    batch_hub = (
-        new_bands.join(hot, "band_key", "left_semi")
-        .groupBy("band_key")
-        .agg(F.min("file_id").alias("bhub"))
-    )
-    if prev_bands is not None:
-        prev_hub = (
-            prev_bands.join(hot, "band_key", "left_semi")
-            .groupBy("band_key")
-            .agg(F.min("file_id").alias("phub"))
-        )
-        hubs = batch_hub.join(prev_hub, "band_key", "left").select(
-            "band_key", F.coalesce("phub", "bhub").alias("hub")
-        )
-    else:
-        hubs = batch_hub.select("band_key", F.col("bhub").alias("hub"))
-    hot_star = (
-        new_bands.join(F.broadcast(hubs), "band_key")
-        .where(F.col("file_id") != F.col("hub"))
-        .select(
-            F.least("file_id", "hub").alias("a_id"),
-            F.greatest("file_id", "hub").alias("b_id"),
-        )
-    )
-    return pairs.unionByName(hot_star).distinct()
-
-
-def _incremental_exact_edges(
-    new_sigs: DataFrame, prev_sigs: DataFrame | None
-) -> DataFrame:
-    """Sha-identical edges touching the new batch only, O(|new|) output.
-
-    Each new file links to its sha-group's anchor: the group minimum of
-    the PREVIOUS corpus when the sha was already seen (keeps the new
-    member connected to the existing component), else the batch-local
-    minimum. Connectivity is what connected components needs — the edge
-    sets differ from the single-shot run, the clusters do not.
-    """
-    batch_min = new_sigs.groupBy("sha256").agg(
-        F.min("file_id").alias("bhub")
-    )
-    if prev_sigs is not None:
-        prev_min = prev_sigs.groupBy("sha256").agg(
-            F.min("file_id").alias("phub")
-        )
-        anchors = batch_min.join(prev_min, "sha256", "left").select(
-            "sha256", F.coalesce("phub", "bhub").alias("hub")
-        )
-    else:
-        anchors = batch_min.select("sha256", F.col("bhub").alias("hub"))
-    return (
-        new_sigs.select("sha256", "file_id")
-        .join(anchors, "sha256")
-        .where(F.col("file_id") != F.col("hub"))
-        .select(F.col("hub").alias("a_id"), F.col("file_id").alias("b_id"))
-    )
-
-
-class _Collected(NamedTuple):
-    """The resident batch's stored rows, with their file ranks."""
-
-    tbl: pa.Table
-    ids: np.ndarray     # distinct file_ids in string order
-    first: np.ndarray   # each id's first row
-    rank: np.ndarray    # each row's index into ids: rank order is id order
-    is_new: np.ndarray  # each row's batch flag
-
-
-def _resident_collect(prev: list[pa.Table], new: pa.Table) -> _Collected:
-    """The rows of the previous stages' tables, then the new stage's
-    (each with :data:`_RESIDENT_COLS`), flagged and ranked by file_id."""
-    tbl = _concat([*prev, new])
-    ids, first, rank = np.unique(
-        tbl["file_id"].to_numpy(), return_index=True, return_inverse=True
-    )
-    is_new = np.arange(tbl.num_rows) >= tbl.num_rows - new.num_rows
-    return _Collected(tbl, ids, first, rank, is_new)
-
-
-def _driver_candidates(
-    c: _Collected, cfg: SketchConfig, budget: int
-) -> tuple[np.ndarray, np.ndarray, int] | None:
-    """:func:`_new_vs_all_candidates` on the driver -> (a, b, budget
-    left): rank pairs with a < b, the same set under the same hot-key and
-    hub rule (:func:`~sketchy_spark.operators.lsh.driver_band_pairs` over
-    the new rows, with :func:`~sketchy_spark.operators.lsh.hub_stars`).
-    Returns None when the pair codes, 8 B each, exceed ``budget``."""
-    return driver_band_pairs(
-        c.tbl["band_keys"], c.rank, cfg, budget,
-        hub_stars(c.rank, c.is_new), new=c.is_new,
-    )
-
-
-def _resident_batch_edges(
-    store, stages: list[str], cfg: SketchConfig, budget: int
-) -> pa.Table | None:
-    """The batch's edges stage computed on the driver, as an Arrow table:
-    the rows the hand-over path writes (:func:`_new_vs_all_candidates`
-    verified by :func:`verified_pairs_cascade`, plus
-    :func:`_incremental_exact_edges`), from the signature ``stages``,
-    the new batch's last. The cascade's borderline files get their
-    stored ``sig`` from one filtered ``read_table`` per stage; nothing
-    is re-sketched.
-
-    ``budget``: driver bytes left after the read. Returns None, for the
-    caller to hand over to the Spark path, when the pair codes or the
-    borderline sigs (8 * s B per file) would overflow it."""
-    c = _resident_collect(
-        [store.read_table(s, _RESIDENT_COLS) for s in stages[:-1]],
-        store.read_table(stages[-1], _RESIDENT_COLS),
-    )
-    got = _driver_candidates(c, cfg, budget)
-    if got is None:
-        return None
-    a, b, budget = got
-    n = c.ids.size
-    verified = a * n + b
-    if a.size:
-
-        def fetch(pos: np.ndarray) -> dict:
-            wanted = ds.field("file_id").isin(
-                pa.array(c.ids[pos], pa.string())
-            )
-            got = _concat([
-                store.read_table(s, ["file_id", "sig"], filter=wanted)
-                for s in stages
-            ])
-            return dict(zip(
-                np.searchsorted(c.ids, got["file_id"].to_numpy()),
-                got["sig"].to_numpy(),
-            ))
-
-        kept = verify._cascade_core(
-            verify._sig_perm_matrix(c.tbl, cfg)[c.first],
-            c.tbl["simhash"].to_numpy()[c.first],
-            c.tbl["n_shingles"].to_numpy()[c.first],
-            a, b, cfg, verify.CASCADE_MARGIN, budget, fetch,
-        )
-        if kept is None:
-            return None
-        verified = verified[kept[0]]
-    hub, member = driver_exact_edges(
-        c.tbl["sha256"].to_numpy(), c.rank, c.is_new
-    )
-    ea, eb = np.divmod(
-        np.unique(np.concatenate([verified, hub * n + member])), n
-    )
-    return pa.table({
-        "a_id": pa.array(c.ids[ea], pa.string()),
-        "b_id": pa.array(c.ids[eb], pa.string()),
-    })
 
 
 def _stage_id(stage: str) -> int:
@@ -432,7 +210,8 @@ class IncrementalDedup:
         return self._union(self.view_stages("sig", before))
 
     def edges(self) -> DataFrame | None:
-        """Distinct verified + exact edges across every ingested batch.
+        """Distinct verified + exact ``(a_fid, b_fid)`` edges across every
+        ingested batch.
 
         The distinct is load-bearing for EXTERNAL consumers (ADVICE r4):
         a batch retried after a LATER batch already landed re-emits the
@@ -441,7 +220,7 @@ class IncrementalDedup:
         duplicate pairs. Connected components is insensitive to them
         (it deduplicates its symmetrized edge table anyway — see
         _distributed_components / union-find), which is why
-        :meth:`clusters` and the ingest pairing read the raw stages;
+        :meth:`clusters` reads the raw stages;
         the public view pays one edge-sized shuffle for set semantics.
         """
         raw = self._union(self.view_stages("edges"))
@@ -539,29 +318,26 @@ class IncrementalDedup:
 
     # -- ingest ----------------------------------------------------------
     def ingest_batch(self, batch_id: int, files: DataFrame) -> None:
-        """Sketch one arriving batch, then band-join, verify and anchor
-        it against the store, and write its edges stage.
+        """Sketch one arriving batch, then run the pipeline's edges stage
+        over the store with the batch's rows marked new, and write its
+        edges stage.
 
         Where the edges are computed follows the verify passes' rule
         (``operators.verify.RESIDENT_BYTES``, 30 MB), decided from the
         stage manifests' row counts:
 
         - Resident, while the stored rows fit at
-          :func:`_resident_row_bytes` each (sig_perm, band keys, simhash,
-          n_shingles, sha256 and file_id; ~0.9 KB at the defaults): the
-          sketch write is the batch's one Spark job.
-          :func:`_resident_batch_edges` reads the previous and new
-          signature stages with ``store.read_table`` and runs the new x
-          all band join, the exact-sha anchors and the cascade on the
-          driver, fetching the borderline files' stored ``sig`` with one
-          filtered ``read_table`` per stage, and the edges stage is
-          written as an Arrow table.
+          ``pipeline._resident_row_bytes`` each (~0.93 KB at the
+          defaults): the sketch write is the batch's one Spark job.
+          ``store.read_table`` reads the previous and new signature
+          stages for ``pipeline._resident_edges``, which fetches the
+          borderline files' stored ``sig`` with one filtered
+          ``read_table`` per stage, and the edges stage is written as an
+          Arrow table.
         - Hand-over, above the budget or when the pair codes (8 B each)
           or the borderline sigs (8 * s B per file) would overflow what
-          the read left: :func:`_new_vs_all_candidates`,
-          :func:`verified_pairs_cascade` scan-side and
-          :func:`_incremental_exact_edges` as Spark stages over the
-          stored signature frames. Both paths write identical rows.
+          the read left: ``pipeline._spark_edges`` over the stored
+          signature frames. Both paths write identical rows.
 
         Idempotent: the batch's edges stage is the single completion
         marker; a finished batch returns immediately, a half-finished one
@@ -584,36 +360,44 @@ class IncrementalDedup:
         # sig stage is excluded by name; it can never hide inside a
         # compact here because compaction folds only terminal-marked
         # (edges-complete) batches and this batch's edges marker does
-        # not exist yet.
-        prev_stages = [
+        # not exist yet. The new stage goes last.
+        stages = [
             s for s in self.view_stages("sig") if s != stage_sig
-        ]
-        n_rows = sum(
-            self.store.manifest(s)["rows"] for s in prev_stages + [stage_sig]
-        )
+        ] + [stage_sig]
+        n_rows = sum(self.store.manifest(s)["rows"] for s in stages)
         budget = verify.RESIDENT_BYTES - n_rows * _resident_row_bytes(
             self.cfg
         )
         edges = None
         if budget > 0:
-            edges = _resident_batch_edges(
-                self.store, prev_stages + [stage_sig], self.cfg, budget
+            tbl = _concat(
+                [self.store.read_table(s, RESIDENT_COLS) for s in stages]
             )
+            n_new = self.store.manifest(stage_sig)["rows"]
+            is_new = np.arange(tbl.num_rows) >= tbl.num_rows - n_new
+
+            def fetch(fids: np.ndarray) -> pa.Table:
+                wanted = ds.field("fid").isin(pa.array(fids, pa.int64()))
+                return _concat([
+                    self.store.read_table(s, ["fid", "sig"], filter=wanted)
+                    for s in stages
+                ])
+
+            got = _resident_edges(tbl, is_new, self.cfg, budget, fetch)
+            if got is not None:
+                first, _, _, _, (a, b) = got
+                fids = tbl["fid"].to_numpy()[first]
+                edges = pa.table({"a_fid": fids[a], "b_fid": fids[b]})
         held: list[DataFrame] = []
         if edges is None:
-            new_sigs = self._union([stage_sig])
-            prev_sigs = self._union(prev_stages)
-            all_sigs = (
-                prev_sigs.unionByName(new_sigs, allowMissingColumns=True)
-                if prev_sigs is not None
-                else new_sigs
+            sigs = self._union([stage_sig]).withColumn("is_new", F.lit(True))
+            if len(stages) > 1:
+                sigs = self._union(stages[:-1]).withColumn(
+                    "is_new", F.lit(False)
+                ).unionByName(sigs, allowMissingColumns=True)
+            _, _, edges = _spark_edges(
+                sigs, None, self.cfg, held, new=F.col("is_new")
             )
-            cand = _new_vs_all_candidates(new_sigs, prev_sigs, self.cfg)
-            ver = verify.verified_pairs_cascade(
-                cand, all_sigs, self.cfg, resident=False, persisted=held
-            ).select("a_id", "b_id")
-            exact = _incremental_exact_edges(new_sigs, prev_sigs)
-            edges = ver.unionByName(exact).distinct()
         self.store.write_stage(stage_edge, edges)
         for df in held:  # the stage is written; the caches served it
             df.unpersist()
@@ -628,42 +412,45 @@ class IncrementalDedup:
         """(file_id, cluster_id) for every stored signature row, each
         label its component's least file_id (operators/cluster.py).
 
-        While the file_ids and edge endpoints fit
+        While the fid and file_id of every row and the edge ends fit
         ``verify.RESIDENT_BYTES``, counted from the manifests, the store's
         tables are read with ``read_table`` and labeled on the driver by
         :func:`least_member_labels`, and the result is a local frame.
-        Above it, :func:`assign_clusters` runs over the raw stage union,
-        not the public :meth:`edges` view: CC dedupes its own edge table,
-        so the view's distinct shuffle would be paid twice. Its edge
-        count is the manifest sum, an upper bound under cross-stage
-        retry duplicates, which can only shift the strategy cutoff
-        toward the distributed (always-correct) path."""
+        Above it, :func:`assign_clusters_fid` runs over the raw stage
+        union, not the public :meth:`edges` view: CC dedupes its own edge
+        table, so the view's distinct shuffle would be paid twice. Its
+        edge count is the manifest sum, an upper bound under cross-stage
+        retry duplicates, which can only shift the strategy cutoff toward
+        the distributed (always-correct) path."""
         sig_stages = self.view_stages("sig")
         if not sig_stages:
             raise ValueError("no ingested batches")
         edge_stages = self.view_stages("edges")
         n_edges = self.n_edges()
         n_rows = sum(self.store.manifest(s)["rows"] for s in sig_stages)
-        if (n_rows + 2 * n_edges) * _ID_BYTES > verify.RESIDENT_BYTES:
-            return assign_clusters(
+        # fid (8 B) and file_id (64 B) a row, two fids an edge
+        if n_rows * 72 + n_edges * 16 > verify.RESIDENT_BYTES:
+            return assign_clusters_fid(
                 self._union(sig_stages), self._union(edge_stages),
                 n_edges=n_edges,
             )
-        names = _concat(
-            [self.store.read_table(s, ["file_id"]) for s in sig_stages]
-        )["file_id"].to_numpy()
-        ends = [names]
+        rows = _concat(
+            [self.store.read_table(s, ["fid", "file_id"]) for s in sig_stages]
+        )
+        fids, first, rank = np.unique(
+            rows["fid"].to_numpy(), return_index=True, return_inverse=True
+        )
+        names = rows["file_id"].to_numpy()
+        a = b = np.empty(0, dtype=np.int64)
         if edge_stages:
             e = _concat([
-                self.store.read_table(s, ["a_id", "b_id"])
+                self.store.read_table(s, ["a_fid", "b_fid"])
                 for s in edge_stages
             ])
-            ends += [e["a_id"].to_numpy(), e["b_id"].to_numpy()]
-        ids, vertex = np.unique(np.concatenate(ends), return_inverse=True)
-        n = names.size
-        m = (vertex.size - n) // 2
-        labels = least_member_labels(ids, vertex[n:n + m], vertex[n + m:])
+            a = np.searchsorted(fids, e["a_fid"].to_numpy())
+            b = np.searchsorted(fids, e["b_fid"].to_numpy())
+        labels = least_member_labels(names[first], a, b)
         return self.spark.createDataFrame(
-            pd.DataFrame({"file_id": names, "cluster_id": labels[vertex[:n]]}),
+            pd.DataFrame({"file_id": names, "cluster_id": labels[rank]}),
             "file_id string, cluster_id string",
         )

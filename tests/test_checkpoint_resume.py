@@ -11,6 +11,10 @@ from sketchy_spark.streaming.incremental import IncrementalDedup
 
 CFG = SketchConfig()
 N = 600
+# A clique member name whose fid (xxhash64 of "org/clique/src/a129.py") is
+# below the fid of every member named m10..m29: arriving later, it is the
+# new minimum of the clique's hot bands.
+_NEW_MIN = "a129"
 
 
 def _pairs(clusters_df):
@@ -174,6 +178,67 @@ def test_one_label_across_runs(spark, tmp_path, monkeypatch):
     files.unpersist()
 
 
+def test_hot_band_rule_one_label_across_runs(spark, tmp_path, monkeypatch):
+    """One hot-band rule on every path: at ``band_skew_cap=8`` the
+    planted corpus plus a 20-member over-cap near-dup clique arrives in
+    3 batches, the last holding a member whose fid is below every earlier
+    member's (a new minimum of the clique's hot bands). The plain driver
+    run, the plain Spark run (``RESIDENT_BYTES`` = 0), and the resident
+    and hand-over incremental runs give identical sorted ``(file_id,
+    cluster_id)`` rows, with the clique in one cluster."""
+    import pandas as pd
+
+    from sketchy_spark.corpus import corpus_pandas
+    from sketchy_spark.operators import verify as V
+
+    cfg = SketchConfig(band_skew_cap=8)
+    corpus = corpus_pandas(N)[["repo", "path", "commit", "lang", "content"]]
+    names = [f"m{i}" for i in range(10, 29)] + [_NEW_MIN]
+    clique = _clique(names)
+    batches = [
+        pd.concat([corpus.iloc[0::3], clique.iloc[:12]]),
+        pd.concat([corpus.iloc[1::3], clique.iloc[12:16]]),
+        pd.concat([corpus.iloc[2::3], clique.iloc[16:]]),
+    ]
+    files = spark.createDataFrame(pd.concat(batches, ignore_index=True))
+    files = files.cache()
+    fid = dict(
+        files.select(
+            F.concat_ws("/", "repo", "path").alias("file_id")
+        ).select("file_id", F.xxhash64("file_id")).collect()
+    )
+    ids = [f"org/clique/src/{m}.py" for m in names]
+    assert fid[ids[-1]] < min(fid[i] for i in ids[:-1])
+
+    def plain():
+        r = run_pipeline(files, cfg, with_containment=False)
+        got = sorted(tuple(x) for x in r.clusters.collect())
+        r.unpersist()
+        return got
+
+    def incremental(name):
+        store = CheckpointStore(str(tmp_path / name), cfg.config_hash)
+        inc = IncrementalDedup(spark, store, cfg)
+        for b, pdf in enumerate(batches):
+            inc.ingest_batch(b, spark.createDataFrame(pdf))
+        return sorted(tuple(x) for x in inc.clusters().collect())
+
+    runs = {
+        "plain driver": plain(), "incremental resident": incremental("res")
+    }
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", 0)
+        runs["plain spark"] = plain()
+        runs["incremental hand-over"] = incremental("handover")
+    want = runs["plain driver"]
+    assert len(want) == N + len(names)
+    for name, got in runs.items():
+        assert got == want, name
+    labels = dict(want)
+    assert len({labels[i] for i in ids}) == 1
+    files.unpersist()
+
+
 @pytest.mark.parametrize("resident", [True, False])
 def test_incremental_resumes_store_with_fingerprint_stages(
     spark, tmp_path, monkeypatch, resident
@@ -259,9 +324,9 @@ def test_incremental_crash_window_idempotent(spark, tmp_path):
 def test_incremental_hot_band_arrivals_stay_connected(spark, tmp_path):
     """A near-dup clique larger than band_skew_cap keeps absorbing NEW
     arrivals: hot band keys are excluded from the incremental all-pairs
-    join, so without the hub-star fallback a new member of an over-cap
-    clique would be silently dropped (mirror of the batch path's salted
-    stars, operators/lsh.py)."""
+    join, so without the hub-star rule a new member of an over-cap
+    clique would be silently dropped (the one hot-band rule of
+    operators/lsh.py)."""
     import pandas as pd
 
     base = "\n".join(
@@ -296,11 +361,11 @@ def test_incremental_hot_band_arrivals_stay_connected(spark, tmp_path):
 
 
 def test_incremental_hot_band_new_global_min_stays_connected(spark, tmp_path):
-    """ADVICE r2 (high): a NEW arrival that sorts lexicographically before
-    every previously-ingested member of an over-cap (hot-band) clique must
-    still connect to the existing component. The old hub choice —
-    min(file_id) over the ACCUMULATED bands — made such an arrival the hub
-    itself: it matched the ``file_id != hub`` star filter nowhere (zero
+    """ADVICE r2 (high): a NEW arrival whose fid is below every
+    previously-ingested member's in an over-cap (hot-band) clique must
+    still connect to the existing component. The old hub choice — the
+    minimum over the ACCUMULATED bands — made such an arrival the hub
+    itself: it matched the ``fid != hub`` star filter nowhere (zero
     edges, silently dropped) and the rest of its batch linked only to it,
     splitting the clique from the prior component. Hubs now come from the
     pre-batch corpus."""
@@ -329,9 +394,9 @@ def test_incremental_hot_band_new_global_min_stays_connected(spark, tmp_path):
     inc = IncrementalDedup(spark, store, cfg)
     # batch 0: 20 members named m10..m29 -> every clique band key is hot
     inc.ingest_batch(0, df(rows([f"m{i}" for i in range(10, 30)])))
-    # batch 1: arrivals a0..a2 sort BEFORE every existing member; a0 is
-    # the new global minimum of every hot band
-    inc.ingest_batch(1, df(rows(["a0", "a1", "a2"])))
+    # batch 1: arrival a129's fid is below every existing member's, so
+    # it is the new global minimum of every hot band
+    inc.ingest_batch(1, df(rows([_NEW_MIN, "a1", "a2"])))
     clusters = inc.clusters().toPandas()
     clique = clusters[clusters.file_id.str.startswith("org/clique")]
     assert len(clique) == 23
@@ -515,7 +580,7 @@ def test_edges_view_distinct_and_manifest_n_edges(spark, tmp_path):
     recorded row counts driver-side — an upper bound, no Spark action."""
     store = CheckpointStore(str(tmp_path / "ckpt"), CFG.config_hash)
     inc = IncrementalDedup(spark, store, CFG)
-    pair = spark.createDataFrame([("a", "b")], "a_id string, b_id string")
+    pair = spark.createDataFrame([(1, 2)], "a_fid long, b_fid long")
     store.write_stage("edges_batch_00001", pair)
     store.write_stage("edges_batch_00002", pair)  # retry-style duplicate
     assert inc.edges().count() == 1  # public view: set semantics
@@ -654,9 +719,9 @@ def _clique(names):
 
 def _band_truth(new_bands, prev_bands, cap):
     """Pandas truth for the incremental candidate set, from collected
-    (file_id, band_key) band tables: all pairs over cold keys that touch
-    a new file, plus new member -> hub edges on hot keys (hub = the
-    prior-corpus minimum, else the batch minimum)."""
+    (fid, band_key) band tables: all pairs over cold keys that touch a
+    new file, plus new member -> hub edges on hot keys (hub = the
+    prior-corpus minimum fid, else the batch minimum)."""
     import pandas as pd
 
     every = pd.concat([prev_bands, new_bands])
@@ -665,15 +730,15 @@ def _band_truth(new_bands, prev_bands, cap):
     want = set()
     cold_new = new_bands[~new_bands.band_key.isin(hot)]
     cold_all = every[~every.band_key.isin(hot)]
-    members = cold_all.groupby("band_key").file_id.apply(set)
-    for n_id, key in zip(cold_new.file_id, cold_new.band_key):
+    members = cold_all.groupby("band_key").fid.apply(set)
+    for n_id, key in zip(cold_new.fid, cold_new.band_key):
         for m_id in members[key]:
             if m_id != n_id:
                 want.add((min(n_id, m_id), max(n_id, m_id)))
-    prev_min = prev_bands.groupby("band_key").file_id.min()
-    new_min = new_bands.groupby("band_key").file_id.min()
+    prev_min = prev_bands.groupby("band_key").fid.min()
+    new_min = new_bands.groupby("band_key").fid.min()
     hot_new = new_bands[new_bands.band_key.isin(hot)]
-    for f_id, key in zip(hot_new.file_id, hot_new.band_key):
+    for f_id, key in zip(hot_new.fid, hot_new.band_key):
         hub = prev_min.get(key, new_min[key])
         if f_id != hub:
             want.add((min(f_id, hub), max(f_id, hub)))
@@ -681,64 +746,88 @@ def _band_truth(new_bands, prev_bands, cap):
 
 
 def _stage_table(sigs, cfg):
-    """The columns the resident batch reads from a stored sig stage."""
+    """The columns the resident edges stage reads from a stored sig
+    stage, from a fid-keyed sketch frame."""
     from sketchy_spark.operators.lsh import band_keys_expr
-    from sketchy_spark.streaming.incremental import _RESIDENT_COLS
+    from sketchy_spark.pipeline import RESIDENT_COLS
 
     return sigs.select(
         "*", band_keys_expr(cfg).alias("band_keys")
-    ).select(*_RESIDENT_COLS).toArrow()
+    ).select(*RESIDENT_COLS).toArrow()
 
 
 def test_new_vs_all_candidates_match_band_truth(spark):
-    """The incremental candidate set, from the Spark band join and from
-    the driver's, equals a pandas truth built from the collected band
-    tables, with hot keys present (cap 8, a new arrival that is the
-    global minimum of every hot band) and with an empty hot set (default
-    cap), whose Spark plan joins no hot-key frame."""
+    """The incremental candidate set, from the Spark band join
+    (``candidate_pairs_fid`` with the new-rows mask, eager and lazy) and
+    from the driver's (``driver_band_pairs`` over the stored columns),
+    equals a pandas truth built from the collected band tables, with hot
+    keys present (cap 8, a new arrival whose fid is the minimum of every
+    hot band) and with an empty hot set (default cap), whose eager Spark
+    plan has no hub branch."""
+    import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from sketchy_spark.corpus import corpus_pandas
-    from sketchy_spark.operators.lsh import band_table
+    from sketchy_spark.operators.lsh import (
+        band_table,
+        candidate_pairs_fid,
+        driver_band_pairs,
+        with_fid,
+    )
     from sketchy_spark.operators.sketch import sketch_files
     from sketchy_spark.operators.verify import RESIDENT_BYTES
     from sketchy_spark.plans.explain import physical_plan
-    from sketchy_spark.streaming.incremental import (
-        _driver_candidates,
-        _new_vs_all_candidates,
-        _resident_collect,
-    )
 
     corpus = corpus_pandas(160)[["repo", "path", "commit", "lang", "content"]]
     prev_pdf = pd.concat(
         [corpus.iloc[::2], _clique([f"m{i}" for i in range(10, 30)])]
     )
-    new_pdf = pd.concat([corpus.iloc[1::2], _clique(["a0", "a1", "a2"])])
+    new_pdf = pd.concat(
+        [corpus.iloc[1::2], _clique([_NEW_MIN, "a1", "a2"])]
+    )
 
     for cap, expect_hot in ((8, True), (CFG.band_skew_cap, False)):
         cfg = SketchConfig(band_skew_cap=cap)
-        prev = sketch_files(spark.createDataFrame(prev_pdf), cfg).cache()
-        new = sketch_files(spark.createDataFrame(new_pdf), cfg).cache()
+        prev, new = (
+            with_fid(sketch_files(spark.createDataFrame(pdf), cfg)).cache()
+            for pdf in (prev_pdf, new_pdf)
+        )
         want, hot = _band_truth(
-            band_table(new, cfg).toPandas(),
-            band_table(prev, cfg).toPandas(),
+            band_table(new, cfg, id_col="fid").toPandas(),
+            band_table(prev, cfg, id_col="fid").toPandas(),
             cap,
         )
         assert bool(hot) == expect_hot
-        cand = _new_vs_all_candidates(new, prev, cfg)
-        got = {(r["a_id"], r["b_id"]) for r in cand.collect()}
-        assert got == want
-        collected = _resident_collect(
-            [_stage_table(prev, cfg)], _stage_table(new, cfg)
+        sigs = prev.withColumn("is_new", F.lit(False)).unionByName(
+            new.withColumn("is_new", F.lit(True))
         )
-        a, b, _ = _driver_candidates(collected, cfg, RESIDENT_BYTES)
-        ids = collected.ids
-        assert set(zip(ids[a], ids[b])) == want
-        plan = physical_plan(cand)
-        hot_joins = "LeftAnti" in plan or "LeftSemi" in plan
-        assert hot_joins == expect_hot, plan
+        internal = []
+        cand = candidate_pairs_fid(
+            sigs, cfg, persisted=internal, new=F.col("is_new")
+        )
+        got = {(r.a_fid, r.b_fid) for r in cand.collect()}
+        assert got == want
+        lazy = candidate_pairs_fid(sigs, cfg, new=F.col("is_new"))
+        assert {(r.a_fid, r.b_fid) for r in lazy.collect()} == want
+
+        prev_tbl = _stage_table(prev, cfg)
+        tbl = pa.concat_tables([prev_tbl, _stage_table(new, cfg)])
+        fids, rank = np.unique(tbl["fid"].to_numpy(), return_inverse=True)
+        a, b, _ = driver_band_pairs(
+            tbl["band_keys"], rank, cfg, RESIDENT_BYTES,
+            np.arange(tbl.num_rows) >= prev_tbl.num_rows,
+        )
+        assert set(zip(fids[a], fids[b])) == want
+
+        assert ("hub#" in physical_plan(cand)) == expect_hot
         if expect_hot:
-            assert ("org/clique/src/a0.py", "org/clique/src/m10.py") in got
+            fid = dict(sigs.select("file_id", "fid").collect())
+            hub = min(fid[f"org/clique/src/m{i}.py"] for i in range(10, 30))
+            new_min = fid[f"org/clique/src/{_NEW_MIN}.py"]
+            assert new_min < hub and (new_min, hub) in got
+        for df in internal:
+            df.unpersist()
         prev.unpersist()
         new.unpersist()
 
@@ -749,9 +838,9 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
     path (``RESIDENT_BYTES`` = 0) for every batch, and the same clusters.
     The planted corpus arrives in 3 interleaved batches with
     ``compact_every=2``, beside an over-cap clique (cap 8) whose later
-    arrivals include a new global minimum of its hot bands, so hot-band
-    hubs with prior members decide star edges that verify. The resident
-    edges stage is an Arrow table written on the driver."""
+    arrivals include a new global minimum of its hot bands (by fid), so
+    hot-band hubs with prior members decide star edges that verify. The
+    resident edges stage is an Arrow table written on the driver."""
     import pandas as pd
     import pyarrow as pa
 
@@ -760,7 +849,9 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
     from sketchy_spark.plans.explain import physical_plan
 
     corpus = corpus_pandas(N)[["repo", "path", "commit", "lang", "content"]]
-    clique = _clique([f"m{i}" for i in range(10, 30)] + ["a1", "a0"])
+    clique = _clique(
+        [f"m{i}" for i in range(10, 30)] + ["a1", "a0", _NEW_MIN]
+    )
     batches = [
         pd.concat([corpus.iloc[0::3], clique.iloc[:20]]),
         pd.concat([corpus.iloc[1::3], clique.iloc[20:21]]),

@@ -204,12 +204,16 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
     """The plain pipeline's resident stage (one Arrow collect: band join,
     exact-sha edges, cascade, union-find) gives the same clusters,
     candidates, verified and edges rows as its Spark stages
-    (``RESIDENT_BYTES`` = 0). The corpus is the planted corpus plus an
-    over-cap near-dup clique at cap 8 (20 members, salt fan-out 3), two
-    empty files, which have no shingles, so their only link is the
-    exact-sha edge, and singletons. The resident run's only Python
-    stages are the sketch and the borderline re-sketch, and its frames
-    are local."""
+    (``RESIDENT_BYTES`` = 0), and as a run whose borderline sigs overflow
+    what the collect and the pair codes left, which hands over to the
+    Spark stages. The corpus is the planted corpus plus an over-cap
+    near-dup clique at cap 8 (20 members), two empty files, which have
+    no shingles, so their only link is the exact-sha edge, six small
+    documents (fewer shingles than signature slots), which verify
+    through the cascade's exact stage, and singletons; its candidates
+    cover every stage-1 branch. The resident run's only Python stages
+    are the sketch and the borderline re-sketch, and its frames are
+    local."""
     import numpy as np
     import pandas as pd
 
@@ -226,7 +230,9 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
          for m in range(20)]
         + [("org/tiny", f"t{i}.py", "c", "py", "") for i in range(2)]
         + [("org/solo", f"s{i}.py", "c", "py", rng.bytes(900).hex())
-           for i in range(3)],
+           for i in range(3)]
+        + [("org/small", f"s{i}.py", "c", "py",
+            "alpha = beta(1)\n" * 2 + f"gamma = {i % 2}") for i in range(6)],
         columns=cols,
     )
     pdf = pd.concat([corpus_pandas(600)[cols], extra], ignore_index=True)
@@ -245,11 +251,49 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return res, rows
 
-    res, resident = run("resident-edges")
+    sig_budgets = []
+    core = V._cascade_core
+
+    def cascade_core(*args):  # records (bytes left for sigs, handed over)
+        got = core(*args)
+        sig_budgets.append((args[7], got is None))
+        return got
+
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "_cascade_core", cascade_core)
+        res, resident = run("resident-edges")
     with monkeypatch.context() as mp:
         mp.setattr(V, "RESIDENT_BYTES", 0)
         handed_res, handed = run("handed-over-edges")
     assert resident == handed
+    # the rows and the pair codes fit, the borderline sigs do not
+    (left, over), = sig_budgets
+    assert not over
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", V.RESIDENT_BYTES - left + 1)
+        mp.setattr(V, "_cascade_core", cascade_core)
+        overflow_res, overflow = run("borderline-overflow")
+    assert sig_budgets[1:] == [(1, True)]
+    assert overflow == resident
+    overflow_res.unpersist()
+
+    # every stage-1 branch: accepted, borderline and small-doc pairs
+    sig = res.signatures.select(
+        "file_id", "sig_perm", "simhash", "n_shingles"
+    ).toPandas().set_index("file_id")
+    a = sig.loc[[p[0] for p in resident["candidates"]]]
+    b = sig.loc[[p[1] for p in resident["candidates"]]]
+    est, _, small = V._slot_estimates(
+        np.vstack(a["sig_perm"]), np.vstack(b["sig_perm"]),
+        a["simhash"], b["simhash"], a["n_shingles"], b["n_shingles"],
+        cfg.num_perm,
+    )
+    tau, margin = cfg.jaccard_threshold, V.CASCADE_MARGIN
+    assert (~small & (est >= tau + margin)).any()
+    assert (~small & (est >= tau - margin) & (est < tau + margin)).any()
+    verified = {r[:2] for r in resident["verified"]}
+    assert ("org/small/s0.py", "org/small/s1.py") in verified
+    assert ("org/small/s0.py", "org/small/s2.py") in verified
 
     bands = band_table(res.signatures, cfg, id_col="fid")
     assert hot_band_keys(bands, cfg.band_skew_cap).count() > 0

@@ -81,17 +81,17 @@ def test_signature_pipeline_plan_properties(spark):
     # the candidate stage's claim: every heavy shuffle moves 16-byte fid
     # keys, never file_id strings; strings attach only via broadcast
     # joins after the distinct. Hash-exchange budget for the fid path:
-    # hot-key count groupBy + cold groupBy + hot salt groupBy + hub
-    # groupBy + pair distinct = 5 (of which only count/cold/distinct
-    # carry full-size data; the hot ones see the boilerplate subset).
+    # hot-key count groupBy + cold groupBy + hub groupBy + pair distinct
+    # = 4 (of which only count/cold/distinct carry full-size data; the
+    # hub groupBy sees the boilerplate subset).
     fid_plan = physical_plan(candidate_pairs_fid(sigs, CFG)).split(
         "== Initial Plan =="
     )[0]
     # Textual plans print shared broadcast subtrees once per consumer
     # (ReuseExchange dedupes at runtime), so count UNIQUE partitioning
-    # signatures: band groupBys (band_key), salted hot-key groupBy
-    # (band_key, salt), pair distinct (a_fid, b_fid) -> <= 4 distinct
-    # shuffle keys, all fid/long — file_id strings never cross a shuffle.
+    # signatures: band groupBys (band_key), pair distinct (a_fid, b_fid)
+    # -> <= 4 distinct shuffle keys, all fid/long — file_id strings never
+    # cross a shuffle.
     import re
 
     sigs_seen = set()
@@ -99,8 +99,8 @@ def test_signature_pipeline_plan_properties(spark):
         assert "file_id" not in m.group(1), m.group(0)
         sigs_seen.add(re.sub(r"#\d+", "", m.group(1)))
     assert len(sigs_seen) <= 4, sigs_seen
-    # band-key salting is present for over-cap keys (north-star wording)
-    assert "smin" in fid_plan and "salt" in fid_plan
+    # over-cap keys take the hub-star branch
+    assert "hub" in fid_plan
     # public string form adds only the attach joins + normalize distinct
     final_plan = physical_plan(cand).split("== Initial Plan ==")[0]
     n_exchanges = final_plan.count("Exchange hashpartitioning")

@@ -74,11 +74,11 @@ def test_arrow_and_sql_verify_agree(spark):
     assert len(arrow) > 0
 
 
-def test_overcap_neardup_group_salted_recall(spark):
+def test_overcap_neardup_group_hub_star_recall(spark):
     """A near-dup clique LARGER than band_skew_cap must still land in one
-    cluster: over-cap band keys emit salted star edges (member -> salt-min
-    -> hub) instead of being dropped, so recall cannot silently fall when
-    a true duplicate group exceeds the cap (VERDICT r1 #3)."""
+    cluster: over-cap band keys emit hub-star edges (member -> the band's
+    minimum fid) instead of being dropped, so recall cannot silently fall
+    when a true duplicate group exceeds the cap (VERDICT r1 #3)."""
     import pandas as pd
 
     from sketchy_spark.operators.cluster import assign_clusters
@@ -108,9 +108,8 @@ def test_overcap_neardup_group_salted_recall(spark):
     )
     cfg = SketchConfig(band_skew_cap=8)
     sigs = sketch_files(files, cfg).cache()
-    n = sigs.count()
     cand = candidate_pairs_fid(sigs, cfg)
-    verified = verified_pairs_cascade(cand, sigs, cfg, n_files=n)
+    verified = verified_pairs_cascade(cand, sigs, cfg)
     clusters = assign_clusters(
         sigs, verified.select("a_id", "b_id")
     ).toPandas()
@@ -126,7 +125,7 @@ def test_overcap_fallback_broadcast_hot_classification(spark, monkeypatch):
     over-cap band keys exceeds HOT_LITERAL_MAX, the eager path must
     switch from literal create_map/isin inlining (plan-size bomb at
     ~10^5+ hot keys) to a broadcast-join hot classification — with the
-    salted-star recall guarantee intact. Forced here by dropping the
+    hub-star recall guarantee intact. Forced here by dropping the
     bound to 0 so every hot key takes the fallback path."""
     import pandas as pd
 
@@ -152,16 +151,13 @@ def test_overcap_fallback_broadcast_hot_classification(spark, monkeypatch):
     )
     cfg = SketchConfig(band_skew_cap=8)
     sigs = sketch_files(files, cfg).cache()
-    n = sigs.count()
     internal = []
     cand = candidate_pairs_fid(sigs, cfg, persisted=internal)
     plan = physical_plan(cand)
     # sane plan: hot classification joins a broadcast table instead of
     # inlining a literal map (no create_map / giant isin in the plan)
     assert "create_map" not in plan and "BroadcastExchange" in plan, plan
-    verified = verified_pairs_cascade(
-        cand, sigs, cfg, n_files=n, persisted=internal
-    )
+    verified = verified_pairs_cascade(cand, sigs, cfg, persisted=internal)
     clusters = assign_clusters(
         sigs, verified.select("a_id", "b_id")
     ).toPandas()
@@ -345,15 +341,14 @@ def test_minima_cache_refuses_oversized_entry():
 
 
 def test_release_cascade_caches_reclaims_storage(spark):
-    """VERDICT r4 #8: ad-hoc scan-side cascades (no ``persisted`` list)
-    park their required persists in _CASCADE_CACHES;
-    release_cascade_caches() must actually unpersist them: every RDD the
-    call persisted leaves the JVM's persistent-RDD registry, and the
-    caller's own cache stays. So repeated ad-hoc use in a long-lived
-    session cannot accumulate executor storage. The resident cascade
-    runs on the driver and persists nothing. The test compares RDD ids,
-    not registry sizes: the JVM context cleaner may unpersist earlier
-    tests' unreachable caches at any point."""
+    """VERDICT r4 #8: ad-hoc cascades (no ``persisted`` list) park their
+    required persists in _CASCADE_CACHES; release_cascade_caches() must
+    actually unpersist them: every RDD the call persisted leaves the
+    JVM's persistent-RDD registry, and the caller's own cache stays. So
+    repeated ad-hoc use in a long-lived session cannot accumulate
+    executor storage. The test compares RDD ids, not registry sizes: the
+    JVM context cleaner may unpersist earlier tests' unreachable caches
+    at any point."""
     import pandas as pd
 
     from sketchy_spark.operators import verify as V
@@ -375,19 +370,13 @@ def test_release_cascade_caches_reclaims_storage(spark):
     )
     before_sigs = persistent_ids()
     sigs = sketch_files(files, CFG).cache()
-    n = sigs.count()
+    sigs.count()
     sigs_ids = persistent_ids() - before_sigs
     assert sigs_ids
     cand = candidate_pairs_fid(sigs, CFG)
-    # resident ad-hoc call: evaluated on the driver, nothing retained
     before = persistent_ids()
-    V.verified_pairs_cascade(cand, sigs, CFG, n_files=n, resident=True).count()
-    assert len(V._CASCADE_CACHES) == 0
-    assert not persistent_ids() - before
-    # scan-side ad-hoc call: no persisted list -> caches tracked module-side
-    V.verified_pairs_cascade(
-        cand, sigs, CFG, n_files=n, resident=False
-    ).count()
+    # ad-hoc call: no persisted list -> caches tracked module-side
+    V.verified_pairs_cascade(cand, sigs, CFG).count()
     assert len(V._CASCADE_CACHES) > 0
     call_ids = persistent_ids() - before
     assert call_ids  # the cascade's persists
@@ -400,89 +389,11 @@ def test_release_cascade_caches_reclaims_storage(spark):
     assert not sigs_ids & persistent_ids()
 
 
-def test_resident_cascade_matches_scan_side(spark, monkeypatch):
-    """The driver-side (resident) cascade and the executor (scan-side)
-    cascade return identical (a_fid, b_fid, jaccard, hamming) rows on a
-    corpus with accepted, borderline and small-doc pairs (n_shingles <
-    num_perm), and the resident result's plan runs no Python UDF. A
-    default call whose borderline sigs overflow the resident budget hands
-    over to the scan-side path."""
-    import numpy as np
-    import pandas as pd
-
-    from sketchy_spark.corpus import FILES_COLUMNS
-    from sketchy_spark.operators import verify as V
-    from sketchy_spark.operators.lsh import candidate_pairs_fid, with_fid
-    from sketchy_spark.plans.explain import physical_plan
-
-    tiny = pd.DataFrame(
-        [
-            ("org/tiny", f"t{i}.py", f"t{i}", "py",
-             "alpha = beta(1)\n" * 2 + f"gamma = {i % 2}")
-            for i in range(6)
-        ],
-        columns=FILES_COLUMNS,
-    )
-    files = spark.createDataFrame(
-        pd.concat([corpus_pandas(400)[FILES_COLUMNS], tiny], ignore_index=True)
-    )
-    sigs = with_fid(sketch_files(files, CFG, with_sig=False)).cache()
-    n = sigs.count()
-    internal = []
-    cand = candidate_pairs_fid(sigs, CFG, persisted=internal)
-
-    # the corpus covers every stage-1 branch
-    tbl = sigs.select("fid", "sig_perm", "simhash", "n_shingles").toPandas()
-    tbl = tbl.set_index("fid")
-    c = cand.toPandas()
-    a, b = tbl.loc[c["a_fid"]], tbl.loc[c["b_fid"]]
-    est, _, small = V._slot_estimates(
-        np.vstack(a["sig_perm"]), np.vstack(b["sig_perm"]),
-        a["simhash"], b["simhash"], a["n_shingles"], b["n_shingles"],
-        CFG.num_perm,
-    )
-    tau = CFG.jaccard_threshold
-    assert small.any()
-    assert (~small & (est >= tau + 0.15)).any()
-    assert (~small & (est >= tau - 0.15) & (est < tau + 0.15)).any()
-
-    def rows(df):
-        return sorted(
-            (r.a_fid, r.b_fid, r.jaccard, r.hamming) for r in df.collect()
-        )
-
-    def cascade(resident):
-        return V.verified_pairs_cascade(
-            cand, sigs, CFG, files=files, n_files=n, resident=resident,
-            attach_ids=False, persisted=internal,
-        )
-
-    resident = cascade(True)
-    plan = physical_plan(resident)
-    for node in ("MapInPandas", "PythonMapInArrow", "BatchEvalPython"):
-        assert node not in plan, plan
-    want = rows(resident)
-    assert len(want) > 0
-    assert rows(cascade(False)) == want
-
-    # matrix and pairs fit the budget, the borderline sigs do not
-    monkeypatch.setattr(
-        V, "RESIDENT_BYTES",
-        n * (CFG.num_perm * 4 + 24) + 16 * cand.count() + 1,
-    )
-    handed_over = cascade(None)
-    assert "MapInPandas" in physical_plan(handed_over)
-    assert rows(handed_over) == want
-    for df in internal:
-        df.unpersist()
-    sigs.unpersist()
-
-
 def test_candidate_sets_agree_across_eager_and_lazy_paths(spark):
     """r6: the eager path's band cache is now PARTITIONED by band_key
     (one shuffle feeds both the hot-count and the groups aggregation);
     the candidate SET must stay exactly the lazy broadcast path's,
-    including salted star edges for over-cap keys."""
+    including hub-star edges for over-cap keys."""
     from sketchy_spark.corpus import corpus_df
     from sketchy_spark.operators.lsh import candidate_pairs_fid, with_fid
     from sketchy_spark.operators.sketch import sketch_files
