@@ -64,60 +64,62 @@ SLIM_SCHEMA = (
 _CARRY = ["file_id", "repo", "path", "commit", "lang", "sha256", "n_bytes"]
 
 
+def sketch_contents(
+    contents: list[bytes], cfg: SketchConfig, with_sig: bool = True,
+    with_fp: bool = True,
+) -> dict:
+    """The sketch kernel: utf-8 contents -> the signature columns after
+    ``n_bytes``, in schema order, one value per content. The sketch UDF
+    runs it on each Arrow batch, the resident pipeline on the driver to
+    re-sketch its borderline files."""
+    sigs, perms, fps, sims = [], [], [], []
+
+    def fold(_i: int, seg: np.ndarray) -> None:
+        # one doc's positional hashes, handed in while the fused group
+        # buffer is cache-hot (hashing.fold_shingle_hashes, r6 — the
+        # two-pass batch array was the DRAM-contended traffic at 32
+        # workers)
+        distinct = np.unique(seg)  # sorted ascending (invariant)
+        if with_sig:
+            if cfg.mode == "scaled":
+                sel = scaled_filter(distinct, cfg.max_hash_u64)
+            else:
+                sel = bottom_s(distinct, cfg.s)
+            sigs.append(u64_to_i64(sel))
+        # low 32 bits per OPH slot, stored as int32: every consumer
+        # compares slots for EQUALITY only (band hashing, cascade
+        # slot-match), so truncation costs a 2^-32 per-slot false match
+        # and halves the signature cache + every sig_perm shuffle/scan —
+        # the hottest bandwidth in the pipeline
+        perms.append(
+            oph_minhash(distinct, cfg.num_perm)
+            .astype(np.uint32)
+            .view(np.int32)
+        )
+        if with_fp:
+            fps.append(u64_to_i64(winnow(seg, cfg.winnow_window)))
+        sims.append(simhash64(distinct))
+
+    out = {"n_shingles": fold_shingle_hashes(contents, cfg.k, cfg.seed, fold)}
+    if with_sig:
+        out["sig"] = sigs
+    out["sig_perm"] = perms
+    out["simhash"] = u64_to_i64(np.array(sims, dtype=np.uint64))
+    if with_fp:
+        out["fingerprints"] = fps
+    return out
+
+
 def _sketch_batches(
     cfg: SketchConfig, with_sig: bool = True, with_fp: bool = True
 ):
-    max_hash = cfg.max_hash_u64
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # content arrives as binary (cast JVM-side): Arrow hands the
             # utf-8 bytes straight through — no per-doc re-encode pass
-            contents = list(pdf["content"])
-
-            sigs, perms, fps, sims = [], [], [], []
-
-            def fold(_i: int, seg: np.ndarray) -> None:
-                # one doc's positional hashes, handed in while the fused
-                # group buffer is cache-hot (hashing.fold_shingle_hashes,
-                # r6 — the two-pass batch array was the DRAM-contended
-                # traffic at 32 workers)
-                distinct = np.unique(seg)  # sorted ascending (invariant)
-                if with_sig:
-                    if cfg.mode == "scaled":
-                        sel = scaled_filter(distinct, max_hash)
-                    else:
-                        sel = bottom_s(distinct, cfg.s)
-                    sigs.append(u64_to_i64(sel))
-                # low 32 bits per OPH slot, stored as int32: every consumer
-                # compares slots for EQUALITY only (band hashing, cascade
-                # slot-match), so truncation costs a 2^-32 per-slot false
-                # match and halves the signature cache + every sig_perm
-                # shuffle/scan — the hottest bandwidth in the pipeline
-                perms.append(
-                    oph_minhash(distinct, cfg.num_perm)
-                    .astype(np.uint32)
-                    .view(np.int32)
-                )
-                if with_fp:
-                    fps.append(u64_to_i64(winnow(seg, cfg.winnow_window)))
-                sims.append(simhash64(distinct))
-
-            counts = fold_shingle_hashes(contents, cfg.k, cfg.seed, fold)
-
-            out = pdf[_CARRY].copy()
-            out["n_shingles"] = counts
-            if with_sig:
-                out["sig"] = sigs
-            out["sig_perm"] = perms
-            out["simhash"] = u64_to_i64(np.array(sims, dtype=np.uint64))
-            if with_fp:
-                out["fingerprints"] = fps
-            cols = _CARRY + ["n_shingles"]
-            cols += ["sig"] if with_sig else []
-            cols += ["sig_perm", "simhash"]
-            cols += ["fingerprints"] if with_fp else []
-            yield out[cols]
+            yield pdf[_CARRY].assign(**sketch_contents(
+                list(pdf["content"]), cfg, with_sig, with_fp
+            ))
 
     return fn
 
@@ -132,10 +134,11 @@ def sketch_files(
     whole-stage codegen; only the hash kernels cross into the Arrow UDF.
 
     ``with_sig=False`` omits the bottom-s ``sig`` column (8 KB/row at
-    s=1000 — the bulk of Arrow transfer and cache footprint). The
-    pipeline's cascade re-sketches just the borderline files with
-    ``with_sig=True``; the full table remains the parity form (SURVEY
-    §1.2).
+    s=1000 — the bulk of Arrow transfer and cache footprint). Only the
+    cascade's borderline files need it: the resident pipeline re-sketches
+    them with :func:`sketch_contents` on the driver, the scan-side
+    cascade with ``with_sig=True``; the full table remains the parity
+    form (SURVEY §1.2).
     """
     prepared = files.select(
         F.concat_ws("/", "repo", "path").alias("file_id"),

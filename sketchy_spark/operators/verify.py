@@ -19,9 +19,10 @@ it. The containment pass is :func:`containment_candidates` then
 30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
 reference scans its in-memory sketch collection (src/sketchy.rs:81):
 the edges stage runs the cascade's numpy core (:func:`_cascade_core`)
-over one Arrow table of the signatures and starts at most one Python
-UDF stage (the plain run's borderline re-sketch), the containment pass
-none, and none of them persists anything. Above the budget each runs
+over one Arrow table of the signatures, the containment pass runs its
+numpy kernels, none of them starts a Python UDF stage or persists
+anything, and a plain run feeds both from one signature collect and one
+content collect (``pipeline._resident_frames``). Above the budget each runs
 scan-side on executors, and a driver run that finds it would overflow
 hands over to that path, which returns the same rows; there the
 cascade is always scan-side, because the edges stage has already
@@ -389,7 +390,7 @@ def _sig_perm_matrix(tbl, cfg: SketchConfig) -> np.ndarray:
 def _cascade_core(
     mat: np.ndarray, sim: np.ndarray, nsh: np.ndarray, ai: np.ndarray,
     bi: np.ndarray, cfg: SketchConfig, margin: float,
-    sig_budget: int, fetch,
+    sig_budget: int, fetch, content_bytes: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     """Both cascade stages in numpy over the pairs of matrix rows
     (``ai``, ``bi``) -> (keep, jaccard, hamming) per pair: the driver
@@ -398,8 +399,8 @@ def _cascade_core(
     Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
     the borderline band (and every small-doc pair) gets its rows' sigs
     from ``fetch(rows) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
-    Returns None, before fetching, when those sigs (8 * s B per file)
-    exceed ``sig_budget``."""
+    Returns None, before fetching, when those sigs (8 * s B per file,
+    plus the rows' ``content_bytes`` if given) exceed ``sig_budget``."""
     tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
     blocks = [
         _slot_estimates(
@@ -418,7 +419,8 @@ def _cascade_core(
 
     if border.any():
         wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
-        if 8 * cfg.s * wanted_pos.size > sig_budget:
+        extra = 0 if content_bytes is None else content_bytes[wanted_pos].sum()
+        if 8 * cfg.s * wanted_pos.size + int(extra) > sig_budget:
             return None
         sig_of = fetch(wanted_pos)
         jac = est.copy()
@@ -443,6 +445,7 @@ def containment_candidates(
     signatures: DataFrame, cfg: SketchConfig,
     min_containment: float | None = None, persisted: list | None = None,
     n_fp: int | None = None, resident: bool | None = None,
+    placed: list | None = None,
 ) -> DataFrame:
     """Fingerprint-overlap containment candidates (G3, candidate stage).
 
@@ -477,7 +480,8 @@ def containment_candidates(
     pipeline folds it into its signature count); otherwise one aggregate
     job sizes the call. ``persisted`` receives the scan-side path's
     fingerprint-group cache for the caller to unpersist (module registry
-    otherwise, as in the cascade).
+    otherwise, as in the cascade). ``placed`` receives whether the driver
+    computed the candidates, which :func:`containment_verified` takes.
     """
     threshold = (
         cfg.containment_threshold if min_containment is None
@@ -489,27 +493,31 @@ def containment_candidates(
             n_fp = signatures.agg(F.sum(F.size("fingerprints"))).first()[0]
         budget = RESIDENT_BYTES - 8 * (n_fp or 0)
         resident = budget > 0
-    out = None
+    got = None
     if resident:
-        out = _driver_containment_candidates(signatures, cfg, threshold, budget)
-    if out is None:
-        out = _scan_side_containment_candidates(
-            signatures, cfg, threshold, persisted
+        got = _driver_containment_candidates(
+            signatures.select("file_id", "n_bytes", "fingerprints").toArrow(),
+            cfg, threshold, budget,
         )
-    return out
+    if placed is not None:
+        placed.append(got is not None)
+    if got is not None:
+        return signatures.sparkSession.createDataFrame(got, _CANDIDATE_SCHEMA)
+    return _scan_side_containment_candidates(
+        signatures, cfg, threshold, persisted
+    )
 
 
 def _driver_containment_candidates(
-    signatures: DataFrame, cfg: SketchConfig, threshold: float,
-    budget: int | None,
-) -> DataFrame | None:
-    """The resident candidate stage (see :func:`containment_candidates`).
-    ``budget``: bytes left for the pair codes (None: no cap); returns
-    None when they exceed it. Fingerprints are distinct within a file
+    tbl, cfg: SketchConfig, threshold: float, budget: int | None,
+) -> pd.DataFrame | None:
+    """The resident candidate stage (see :func:`containment_candidates`)
+    over an Arrow ``file_id, n_bytes, fingerprints`` table. ``budget``:
+    bytes left for the pair codes (None: no cap); returns None when they
+    exceed it. Fingerprints are distinct within a file
     (``hashing.winnow``), so a group's members are distinct files."""
     import pyarrow.compute as pc
 
-    tbl = signatures.select("file_id", "n_bytes", "fingerprints").toArrow()
     # file ranks in string order, so rank order is a_id < b_id order
     ids, first, rank = np.unique(
         tbl["file_id"].to_numpy(), return_index=True, return_inverse=True
@@ -542,13 +550,10 @@ def _driver_containment_candidates(
     cont = shared / np.maximum(np.minimum(n_fp[a], n_fp[b]), 1)
     keep = cont >= threshold
     a, b = a[keep], b[keep]
-    return signatures.sparkSession.createDataFrame(
-        pd.DataFrame({
-            "a_id": ids[a], "b_id": ids[b], "containment": cont[keep],
-            "a_nb": nb[a], "b_nb": nb[b],
-        }),
-        _CANDIDATE_SCHEMA,
-    )
+    return pd.DataFrame({
+        "a_id": ids[a], "b_id": ids[b], "containment": cont[keep],
+        "a_nb": nb[a], "b_nb": nb[b],
+    })
 
 
 def _group_pair_codes(
@@ -667,11 +672,12 @@ def containment_verified(
       rows, 8 B each, plus the candidate files' content bytes, the sum of
       their ``n_bytes``, fit): the driver collects the candidates, then
       ``content`` for the candidate files only with one broadcast
-      ``left_semi`` Arrow collect, runs tier 1 as Python ``in`` and tier
-      2 as :func:`_overlap_rows` over the pairs sorted by (big_id,
-      small_id), and returns a local frame. No Python UDF stage runs and
-      nothing persists.
-    - Scan-side (``resident=False``, or above the budget): both tiers run
+      ``left_semi`` Arrow collect (:func:`_file_contents`), runs tier 1
+      as a bytes ``in`` and tier 2 as :func:`_overlap_rows` over the
+      pairs sorted by (big_id, small_id), and returns a local frame. No
+      Python UDF stage runs and nothing persists.
+    - Scan-side (``resident=False``, which the pipeline passes when its
+      candidates ran scan-side, or above the budget): both tiers run
       on executors over a content-wide candidate join — tier 1 as JVM
       ``instr``, tier 2 as a ``mapInPandas`` stage. ``persisted``
       receives its staged pair cache for the caller to unpersist (module
@@ -680,55 +686,66 @@ def containment_verified(
     from sketchy_spark.config import DEFAULT_CONFIG
 
     cfg = cfg or DEFAULT_CONFIG
-    out = None
     if resident is not False:
-        out = _driver_containment_verified(
-            candidates, files, cfg, min_overlap_chars,
-            None if resident else RESIDENT_BYTES,
-        )
-    if out is None:
-        out = _scan_side_containment_verified(
-            candidates, files, cfg, min_overlap_chars, persisted
-        )
-    return out
+        budget = None if resident else RESIDENT_BYTES
+        src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
+        if budget is not None:
+            src = src.limit(budget // 8 + 1)  # never collect an unbounded set
+        cand = src.toArrow()
+        ids = _containment_files(cand, budget)
+        if ids is not None:
+            return _driver_containment_verified(
+                files.sparkSession, cand, _file_contents(files, ids), cfg,
+                min_overlap_chars,
+            )
+    return _scan_side_containment_verified(
+        candidates, files, cfg, min_overlap_chars, persisted
+    )
 
 
-def _driver_containment_verified(
-    candidates: DataFrame, files: DataFrame, cfg: SketchConfig,
-    min_overlap_chars: int, budget: int | None,
-) -> DataFrame | None:
-    """The resident verify stage (see :func:`containment_verified`).
-    ``budget``: bytes for the candidate rows and contents (None: no cap);
-    returns None when they exceed it."""
-    spark = files.sparkSession
-    src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
-    if budget is not None:
-        src = src.limit(budget // 8 + 1)  # never collect an unbounded set
-    cand = src.toArrow()
-    if not cand.num_rows:
-        return spark.createDataFrame([], CONTAINMENT_SCHEMA)
-    a_id, b_id = cand["a_id"].to_numpy(), cand["b_id"].to_numpy()
-    ids, first = np.unique(np.r_[a_id, b_id], return_index=True)
+def _containment_files(cand, budget: int | None) -> np.ndarray | None:
+    """The file_ids of the candidate rows ``cand``, or None when the rows
+    (8 B each) and the files' ``n_bytes`` exceed ``budget``."""
+    ids, first = np.unique(
+        np.r_[cand["a_id"].to_numpy(), cand["b_id"].to_numpy()],
+        return_index=True,
+    )
     nbytes = np.r_[cand["a_nb"].to_numpy(), cand["b_nb"].to_numpy()][first]
-    if budget is not None and 8 * cand.num_rows + int(nbytes.sum()) > budget:
+    if budget is not None and 8 * len(cand) + int(nbytes.sum()) > budget:
         return None
+    return ids
 
-    wanted = spark.createDataFrame(
+
+def _file_contents(files: DataFrame, ids) -> dict:
+    """{file_id: utf-8 content} of the file_ids ``ids``: one broadcast
+    ``left_semi`` Arrow collect, none for no ids."""
+    if not len(ids):
+        return {}
+    wanted = files.sparkSession.createDataFrame(
         pd.DataFrame({"file_id": ids}), "file_id string"
     )
     got = (
         files.select(
             F.concat_ws("/", "repo", "path").alias("file_id"),
-            "content",
-            F.octet_length("content").alias("nb"),
+            F.col("content").cast("binary").alias("content"),
         )
         .join(F.broadcast(wanted), "file_id", "left_semi")
         .toArrow()
     )
+    return dict(zip(got["file_id"].to_pylist(), got["content"].to_pylist()))
+
+
+def _driver_containment_verified(
+    spark, cand, content: dict, cfg: SketchConfig,
+    min_overlap_chars: int = 512,
+) -> DataFrame:
+    """The resident verify stage (see :func:`containment_verified`) over
+    the candidate rows ``cand`` and the ``content`` of their files."""
+    a_id, b_id = cand["a_id"].to_numpy(), cand["b_id"].to_numpy()
     # positions in string order, so sorting by them sorts by file_id
-    fids, first = np.unique(got["file_id"].to_numpy(), return_index=True)
-    text = np.asarray(got["content"].to_pylist(), dtype=object)[first]
-    nb = got["nb"].to_numpy()[first]
+    fids = np.array(sorted(content), dtype=object)
+    text = np.array([content[f] for f in fids], dtype=object)
+    nb = np.fromiter(map(len, text), dtype=np.int64, count=text.size)
     index = pd.Index(fids)
     ia, ib = index.get_indexer(a_id), index.get_indexer(b_id)
     found = (ia >= 0) & (ib >= 0)  # the scan-side joins drop the rest
@@ -852,9 +869,10 @@ class _MinimaCache:
         if e is not None:
             self._d.move_to_end(fid)
             return e
-        b = text.encode("utf-8", "surrogatepass")
-        e = (b, _positional_minima(b, cfg))
-        cost = len(b) + e[1].nbytes
+        if isinstance(text, str):  # the driver hands in bytes
+            text = text.encode("utf-8", "surrogatepass")
+        e = (text, _positional_minima(text, cfg))
+        cost = len(text) + e[1].nbytes
         if cost > self.max_bytes:
             # ADVICE r5: an entry whose cost alone exceeds the budget
             # must not be cached — inserting it after evicting everything

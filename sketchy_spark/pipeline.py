@@ -22,8 +22,9 @@ verify passes' resident rule (operators/verify.py, one
 the exact-sha edges and the cascade on the driver, as the reference
 re-ranks its in-memory sketch collection (src/sketchy.rs:81); a plain
 run gets it from one collect of the cached signatures, which also feeds
-the union-find, so the sketch and the cascade's borderline re-sketch are
-its only Python stages. Above the budget, or when the pair codes or the
+the union-find and the containment pass, and one content collect feeds
+the borderline re-sketch and the containment verify, so the sketch is
+its only Python stage. Above the budget, or when the pair codes or the
 borderline sigs would overflow what the table left, the stage hands over
 to Spark stages (:func:`candidate_pairs_fid`,
 :func:`verified_pairs_cascade`, :func:`exact_dup_edges_fid`, then
@@ -60,7 +61,7 @@ from sketchy_spark.operators.lsh import (
     exact_dup_edges_fid,
     with_fid,
 )
-from sketchy_spark.operators.sketch import sketch_files
+from sketchy_spark.operators.sketch import sketch_contents, sketch_files
 from sketchy_spark.operators.verify import (
     CONTAINMENT_SCHEMA,
     containment_candidates,
@@ -169,11 +170,11 @@ def run_pipeline(
         signatures = signatures.cache()
         n_files, n_fp = signatures.agg(
             F.count("*"),
-            F.sum(F.size("fingerprints")) if with_containment else F.lit(0),
+            F.sum(F.size("fingerprints")) if with_containment else F.lit(None),
         ).first()
 
-    # (candidates, verified, edges, clusters) when the edges stage is
-    # computed in this run; empty when the store resumed it.
+    # (candidates, verified, edges, clusters, containment) when the edges
+    # stage is computed in this run; empty when the store resumed it.
     fresh: list = []
 
     def compute_edges():
@@ -181,14 +182,14 @@ def run_pipeline(
         # a caller that sets it to 0 drives the Spark stages.
         got = None
         if n_files is not None:
-            got = _resident_frames(signatures, files, cfg, n_files)
+            got = _resident_frames(signatures, files, cfg, n_files, n_fp)
         if got is None:
-            got = (*_spark_edges(signatures, files, cfg, internal), None)
+            got = (*_spark_edges(signatures, files, cfg, internal), None, None)
         fresh.extend(got)
         return fresh[2]
 
     edges = stage("edges", compute_edges)
-    candidates, verified, _, fresh_clusters = fresh or (None,) * 4
+    candidates, verified, _, fresh_clusters, fresh_cont = fresh or (None,) * 5
     clusters = stage(
         "clusters",
         lambda: fresh_clusters if fresh_clusters is not None
@@ -198,7 +199,8 @@ def run_pipeline(
     if with_containment:
         cont = stage(
             "containment",
-            lambda: containment_pairs(
+            lambda: fresh_cont if fresh_cont is not None
+            else containment_pairs(
                 signatures, files, cfg, persisted=internal, n_fp=n_fp
             ),
         )
@@ -220,10 +222,11 @@ RESIDENT_COLS = [
 def _resident_row_bytes(cfg: SketchConfig) -> int:
     """Driver bytes per signature row in the resident edges stage:
     sig_perm (4 B a slot), band keys (8 B a band), fid, simhash,
-    n_shingles and the new-row flag (32 B), the sha256 hex (64 B) and the
-    file_id that a plain run attaches and a batch's clusters read
-    (counted as 64 B): ~0.93 KB at the defaults."""
-    return 4 * cfg.num_perm + 8 * cfg.bands + 32 + 64 + 64
+    n_shingles, the new-row flag and a plain run's n_bytes (40 B), the
+    sha256 hex (64 B) and the file_id that a plain run attaches and a
+    batch's clusters read (counted as 64 B): ~0.94 KB at the defaults;
+    collected fingerprints and fetched contents count apart."""
+    return 4 * cfg.num_perm + 8 * cfg.bands + 40 + 64 + 64
 
 
 def _resident_edges(
@@ -242,7 +245,8 @@ def _resident_edges(
     that the cascade core keeps, and the edges (a, b), those plus
     :func:`driver_exact_edges`, as :func:`_spark_edges` computes them.
     ``fetch(fids)`` returns the ``fid, sig`` rows of the cascade's
-    borderline files. ``budget``: driver bytes left after the table;
+    borderline files (and holds their contents, counted by ``n_bytes``
+    when ``tbl`` has it). ``budget``: driver bytes left after the table;
     returns None, for the caller to hand over to :func:`_spark_edges`,
     when the pair codes or the borderline sigs would overflow it."""
     fids, first, rank = np.unique(
@@ -268,6 +272,8 @@ def _resident_edges(
             tbl["simhash"].to_numpy()[first],
             tbl["n_shingles"].to_numpy()[first],
             ca, cb, cfg, verify.CASCADE_MARGIN, budget, fetch_rows,
+            tbl["n_bytes"].to_numpy()[first]
+            if "n_bytes" in tbl.column_names else None,
         )
         if kept is None:
             return None
@@ -282,27 +288,47 @@ def _resident_edges(
 
 def _resident_frames(
     signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
-    n_files: int,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None:
-    """A plain run's (candidates, verified, edges, clusters) as local
-    frames, with the schemas and rows of the Spark stages: ONE Arrow
-    collect of the cached signatures feeds :func:`_resident_edges`, every
-    row new, whose borderline files are re-sketched from ``files``, and
-    the union-find, which labels each file with its component's least
-    file_id. None when the stage hands over (see there)."""
+    n_files: int, n_fp: int | None = None,
+) -> tuple | None:
+    """A plain run's (candidates, verified, edges, clusters,
+    containment) as local frames, with the schemas and rows of the Spark
+    stages: ONE Arrow collect of the cached signatures feeds
+    :func:`_resident_edges`, every row new, the union-find, which labels
+    each file with its component's least file_id, and, while ``n_fp``
+    fingerprints (8 B each) fit too, the containment pass by
+    :func:`containment_pairs`' rules (containment None otherwise). ONE
+    content collect serves the containment files and the borderline
+    files, which the driver re-sketches. None when the stage hands over
+    (see there)."""
     budget = verify.RESIDENT_BYTES - n_files * _resident_row_bytes(cfg)
+    shared = n_fp is not None and budget > 8 * n_fp
+    budget -= 8 * n_fp if shared else 0
     if budget <= 0:
         return None
     tbl = signatures.select(
-        "file_id", *RESIDENT_COLS[:-1], band_keys_expr(cfg).alias("band_keys")
+        "file_id", "n_bytes", *RESIDENT_COLS[:-1],
+        *(["fingerprints"] if shared else []),
+        band_keys_expr(cfg).alias("band_keys"),
     ).toArrow()
     spark = signatures.sparkSession
+    cand = cont_ids = None  # cont_ids: the files, if the verify fits
+    if shared:  # containment_pairs' candidate floor and budgets
+        cand = verify._driver_containment_candidates(
+            tbl, cfg, min(0.25, cfg.containment_threshold),
+            verify.RESIDENT_BYTES - 8 * n_fp,
+        )
+        if cand is not None:
+            cont_ids = verify._containment_files(cand, verify.RESIDENT_BYTES)
+    held: dict = {}
 
-    def fetch(fids: np.ndarray) -> pa.Table:
-        wanted = spark.createDataFrame(pd.DataFrame({"fid": fids}), "fid long")
-        return verify._borderline_sigs(
-            wanted, signatures, files, cfg
-        ).select("fid", "sig").toArrow()
+    def fetch(fids: np.ndarray) -> pd.DataFrame:
+        name_of = dict(zip(tbl["fid"].to_pylist(), tbl["file_id"].to_pylist()))
+        names = [name_of[f] for f in fids.tolist()]
+        more = [] if cont_ids is None else cont_ids
+        held.update(verify._file_contents(files, sorted({*names, *more})))
+        texts = [held.get(n, b"") for n in names]
+        sigs = sketch_contents(texts, cfg, with_fp=False)["sig"]
+        return pd.DataFrame({"fid": fids, "sig": sigs})
 
     got = _resident_edges(
         tbl, np.ones(tbl.num_rows, dtype=bool), cfg, budget, fetch
@@ -310,6 +336,10 @@ def _resident_frames(
     if got is None:
         return None
     first, rank, (ca, cb), (va, vb, jac, ham), (ea, eb) = got
+    cont = None
+    if cont_ids is not None:  # the borderline fetch held their contents
+        held = held or verify._file_contents(files, cont_ids)
+        cont = verify._driver_containment_verified(spark, cand, held, cfg)
     names = tbl["file_id"].to_numpy()[first]
     fids = tbl["fid"].to_numpy()[first]
     labels = least_member_labels(names, ea, eb)
@@ -339,6 +369,7 @@ def _resident_frames(
             }),
             "file_id string, cluster_id string",
         ),
+        cont,
     )
 
 
@@ -399,16 +430,16 @@ def containment_pairs(
     whole-file embedding) must reach the run-verify kernel. Both stages
     follow the cascade's budget: within it they run on the driver and
     return local frames (no Python UDF stage, no persist); above it,
-    scan-side on executors."""
+    scan-side on executors. Candidates computed scan-side are verified
+    scan-side, with no probe of their frame."""
+    placed: list[bool] = []
+    cand = containment_candidates(
+        signatures, cfg, min(0.25, cfg.containment_threshold), persisted,
+        n_fp, placed=placed,
+    )
     return containment_verified(
-        containment_candidates(
-            signatures, cfg,
-            min_containment=min(0.25, cfg.containment_threshold),
-            persisted=persisted, n_fp=n_fp,
-        ),
-        files,
-        cfg,
-        persisted=persisted,
+        cand, files, cfg, persisted=persisted,
+        resident=None if placed[0] else False,
     )
 
 

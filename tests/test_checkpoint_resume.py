@@ -936,9 +936,19 @@ def test_resident_ingest_runs_one_job_per_batch(spark, tmp_path):
     single.unpersist()
 
 
-def test_checkpointed_containment_matches_plain(spark, tmp_path):
+def test_checkpointed_containment_matches_plain(
+    spark, tmp_path, monkeypatch
+):
     """The checkpointed pipeline's containment stage holds the same rows
-    as the plain pipeline's containment output on the planted corpus."""
+    as the plain pipeline's containment output on the planted corpus, as
+    do standalone ``containment_pairs``, the Spark flow
+    (``RESIDENT_BYTES`` = 0) and a stored run whose edges stage is
+    resumed and whose containment stage is computed. The plain run's
+    containment pass shares the resident edges stage's collects; the
+    others run it alone."""
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.pipeline import containment_pairs
+
     files = corpus_df(spark, N).cache()
 
     def rows(df):
@@ -949,7 +959,25 @@ def test_checkpointed_containment_matches_plain(spark, tmp_path):
 
     plain = run_pipeline(files, CFG, with_containment=True)
     want = rows(plain.containment)
+    assert rows(containment_pairs(plain.signatures, files, CFG)) == want
     plain.unpersist()
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", 0)
+        probes = []  # the verify stage's driver sizing of the candidates
+        mp.setattr(V, "_containment_files", lambda *a: probes.append(a))
+        scan = run_pipeline(files, CFG, with_containment=True)
+        assert rows(scan.containment) == want
+        # scan-side candidates are verified scan-side, unprobed
+        assert probes == []
+        scan.unpersist()
     store = CheckpointStore(str(tmp_path / "cont"), CFG.config_hash)
     got = rows(run_pipeline(files, CFG, store=store).containment)
     assert got == want and len(want) > 0
+    store.invalidate_from(STAGES, "containment")
+    res = run_pipeline(files, CFG, store=store)
+    assert res.resumed == {
+        "signatures": True, "edges": True, "clusters": True,
+        "containment": False,
+    }
+    assert rows(res.containment) == want
+    res.unpersist()

@@ -211,9 +211,10 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
     no shingles, so their only link is the exact-sha edge, six small
     documents (fewer shingles than signature slots), which verify
     through the cascade's exact stage, and singletons; its candidates
-    cover every stage-1 branch. The resident run's only Python stages
-    are the sketch and the borderline re-sketch, and its frames are
-    local."""
+    cover every stage-1 branch. The resident run's only Python stage is
+    the sketch (the driver re-sketches the borderline files), also with
+    the containment pass on, whose run gives the same rows, and its
+    frames are local."""
     import numpy as np
     import pandas as pd
 
@@ -238,11 +239,11 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
     pdf = pd.concat([corpus_pandas(600)[cols], extra], ignore_index=True)
     files = spark.createDataFrame(pdf).cache()
 
-    def run(group):
+    def run(group, with_containment=False):
         sc = spark.sparkContext
         sc.setJobGroup(group, "resident edges parity")
         try:
-            res = run_pipeline(files, cfg, with_containment=False)
+            res = run_pipeline(files, cfg, with_containment)
             rows = {
                 k: sorted(tuple(r) for r in getattr(res, k).collect())
                 for k in ("clusters", "candidates", "verified", "edges")
@@ -307,7 +308,13 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
         assert labels[f"org/solo/s{i}.py"] == f"org/solo/s{i}.py"
 
     ran = _python_nodes(spark, "resident-edges")
-    assert len(ran) == 2 and all(map(_is_sketch, ran)), ran
+    assert len(ran) == 1 and all(map(_is_sketch, ran)), ran
+    cont_res, with_cont = run("resident-containment", with_containment=True)
+    assert with_cont == resident
+    assert cont_res.containment.count() > 0
+    ran = _python_nodes(spark, "resident-containment")
+    assert len(ran) == 1 and all(map(_is_sketch, ran)), ran
+    cont_res.unpersist()
     assert not all(map(_is_sketch, _python_nodes(spark, "handed-over-edges")))
     # the resident frames are local; the Spark stages' plans read the
     # signature cache, whose plan holds the sketch

@@ -122,3 +122,39 @@ def test_band_keys_match_per_band_oracle(spark):
     assert len(row["keys"]) == CFG.bands
     assert row["keys"] == [row[f"k{i}"] for i in range(CFG.bands)]
     assert len(set(row["keys"])) == CFG.bands
+
+
+def test_driver_sketch_kernel_matches_udf_sig(spark):
+    """The sketch kernel run on the driver (how the resident pipeline
+    re-sketches its borderline files) gives byte-identical ``sig`` to the
+    executor ``sketch_files(with_sig=True)`` UDF: empty content, content
+    shorter than k, multi-byte UTF-8 and a normal file."""
+    import pandas as pd
+
+    from sketchy_spark.operators.sketch import sketch_contents
+
+    texts = {
+        "empty": "",
+        "short": "x = 1",  # fewer bytes than k
+        "utf8": "\n".join(
+            f"naïve_{i} = 'Grüße {i} — 日本語'" for i in range(40)
+        ),
+        "normal": corpus_pandas(1)["content"].iat[0],
+    }
+    assert len(texts["short"].encode()) < CFG.k
+    pdf = pd.DataFrame({
+        "repo": "org/k", "path": list(texts), "commit": "c", "lang": "py",
+        "content": list(texts.values()),
+    })
+    udf = {
+        r.path: list(r.sig)
+        for r in sketch_files(spark.createDataFrame(pdf), CFG)
+        .select("path", "sig").collect()
+    }
+    got = sketch_contents(
+        [t.encode() for t in texts.values()], CFG, with_fp=False
+    )["sig"]
+    for name, sig in zip(texts, got):
+        assert sig.dtype == np.int64
+        assert sig.tolist() == udf[name], name
+    assert udf["empty"] == [] and len(udf["normal"]) > 0
