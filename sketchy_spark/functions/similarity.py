@@ -104,6 +104,16 @@ def cos_paired_expr(x: str, y: str, xn: str, yn: str) -> str:
 COS_EXPR = cos_expr("a_emb", "b_emb")
 
 
+def _sides(emb: DataFrame):
+    a = emb.select(
+        F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb")
+    )
+    b = emb.select(
+        F.col("vec_id").alias("b_id"), F.col("embedding").alias("b_emb")
+    )
+    return a, b
+
+
 def cosine_topk_bruteforce(
     emb: DataFrame, k: int = 3, n_queries: int = 50
 ) -> DataFrame:
@@ -196,6 +206,18 @@ def ann_bucketed(
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
+    )
+
+
+def sign_bucket_expr_offset(col: str, bits: int, offset: int) -> str:
+    """Sign-LSH bucket over a rotated dim window: bit d reads dimension
+    (offset + d) mod len — each probe table sees a different hyperplane
+    subset (multi-probe sign-LSH)."""
+    return (
+        f"aggregate(sequence(0, {bits - 1}), 0L, "
+        f"(acc, d) -> acc + if(element_at({col}, "
+        f"pmod({offset} + d, size({col})) + 1) > 0, "
+        f"shiftleft(1L, d), 0L))"
     )
 
 

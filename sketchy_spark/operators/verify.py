@@ -445,7 +445,6 @@ def containment_candidates(
     signatures: DataFrame, cfg: SketchConfig,
     min_containment: float | None = None, persisted: list | None = None,
     n_fp: int | None = None, resident: bool | None = None,
-    placed: list | None = None,
 ) -> DataFrame:
     """Fingerprint-overlap containment candidates (G3, candidate stage).
 
@@ -480,8 +479,7 @@ def containment_candidates(
     pipeline folds it into its signature count); otherwise one aggregate
     job sizes the call. ``persisted`` receives the scan-side path's
     fingerprint-group cache for the caller to unpersist (module registry
-    otherwise, as in the cascade). ``placed`` receives whether the driver
-    computed the candidates, which :func:`containment_verified` takes.
+    otherwise, as in the cascade).
     """
     threshold = (
         cfg.containment_threshold if min_containment is None
@@ -499,8 +497,6 @@ def containment_candidates(
             signatures.select("file_id", "n_bytes", "fingerprints").toArrow(),
             cfg, threshold, budget,
         )
-    if placed is not None:
-        placed.append(got is not None)
     if got is not None:
         return signatures.sparkSession.createDataFrame(got, _CANDIDATE_SCHEMA)
     return _scan_side_containment_candidates(
@@ -676,8 +672,7 @@ def containment_verified(
       as a bytes ``in`` and tier 2 as :func:`_overlap_rows` over the
       pairs sorted by (big_id, small_id), and returns a local frame. No
       Python UDF stage runs and nothing persists.
-    - Scan-side (``resident=False``, which the pipeline passes when its
-      candidates ran scan-side, or above the budget): both tiers run
+    - Scan-side (``resident=False``, or above the budget): both tiers run
       on executors over a content-wide candidate join — tier 1 as JVM
       ``instr``, tier 2 as a ``mapInPandas`` stage. ``persisted``
       receives its staged pair cache for the caller to unpersist (module
@@ -687,13 +682,12 @@ def containment_verified(
 
     cfg = cfg or DEFAULT_CONFIG
     if resident is not False:
-        budget = None if resident else RESIDENT_BYTES
         src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
-        if budget is not None:
-            src = src.limit(budget // 8 + 1)  # never collect an unbounded set
+        if not resident:  # never collect an unbounded set
+            src = src.limit(RESIDENT_BYTES // 8 + 1)
         cand = src.toArrow()
-        ids = _containment_files(cand, budget)
-        if ids is not None:
+        ids, cost = _containment_files(cand)
+        if resident or cost <= RESIDENT_BYTES:
             return _driver_containment_verified(
                 files.sparkSession, cand, _file_contents(files, ids), cfg,
                 min_overlap_chars,
@@ -703,17 +697,15 @@ def containment_verified(
     )
 
 
-def _containment_files(cand, budget: int | None) -> np.ndarray | None:
-    """The file_ids of the candidate rows ``cand``, or None when the rows
-    (8 B each) and the files' ``n_bytes`` exceed ``budget``."""
+def _containment_files(cand) -> tuple[np.ndarray, int]:
+    """The file_ids of the candidate rows ``cand`` and the driver bytes
+    their verify holds: the rows (8 B each) and the files' ``n_bytes``."""
     ids, first = np.unique(
         np.r_[cand["a_id"].to_numpy(), cand["b_id"].to_numpy()],
         return_index=True,
     )
     nbytes = np.r_[cand["a_nb"].to_numpy(), cand["b_nb"].to_numpy()][first]
-    if budget is not None and 8 * len(cand) + int(nbytes.sum()) > budget:
-        return None
-    return ids
+    return ids, 8 * len(cand) + int(nbytes.sum())
 
 
 def _file_contents(files: DataFrame, ids) -> dict:

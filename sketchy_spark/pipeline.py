@@ -222,11 +222,11 @@ RESIDENT_COLS = [
 def _resident_row_bytes(cfg: SketchConfig) -> int:
     """Driver bytes per signature row in the resident edges stage:
     sig_perm (4 B a slot), band keys (8 B a band), fid, simhash,
-    n_shingles, the new-row flag and a plain run's n_bytes (40 B), the
-    sha256 hex (64 B) and the file_id that a plain run attaches and a
-    batch's clusters read (counted as 64 B): ~0.94 KB at the defaults;
-    collected fingerprints and fetched contents count apart."""
-    return 4 * cfg.num_perm + 8 * cfg.bands + 40 + 64 + 64
+    n_shingles and the new-row flag (32 B), the sha256 hex (64 B) and the
+    file_id that a plain run attaches and a batch's clusters read
+    (counted as 64 B): ~0.93 KB at the defaults. A plain run's n_bytes,
+    fingerprints and fetched contents count apart."""
+    return 4 * cfg.num_perm + 8 * cfg.bands + 32 + 64 + 64
 
 
 def _resident_edges(
@@ -245,8 +245,8 @@ def _resident_edges(
     that the cascade core keeps, and the edges (a, b), those plus
     :func:`driver_exact_edges`, as :func:`_spark_edges` computes them.
     ``fetch(fids)`` returns the ``fid, sig`` rows of the cascade's
-    borderline files (and holds their contents, counted by ``n_bytes``
-    when ``tbl`` has it). ``budget``: driver bytes left after the table;
+    borderline files, with their contents counted by ``n_bytes`` when
+    ``tbl`` has it. ``budget``: driver bytes left after the table;
     returns None, for the caller to hand over to :func:`_spark_edges`,
     when the pair codes or the borderline sigs would overflow it."""
     fids, first, rank = np.unique(
@@ -291,16 +291,16 @@ def _resident_frames(
     n_files: int, n_fp: int | None = None,
 ) -> tuple | None:
     """A plain run's (candidates, verified, edges, clusters,
-    containment) as local frames, with the schemas and rows of the Spark
-    stages: ONE Arrow collect of the cached signatures feeds
-    :func:`_resident_edges`, every row new, the union-find, which labels
-    each file with its component's least file_id, and, while ``n_fp``
-    fingerprints (8 B each) fit too, the containment pass by
-    :func:`containment_pairs`' rules (containment None otherwise). ONE
-    content collect serves the containment files and the borderline
-    files, which the driver re-sketches. None when the stage hands over
-    (see there)."""
-    budget = verify.RESIDENT_BYTES - n_files * _resident_row_bytes(cfg)
+    containment) as local frames, with the Spark stages' schemas and
+    rows, from ONE Arrow collect of the cached signatures, which feeds
+    :func:`_resident_edges` (every row new), the union-find and, while
+    the ``n_fp`` fingerprints fit, the containment pass, and ONE content
+    collect, of the containment files and the borderline files that the
+    driver re-sketches. The containment pass gets what the table left,
+    the edges stage the rest; the pass yields (containment None) when
+    either does not fit. None when the edges stage hands over."""
+    # n_bytes (8 B a row) rides along in a plain run only
+    budget = verify.RESIDENT_BYTES - n_files * (_resident_row_bytes(cfg) + 8)
     shared = n_fp is not None and budget > 8 * n_fp
     budget -= 8 * n_fp if shared else 0
     if budget <= 0:
@@ -311,35 +311,34 @@ def _resident_frames(
         band_keys_expr(cfg).alias("band_keys"),
     ).toArrow()
     spark = signatures.sparkSession
-    cand = cont_ids = None  # cont_ids: the files, if the verify fits
-    if shared:  # containment_pairs' candidate floor and budgets
+    cand, cont_ids, cost = None, [], 0  # the containment pass, if it fits
+    if shared:
         cand = verify._driver_containment_candidates(
-            tbl, cfg, min(0.25, cfg.containment_threshold),
-            verify.RESIDENT_BYTES - 8 * n_fp,
+            tbl, cfg, _containment_floor(cfg), budget
         )
-        if cand is not None:
-            cont_ids = verify._containment_files(cand, verify.RESIDENT_BYTES)
+    if cand is not None:
+        cont_ids, cost = verify._containment_files(cand)
     held: dict = {}
 
     def fetch(fids: np.ndarray) -> pd.DataFrame:
         name_of = dict(zip(tbl["fid"].to_pylist(), tbl["file_id"].to_pylist()))
         names = [name_of[f] for f in fids.tolist()]
-        more = [] if cont_ids is None else cont_ids
-        held.update(verify._file_contents(files, sorted({*names, *more})))
-        texts = [held.get(n, b"") for n in names]
-        sigs = sketch_contents(texts, cfg, with_fp=False)["sig"]
-        return pd.DataFrame({"fid": fids, "sig": sigs})
+        held.update(verify._file_contents(files, sorted({*names, *cont_ids})))
+        sigs = sketch_contents([held[n] for n in names], cfg, with_fp=False)
+        return pd.DataFrame({"fid": fids, "sig": sigs["sig"]})
 
-    got = _resident_edges(
-        tbl, np.ones(tbl.num_rows, dtype=bool), cfg, budget, fetch
-    )
+    new, got = np.ones(tbl.num_rows, dtype=bool), None
+    if cost < budget:
+        got = _resident_edges(tbl, new, cfg, budget - cost, fetch)
+    if got is None and cand is not None:  # the edges stage comes first
+        cand, cont_ids = None, []
+        got = _resident_edges(tbl, new, cfg, budget, fetch)
     if got is None:
         return None
     first, rank, (ca, cb), (va, vb, jac, ham), (ea, eb) = got
-    cont = None
-    if cont_ids is not None:  # the borderline fetch held their contents
-        held = held or verify._file_contents(files, cont_ids)
-        cont = verify._driver_containment_verified(spark, cand, held, cfg)
+    cont = None if cand is None else verify._driver_containment_verified(
+        spark, cand, held or verify._file_contents(files, cont_ids), cfg
+    )  # a borderline fetch has fetched the contents already
     names = tbl["file_id"].to_numpy()[first]
     fids = tbl["fid"].to_numpy()[first]
     labels = least_member_labels(names, ea, eb)
@@ -430,17 +429,22 @@ def containment_pairs(
     whole-file embedding) must reach the run-verify kernel. Both stages
     follow the cascade's budget: within it they run on the driver and
     return local frames (no Python UDF stage, no persist); above it,
-    scan-side on executors. Candidates computed scan-side are verified
-    scan-side, with no probe of their frame."""
-    placed: list[bool] = []
-    cand = containment_candidates(
-        signatures, cfg, min(0.25, cfg.containment_threshold), persisted,
-        n_fp, placed=placed,
-    )
+    scan-side on executors."""
     return containment_verified(
-        cand, files, cfg, persisted=persisted,
-        resident=None if placed[0] else False,
+        containment_candidates(
+            signatures, cfg,
+            min_containment=_containment_floor(cfg),
+            persisted=persisted, n_fp=n_fp,
+        ),
+        files,
+        cfg,
+        persisted=persisted,
     )
+
+
+def _containment_floor(cfg: SketchConfig) -> float:
+    """:func:`containment_pairs`' candidate threshold (see there)."""
+    return min(0.25, cfg.containment_threshold)
 
 
 def cluster_consensus(

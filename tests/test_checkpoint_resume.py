@@ -945,10 +945,16 @@ def test_checkpointed_containment_matches_plain(
     (``RESIDENT_BYTES`` = 0) and a stored run whose edges stage is
     resumed and whose containment stage is computed. The plain run's
     containment pass shares the resident edges stage's collects; the
-    others run it alone."""
+    others run it alone, through ``containment_pairs``."""
+    from sketchy_spark import pipeline as P
     from sketchy_spark.operators import verify as V
-    from sketchy_spark.pipeline import containment_pairs
 
+    containment_pairs = P.containment_pairs
+    alone = []  # the runs' calls of containment_pairs
+    monkeypatch.setattr(
+        P, "containment_pairs",
+        lambda *a, **k: alone.append(1) or containment_pairs(*a, **k),
+    )
     files = corpus_df(spark, N).cache()
 
     def rows(df):
@@ -959,16 +965,14 @@ def test_checkpointed_containment_matches_plain(
 
     plain = run_pipeline(files, CFG, with_containment=True)
     want = rows(plain.containment)
+    assert alone == [] and plain.containment.isLocal()
     assert rows(containment_pairs(plain.signatures, files, CFG)) == want
     plain.unpersist()
     with monkeypatch.context() as mp:
         mp.setattr(V, "RESIDENT_BYTES", 0)
-        probes = []  # the verify stage's driver sizing of the candidates
-        mp.setattr(V, "_containment_files", lambda *a: probes.append(a))
         scan = run_pipeline(files, CFG, with_containment=True)
-        assert rows(scan.containment) == want
-        # scan-side candidates are verified scan-side, unprobed
-        assert probes == []
+        assert rows(scan.containment) == want and alone == [1]
+        assert not scan.containment.isLocal()
         scan.unpersist()
     store = CheckpointStore(str(tmp_path / "cont"), CFG.config_hash)
     got = rows(run_pipeline(files, CFG, store=store).containment)
@@ -979,5 +983,5 @@ def test_checkpointed_containment_matches_plain(
         "signatures": True, "edges": True, "clusters": True,
         "containment": False,
     }
-    assert rows(res.containment) == want
+    assert rows(res.containment) == want and alone == [1, 1]
     res.unpersist()

@@ -326,3 +326,57 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
     res.unpersist()
     handed_res.unpersist()
     files.unpersist()
+
+
+def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
+    """The plain run's containment pass takes its candidate rows and
+    contents out of what the signature table left, before the edges stage
+    runs. When the edges stage would not fit after it, the pass yields:
+    the edges stage stays on the driver with the whole remainder, and
+    ``containment_pairs`` computes the containment rows on its own, equal
+    to the shared pass's."""
+    from sketchy_spark import pipeline as P
+    from sketchy_spark.operators import verify as V
+
+    files = corpus_df(spark, 300).cache()
+
+    def rows(res):
+        return {
+            k: sorted(tuple(r) for r in getattr(res, k).collect())
+            for k in ("clusters", "edges", "containment")
+        }
+
+    shared = run_pipeline(files, CFG)
+    want = rows(shared)
+    n_files, n_fp = shared.signatures.agg(
+        F.count("*"), F.sum(F.size("fingerprints"))
+    ).first()
+    shared.unpersist()
+    assert len(want["containment"]) > 0
+    left = (
+        V.RESIDENT_BYTES
+        - n_files * (P._resident_row_bytes(CFG) + 8) - 8 * n_fp
+    )
+    alone, budgets = [], []
+    pairs, edges, sizes = (
+        P.containment_pairs, P._resident_edges, V._containment_files
+    )
+    monkeypatch.setattr(
+        P, "containment_pairs",
+        lambda *a, **k: alone.append(1) or pairs(*a, **k),
+    )
+    monkeypatch.setattr(
+        P, "_resident_edges",
+        lambda tbl, new, cfg, budget, fetch: budgets.append(budget)
+        or edges(tbl, new, cfg, budget, fetch),
+    )
+    # the pass's rows and contents leave the edges stage 1 B, then none
+    for cost in (left - 1, left):
+        monkeypatch.setattr(
+            V, "_containment_files", lambda c, n=cost: (sizes(c)[0], n)
+        )
+        res = run_pipeline(files, CFG)
+        assert res.edges.isLocal() and rows(res) == want
+        res.unpersist()
+    assert alone == [1, 1]
+    assert budgets == [1, left, left]
