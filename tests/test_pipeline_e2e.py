@@ -357,9 +357,15 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
         V.RESIDENT_BYTES
         - n_files * (P._resident_row_bytes(CFG) + 8) - 8 * n_fp
     )
-    alone, budgets = [], []
+    alone, budgets, cand_budgets = [], [], []
     pairs, edges, sizes = (
         P.containment_pairs, P._resident_edges, V._containment_files
+    )
+    candidates = V._driver_containment_candidates
+    monkeypatch.setattr(
+        V, "_driver_containment_candidates",
+        lambda tbl, cfg, t, budget: cand_budgets.append(budget)
+        or candidates(tbl, cfg, t, budget),
     )
     monkeypatch.setattr(
         P, "containment_pairs",
@@ -380,3 +386,6 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
         res.unpersist()
     assert alone == [1, 1]
     assert budgets == [1, left, left]
+    # the shared pass's pair codes get what the table left; the
+    # standalone calls size theirs by the fingerprints alone
+    assert cand_budgets[0] == cand_budgets[2] == left
