@@ -16,23 +16,30 @@ The store only keeps tables; what goes in them is its callers' business:
 ``pipeline.run_pipeline(store=...)`` writes the :data:`STAGES` of one
 run, and ``streaming.incremental.IncrementalDedup`` its per-batch stages.
 
-A stage moves as a Spark DataFrame or as a ``pyarrow.Table``. The
-parquet shim writes a DataFrame with a Spark job, one part file per
-write task, and moves everything else with Arrow on the driver, with no
-Spark job: a table is written by ``pq.write_table`` as one part file,
+A stage moves as a Spark DataFrame, as a ``pyarrow.Table`` or as a
+sketch pass (``operators.sketch.SketchPass``), the one input whose rows
+the store's own writer computes. The parquet shim writes a DataFrame
+with a Spark job, one part file per write task; a sketch pass with one
+``mapInArrow`` job whose tasks sketch their rows and write their own
+part files (:func:`_write_sketch_parts`), so the signatures never cross
+back into the JVM; and it moves everything else with Arrow on the
+driver, with no Spark job: a table is written by ``pq.write_table`` as
+one part file,
 :meth:`~CheckpointStore.read_table` reads columns (and a row filter)
 through ``pyarrow.dataset``, and :meth:`~CheckpointStore.concat_stages`
 folds stages into one with a streaming ``pyarrow.dataset`` rewrite.
 :meth:`~CheckpointStore.read_stage` returns a DataFrame either way. The
 Iceberg store has no driver-side file access, so it moves all of these
-through its session: a table becomes a local frame before
-``writeTo``, ``read_table`` is ``read_stage(...).toArrow()``, and
-``concat_stages`` is a union written by ``createOrReplace``.
+through its session: a table becomes a local frame and a sketch pass
+a ``mapInArrow`` frame before ``writeTo``, ``read_table`` is
+``read_stage(...).toArrow()``, and ``concat_stages`` is a union written
+by ``createOrReplace``.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import time
 from functools import reduce
@@ -41,15 +48,63 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
+
+from sketchy_spark.operators.sketch import SketchPass
 
 MANIFEST_DIR = "_manifest"
 # Footer key under which Spark's parquet writer stores the row schema.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # The one part file of a stage written on the driver (write task 0).
 ARROW_PART = "part-00000-arrow.parquet"
+# Hash columns of a sketch pass: one distinct value a file (or a slot),
+# so a dictionary page only costs the writer time.
+HASH_COLS = {"sig", "sig_perm", "simhash", "fingerprints", "fid", "sha256"}
+
+
+def _write_sketch_parts(sp: SketchPass, tmp: str) -> None:
+    """Run the sketch pass ``sp`` as one ``mapInArrow`` stage whose tasks
+    write the stage's part files into ``tmp``.
+
+    Each task runs the kernel on every Arrow batch of its partition and
+    writes the results with ``pq.ParquetWriter`` to a ``.``-prefixed temp
+    name, then ``os.replace`` s it to ``part-NNNNN-sketch.parquet``
+    (NNNNN: the partition): a retried task leaves exactly one part, and
+    readers skip a half-written one. A task writes its part even when its
+    partition is empty, so the stage keeps its schema; when no task runs
+    at all, the driver writes the empty part. The tasks return (part,
+    rows) to one small collect; a killed attempt's temp part is deleted
+    after it, so the stage commits only whole parts."""
+    schema = sp.arrow_schema
+    kernel = sp.kernel()
+    dictionary = [f.name for f in schema if f.name not in HASH_COLS]
+
+    def write(part: int, attempt: int, batches) -> int:
+        name = f"part-{part:05d}-sketch.parquet"
+        temp = f"{tmp}/.{name}.{attempt}"
+        rows = 0
+        with pq.ParquetWriter(temp, schema, use_dictionary=dictionary) as w:
+            for batch in batches:
+                out = kernel(batch)
+                w.write_batch(out)
+                rows += out.num_rows
+        os.replace(temp, f"{tmp}/{name}")
+        return rows
+
+    def task(batches):
+        ctx = TaskContext.get()
+        part = ctx.partitionId()
+        yield pa.record_batch({
+            "part": [part], "rows": [write(part, ctx.attemptNumber(), batches)],
+        })
+
+    if not sp.rows.mapInArrow(task, "part long, rows long").collect():
+        write(0, 0, [])
+    for temp in Path(tmp).glob(".part-*"):  # a killed attempt's leftover
+        temp.unlink()
 
 
 class _StoreBase:
@@ -108,13 +163,15 @@ class CheckpointStore(_StoreBase):
         return str(self.root / stage)
 
     def write_stage(
-        self, stage: str, df: DataFrame | pa.Table, meta: dict | None = None
+        self, stage: str, df: DataFrame | pa.Table | SketchPass,
+        meta: dict | None = None,
     ) -> None:
         """Write a stage table + manifest with per-WRITE-TASK lineage.
 
         A DataFrame is written by Spark; a ``pyarrow.Table`` by
         ``pq.write_table`` on the driver, as one part file (task 0), with
-        no Spark job.
+        no Spark job; a :class:`SketchPass` by its own tasks
+        (:func:`_write_sketch_parts`), one part file each.
 
         Each parquet part file is the output of exactly one write task,
         so lineage = (part file, row count from its parquet footer) audits
@@ -136,11 +193,14 @@ class CheckpointStore(_StoreBase):
         t0 = time.time()
         tmp = self.stage_path(stage) + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        if isinstance(df, pa.Table):
-            Path(tmp).mkdir(parents=True)
-            pq.write_table(df, f"{tmp}/{ARROW_PART}")
-        else:
+        if isinstance(df, DataFrame):
             df.write.mode("overwrite").parquet(tmp)
+        else:
+            Path(tmp).mkdir(parents=True)
+            if isinstance(df, SketchPass):
+                _write_sketch_parts(df, tmp)
+            else:
+                pq.write_table(df, f"{tmp}/{ARROW_PART}")
         self._commit(stage, tmp, t0, meta)
 
     def _commit(
@@ -377,7 +437,8 @@ class IcebergCheckpointStore(_StoreBase):
         return {r["key"]: r["value"] for r in rows}
 
     def write_stage(
-        self, stage: str, df: DataFrame | pa.Table, meta: dict | None = None
+        self, stage: str, df: DataFrame | pa.Table | SketchPass,
+        meta: dict | None = None,
     ) -> None:
         """One ATOMIC createOrReplace commit carrying the completion
         properties (ADVICE r4): the former separate ALTER TABLE left a
@@ -387,11 +448,14 @@ class IcebergCheckpointStore(_StoreBase):
         the properties on the writeTo builder itself, status=complete
         exists only in the same snapshot commit as the data. A
         ``pyarrow.Table`` is written as a local frame of the store's
-        session."""
+        session, a :class:`SketchPass` as its ``mapInArrow`` frame."""
+        if isinstance(df, pa.Table):
+            df = self.spark.createDataFrame(df)
+        elif isinstance(df, SketchPass):
+            df = df.frame()
         self._create_or_replace(
             self._ident(stage),
-            self.spark.createDataFrame(df) if isinstance(df, pa.Table)
-            else df,
+            df,
             {
                 "sketchy.status": "complete",
                 "sketchy.stage": stage,

@@ -32,7 +32,11 @@ I64_SHIFT = 1 << 63  # order-preserving uint64 -> int64 shift (SURVEY §4.2)
 # v5: incremental stages are fid-keyed too — ``sig_batch`` stores ``fid``
 # and ``edges_batch`` holds (a_fid, b_fid) — and the unread
 # ``simhash_max_hamming`` field left the config.
-SIG_FORMAT_VERSION = 5
+# v6: stored sketch stages are written by the sketch tasks (pyarrow part
+# files) and ``sig_batch`` no longer stores ``band_keys``: the driver
+# groups bands by their sig_perm slots, so a v5 batch stage would be
+# read without the column it was written for.
+SIG_FORMAT_VERSION = 6
 
 
 @dataclass(frozen=True)

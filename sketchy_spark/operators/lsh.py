@@ -20,9 +20,10 @@ the band's HUB, its minimum fid before the batch, else its minimum (in a
 plain run, where every row is new, a star to the band's minimum fid),
 keeping recall (members stay connectable through the hub) at O(group)
 instead of O(group²) cost; (2) AQE skew-join splitting handles residual
-skew. The one rule has a Spark form (:func:`candidate_pairs_fid`) and a
-driver form (:func:`driver_band_pairs`), and the incremental batch runs
-the same two with a new-rows mask.
+skew. The one rule has a Spark form (:func:`candidate_pairs_fid`), which
+groups by band key, and a driver form (:func:`driver_band_pairs`), which
+groups by the exact slot tuple, and the incremental batch runs the same
+two with a new-rows mask.
 """
 
 from __future__ import annotations
@@ -308,30 +309,48 @@ def candidate_pairs_fid(
     return out
 
 
+def _band_groups(sig_perm: np.ndarray, cfg: SketchConfig) -> np.ndarray:
+    """Each (row, band) membership's group, row-major, as dense ids from
+    0: two memberships share one iff their band and the band's
+    ``cfg.rows_per_band`` sig_perm slots are equal. The slot tuple is
+    exact, where a band key (:func:`band_keys_expr`) is its 64-bit hash.
+    ``sig_perm``: the (rows, num_perm) int32 matrix."""
+    r = cfg.rows_per_band
+    slots = sig_perm.reshape(-1, r).view(np.uint32).astype(np.uint64)
+    slots = np.pad(slots, ((0, 0), (0, r % 2)))  # two slots a uint64
+    group = np.tile(np.arange(cfg.bands, dtype=np.int64), sig_perm.shape[0])
+    for pair in (slots[:, 0::2] << np.uint64(32) | slots[:, 1::2]).T:
+        # dense ranks at every step keep the combined key below n^2
+        values, rank = np.unique(pair, return_inverse=True)
+        _, group = np.unique(
+            group * values.size + rank, return_inverse=True
+        )
+    return group
+
+
 def driver_band_pairs(
-    band_keys, rank: np.ndarray, cfg: SketchConfig, budget: int,
+    sig_perm: np.ndarray, rank: np.ndarray, cfg: SketchConfig, budget: int,
     new: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, int] | None:
     """:func:`candidate_pairs_fid` on one driver collect -> (a, b, budget
     left): distinct file-rank pairs with a < b, each touching a row
     ``new`` flags.
 
-    ``band_keys``: the Arrow list column of :func:`band_keys_expr`, one
-    list per collected row; ``rank``: each row's file rank (rank order is
-    fid order; duplicate rows of a file share one). The (band key, row)
-    memberships sort into groups once. A cold group (at most
-    ``cfg.band_skew_cap`` members) emits every pair of its rows that
-    touches a new row. In a hot group each new member pairs with the
-    hub: the group's minimum prior rank, else its minimum.
+    ``sig_perm``: the (rows, num_perm) int32 matrix of the collected
+    rows; ``rank``: each row's file rank (rank order is fid order;
+    duplicate rows of a file share one). The (band, slot tuple)
+    memberships (:func:`_band_groups`) sort into groups once. A cold
+    group (at most ``cfg.band_skew_cap`` members) emits every pair of its
+    rows that touches a new row. In a hot group each new member pairs
+    with the hub: the group's minimum prior rank, else its minimum.
 
     Returns None when the pair codes, 8 B each, sized from the group
     sizes before any is emitted, exceed ``budget``."""
     n = int(rank.max()) + 1 if rank.size else 0
-    row = np.repeat(np.arange(rank.size), cfg.bands)
-    bkeys = np.asarray(band_keys.combine_chunks().flatten())
-    order = np.lexsort((row, bkeys))
-    bkeys, row = bkeys[order], row[order]
-    _, starts, sizes = np.unique(bkeys, return_index=True, return_counts=True)
+    group = _band_groups(sig_perm, cfg)
+    row = np.argsort(group) // cfg.bands
+    sizes = np.bincount(group)
+    starts = np.cumsum(sizes) - sizes
     em = new[row]
     hot = sizes > cfg.band_skew_cap
     has_new = np.add.reduceat(em.astype(np.int64), starts) > 0

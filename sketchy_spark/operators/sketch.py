@@ -1,4 +1,4 @@
-"""Sketch stage: files -> signatures, one ``mapInPandas`` pass.
+"""Sketch stage: files -> signatures, one pass of the Python kernel.
 
 The engine's only UDF surface (SURVEY §2.6): everything downstream is
 built-in Spark SQL. Per Arrow batch, one fused numpy pass computes
@@ -27,16 +27,26 @@ Column contract (the ``signatures`` table, SURVEY §1.2):
 Content is intentionally NOT in the output: downstream stages scan a
 narrow table (column pruning at 100 TB scale); verification re-joins
 content for candidate pairs only.
+
+The kernel (:func:`sketch_contents`) runs in two shapes: as the
+``mapInPandas`` stage of :func:`sketch_files`, and as a
+:class:`SketchPass`, the sketch stage of a checkpoint store, whose tasks
+build each batch's columns as Arrow arrays (:func:`sketch_batch`) and
+write them without a trip back through the JVM (checkpoint.py).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.hashing import (
@@ -48,6 +58,7 @@ from sketchy_spark.hashing import (
     u64_to_i64,
     winnow,
 )
+from sketchy_spark.operators.lsh import with_fid
 
 SIGNATURE_SCHEMA = (
     "file_id string, repo string, path string, commit string, lang string, "
@@ -124,6 +135,28 @@ def _sketch_batches(
     return fn
 
 
+def _prepare(files: DataFrame) -> DataFrame:
+    """The sketch's JVM select: name projection, sha256 and length in
+    whole-stage codegen, and the content as binary."""
+    return files.select(
+        F.concat_ws("/", "repo", "path").alias("file_id"),
+        "repo",
+        "path",
+        "commit",
+        "lang",
+        F.sha2(F.col("content"), 256).alias("sha256"),  # row invariant
+        F.octet_length("content").cast("long").alias("n_bytes"),
+        F.col("content").cast("binary").alias("content"),
+    )
+
+
+def _schema(with_sig: bool, with_fp: bool) -> str:
+    schema = SIGNATURE_SCHEMA if with_sig else SLIM_SCHEMA
+    if not with_fp:
+        schema = schema.replace(", fingerprints array<long>", "")
+    return schema
+
+
 def sketch_files(
     files: DataFrame, cfg: SketchConfig, with_sig: bool = True,
     with_fp: bool = True,
@@ -140,19 +173,77 @@ def sketch_files(
     cascade with ``with_sig=True``; the full table remains the parity
     form (SURVEY §1.2).
     """
-    prepared = files.select(
-        F.concat_ws("/", "repo", "path").alias("file_id"),
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        F.sha2(F.col("content"), 256).alias("sha256"),  # row invariant
-        F.octet_length("content").cast("long").alias("n_bytes"),
-        F.col("content").cast("binary").alias("content"),
+    return _prepare(files).mapInPandas(
+        _sketch_batches(cfg, with_sig, with_fp),
+        schema=_schema(with_sig, with_fp),
     )
-    schema = SIGNATURE_SCHEMA if with_sig else SLIM_SCHEMA
-    if not with_fp:
-        schema = schema.replace(", fingerprints array<long>", "")
-    return prepared.mapInPandas(
-        _sketch_batches(cfg, with_sig, with_fp), schema=schema
+
+
+def sketch_batch(
+    batch: pa.RecordBatch, cfg: SketchConfig, with_sig: bool,
+    with_fp: bool, schema: pa.Schema,
+) -> pa.RecordBatch:
+    """:func:`sketch_contents` over one Arrow batch of prepared rows ->
+    the ``schema`` batch: the kernel's columns built as Arrow arrays, the
+    rest carried from ``batch``, with no pandas frame (a list column
+    converts from its per-row numpy arrays)."""
+    out = sketch_contents(
+        batch.column("content").to_pylist(), cfg, with_sig, with_fp
     )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(out[f.name], f.type) if f.name in out
+            else batch.column(f.name).cast(f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+@dataclass(frozen=True)
+class SketchPass:
+    """A checkpoint store's sketch stage, run by the store's writer
+    (``write_stage``): the prepared file rows, with ``fid``
+    (``xxhash64(file_id)``) computed in their JVM select, and the kernel
+    options. Its rows are those of ``with_fid(sketch_files(files, cfg,
+    with_sig, with_fp))``, in the same column order."""
+
+    rows: DataFrame
+    cfg: SketchConfig
+    with_sig: bool = True
+    with_fp: bool = True
+
+    @property
+    def schema(self) -> StructType:
+        return StructType.fromDDL(
+            _schema(self.with_sig, self.with_fp) + ", fid long"
+        )
+
+    @property
+    def arrow_schema(self) -> pa.Schema:
+        return to_arrow_schema(self.schema)
+
+    def kernel(self):
+        """The pass's per-batch function (picklable: it holds no
+        DataFrame): a prepared Arrow batch -> the stage's batch."""
+        schema = self.arrow_schema
+        cfg, with_sig, with_fp = self.cfg, self.with_sig, self.with_fp
+        return lambda batch: sketch_batch(
+            batch, cfg, with_sig, with_fp, schema
+        )
+
+    def frame(self) -> DataFrame:
+        """The pass as a ``mapInArrow`` frame, for a store that writes
+        through its session."""
+        kernel = self.kernel()
+        return self.rows.mapInArrow(
+            lambda batches: map(kernel, batches), self.schema
+        )
+
+
+def sketch_pass(
+    files: DataFrame, cfg: SketchConfig, with_sig: bool = True,
+    with_fp: bool = True,
+) -> SketchPass:
+    """The :class:`SketchPass` of ``files``, for ``write_stage``."""
+    return SketchPass(with_fid(_prepare(files)), cfg, with_sig, with_fp)

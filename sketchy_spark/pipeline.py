@@ -18,7 +18,8 @@ fid-keyed store with its new rows marked, and a plain run is the batch
 over an empty store, where every row is new. The stage follows the
 verify passes' resident rule (operators/verify.py, one
 ``RESIDENT_BYTES`` budget). While the signature rows fit it, at
-:func:`_resident_row_bytes` each, ONE Arrow table feeds the band join,
+:func:`_resident_row_bytes` each, ONE Arrow table feeds the band join
+(grouped by each band's sig_perm slots, so no band key is collected),
 the exact-sha edges and the cascade on the driver, as the reference
 re-ranks its in-memory sketch collection (src/sketchy.rs:81); a plain
 run gets it from one collect of the cached signatures, which also feeds
@@ -33,7 +34,9 @@ to Spark stages (:func:`candidate_pairs_fid`,
 Every run labels a cluster by its least file_id (string order), the
 rule of operators/cluster.py, whether its clusters come from the driver
 stage, from :func:`assign_clusters_fid` or from a checkpoint store
-(``run_pipeline(store=...)``).
+(``run_pipeline(store=...)``). A stored run's signatures stage is a
+sketch pass (operators/sketch.py ``sketch_pass``) whose tasks write the
+stage's parquet parts themselves, as an incremental batch's are.
 """
 
 from __future__ import annotations
@@ -54,14 +57,17 @@ from sketchy_spark.operators.cluster import (
 )
 from sketchy_spark.operators.lsh import (
     attach_file_ids,
-    band_keys_expr,
     candidate_pairs_fid,
     driver_band_pairs,
     driver_exact_edges,
     exact_dup_edges_fid,
     with_fid,
 )
-from sketchy_spark.operators.sketch import sketch_contents, sketch_files
+from sketchy_spark.operators.sketch import (
+    sketch_contents,
+    sketch_files,
+    sketch_pass,
+)
 from sketchy_spark.operators.verify import (
     CONTAINMENT_SCHEMA,
     containment_candidates,
@@ -119,7 +125,8 @@ def run_pipeline(
 
     ``store`` (a :mod:`sketchy_spark.checkpoint` store) makes the run
     resumable: each stage of ``checkpoint.STAGES`` — the slim fid-keyed
-    signatures, the ``(a_fid, b_fid)`` edges, the clusters and, with
+    signatures (a :func:`sketch_pass`, which the store's writer runs),
+    the ``(a_fid, b_fid)`` edges, the clusters and, with
     ``with_containment``, the containment pairs — goes through
     ``store.get_or_compute``, so a stage the store holds complete is read
     back and any other is computed by the same code as a run without a
@@ -145,14 +152,15 @@ def run_pipeline(
     # read for borderline pairs, which the cascade re-sketches on demand —
     # the cached working set stays ~2 KB/row. Winnow fingerprints are
     # skipped when the containment pass is off, unless the stage is
-    # stored, where a later run with the pass may resume it.
-    sketch = with_fid(
-        sketch_files(
-            files, cfg, with_sig=False,
-            with_fp=with_containment or store is not None,
-        )
+    # stored, where a later run with the pass may resume it; a stored
+    # stage is written by the sketch tasks themselves (checkpoint.py).
+    signatures = stage(
+        "signatures",
+        lambda: sketch_pass(files, cfg, with_sig=False) if store is not None
+        else with_fid(sketch_files(
+            files, cfg, with_sig=False, with_fp=with_containment
+        )),
     )
-    signatures = stage("signatures", lambda: sketch)
     # ``internal`` collects every frame the Spark stages persist (band
     # cache, candidate pairs, verified pairs, and the scan-side cascade
     # estimates, containment groups and staged pairs) so unpersist() can
@@ -213,20 +221,18 @@ def run_pipeline(
 
 
 # The stored or collected signature columns the resident edges stage
-# reads (band_keys: band_keys_expr, computed in the sketch job).
-RESIDENT_COLS = [
-    "fid", "sha256", "sig_perm", "simhash", "n_shingles", "band_keys",
-]
+# reads; its band join groups the sig_perm slots themselves.
+RESIDENT_COLS = ["fid", "sha256", "sig_perm", "simhash", "n_shingles"]
 
 
 def _resident_row_bytes(cfg: SketchConfig) -> int:
     """Driver bytes per signature row in the resident edges stage:
-    sig_perm (4 B a slot), band keys (8 B a band), fid, simhash,
-    n_shingles and the new-row flag (32 B), the sha256 hex (64 B) and the
-    file_id that a plain run attaches and a batch's clusters read
-    (counted as 64 B): ~0.93 KB at the defaults. A plain run's n_bytes,
-    fingerprints and fetched contents count apart."""
-    return 4 * cfg.num_perm + 8 * cfg.bands + 32 + 64 + 64
+    sig_perm (4 B a slot), fid, simhash, n_shingles and the new-row flag
+    (32 B), the sha256 hex (64 B) and the file_id that a plain run
+    attaches and a batch's clusters read (counted as 64 B): 672 B at the
+    defaults. A plain run's n_bytes, fingerprints and fetched contents
+    count apart."""
+    return 4 * cfg.num_perm + 32 + 64 + 64
 
 
 def _resident_edges(
@@ -253,7 +259,8 @@ def _resident_edges(
         tbl["fid"].to_numpy(), return_index=True, return_inverse=True
     )
     n = fids.size
-    got = driver_band_pairs(tbl["band_keys"], rank, cfg, budget, is_new)
+    mat = verify._sig_perm_matrix(tbl, cfg)
+    got = driver_band_pairs(mat, rank, cfg, budget, is_new)
     if got is None:
         return None
     ca, cb, budget = got
@@ -268,7 +275,7 @@ def _resident_edges(
             ))
 
         kept = verify._cascade_core(
-            verify._sig_perm_matrix(tbl, cfg)[first],
+            mat[first],
             tbl["simhash"].to_numpy()[first],
             tbl["n_shingles"].to_numpy()[first],
             ca, cb, cfg, verify.CASCADE_MARGIN, budget, fetch_rows,
@@ -306,9 +313,8 @@ def _resident_frames(
     if budget <= 0:
         return None
     tbl = signatures.select(
-        "file_id", "n_bytes", *RESIDENT_COLS[:-1],
+        "file_id", "n_bytes", *RESIDENT_COLS,
         *(["fingerprints"] if shared else []),
-        band_keys_expr(cfg).alias("band_keys"),
     ).toArrow()
     spark = signatures.sparkSession
     cand, cont_ids, cost = None, [], 0  # the containment pass, if it fits

@@ -24,10 +24,13 @@ bug: promoting a rewritten sig_all before the edges marker permanently
 double-counted the batch).
 
 Every stored key is a fid long (``with_fid``, operators/lsh.py): a
-``sig_batch`` stage carries each file's ``fid`` and ``band_keys``
-(:func:`band_keys_expr`, the one band-hash implementation), both
-computed in its sketch write job, and an ``edges_batch`` stage holds
-``(a_fid, b_fid)`` rows with a_fid < b_fid. A batch runs the plain
+``sig_batch`` stage carries each file's ``fid``, computed in the
+sketch's JVM select, and an ``edges_batch`` stage holds ``(a_fid,
+b_fid)`` rows with a_fid < b_fid. The ``sig_batch`` stage is written by
+the sketch tasks themselves: the store runs the batch's
+:func:`sketch_pass` as one stage whose tasks sketch their rows and
+write their own part files (checkpoint.py), so the 8 KB bottom-s
+``sig`` never crosses back into the JVM. A batch runs the plain
 pipeline's own edges stage (pipeline.py) over the stored signatures with
 its new rows marked: new x all candidates under the one hot-band rule
 (each new member of a hot band pairs with the band's pre-batch minimum),
@@ -37,7 +40,7 @@ pre-batch minimum.
 Where the stage runs follows the verify passes' resident rule
 (operators/verify.py): while the accumulated store fits the 30 MB
 ``RESIDENT_BYTES`` budget, judged from the stage manifests' row counts,
-the batch's one Spark job is its sketch write, and the bytes after it
+the batch's one Spark job is its sketch pass, and the bytes after it
 move with Arrow on the driver, as the reference re-ranks its in-memory
 sketch collection on every arrival (src/sketchy.rs:81). On the parquet
 shim (checkpoint.py) that means no further Spark job:
@@ -75,8 +78,7 @@ from sketchy_spark.operators.cluster import (
     assign_clusters_fid,
     least_member_labels,
 )
-from sketchy_spark.operators.lsh import band_keys_expr, with_fid
-from sketchy_spark.operators.sketch import sketch_files
+from sketchy_spark.operators.sketch import sketch_pass
 from sketchy_spark.pipeline import (
     RESIDENT_COLS,
     _resident_edges,
@@ -87,17 +89,8 @@ from sketchy_spark.pipeline import (
 # Unused here, but perfbench/spans.py wraps this module's names for them.
 from sketchy_spark.operators.cluster import assign_clusters  # noqa: F401
 from sketchy_spark.operators.lsh import band_table  # noqa: F401
+from sketchy_spark.operators.sketch import sketch_files  # noqa: F401
 from sketchy_spark.operators.verify import verified_pairs  # noqa: F401
-
-
-def _sig_stage(files: DataFrame, cfg: SketchConfig) -> DataFrame:
-    """A batch's ``sig_batch`` stage: the sketch without winnow
-    fingerprints, which nothing on the incremental path reads, plus the
-    ``fid`` and the ``band_keys`` of :func:`band_keys_expr`, computed in
-    the same write job."""
-    return with_fid(sketch_files(files, cfg, with_fp=False)).select(
-        "*", band_keys_expr(cfg).alias("band_keys")
-    )
 
 
 def _concat(tables: list[pa.Table]) -> pa.Table:
@@ -327,8 +320,8 @@ class IncrementalDedup:
         stage manifests' row counts:
 
         - Resident, while the stored rows fit at
-          ``pipeline._resident_row_bytes`` each (~0.93 KB at the
-          defaults): the sketch write is the batch's one Spark job.
+          ``pipeline._resident_row_bytes`` each (672 B at the
+          defaults): the sketch pass is the batch's one Spark job.
           ``store.read_table`` reads the previous and new signature
           stages for ``pipeline._resident_edges``, which fetches the
           borderline files' stored ``sig`` with one filtered
@@ -349,7 +342,10 @@ class IncrementalDedup:
         if self.store.is_complete(stage_edge):
             return  # terminal marker present -> fully ingested
         if not self.store.is_complete(stage_sig):
-            self.store.write_stage(stage_sig, _sig_stage(files, self.cfg))
+            # winnow fingerprints: nothing on the incremental path reads them
+            self.store.write_stage(
+                stage_sig, sketch_pass(files, self.cfg, with_fp=False)
+            )
         # "prev" = every OTHER ingested batch, by INGEST-TIME order, not
         # id order: an out-of-order BACKFILL (id below already-ingested
         # ids) must still pair against the higher-id batches already in

@@ -251,7 +251,7 @@ def test_incremental_resumes_store_with_fingerprint_stages(
     run's."""
     import sketchy_spark.streaming.incremental as incremental
     from sketchy_spark.operators import verify as V
-    from sketchy_spark.operators.sketch import sketch_files
+    from sketchy_spark.operators.sketch import sketch_pass
 
     if not resident:
         monkeypatch.setattr(V, "RESIDENT_BYTES", 0)
@@ -266,7 +266,7 @@ def test_incremental_resumes_store_with_fingerprint_stages(
     store = CheckpointStore(str(tmp_path / "mixed"), CFG.config_hash)
     with monkeypatch.context() as mp:  # a store written with fingerprints
         mp.setattr(
-            incremental, "sketch_files", lambda f, cfg, **kw: sketch_files(f, cfg)
+            incremental, "sketch_pass", lambda f, cfg, **kw: sketch_pass(f, cfg)
         )
         IncrementalDedup(spark, store, CFG).ingest_batch(0, batch(0))
     inc = IncrementalDedup(spark, store, CFG)  # resumed run
@@ -699,6 +699,82 @@ def test_read_stage_pins_recorded_schema(spark, tmp_path):
         assert legacy.count() == store.manifest(stage)["rows"]
 
 
+def test_sketch_pass_stage_matches_sketch_files(spark, tmp_path, monkeypatch):
+    """A ``sig_batch`` stage written by the sketch tasks (``write_stage``
+    of a ``sketch_pass``: one part file a task, no Spark write) holds the
+    rows of ``with_fid(sketch_files(files, cfg, with_fp=False))``, in
+    every column and the same column order, ``sig`` order included. It
+    reads back the same through ``read_stage`` (the manifest's schema, no
+    inference job) and ``read_table``, and its manifest lineage sums to
+    its row count. A leftover ``.tmp`` directory and a killed attempt's
+    temp part are neither committed nor read, and an empty batch still
+    stores its schema."""
+    from pathlib import Path
+
+    from sketchy_spark import checkpoint
+    from sketchy_spark.operators.lsh import with_fid
+    from sketchy_spark.operators.sketch import sketch_files, sketch_pass
+
+    files = corpus_df(spark, 150, partitions=3).cache()
+    want = with_fid(sketch_files(files, CFG, with_fp=False))
+    expected = want.toArrow()  # populates the files cache
+    store = CheckpointStore(str(tmp_path / "pass"), CFG.config_hash)
+    stage = "sig_batch_00000"
+    stale = Path(store.stage_path(stage) + ".tmp")
+    stale.mkdir(parents=True)
+    (stale / "part-00007-sketch.parquet").write_bytes(b"killed write")
+    write_parts = checkpoint._write_sketch_parts
+
+    def killed_attempt_first(sp, tmp):
+        (Path(tmp) / ".part-00000-sketch.parquet.0").write_bytes(b"killed")
+        write_parts(sp, tmp)
+
+    sc = spark.sparkContext
+    with monkeypatch.context() as mp:
+        mp.setattr(checkpoint, "_write_sketch_parts", killed_attempt_first)
+        sc.setJobGroup("sketch-pass", "sketch pass write")
+        try:
+            store.write_stage(stage, sketch_pass(files, CFG, with_fp=False))
+            jobs = list(sc.statusTracker().getJobIdsForGroup("sketch-pass"))
+            read = store.read_stage(spark, stage)
+            read_jobs = list(
+                sc.statusTracker().getJobIdsForGroup("sketch-pass")
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1 and read_jobs == jobs, (jobs, read_jobs)
+    m = store.manifest(stage)
+    assert [p["file"] for p in m["partitions"]] == [
+        f"part-{i:05d}-sketch.parquet" for i in range(3)
+    ]
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 150
+    assert sorted(f.name for f in Path(store.stage_path(stage)).iterdir()) == [
+        p["file"] for p in m["partitions"]
+    ]
+
+    def rows(tbl):
+        return tbl.sort_by("file_id").to_pylist()
+
+    assert read.columns == want.columns
+    assert rows(read.toArrow()) == rows(expected)
+    assert rows(store.read_table(stage, want.columns)) == rows(expected)
+
+    # empty partitions, each task writing an empty part, and a plan with
+    # no partition at all, whose empty part the driver writes
+    for b, empty in enumerate(
+        (spark.createDataFrame([], files.schema), files.where("false")),
+        start=1,
+    ):
+        name = f"sig_batch_{b:05d}"
+        store.write_stage(name, sketch_pass(empty, CFG))
+        assert store.manifest(name)["rows"] == 0
+        assert store.manifest(name)["partitions"]
+        got = store.read_stage(spark, name)
+        assert got.columns == [*sketch_files(empty, CFG).columns, "fid"]
+        assert got.count() == 0
+    files.unpersist()
+
+
 def _clique(names):
     """Near-duplicate files sharing one 120-line body, each with its own
     last line: above cap 8 their common band keys are hot."""
@@ -745,38 +821,38 @@ def _band_truth(new_bands, prev_bands, cap):
     return want, hot
 
 
-def _stage_table(sigs, cfg):
+def _stage_table(sigs):
     """The columns the resident edges stage reads from a stored sig
     stage, from a fid-keyed sketch frame."""
-    from sketchy_spark.operators.lsh import band_keys_expr
     from sketchy_spark.pipeline import RESIDENT_COLS
 
-    return sigs.select(
-        "*", band_keys_expr(cfg).alias("band_keys")
-    ).select(*RESIDENT_COLS).toArrow()
+    return sigs.select(*RESIDENT_COLS).toArrow()
 
 
 def test_new_vs_all_candidates_match_band_truth(spark):
     """The incremental candidate set, from the Spark band join
     (``candidate_pairs_fid`` with the new-rows mask, eager and lazy) and
-    from the driver's (``driver_band_pairs`` over the stored columns),
-    equals a pandas truth built from the collected band tables, with hot
-    keys present (cap 8, a new arrival whose fid is the minimum of every
-    hot band) and with an empty hot set (default cap), whose eager Spark
-    plan has no hub branch."""
+    from the driver's (``driver_band_pairs`` over the stored sig_perm
+    matrix), equals a pandas truth built from the collected band tables,
+    with hot keys present (cap 8, a new arrival whose fid is the minimum
+    of every hot band) and with an empty hot set (default cap), whose
+    eager Spark plan has no hub branch. The driver's (band, slot tuple)
+    groups are the band-key groups of ``band_keys_expr``."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
     from sketchy_spark.corpus import corpus_pandas
     from sketchy_spark.operators.lsh import (
+        _band_groups,
+        band_keys_expr,
         band_table,
         candidate_pairs_fid,
         driver_band_pairs,
         with_fid,
     )
     from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import RESIDENT_BYTES
+    from sketchy_spark.operators.verify import RESIDENT_BYTES, _sig_perm_matrix
     from sketchy_spark.plans.explain import physical_plan
 
     corpus = corpus_pandas(160)[["repo", "path", "commit", "lang", "content"]]
@@ -811,14 +887,25 @@ def test_new_vs_all_candidates_match_band_truth(spark):
         lazy = candidate_pairs_fid(sigs, cfg, new=F.col("is_new"))
         assert {(r.a_fid, r.b_fid) for r in lazy.collect()} == want
 
-        prev_tbl = _stage_table(prev, cfg)
-        tbl = pa.concat_tables([prev_tbl, _stage_table(new, cfg)])
+        prev_tbl = _stage_table(prev)
+        tbl = pa.concat_tables([prev_tbl, _stage_table(new)])
         fids, rank = np.unique(tbl["fid"].to_numpy(), return_inverse=True)
+        mat = _sig_perm_matrix(tbl, cfg)
         a, b, _ = driver_band_pairs(
-            tbl["band_keys"], rank, cfg, RESIDENT_BYTES,
+            mat, rank, cfg, RESIDENT_BYTES,
             np.arange(tbl.num_rows) >= prev_tbl.num_rows,
         )
-        assert set(zip(fids[a], fids[b])) == want
+        assert set(zip(fids[a], fids[b])) == got
+        # one (band, slot tuple) group per band key, and back
+        keys = np.concatenate([
+            np.asarray(
+                sigs.select(band_keys_expr(cfg).alias("k")).toArrow()["k"]
+                .combine_chunks().flatten()
+            )
+            for sigs in (prev, new)
+        ])
+        groups = _band_groups(mat, cfg)
+        assert len(set(zip(groups, keys))) == len(set(keys)) == groups.max() + 1
 
         assert ("hub#" in physical_plan(cand)) == expect_hot
         if expect_hot:
@@ -896,7 +983,7 @@ def test_resident_ingest_matches_scan_side(spark, tmp_path, monkeypatch):
 
 def test_resident_ingest_runs_one_job_per_batch(spark, tmp_path):
     """While the store fits the resident budget, a batch's one Spark job
-    is its sketch write: the stage reads, the borderline sigs, the edges
+    is its sketch pass: the stage reads, the borderline sigs, the edges
     stage, compaction and the clusters move with Arrow on the driver.
     Jobs are counted by job group over a 3-batch ingest with
     ``compact_every=2`` (batch 1 compacts), a compact() that folds batch
