@@ -54,6 +54,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from sketchy_spark.operators.sketch import SketchPass
+from sketchy_spark.sources.tables import struct_type
 
 MANIFEST_DIR = "_manifest"
 # Footer key under which Spark's parquet writer stores the row schema.
@@ -63,6 +64,7 @@ ARROW_PART = "part-00000-arrow.parquet"
 # Hash columns of a sketch pass: one distinct value a file (or a slot),
 # so a dictionary page only costs the writer time.
 HASH_COLS = {"sig", "sig_perm", "simhash", "fingerprints", "fid", "sha256"}
+_PARTS_SCHEMA = struct_type("part long, rows long")
 
 
 def _write_sketch_parts(sp: SketchPass, tmp: str) -> None:
@@ -101,7 +103,7 @@ def _write_sketch_parts(sp: SketchPass, tmp: str) -> None:
             "part": [part], "rows": [write(part, ctx.attemptNumber(), batches)],
         })
 
-    if not sp.rows.mapInArrow(task, "part long, rows long").collect():
+    if not sp.rows.mapInArrow(task, _PARTS_SCHEMA).collect():
         write(0, 0, [])
     for temp in Path(tmp).glob(".part-*"):  # a killed attempt's leftover
         temp.unlink()

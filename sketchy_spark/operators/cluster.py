@@ -20,6 +20,10 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from sketchy_spark.sources.tables import struct_type
+
+CLUSTERS_SCHEMA = struct_type("file_id string, cluster_id string")
+
 
 class ConvergenceError(RuntimeError):
     pass
@@ -104,9 +108,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     pdf = edges.select("a_id", "b_id").toPandas()  # Arrow transfer
     spark = edges.sparkSession
     if len(pdf) == 0:
-        return spark.createDataFrame(
-            [], "file_id string, cluster_id string"
-        )
+        return spark.createDataFrame([], CLUSTERS_SCHEMA)
     codes, uniques = pd.factorize(
         pd.concat([pdf["a_id"], pdf["b_id"]], ignore_index=True)
     )

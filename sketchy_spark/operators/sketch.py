@@ -43,7 +43,6 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -58,19 +57,24 @@ from sketchy_spark.hashing import (
     u64_to_i64,
     winnow,
 )
-from sketchy_spark.operators.lsh import with_fid
+from sketchy_spark.sources.tables import struct_type
 
-SIGNATURE_SCHEMA = (
+# The signatures table's columns (module docstring), then a sketch pass's.
+SIGNATURE_SCHEMA = struct_type(
     "file_id string, repo string, path string, commit string, lang string, "
     "sha256 string, n_bytes long, n_shingles long, sig array<long>, "
-    "sig_perm array<int>, simhash long, fingerprints array<long>"
+    "sig_perm array<int>, simhash long, fingerprints array<long>, fid long"
 )
-
-SLIM_SCHEMA = (
-    "file_id string, repo string, path string, commit string, lang string, "
-    "sha256 string, n_bytes long, n_shingles long, "
-    "sig_perm array<int>, simhash long, fingerprints array<long>"
-)
+# (with_sig, with_fp, fid) -> the sketch's output schema, Spark and Arrow:
+# each of those three columns only when its flag is on.
+_SCHEMAS = {
+    (sig, fp, fid): StructType([
+        f for f in SIGNATURE_SCHEMA
+        if {"sig": sig, "fingerprints": fp, "fid": fid}.get(f.name, True)
+    ])
+    for sig in (True, False) for fp in (True, False) for fid in (True, False)
+}
+_ARROW_SCHEMAS = {k: to_arrow_schema(v) for k, v in _SCHEMAS.items()}
 
 _CARRY = ["file_id", "repo", "path", "commit", "lang", "sha256", "n_bytes"]
 
@@ -135,26 +139,21 @@ def _sketch_batches(
     return fn
 
 
-def _prepare(files: DataFrame) -> DataFrame:
-    """The sketch's JVM select: name projection, sha256 and length in
-    whole-stage codegen, and the content as binary."""
-    return files.select(
-        F.concat_ws("/", "repo", "path").alias("file_id"),
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        F.sha2(F.col("content"), 256).alias("sha256"),  # row invariant
-        F.octet_length("content").cast("long").alias("n_bytes"),
-        F.col("content").cast("binary").alias("content"),
-    )
+# The sketch's JVM select as one ``selectExpr`` (one call builds it):
+# name projection, sha256 and length in whole-stage codegen, the content
+# as binary, and for a sketch pass fid = xxhash64(file_id).
+_FILE_ID = "concat_ws('/', `repo`, `path`)"
+_PREPARE = (
+    f"{_FILE_ID} AS `file_id`", "`repo`", "`path`", "`commit`", "`lang`",
+    "sha2(`content`, 256) AS `sha256`",  # row invariant
+    "CAST(octet_length(`content`) AS BIGINT) AS `n_bytes`",
+    "CAST(`content` AS BINARY) AS `content`",
+)
 
 
-def _schema(with_sig: bool, with_fp: bool) -> str:
-    schema = SIGNATURE_SCHEMA if with_sig else SLIM_SCHEMA
-    if not with_fp:
-        schema = schema.replace(", fingerprints array<long>", "")
-    return schema
+def _prepare(files: DataFrame, with_fid: bool = False) -> DataFrame:
+    fid = [f"xxhash64({_FILE_ID}) AS `fid`"] if with_fid else []
+    return files.selectExpr(*_PREPARE, *fid)
 
 
 def sketch_files(
@@ -175,21 +174,21 @@ def sketch_files(
     """
     return _prepare(files).mapInPandas(
         _sketch_batches(cfg, with_sig, with_fp),
-        schema=_schema(with_sig, with_fp),
+        schema=_SCHEMAS[with_sig, with_fp, False],
     )
 
 
 def sketch_batch(
-    batch: pa.RecordBatch, cfg: SketchConfig, with_sig: bool,
-    with_fp: bool, schema: pa.Schema,
+    batch: pa.RecordBatch, cfg: SketchConfig, with_sig: bool, with_fp: bool
 ) -> pa.RecordBatch:
     """:func:`sketch_contents` over one Arrow batch of prepared rows ->
-    the ``schema`` batch: the kernel's columns built as Arrow arrays, the
-    rest carried from ``batch``, with no pandas frame (a list column
+    the sketch pass's batch: the kernel's columns built as Arrow arrays,
+    the rest carried from ``batch``, with no pandas frame (a list column
     converts from its per-row numpy arrays)."""
     out = sketch_contents(
         batch.column("content").to_pylist(), cfg, with_sig, with_fp
     )
+    schema = _ARROW_SCHEMAS[with_sig, with_fp, True]
     return pa.RecordBatch.from_arrays(
         [
             pa.array(out[f.name], f.type) if f.name in out
@@ -215,22 +214,17 @@ class SketchPass:
 
     @property
     def schema(self) -> StructType:
-        return StructType.fromDDL(
-            _schema(self.with_sig, self.with_fp) + ", fid long"
-        )
+        return _SCHEMAS[self.with_sig, self.with_fp, True]
 
     @property
     def arrow_schema(self) -> pa.Schema:
-        return to_arrow_schema(self.schema)
+        return _ARROW_SCHEMAS[self.with_sig, self.with_fp, True]
 
     def kernel(self):
         """The pass's per-batch function (picklable: it holds no
         DataFrame): a prepared Arrow batch -> the stage's batch."""
-        schema = self.arrow_schema
         cfg, with_sig, with_fp = self.cfg, self.with_sig, self.with_fp
-        return lambda batch: sketch_batch(
-            batch, cfg, with_sig, with_fp, schema
-        )
+        return lambda batch: sketch_batch(batch, cfg, with_sig, with_fp)
 
     def frame(self) -> DataFrame:
         """The pass as a ``mapInArrow`` frame, for a store that writes
@@ -246,4 +240,4 @@ def sketch_pass(
     with_fp: bool = True,
 ) -> SketchPass:
     """The :class:`SketchPass` of ``files``, for ``write_stage``."""
-    return SketchPass(with_fid(_prepare(files)), cfg, with_sig, with_fp)
+    return SketchPass(_prepare(files, with_fid=True), cfg, with_sig, with_fp)

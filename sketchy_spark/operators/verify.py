@@ -47,10 +47,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from sketchy_spark.config import SketchConfig
+from sketchy_spark.config import DEFAULT_CONFIG, SketchConfig
+from sketchy_spark.operators.sketch import _prepare
+from sketchy_spark.sources.tables import struct_type
 
 
 # Caches persisted by the scan-side cascade and containment pass for
@@ -398,7 +401,7 @@ def _cascade_core(
 
     Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
     the borderline band (and every small-doc pair) gets its rows' sigs
-    from ``fetch(rows) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
+    from ``fetch(rows, left) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
     Returns None, before fetching, when those sigs (8 * s B per file,
     plus the rows' ``content_bytes`` if given) exceed ``sig_budget``."""
     tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
@@ -420,9 +423,10 @@ def _cascade_core(
     if border.any():
         wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
         extra = 0 if content_bytes is None else content_bytes[wanted_pos].sum()
-        if 8 * cfg.s * wanted_pos.size + int(extra) > sig_budget:
+        left = sig_budget - 8 * cfg.s * wanted_pos.size - int(extra)
+        if left < 0:
             return None
-        sig_of = fetch(wanted_pos)
+        sig_of = fetch(wanted_pos, left)  # the budget they leave
         jac = est.copy()
         jac[border] = _bottom_s_jaccard(
             [sig_of.get(i, _NO_SIG) for i in ai[border]],
@@ -433,10 +437,10 @@ def _cascade_core(
     return keep, jac, ham
 
 
-CONTAINMENT_SCHEMA = (
+CONTAINMENT_SCHEMA = struct_type(
     "small_id string, big_id string, containment double, overlap_chars long"
 )
-_CANDIDATE_SCHEMA = (
+_CANDIDATE_SCHEMA = struct_type(
     "a_id string, b_id string, containment double, a_nb long, b_nb long"
 )
 
@@ -614,13 +618,11 @@ def _scan_side_containment_candidates(
             (F.col("n_all") - F.coalesce("n_hot", F.lit(0))).alias("n_fp"),
         )
     )
-    a_cnt = counts.select(
-        F.col("file_id").alias("a_id"), F.col("n_fp").alias("a_nfp"),
-        F.col("n_bytes").alias("a_nb"),
-    )
-    b_cnt = counts.select(
-        F.col("file_id").alias("b_id"), F.col("n_fp").alias("b_nfp"),
-        F.col("n_bytes").alias("b_nb"),
+    a_cnt, b_cnt = (
+        counts.selectExpr(
+            f"file_id AS {s}_id", f"n_fp AS {s}_nfp", f"n_bytes AS {s}_nb"
+        )
+        for s in "ab"
     )
     return (
         pairs.join(a_cnt, "a_id")
@@ -674,12 +676,12 @@ def containment_verified(
       Python UDF stage runs and nothing persists.
     - Scan-side (``resident=False``, or above the budget): both tiers run
       on executors over a content-wide candidate join — tier 1 as JVM
-      ``instr``, tier 2 as a ``mapInPandas`` stage. ``persisted``
-      receives its staged pair cache for the caller to unpersist (module
-      registry otherwise, as in the cascade).
+      ``instr``, tier 2 as a ``mapInPandas`` stage; when only the
+      contents overflowed, the candidate rows the check collected are
+      the join's (local) candidate side, not a second candidate stage.
+      ``persisted`` receives its staged pair cache for the caller to
+      unpersist (module registry otherwise, as in the cascade).
     """
-    from sketchy_spark.config import DEFAULT_CONFIG
-
     cfg = cfg or DEFAULT_CONFIG
     if resident is not False:
         src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
@@ -692,6 +694,8 @@ def containment_verified(
                 files.sparkSession, cand, _file_contents(files, ids), cfg,
                 min_overlap_chars,
             )
+        if cand.num_rows <= RESIDENT_BYTES // 8:  # the rows are complete
+            candidates = files.sparkSession.createDataFrame(cand)
     return _scan_side_containment_verified(
         candidates, files, cfg, min_overlap_chars, persisted
     )
@@ -709,21 +713,17 @@ def _containment_files(cand) -> tuple[np.ndarray, int]:
 
 
 def _file_contents(files: DataFrame, ids) -> dict:
-    """{file_id: utf-8 content} of the file_ids ``ids``: one broadcast
-    ``left_semi`` Arrow collect, none for no ids."""
-    if not len(ids):
+    """{file_id: utf-8 content} of ``ids`` by a broadcast ``left_semi``
+    collect (none for no ids); of every file by one scan for None."""
+    if ids is not None and not len(ids):
         return {}
-    wanted = files.sparkSession.createDataFrame(
-        pd.DataFrame({"file_id": ids}), "file_id string"
-    )
-    got = (
-        files.select(
-            F.concat_ws("/", "repo", "path").alias("file_id"),
-            F.col("content").cast("binary").alias("content"),
+    got = _prepare(files).select("file_id", "content")
+    if ids is not None:
+        wanted = files.sparkSession.createDataFrame(
+            pa.table({"file_id": pa.array(ids, pa.string())})
         )
-        .join(F.broadcast(wanted), "file_id", "left_semi")
-        .toArrow()
-    )
+        got = got.join(F.broadcast(wanted), "file_id", "left_semi")
+    got = got.toArrow()
     return dict(zip(got["file_id"].to_pylist(), got["content"].to_pylist()))
 
 
@@ -764,9 +764,12 @@ def _driver_containment_verified(
         "containment": 1.0, "overlap_chars": nb[small[full]],
     })
     return spark.createDataFrame(
-        pd.concat(
-            [df for df in (whole, partial) if len(df)] or [whole],
-            ignore_index=True,
+        pa.Table.from_pandas(
+            pd.concat(
+                [df for df in (whole, partial) if len(df)] or [whole],
+                ignore_index=True,
+            ),
+            preserve_index=False,
         ),
         CONTAINMENT_SCHEMA,
     )
@@ -777,20 +780,13 @@ def _scan_side_containment_verified(
     min_overlap_chars: int, persisted: list | None,
 ) -> DataFrame:
     """The verify stage on executors (see :func:`containment_verified`)."""
-    c = files.select(
-        F.concat_ws("/", "repo", "path").alias("file_id"),
-        F.col("content"),
-        F.octet_length("content").alias("nb"),
+    c = files.selectExpr(
+        "concat_ws('/', repo, path) AS id", "content",
+        "octet_length(content) AS nb",
     )
-    a = c.select(
-        F.col("file_id").alias("a_id"),
-        F.col("content").alias("a_content"),
-        F.col("nb").alias("a_nb"),
-    )
-    b = c.select(
-        F.col("file_id").alias("b_id"),
-        F.col("content").alias("b_content"),
-        F.col("nb").alias("b_nb"),
+    a, b = (
+        c.selectExpr(*(f"{x} AS {side}_{x}" for x in ("id", "content", "nb")))
+        for side in "ab"
     )
     df = candidates.select("a_id", "b_id").join(a, "a_id").join(b, "b_id")
     small_first = F.col("a_nb") <= F.col("b_nb")

@@ -21,13 +21,13 @@ verify passes' resident rule (operators/verify.py, one
 :func:`_resident_row_bytes` each, ONE Arrow table feeds the band join
 (grouped by each band's sig_perm slots, so no band key is collected),
 the exact-sha edges and the cascade on the driver, as the reference
-re-ranks its in-memory sketch collection (src/sketchy.rs:81); a plain
-run gets it from one collect of the cached signatures, which also feeds
-the union-find and the containment pass, and one content collect feeds
-the borderline re-sketch and the containment verify, so the sketch is
-its only Python stage. Above the budget, or when the pair codes or the
-borderline sigs would overflow what the table left, the stage hands over
-to Spark stages (:func:`candidate_pairs_fid`,
+re-ranks its in-memory sketch collection (src/sketchy.rs:81). A plain
+run is three Spark jobs: the sketch (its noop write fills the signature
+cache and sizes the run), one signature collect, which also feeds the
+union-find and the containment pass, and one content collect for the
+borderline re-sketch and the containment verify. Above the budget, or
+when the pair codes or the borderline sigs would overflow what the table
+left, the stage hands over to Spark stages (:func:`candidate_pairs_fid`,
 :func:`verified_pairs_cascade`, :func:`exact_dup_edges_fid`, then
 :func:`assign_clusters_fid`), with identical rows.
 
@@ -44,14 +44,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 from sketchy_spark.config import DEFAULT_CONFIG, SketchConfig
 from sketchy_spark.operators import verify
 from sketchy_spark.operators.cluster import (
+    CLUSTERS_SCHEMA,
     assign_clusters_fid,
     least_member_labels,
 )
@@ -74,6 +75,14 @@ from sketchy_spark.operators.verify import (
     containment_verified,
     verified_pairs_cascade,
 )
+from sketchy_spark.sources.tables import struct_type
+
+# The local result frames' schemas: those of the Spark stages' frames.
+_CANDIDATES_SCHEMA = struct_type("a_id string, b_id string")
+_VERIFIED_SCHEMA = struct_type(
+    verify._verified_schema("a_id", "b_id", "string")
+)
+_EDGES_SCHEMA = struct_type("a_fid long, b_fid long")
 
 
 @dataclass
@@ -169,17 +178,19 @@ def run_pipeline(
     n_files = n_fp = None
     if cache_signatures:
         # signatures feed every later stage; recomputing the UDF stage
-        # per consumer would multiply the dominant cost. This aggregate
-        # is the run's first action after any stage write: it populates
-        # the cache and, in the same job, counts the rows that size the
-        # resident stage and the cascade, and the fingerprint rows that
-        # size the containment pass. Every later read of the signatures
-        # is a memory scan.
-        signatures = signatures.cache()
-        n_files, n_fp = signatures.agg(
-            F.count("*"),
-            F.sum(F.size("fingerprints")) if with_containment else F.lit(None),
-        ).first()
+        # per consumer would multiply the dominant cost. One noop write,
+        # the run's first action after any stage write, populates the
+        # cache while an Observation counts the rows that size the
+        # resident stage and the fingerprints that size the containment
+        # pass. Every later read of the signatures is a memory scan.
+        sizes = Observation()
+        fp = [F.sum(F.size("fingerprints")).alias("fp")]
+        signatures = signatures.observe(
+            sizes, F.count(F.lit(1)).alias("rows"),
+            *(fp if with_containment else []),
+        ).cache()
+        signatures.write.format("noop").mode("overwrite").save()
+        n_files, n_fp = sizes.get["rows"], sizes.get.get("fp")
 
     # (candidates, verified, edges, clusters, containment) when the edges
     # stage is computed in this run; empty when the store resumed it.
@@ -250,9 +261,10 @@ def _resident_edges(
     :func:`driver_band_pairs`, the verified (a, b, jaccard, hamming)
     that the cascade core keeps, and the edges (a, b), those plus
     :func:`driver_exact_edges`, as :func:`_spark_edges` computes them.
-    ``fetch(fids)`` returns the ``fid, sig`` rows of the cascade's
+    ``fetch(fids, left)`` returns the ``fid, sig`` rows of the cascade's
     borderline files, with their contents counted by ``n_bytes`` when
-    ``tbl`` has it. ``budget``: driver bytes left after the table;
+    ``tbl`` has it, and ``left`` bytes of the budget after them.
+    ``budget``: driver bytes left after the table;
     returns None, for the caller to hand over to :func:`_spark_edges`,
     when the pair codes or the borderline sigs would overflow it."""
     fids, first, rank = np.unique(
@@ -267,8 +279,8 @@ def _resident_edges(
     keep, jac, ham = np.zeros(0, dtype=bool), np.empty(0), np.empty(0)
     if ca.size:
 
-        def fetch_rows(pos: np.ndarray) -> dict:
-            sigs = fetch(fids[pos])
+        def fetch_rows(pos: np.ndarray, left: int) -> dict:
+            sigs = fetch(fids[pos], left)
             return dict(zip(
                 np.searchsorted(fids, sigs["fid"].to_numpy()),
                 sigs["sig"].to_numpy(),
@@ -303,9 +315,10 @@ def _resident_frames(
     :func:`_resident_edges` (every row new), the union-find and, while
     the ``n_fp`` fingerprints fit, the containment pass, and ONE content
     collect, of the containment files and the borderline files that the
-    driver re-sketches. The containment pass gets what the table left,
-    the edges stage the rest; the pass yields (containment None) when
-    either does not fit. None when the edges stage hands over."""
+    driver re-sketches (of every file if they all fit what the budget has
+    left). The containment pass gets what the table left, the edges stage
+    the rest; the pass yields (containment None) when either does not
+    fit. None when the edges stage hands over."""
     # n_bytes (8 B a row) rides along in a plain run only
     budget = verify.RESIDENT_BYTES - n_files * (_resident_row_bytes(cfg) + 8)
     shared = n_fp is not None and budget > 8 * n_fp
@@ -324,14 +337,21 @@ def _resident_frames(
         )
     if cand is not None:
         cont_ids, cost = verify._containment_files(cand)
+    total = pc.sum(tbl["n_bytes"]).as_py() or 0
     held: dict = {}
 
-    def fetch(fids: np.ndarray) -> pd.DataFrame:
+    def contents(ids, left: int) -> dict:  # the run's one content collect
+        if not held and len(ids):
+            whole = total <= left  # sum of n_bytes: what a plain scan holds
+            held.update(verify._file_contents(files, None if whole else ids))
+        return held
+
+    def fetch(fids: np.ndarray, left: int) -> pa.Table:
         name_of = dict(zip(tbl["fid"].to_pylist(), tbl["file_id"].to_pylist()))
         names = [name_of[f] for f in fids.tolist()]
-        held.update(verify._file_contents(files, sorted({*names, *cont_ids})))
-        sigs = sketch_contents([held[n] for n in names], cfg, with_fp=False)
-        return pd.DataFrame({"fid": fids, "sig": sigs["sig"]})
+        got = contents(sorted({*names, *cont_ids}), left)
+        sigs = sketch_contents([got[n] for n in names], cfg, with_fp=False)
+        return pa.table({"fid": fids, "sig": sigs["sig"]})
 
     new, got = np.ones(tbl.num_rows, dtype=bool), None
     if cost < budget:
@@ -342,9 +362,10 @@ def _resident_frames(
     if got is None:
         return None
     first, rank, (ca, cb), (va, vb, jac, ham), (ea, eb) = got
+    live = 16 * (ca.size + 2 * va.size + ea.size)  # the pair arrays kept
     cont = None if cand is None else verify._driver_containment_verified(
-        spark, cand, held or verify._file_contents(files, cont_ids), cfg
-    )  # a borderline fetch has fetched the contents already
+        spark, cand, contents(cont_ids, budget - cost - live), cfg
+    )
     names = tbl["file_id"].to_numpy()[first]
     fids = tbl["fid"].to_numpy()[first]
     labels = least_member_labels(names, ea, eb)
@@ -352,27 +373,22 @@ def _resident_frames(
     def id_pairs(a, b, **cols):
         sa, sb = names[a], names[b]
         lo = sa <= sb
-        return pd.DataFrame({
+        return pa.table({
             "a_id": np.where(lo, sa, sb), "b_id": np.where(lo, sb, sa),
             **cols,
         })
 
     return (
-        spark.createDataFrame(id_pairs(ca, cb), "a_id string, b_id string"),
+        spark.createDataFrame(id_pairs(ca, cb), _CANDIDATES_SCHEMA),
         spark.createDataFrame(
-            id_pairs(va, vb, jaccard=jac, hamming=ham),
-            verify._verified_schema("a_id", "b_id", "string"),
+            id_pairs(va, vb, jaccard=jac, hamming=ham), _VERIFIED_SCHEMA
         ),
         spark.createDataFrame(
-            pd.DataFrame({"a_fid": fids[ea], "b_fid": fids[eb]}),
-            "a_fid long, b_fid long",
+            pa.table({"a_fid": fids[ea], "b_fid": fids[eb]}), _EDGES_SCHEMA
         ),
         spark.createDataFrame(
-            pd.DataFrame({
-                "file_id": tbl["file_id"].to_numpy(),
-                "cluster_id": labels[rank],
-            }),
-            "file_id string, cluster_id string",
+            pa.table({"file_id": tbl["file_id"], "cluster_id": labels[rank]}),
+            CLUSTERS_SCHEMA,
         ),
         cont,
     )
@@ -408,15 +424,10 @@ def _spark_edges(
     internal += [verified_fid, edges]
 
     # public result keeps the string pair contract (lazy attachment)
-    candidates = attach_file_ids(fid_candidates, signatures).select(
-        F.least("a_id", "b_id").alias("a_id"),
-        F.greatest("a_id", "b_id").alias("b_id"),
-    )
-    verified = attach_file_ids(verified_fid, signatures).select(
-        F.least("a_id", "b_id").alias("a_id"),
-        F.greatest("a_id", "b_id").alias("b_id"),
-        "jaccard",
-        "hamming",
+    ids = ("least(a_id, b_id) AS a_id", "greatest(a_id, b_id) AS b_id")
+    candidates = attach_file_ids(fid_candidates, signatures).selectExpr(*ids)
+    verified = attach_file_ids(verified_fid, signatures).selectExpr(
+        *ids, "jaccard", "hamming"
     )
     return candidates, verified, edges
 

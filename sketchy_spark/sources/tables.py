@@ -9,12 +9,28 @@ manifest (src/sketchy.rs:137-148) becoming a manifest DataFrame.
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 FILES_SCHEMA = (
     "repo string, path string, commit string, lang string, content string"
 )
+_ARROW_TYPES = {
+    "string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+    "array<long>": pa.list_(pa.int64()), "array<int>": pa.list_(pa.int32()),
+}
+
+
+def struct_type(ddl: str) -> StructType:
+    """The flat DDL schema ``"name type, ..."`` (types: ``_ARROW_TYPES``)
+    as a StructType built in Python, where Spark's parse is a JVM call."""
+    fields = [f.split() for f in ddl.split(", ")]
+    return from_arrow_schema(
+        pa.schema([(name, _ARROW_TYPES[t]) for name, t in fields])
+    )
 
 
 def load_files(spark: SparkSession, path: str) -> DataFrame:

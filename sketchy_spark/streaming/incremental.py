@@ -65,7 +65,6 @@ resumable incremental batches, which is what this is.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyspark.sql.functions as F
@@ -75,6 +74,7 @@ from sketchy_spark.checkpoint import CheckpointStore
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.operators import verify
 from sketchy_spark.operators.cluster import (
+    CLUSTERS_SCHEMA,
     assign_clusters_fid,
     least_member_labels,
 )
@@ -372,7 +372,7 @@ class IncrementalDedup:
             n_new = self.store.manifest(stage_sig)["rows"]
             is_new = np.arange(tbl.num_rows) >= tbl.num_rows - n_new
 
-            def fetch(fids: np.ndarray) -> pa.Table:
+            def fetch(fids: np.ndarray, _left: int) -> pa.Table:
                 wanted = ds.field("fid").isin(pa.array(fids, pa.int64()))
                 return _concat([
                     self.store.read_table(s, ["fid", "sig"], filter=wanted)
@@ -436,7 +436,6 @@ class IncrementalDedup:
         fids, first, rank = np.unique(
             rows["fid"].to_numpy(), return_index=True, return_inverse=True
         )
-        names = rows["file_id"].to_numpy()
         a = b = np.empty(0, dtype=np.int64)
         if edge_stages:
             e = _concat([
@@ -445,8 +444,8 @@ class IncrementalDedup:
             ])
             a = np.searchsorted(fids, e["a_fid"].to_numpy())
             b = np.searchsorted(fids, e["b_fid"].to_numpy())
-        labels = least_member_labels(names[first], a, b)
+        labels = least_member_labels(rows["file_id"].to_numpy()[first], a, b)
         return self.spark.createDataFrame(
-            pd.DataFrame({"file_id": names, "cluster_id": labels[rank]}),
-            "file_id string, cluster_id string",
+            pa.table({"file_id": rows["file_id"], "cluster_id": labels[rank]}),
+            CLUSTERS_SCHEMA,
         )

@@ -389,3 +389,100 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
     # the shared pass's pair codes get what the table left; the
     # standalone calls size theirs by the fingerprints alone
     assert cand_budgets[0] == cand_budgets[2] == left
+
+
+def test_sizing_never_blocks_on_empty_input(spark, tmp_path):
+    """The run takes its row and fingerprint counts from an Observation
+    on its one noop write, and ``Observation.get`` waits for that action.
+    A 0-row frame, a ``limit(0)`` frame (0 partitions) and a store run
+    whose signatures stage is resumed each return their empty results
+    within a join timeout."""
+    import threading
+
+    from sketchy_spark.checkpoint import CheckpointStore
+
+    files = corpus_df(spark, 50)
+    store = CheckpointStore(str(tmp_path / "empty"), CFG.config_hash)
+    runs = [
+        ("0 rows", lambda: run_pipeline(files.where("false"), CFG)),
+        ("limit(0)", lambda: run_pipeline(files.limit(0), CFG)),
+        ("stored", lambda: run_pipeline(files.limit(0), CFG, store=store)),
+        ("resumed", lambda: run_pipeline(files.limit(0), CFG, store=store)),
+    ]
+    assert files.limit(0).rdd.getNumPartitions() == 0
+    for name, run in runs:
+        got = {}
+
+        def body():
+            res = run()
+            got["rows"] = [
+                res.signatures.count(), res.clusters.count(),
+                res.containment.count(),
+            ]
+            got["resumed"] = res.resumed
+            res.unpersist()
+
+        worker = threading.Thread(target=body, daemon=True)
+        worker.start()
+        worker.join(timeout=180)
+        assert not worker.is_alive(), f"{name}: sizing blocked"
+        assert got["rows"] == [0, 0, 0], name
+    assert got["resumed"]["signatures"] is True
+
+
+def test_resident_run_starts_three_jobs(spark, monkeypatch):
+    """A warm resident run with containment on starts three Spark jobs:
+    the sketch (its noop write fills the signature cache, and an
+    Observation sizes the run), the signature collect and one content
+    scan, which collects every file because the whole input fits what
+    the budget has left at that fetch. With ``RESIDENT_BYTES`` set so
+    the wanted files fit but the whole input does not, the fetch takes
+    the broadcast ``left_semi`` form of the wanted files, and every row
+    is the same."""
+    from sketchy_spark import pipeline as P
+    from sketchy_spark.operators import verify as V
+
+    files = corpus_df(spark, 300).cache()
+    files.count()
+    sc = spark.sparkContext
+    lefts, fetched = [], []
+    edges, contents = P._resident_edges, V._file_contents
+    monkeypatch.setattr(
+        P, "_resident_edges",
+        lambda tbl, new, cfg, budget, fetch: edges(
+            tbl, new, cfg, budget,
+            lambda fids, left: lefts.append(left) or fetch(fids, left),
+        ),
+    )
+    monkeypatch.setattr(
+        V, "_file_contents",
+        lambda f, ids: fetched.append(ids is None) or contents(f, ids),
+    )
+
+    def run(group):
+        sc.setJobGroup(group, "resident job count")
+        try:
+            res = run_pipeline(files, CFG)
+            rows = {
+                k: sorted(tuple(r) for r in getattr(res, k).collect())
+                for k in ("clusters", "candidates", "verified", "edges",
+                          "containment")
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        total = res.signatures.agg(F.sum("n_bytes")).first()[0]
+        res.unpersist()
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group)), total
+
+    run("three-jobs-warm")
+    want, jobs, total = run("three-jobs")
+    assert jobs == 3
+    assert len(want["containment"]) > 0
+    # one borderline fetch a run, the whole input each time
+    assert fetched == [True, True] and len(lefts) == 2 and lefts[1] >= total
+    squeezed = V.RESIDENT_BYTES - lefts[1] + total - 1
+    monkeypatch.setattr(V, "RESIDENT_BYTES", squeezed)
+    got, _, _ = run("semi-join-contents")
+    assert lefts[2] == total - 1 and fetched[2] is False
+    assert got == want
+    files.unpersist()

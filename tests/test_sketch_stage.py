@@ -158,3 +158,44 @@ def test_driver_sketch_kernel_matches_udf_sig(spark):
         assert sig.dtype == np.int64
         assert sig.tolist() == udf[name], name
     assert udf["empty"] == [] and len(udf["normal"]) > 0
+
+
+def test_prepare_select_matches_column_api(spark):
+    """The sketch's one ``selectExpr`` gives byte-identical ``file_id``,
+    ``sha256``, ``n_bytes``, content and ``fid`` (a sketch pass's) to the
+    Column-API select it replaced, followed by ``with_fid``: multi-byte
+    UTF-8, empty and NULL content, and a NULL repo, which ``concat_ws``
+    skips."""
+    from sketchy_spark.operators.lsh import with_fid
+    from sketchy_spark.operators.sketch import _prepare
+    from sketchy_spark.sources.tables import FILES_SCHEMA
+
+    utf8 = "naïve = 'Grüße — 日本語'\n" * 3
+    files = spark.createDataFrame(
+        [
+            ("org/u", "utf8.py", "c", "py", utf8),
+            ("org/e", "empty.py", "c", "py", ""),
+            ("org/n", "null.py", "c", "py", None),
+            (None, "norepo.py", "c", "py", "x = 1\n"),
+        ],
+        FILES_SCHEMA,
+    )
+    want = with_fid(files.select(
+        F.concat_ws("/", "repo", "path").alias("file_id"),
+        "repo", "path", "commit", "lang",
+        F.sha2(F.col("content"), 256).alias("sha256"),
+        F.octet_length("content").cast("long").alias("n_bytes"),
+        F.col("content").cast("binary").alias("content"),
+    ))
+    got = _prepare(files, with_fid=True)
+    assert got.schema == want.schema
+    rows = {r.file_id: r for r in got.collect()}
+    assert rows == {r.file_id: r for r in want.collect()}
+    assert _prepare(files).columns == want.columns[:-1]
+    u = rows["org/u/utf8.py"]
+    assert u.sha256 == hashlib.sha256(utf8.encode()).hexdigest()
+    assert u.n_bytes == len(utf8.encode()) > len(utf8)
+    assert rows["org/e/empty.py"].n_bytes == 0
+    assert rows["org/n/null.py"].sha256 is None
+    assert rows["org/n/null.py"].n_bytes is None
+    assert rows["norepo.py"].fid is not None

@@ -177,3 +177,31 @@ def test_range_partition_ingest_plan(spark):
         files, CFG, with_containment=False, cache_signatures=False,
     )
     assert "rangepartitioning" not in physical_plan(off.signatures)
+
+
+def test_struct_type_matches_spark_ddl(spark):
+    """The module schema constants, built in Python by ``struct_type``,
+    equal Spark's own parse of the same DDL, the sketch's output schemas
+    included."""
+    from pyspark.sql.types import StructType
+
+    from sketchy_spark.operators import sketch as S
+    from sketchy_spark.sources.tables import struct_type
+
+    ddl = "a string, b long, d double, e array<long>, f array<int>"
+    assert struct_type(ddl) == StructType.fromDDL(ddl)
+    head = (
+        "file_id string, repo string, path string, commit string, "
+        "lang string, sha256 string, n_bytes long, n_shingles long, "
+    )
+    for (sig, fp, fid), ddl in {
+        (True, True, False): "sig array<long>, sig_perm array<int>, "
+        "simhash long, fingerprints array<long>",
+        (False, True, False): "sig_perm array<int>, simhash long, "
+        "fingerprints array<long>",
+        (False, False, True): "sig_perm array<int>, simhash long, fid long",
+        (True, True, True): "sig array<long>, sig_perm array<int>, "
+        "simhash long, fingerprints array<long>, fid long",
+    }.items():
+        assert S._SCHEMAS[sig, fp, fid] == StructType.fromDDL(head + ddl)
+    assert S.SIGNATURE_SCHEMA == S._SCHEMAS[True, True, True]

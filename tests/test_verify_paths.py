@@ -554,3 +554,60 @@ def test_resident_containment_matches_scan_side(spark, monkeypatch):
         df.unpersist()
     sigs.unpersist()
     files.unpersist()
+
+
+def _plans_naming(spark, group: str, name: str) -> int:
+    """How many SQL executions of job group ``group`` have a physical
+    plan that names the column ``name``."""
+    jobs = {
+        str(j)
+        for j in spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    }
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs, n = store.executionsList().iterator(), 0
+    while execs.hasNext():
+        e = execs.next()
+        if jobs & set(e.jobs().keySet().mkString(",").split(",")):
+            n += f"{name}#" in e.physicalPlanDescription()
+    return n
+
+
+def test_content_overflow_verifies_the_probed_candidates(spark, monkeypatch):
+    """With the candidate stage scan-side (the fingerprint rows exceed
+    ``RESIDENT_BYTES``), ``containment_verified``'s ``limit`` probe
+    collects every candidate row, and only their contents overflow: the
+    scan-side verify joins those collected rows as a local frame, so the
+    candidate aggregation (its ``shared_fp`` count) runs once, in the
+    probe, and the rows equal the resident pass's."""
+    from sketchy_spark.operators import verify as V
+
+    files = spark.createDataFrame(corpus_pandas(600)).cache()
+    sigs = sketch_files(files, CFG, with_sig=False).cache()
+    n_fp = sigs.selectExpr("sum(size(fingerprints))").first()[0]
+    cand = V.containment_candidates(sigs, CFG, 0.25, resident=True)
+    want = _containment_rows(
+        V.containment_verified(cand, files, CFG, resident=True)
+    )
+    rows = cand.count()
+    _, cost = V._containment_files(cand.toArrow())
+    budget = min(8 * n_fp, cost - 1)
+    assert 8 * rows <= budget and len(want) > 0
+    monkeypatch.setattr(V, "RESIDENT_BYTES", budget)
+    internal = []
+    sc = spark.sparkContext
+    sc.setJobGroup("probe-once", "containment candidates evaluated once")
+    try:
+        got = _containment_rows(V.containment_verified(
+            V.containment_candidates(
+                sigs, CFG, 0.25, persisted=internal, n_fp=n_fp
+            ),
+            files, CFG, persisted=internal,
+        ))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert _plans_naming(spark, "probe-once", "shared_fp") == 1
+    for df in internal:
+        df.unpersist()
+    sigs.unpersist()
+    files.unpersist()
