@@ -37,29 +37,22 @@ DRIVER_UNION_FIND_MAX_EDGES = 5_000_000
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    check_every: int = 2,
-    strategy: str = "auto",
-    n_edges: int | None = None,
+    edges: DataFrame, n_edges: int | None = None
 ) -> DataFrame:
     """edges(a_id, b_id) -> (file_id, cluster_id) for every vertex that
     appears in an edge. Labels are file_id strings; min is lexicographic.
 
-    strategy: 'auto' (size-based), 'driver' (local union-find),
-    'distributed' (pointer-doubling min-label propagation).
-    ``n_edges``: pass an already-known edge count so 'auto' does not run
-    its own count() (a driver barrier the pipeline can amortize into an
-    action it already performs)."""
-    if strategy == "auto":
-        if n_edges is None:
-            n_edges = edges.count()
-        strategy = (
-            "driver" if n_edges <= DRIVER_UNION_FIND_MAX_EDGES else "distributed"
-        )
-    if strategy == "driver":
+    The edge count picks the placement: up to
+    ``DRIVER_UNION_FIND_MAX_EDGES`` a local union-find, above it
+    pointer-doubling min-label propagation on executors. ``n_edges``:
+    pass an already-known edge count so the call does not run its own
+    count() (a driver barrier the pipeline can amortize into an action
+    it already performs)."""
+    if n_edges is None:
+        n_edges = edges.count()
+    if n_edges <= DRIVER_UNION_FIND_MAX_EDGES:
         return _driver_union_find(edges)
-    return _distributed_components(edges, max_iter, check_every)
+    return _distributed_components(edges)
 
 
 def min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
@@ -121,13 +114,13 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 
 
 # The off-round-checkpoint plan tree grows ~4x per unchecked round (see
-# _distributed_components docstring) — clamp the public knob so the
+# _distributed_components docstring) — clamp the check interval so the
 # exponential growth can't be triggered through it (ADVICE r5).
 MAX_CHECK_EVERY = 4
 
 
 def _distributed_components(
-    edges: DataFrame, max_iter: int, check_every: int = 2
+    edges: DataFrame, max_iter: int = 25, check_every: int = 2
 ) -> DataFrame:
     """Pointer-doubling min-label propagation (the star-contraction family
     of SURVEY G5, in its simplest DataFrame form).
@@ -221,8 +214,7 @@ def _distributed_components(
 
 
 def assign_clusters(
-    signatures: DataFrame, edges: DataFrame, max_iter: int = 25,
-    strategy: str = "auto", n_edges: int | None = None,
+    signatures: DataFrame, edges: DataFrame, n_edges: int | None = None,
 ) -> DataFrame:
     """All files -> cluster assignment; files in no edge are singleton
     clusters labeled by their own file_id.
@@ -235,10 +227,8 @@ def assign_clusters(
     tests/test_pipeline_e2e.py::test_every_file_assigned_exactly_once.
 
     ``n_edges``: already-known edge count (e.g. summed from checkpoint
-    manifests) — skips the 'auto' strategy's own count() action."""
-    cc = connected_components(
-        edges, max_iter=max_iter, strategy=strategy, n_edges=n_edges
-    )
+    manifests) — skips :func:`connected_components`' own count()."""
+    cc = connected_components(edges, n_edges)
     return (
         signatures.select("file_id")
         .join(cc, "file_id", "left")
@@ -250,8 +240,7 @@ def assign_clusters(
 
 
 def assign_clusters_fid(
-    signatures: DataFrame, edges_fid: DataFrame, max_iter: int = 25,
-    strategy: str = "auto", n_edges: int | None = None,
+    signatures: DataFrame, edges_fid: DataFrame, n_edges: int | None = None,
 ) -> DataFrame:
     """Cluster assignment from fid-keyed edges (a_fid, b_fid): connected
     components run entirely on int64 labels (cheap compares, 16-byte
@@ -263,29 +252,19 @@ def assign_clusters_fid(
     and the same partition invariant — every distinct input file_id in
     exactly one output row.
 
-    ``n_edges``: already-known edge count (skips the strategy count).
+    ``n_edges``: already-known edge count (skips the placement count).
     The pipeline deliberately does NOT pass it: its edges frame is
     freshly persisted, and this count doubles as the cache's
     materialization barrier — dropping it just moves the same job into
     the union-find's toPandas.
     """
-    if strategy == "auto":
-        if n_edges is None:
-            n_edges = edges_fid.count()
-        strategy = (
-            "driver"
-            if n_edges <= DRIVER_UNION_FIND_MAX_EDGES
-            else "distributed"
-        )
-        small_labels = n_edges <= 2_000_000
-    else:
-        small_labels = strategy == "driver"
+    if n_edges is None:
+        n_edges = edges_fid.count()
     cc = connected_components(
         edges_fid.select(
             F.col("a_fid").alias("a_id"), F.col("b_fid").alias("b_id")
         ),
-        max_iter=max_iter,
-        strategy=strategy,
+        n_edges,
     ).select(F.col("file_id").alias("fid"), F.col("cluster_id").alias("root"))
     slim = signatures.select("fid", "file_id")
     root_names = (
@@ -293,11 +272,11 @@ def assign_clusters_fid(
         .groupBy("root")
         .agg(F.min("file_id").alias("root_name"))
     )
-    # duplicate-edge vertices ≪ corpus: when the edge set is small enough
-    # for the driver union-find, broadcast the label map into the big
-    # table's scan instead of shuffling 'signatures'; at distributed-CC
-    # scale leave the join strategy to AQE.
-    hint = F.broadcast if small_labels else (lambda df: df)
+    # duplicate-edge vertices ≪ corpus: when the edge set is small,
+    # broadcast the label map into the big table's scan instead of
+    # shuffling 'signatures'; at distributed-CC scale leave the join
+    # strategy to AQE.
+    hint = F.broadcast if n_edges <= 2_000_000 else (lambda df: df)
     labeled = cc.join(hint(root_names), "root").select("fid", "root_name")
     return (
         slim.join(hint(labeled), "fid", "left")

@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from sketchy_spark.config import SketchConfig
-from sketchy_spark.operators.verify import _group_pair_codes
+from sketchy_spark.operators.verify import DriverBudget, _group_pair_codes
 
 
 def with_fid(signatures: DataFrame) -> DataFrame:
@@ -329,12 +329,12 @@ def _band_groups(sig_perm: np.ndarray, cfg: SketchConfig) -> np.ndarray:
 
 
 def driver_band_pairs(
-    sig_perm: np.ndarray, rank: np.ndarray, cfg: SketchConfig, budget: int,
-    new: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, int] | None:
-    """:func:`candidate_pairs_fid` on one driver collect -> (a, b, budget
-    left): distinct file-rank pairs with a < b, each touching a row
-    ``new`` flags.
+    sig_perm: np.ndarray, rank: np.ndarray, cfg: SketchConfig,
+    budget: DriverBudget, new: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """:func:`candidate_pairs_fid` on one driver collect -> (a, b):
+    distinct file-rank pairs with a < b, each touching a row ``new``
+    flags.
 
     ``sig_perm``: the (rows, num_perm) int32 matrix of the collected
     rows; ``rank``: each row's file rank (rank order is fid order;
@@ -344,8 +344,9 @@ def driver_band_pairs(
     rows that touches a new row. In a hot group each new member pairs
     with the hub: the group's minimum prior rank, else its minimum.
 
-    Returns None when the pair codes, 8 B each, sized from the group
-    sizes before any is emitted, exceed ``budget``."""
+    The pair codes, 8 B each, are sized from the group sizes and
+    charged to ``budget`` before any is emitted; returns None when they
+    do not fit it."""
     n = int(rank.max()) + 1 if rank.size else 0
     group = _band_groups(sig_perm, cfg)
     row = np.argsort(group) // cfg.bands
@@ -357,8 +358,8 @@ def driver_band_pairs(
     cold = ~hot & has_new & (sizes >= 2)
     star = np.repeat(hot, sizes) & em
     m = sizes[cold]
-    budget -= 8 * (int((m * (m - 1) // 2).sum()) + int(star.sum()))
-    if budget < 0:
+    codes = int((m * (m - 1) // 2).sum()) + int(star.sum())
+    if not budget.charge("band_codes", 8 * codes):
         return None
 
     x, y = np.divmod(
@@ -372,8 +373,7 @@ def driver_band_pairs(
     a = np.concatenate([rank[x[touch]], r[star]])
     b = np.concatenate([rank[y[touch]], np.repeat(hub, sizes)[star]])
     lo, hi = np.minimum(a, b), np.maximum(a, b)
-    a, b = np.divmod(np.unique(lo[lo != hi] * n + hi[lo != hi]), n)
-    return a, b, budget
+    return np.divmod(np.unique(lo[lo != hi] * n + hi[lo != hi]), n)
 
 
 def attach_file_ids(

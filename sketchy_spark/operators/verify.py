@@ -15,24 +15,25 @@ plain run and in each incremental batch) verifies with
 :func:`verified_pairs_cascade`, which puts a cheap OPH slot-match stage
 in front of the kernel; every Jaccard edge in the package comes from
 it. The containment pass is :func:`containment_candidates` then
-:func:`containment_verified`. While a pass's working set fits one
-30 MB budget (``RESIDENT_BYTES``) it runs on the driver, as the
-reference scans its in-memory sketch collection (src/sketchy.rs:81):
-the edges stage runs the cascade's numpy core (:func:`_cascade_core`)
-over one Arrow table of the signatures, the containment pass runs its
-numpy kernels, none of them starts a Python UDF stage or persists
-anything, and a plain run feeds both from one signature collect and one
-content collect (``pipeline._resident_frames``). Above the budget each runs
-scan-side on executors, and a driver run that finds it would overflow
-hands over to that path, which returns the same rows; there the
-cascade is always scan-side, because the edges stage has already
-declined the budget. The containment pass takes a ``resident``
-override; the edges stage is driven by the budget alone, read at call
-time, so setting it to 0 drives its Spark stages. On small traffic the
-driver path is the faster one because it starts fewer Spark jobs,
-stages and Python tasks, each of which carries a fixed cost whatever
-its size; the kernels are not what sets the cost there (ROADMAP.md
-records the driver vs scan-side timings).
+:func:`containment_verified`. Each decision scope (a plain run's
+resident stage, an incremental batch, its clusters, each public
+containment call) builds one :class:`DriverBudget` ledger, and every
+pass charges it by name before it allocates what it holds. While the
+charges fit, a pass runs on the driver, as the reference scans its
+in-memory sketch collection (src/sketchy.rs:81): the edges stage runs
+the cascade's numpy core (:func:`_cascade_core`) over one Arrow table
+of the signatures, the containment pass runs its numpy kernels, none of
+them starts a Python UDF stage or persists anything, and a plain run
+feeds both from one signature collect and one content collect
+(``pipeline._resident_frames``). A charge that does not fit hands the
+pass over to its scan-side path on executors, which returns the same
+rows; there the cascade is always scan-side, because the edges stage
+has already declined the budget. No caller switch picks a placement:
+set ``RESIDENT_BYTES`` to 0 to drive every pass scan-side. On small
+traffic the driver path is the faster one because it starts fewer Spark
+jobs, stages and Python tasks, each of which carries a fixed cost
+whatever its size; the kernels are not what sets the cost there
+(ROADMAP.md records the driver vs scan-side timings).
 
 Key narrowness: the pipeline hands the cascade fid-keyed pairs
 (a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle there
@@ -43,6 +44,7 @@ and ad-hoc use.
 
 from __future__ import annotations
 
+from collections import namedtuple
 from collections.abc import Iterator
 
 import numpy as np
@@ -96,21 +98,14 @@ def _keyed_signatures(signatures: DataFrame, key: str) -> DataFrame:
 
 def _with_sides(
     pairs: DataFrame, signatures: DataFrame, cols: list[str],
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
-    """Attach both sides' signature columns to each pair.
-
-    Plain path: two shuffle joins — but each shuffles the FULL signatures
-    table (wide: sig arrays), which dwarfs the pair set. Broadcast path
-    (default when the pair count is modest): broadcast the pair ids into
-    two scan-side hash joins of signatures (no signature shuffle), then
-    join the two halves on the pair key — shuffles only O(|pairs|) rows.
-    At 100 TB the pair table after LSH is orders of magnitude smaller
-    than the signatures table, so this is the scale-correct default;
-    pass broadcast_pairs=False when candidate volume explodes.
+    """Attach both sides' signature columns to each pair: broadcast the
+    pair ids into two scan-side hash joins of signatures (no signature
+    shuffle), then join the two halves on the pair key, which shuffles
+    only O(|pairs|) rows. After LSH the pair table is orders of magnitude
+    smaller than the wide signatures table (sig arrays), so the pairs,
+    not the signatures, are what moves.
     """
-    if broadcast_pairs is None:
-        broadcast_pairs = True
     a_col, b_col, key, _ = _key_cols(pairs)
     sigs = _keyed_signatures(signatures, key)
     a = sigs.select(
@@ -121,8 +116,6 @@ def _with_sides(
         F.col(key).alias(b_col),
         *[F.col(c).alias(f"b_{c}") for c in cols],
     )
-    if not broadcast_pairs:
-        return pairs.join(a, a_col).join(b, b_col)
     left = F.broadcast(pairs).join(a, a_col)
     right = F.broadcast(pairs).join(b, b_col)
     return left.join(right, [a_col, b_col])
@@ -130,9 +123,9 @@ def _with_sides(
 
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
 
-# The one driver-side byte budget that picks where the edges stage and
-# the containment pass run (module docstring): within it, on the driver;
-# above it, on executors.
+# The driver bytes that one resident decision may hold (module
+# docstring): a :class:`DriverBudget` reads it when it is built. Within
+# it, a pass runs on the driver; above it, on executors.
 RESIDENT_BYTES = 30_000_000
 # Cascade stage 1's half-width around tau: est >= tau + margin accepts,
 # est < tau - margin rejects, the band between goes to the exact stage.
@@ -141,6 +134,39 @@ CASCADE_MARGIN = 0.15
 # (block, num_perm) int32 temporaries to ~64 MB at any pair count.
 _BLOCK_PAIRS = 1 << 16
 _NO_SIG = np.empty(0, dtype=np.int64)
+
+
+Charge = namedtuple("Charge", "name nbytes ok left")  # see DriverBudget
+
+
+class DriverBudget:
+    """The one ledger of a resident decision's driver bytes, of capacity
+    ``RESIDENT_BYTES`` as read when it is built. A pass charges what it
+    is about to hold, by name, before it allocates it. A charge that
+    does not fit takes nothing, and the pass hands over to its Spark
+    form. What a pass frees goes back with :meth:`release`. ``charges``
+    records each (name, nbytes, ok, left) as asked."""
+
+    def __init__(self) -> None:
+        self.capacity = self.left = RESIDENT_BYTES
+        self.charges: list[Charge] = []
+
+    def charge(self, name: str, nbytes: int, strict: bool = False) -> bool:
+        """Take ``nbytes`` if they fit ``left`` (``strict``: with bytes
+        to spare); True when taken."""
+        nbytes = int(nbytes)
+        ok = nbytes < self.left if strict else nbytes <= self.left
+        self.charges.append(Charge(name, nbytes, ok, self.left))
+        self.left -= nbytes if ok else 0
+        return ok
+
+    def release(self, since: int) -> None:
+        """Give back what the charges from record position ``since`` on
+        hold (freed arrays), recorded as one "release" of minus it."""
+        nbytes = sum(c.nbytes for c in self.charges[since:] if c.ok)
+        if nbytes:
+            self.charges.append(Charge("release", -nbytes, True, self.left))
+            self.left += nbytes
 
 
 def _hamming(a_sim, b_sim) -> np.ndarray:
@@ -191,7 +217,6 @@ def _verified_schema(a_col: str, b_col: str, key_type: str) -> str:
 
 def verified_pairs(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Arrow-kernel Jaccard verification (default path; see module doc).
 
@@ -203,7 +228,7 @@ def verified_pairs(
     returns the same key columns it was given.
     """
     a_col, b_col, _, key_type = _key_cols(pairs)
-    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
+    df = _with_sides(pairs, signatures, ["sig", "simhash"])
     s = cfg.s
     tau = cfg.jaccard_threshold
 
@@ -233,8 +258,8 @@ def verified_pairs(
 
 def verified_pairs_cascade(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    margin: float = CASCADE_MARGIN, files: DataFrame | None = None,
-    attach_ids: bool = True, persisted: list | None = None,
+    files: DataFrame | None = None, attach_ids: bool = True,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Two-stage verification cascade (SURVEY G4: full estimator only for
     borderline pairs), on executors. Returns string-keyed (a_id, b_id,
@@ -243,8 +268,8 @@ def verified_pairs_cascade(
     connected components).
 
     Stage 1 reads only the 128-slot OPH signature (+simhash) per pair and
-    computes est = matching_slots / num_perm. Pairs with
-    est >= tau + margin are accepted, est < tau - margin rejected
+    computes est = matching_slots / num_perm. Pairs with est >= tau +
+    ``CASCADE_MARGIN`` are accepted, est < tau - ``CASCADE_MARGIN`` rejected
     (binomial error at 4-sigma ~ 1e-5 — negligible vs the 0.99 recall
     budget). Stage 2 runs the bottom-s estimator only on the borderline
     band, re-sketching just the borderline files when ``signatures``
@@ -295,7 +320,7 @@ def verified_pairs_cascade(
                     "needs_exact": small,
                 }
             )
-            yield out[small | (est >= tau - margin)]
+            yield out[small | (est >= tau - CASCADE_MARGIN)]
 
     # The scan-side attach broadcasts the pair frame twice (a- and
     # b-side). ReusedExchange can NOT be assumed to dedupe the two
@@ -330,10 +355,10 @@ def verified_pairs_cascade(
     coarse.count()
     keep.append(coarse)
     accepted = coarse.where(
-        (~F.col("needs_exact")) & (F.col("jaccard") >= tau + margin)
+        (~F.col("needs_exact")) & (F.col("jaccard") >= tau + CASCADE_MARGIN)
     ).drop("needs_exact")
     borderline = coarse.where(
-        F.col("needs_exact") | (F.col("jaccard") < tau + margin)
+        F.col("needs_exact") | (F.col("jaccard") < tau + CASCADE_MARGIN)
     ).select(a_col, b_col)
     wanted = (
         borderline.select(F.col(a_col).alias(key))
@@ -392,8 +417,7 @@ def _sig_perm_matrix(tbl, cfg: SketchConfig) -> np.ndarray:
 
 def _cascade_core(
     mat: np.ndarray, sim: np.ndarray, nsh: np.ndarray, ai: np.ndarray,
-    bi: np.ndarray, cfg: SketchConfig, margin: float,
-    sig_budget: int, fetch, content_bytes: np.ndarray | None = None,
+    bi: np.ndarray, cfg: SketchConfig, fetch,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     """Both cascade stages in numpy over the pairs of matrix rows
     (``ai``, ``bi``) -> (keep, jaccard, hamming) per pair: the driver
@@ -401,9 +425,9 @@ def _cascade_core(
 
     Stage 1 is :func:`_slot_estimates` in blocks of ``_BLOCK_PAIRS``;
     the borderline band (and every small-doc pair) gets its rows' sigs
-    from ``fetch(rows, left) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
-    Returns None, before fetching, when those sigs (8 * s B per file,
-    plus the rows' ``content_bytes`` if given) exceed ``sig_budget``."""
+    from ``fetch(rows) -> {row: sig}`` and :func:`_bottom_s_jaccard`.
+    ``fetch`` returns None, before it fetches, when the sigs do not fit
+    the caller's driver budget; so does this call."""
     tau, num_perm = cfg.jaccard_threshold, cfg.num_perm
     blocks = [
         _slot_estimates(
@@ -412,21 +436,18 @@ def _cascade_core(
         )
         for sl in (
             slice(lo, lo + _BLOCK_PAIRS)
-            for lo in range(0, ai.size, _BLOCK_PAIRS)
+            for lo in range(0, ai.size or 1, _BLOCK_PAIRS)  # >= 1 block
         )
     ]
     est, ham, small = (np.concatenate(x) for x in zip(*blocks))
-    accept = ~small & (est >= tau + margin)
-    border = ~accept & (small | (est >= tau - margin))
+    accept = ~small & (est >= tau + CASCADE_MARGIN)
+    border = ~accept & (small | (est >= tau - CASCADE_MARGIN))
     keep, jac = accept, est
 
     if border.any():
-        wanted_pos = np.unique(np.concatenate([ai[border], bi[border]]))
-        extra = 0 if content_bytes is None else content_bytes[wanted_pos].sum()
-        left = sig_budget - 8 * cfg.s * wanted_pos.size - int(extra)
-        if left < 0:
+        sig_of = fetch(np.unique(np.concatenate([ai[border], bi[border]])))
+        if sig_of is None:
             return None
-        sig_of = fetch(wanted_pos, left)  # the budget they leave
         jac = est.copy()
         jac[border] = _bottom_s_jaccard(
             [sig_of.get(i, _NO_SIG) for i in ai[border]],
@@ -448,7 +469,7 @@ _CANDIDATE_SCHEMA = struct_type(
 def containment_candidates(
     signatures: DataFrame, cfg: SketchConfig,
     min_containment: float | None = None, persisted: list | None = None,
-    n_fp: int | None = None, resident: bool | None = None,
+    n_fp: int | None = None,
 ) -> DataFrame:
     """Fingerprint-overlap containment candidates (G3, candidate stage).
 
@@ -464,19 +485,19 @@ def containment_candidates(
     Returns (a_id, b_id, containment, a_nb, b_nb) with a_id < b_id and
     the sides' ``n_bytes``, which size :func:`containment_verified`.
 
-    Where it runs follows the cascade's rule (one ``RESIDENT_BYTES``
-    budget, 30 MB, known before each allocation it bounds):
+    Where it runs follows the cascade's rule: one :class:`DriverBudget`,
+    charged before each allocation it bounds.
 
-    - Resident (``resident=True``, or by default while the fingerprint
-      rows, 8 B each, fit): the driver Arrow-collects
-      ``file_id, n_bytes, fingerprints``, sorts the (fingerprint, file
-      rank) rows and emits each kept group's pairs with numpy. The pair
-      codes, sum of m(m-1)/2 over the kept groups at 8 B each, are sized
-      from the group sizes before any is emitted; if they overflow what
-      the rows left, the call hands over to the scan-side path. Nothing
-      persists and the result is a local frame.
-    - Scan-side (``resident=False``, or above the budget): one groupBy
-      over the exploded fingerprints on executors.
+    - Resident, while the fingerprint rows (8 B each) fit: the driver
+      Arrow-collects ``file_id, n_bytes, fingerprints``, sorts the
+      (fingerprint, file rank) rows and emits each kept group's pairs
+      with numpy. The pair codes, sum of m(m-1)/2 over the kept groups
+      at 8 B each, are sized from the group sizes before any is
+      emitted; if they overflow what the rows left, the call hands over
+      to the scan-side path. Nothing persists and the result is a local
+      frame.
+    - Scan-side, above the budget: one groupBy over the exploded
+      fingerprints on executors.
 
     ``n_fp``: the signatures' total fingerprint count,
     ``sum(size(fingerprints))``, if the caller already has it (the
@@ -489,14 +510,10 @@ def containment_candidates(
         cfg.containment_threshold if min_containment is None
         else min_containment
     )
-    budget = None  # forced resident: no cap on the pair codes
-    if resident is None:
-        if n_fp is None:
-            n_fp = signatures.agg(F.sum(F.size("fingerprints"))).first()[0]
-        budget = RESIDENT_BYTES - 8 * (n_fp or 0)
-        resident = budget > 0
-    got = None
-    if resident:
+    if n_fp is None:
+        n_fp = signatures.agg(F.sum(F.size("fingerprints"))).first()[0]
+    budget, got = DriverBudget(), None
+    if budget.charge("fingerprints", 8 * (n_fp or 0), strict=True):
         got = _driver_containment_candidates(
             signatures.select("file_id", "n_bytes", "fingerprints").toArrow(),
             cfg, threshold, budget,
@@ -509,12 +526,12 @@ def containment_candidates(
 
 
 def _driver_containment_candidates(
-    tbl, cfg: SketchConfig, threshold: float, budget: int | None,
+    tbl, cfg: SketchConfig, threshold: float, budget: DriverBudget,
 ) -> pd.DataFrame | None:
     """The resident candidate stage (see :func:`containment_candidates`)
-    over an Arrow ``file_id, n_bytes, fingerprints`` table. ``budget``:
-    bytes left for the pair codes (None: no cap); returns None when they
-    exceed it. Fingerprints are distinct within a file
+    over an Arrow ``file_id, n_bytes, fingerprints`` table. The pair
+    codes are charged to ``budget`` while they live; returns None when
+    they do not fit it. Fingerprints are distinct within a file
     (``hashing.winnow``), so a group's members are distinct files."""
     import pyarrow.compute as pc
 
@@ -536,16 +553,16 @@ def _driver_containment_candidates(
     kept = (sizes >= 2) & ~hot
     # retained fingerprints per file: every membership outside hot groups
     n_fp = np.bincount(member[~np.repeat(hot, sizes)], minlength=n)
-    if budget is not None:
-        m = sizes[kept]
-        if 8 * int((m * (m - 1) // 2).sum()) > budget:
-            return None
-
+    m, since = sizes[kept], len(budget.charges)
+    if not budget.charge(
+        "containment_codes", 8 * int((m * (m - 1) // 2).sum())
+    ):
+        return None
     # members sort by rank within a group, so each code has a < b
     codes, shared = np.unique(
-        _group_pair_codes(member, starts[kept], sizes[kept], n),
-        return_counts=True,
+        _group_pair_codes(member, starts[kept], m, n), return_counts=True,
     )
+    budget.release(since)  # the codes are freed; the caller counts rows
     a, b = np.divmod(codes, n)
     cont = shared / np.maximum(np.minimum(n_fp[a], n_fp[b]), 1)
     keep = cont >= threshold
@@ -639,7 +656,7 @@ def _scan_side_containment_candidates(
 def containment_verified(
     candidates: DataFrame, files: DataFrame,
     cfg: SketchConfig | None = None, min_overlap_chars: int = 512,
-    persisted: list | None = None, resident: bool | None = None,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Exact-substring containment verification (G3, verify stage).
 
@@ -663,39 +680,39 @@ def containment_verified(
     is the verified overlap fraction of the smaller side (1.0 and the
     small side's byte length for tier 1).
 
-    Where it runs follows the cascade's rule, under the same
-    ``RESIDENT_BYTES`` budget:
+    Where it runs follows the cascade's rule, under one
+    :class:`DriverBudget`:
 
-    - Resident (``resident=True``, or by default while the candidate
-      rows, 8 B each, plus the candidate files' content bytes, the sum of
-      their ``n_bytes``, fit): the driver collects the candidates, then
-      ``content`` for the candidate files only with one broadcast
-      ``left_semi`` Arrow collect (:func:`_file_contents`), runs tier 1
-      as a bytes ``in`` and tier 2 as :func:`_overlap_rows` over the
-      pairs sorted by (big_id, small_id), and returns a local frame. No
-      Python UDF stage runs and nothing persists.
-    - Scan-side (``resident=False``, or above the budget): both tiers run
-      on executors over a content-wide candidate join — tier 1 as JVM
-      ``instr``, tier 2 as a ``mapInPandas`` stage; when only the
-      contents overflowed, the candidate rows the check collected are
-      the join's (local) candidate side, not a second candidate stage.
-      ``persisted`` receives its staged pair cache for the caller to
-      unpersist (module registry otherwise, as in the cascade).
+    - Resident, while the candidate rows, 8 B each, plus the candidate
+      files' content bytes, the sum of their ``n_bytes``, fit: the
+      driver collects the candidates (a ``limit`` probe one row past
+      what the budget holds), then ``content`` for the candidate files
+      only with one broadcast ``left_semi`` Arrow collect
+      (:func:`_file_contents`), runs tier 1 as a bytes ``in`` and tier 2
+      as :func:`_overlap_rows` over the pairs sorted by (big_id,
+      small_id), and returns a local frame. No Python UDF stage runs and
+      nothing persists.
+    - Scan-side, above the budget: both tiers run on executors over a
+      content-wide candidate join — tier 1 as JVM ``instr``, tier 2 as
+      a ``mapInPandas`` stage; when only the contents overflowed, the
+      candidate rows the probe collected are the join's (local)
+      candidate side, not a second candidate stage. ``persisted``
+      receives its staged pair cache for the caller to unpersist
+      (module registry otherwise, as in the cascade).
     """
     cfg = cfg or DEFAULT_CONFIG
-    if resident is not False:
-        src = candidates.select("a_id", "b_id", "a_nb", "b_nb")
-        if not resident:  # never collect an unbounded set
-            src = src.limit(RESIDENT_BYTES // 8 + 1)
-        cand = src.toArrow()
-        ids, cost = _containment_files(cand)
-        if resident or cost <= RESIDENT_BYTES:
-            return _driver_containment_verified(
-                files.sparkSession, cand, _file_contents(files, ids), cfg,
-                min_overlap_chars,
-            )
-        if cand.num_rows <= RESIDENT_BYTES // 8:  # the rows are complete
-            candidates = files.sparkSession.createDataFrame(cand)
+    budget = DriverBudget()
+    cand = candidates.select("a_id", "b_id", "a_nb", "b_nb").limit(
+        budget.left // 8 + 1  # never collect an unbounded set
+    ).toArrow()
+    ids, cost = _containment_files(cand)
+    if budget.charge("containment", cost):
+        return _driver_containment_verified(
+            files.sparkSession, cand, _file_contents(files, ids), cfg,
+            min_overlap_chars,
+        )
+    if cand.num_rows <= budget.left // 8:  # the rows are complete
+        candidates = files.sparkSession.createDataFrame(cand)
     return _scan_side_containment_verified(
         candidates, files, cfg, min_overlap_chars, persisted
     )

@@ -16,8 +16,9 @@ Spark form, :func:`_spark_edges`, each with a new-rows mask: the
 incremental batch (streaming/incremental.py) runs both over its
 fid-keyed store with its new rows marked, and a plain run is the batch
 over an empty store, where every row is new. The stage follows the
-verify passes' resident rule (operators/verify.py, one
-``RESIDENT_BYTES`` budget). While the signature rows fit it, at
+verify passes' resident rule (operators/verify.py): one
+``DriverBudget`` ledger per run, which every resident pass charges by
+name. While the signature rows fit it, at
 :func:`_resident_row_bytes` each, ONE Arrow table feeds the band join
 (grouped by each band's sig_perm slots, so no band key is collected),
 the exact-sha edges and the cascade on the driver, as the reference
@@ -25,11 +26,12 @@ re-ranks its in-memory sketch collection (src/sketchy.rs:81). A plain
 run is three Spark jobs: the sketch (its noop write fills the signature
 cache and sizes the run), one signature collect, which also feeds the
 union-find and the containment pass, and one content collect for the
-borderline re-sketch and the containment verify. Above the budget, or
-when the pair codes or the borderline sigs would overflow what the table
-left, the stage hands over to Spark stages (:func:`candidate_pairs_fid`,
-:func:`verified_pairs_cascade`, :func:`exact_dup_edges_fid`, then
-:func:`assign_clusters_fid`), with identical rows.
+borderline re-sketch and the containment verify. When a charge does
+not fit (the rows, the pair codes, or the borderline sigs and contents
+after what the table left), the stage hands over to Spark stages
+(:func:`candidate_pairs_fid`, :func:`verified_pairs_cascade`,
+:func:`exact_dup_edges_fid`, then :func:`assign_clusters_fid`), with
+identical rows.
 
 Every run labels a cluster by its least file_id (string order), the
 rule of operators/cluster.py, whether its clusters come from the driver
@@ -95,6 +97,7 @@ class PipelineResult:
     edges: DataFrame | None = None
     persisted: tuple = ()  # internal fid frames to release on unpersist
     resumed: dict | None = None  # stage -> read back (store runs only)
+    budget: verify.DriverBudget | None = None  # None: edges stage resumed
 
     def unpersist(self) -> None:
         """Release every frame the pipeline persisted (bench hygiene)."""
@@ -110,7 +113,6 @@ def run_pipeline(
     files: DataFrame,
     cfg: SketchConfig = DEFAULT_CONFIG,
     with_containment: bool = True,
-    cache_signatures: bool = True,
     range_partition: bool = False,
     store=None,
 ) -> PipelineResult:
@@ -127,10 +129,9 @@ def run_pipeline(
     content-width shuffle only pays for itself on multi-executor runs
     where locality persists across stages).
 
-    With ``cache_signatures`` (the default) the edges and clusters run on
-    the driver while the signature rows fit the resident budget (module
-    docstring) and come back as local frames; without it, as Spark
-    stages.
+    The edges and clusters run on the driver while the run's ledger,
+    the result's ``budget``, takes their charges (module docstring), and
+    come back as local frames; otherwise, as Spark stages.
 
     ``store`` (a :mod:`sketchy_spark.checkpoint` store) makes the run
     resumable: each stage of ``checkpoint.STAGES`` — the slim fid-keyed
@@ -175,40 +176,40 @@ def run_pipeline(
     # estimates, containment groups and staged pairs) so unpersist() can
     # release them. The resident stages persist nothing.
     internal: list[DataFrame] = []
-    n_files = n_fp = None
-    if cache_signatures:
-        # signatures feed every later stage; recomputing the UDF stage
-        # per consumer would multiply the dominant cost. One noop write,
-        # the run's first action after any stage write, populates the
-        # cache while an Observation counts the rows that size the
-        # resident stage and the fingerprints that size the containment
-        # pass. Every later read of the signatures is a memory scan.
-        sizes = Observation()
-        fp = [F.sum(F.size("fingerprints")).alias("fp")]
-        signatures = signatures.observe(
-            sizes, F.count(F.lit(1)).alias("rows"),
-            *(fp if with_containment else []),
-        ).cache()
-        signatures.write.format("noop").mode("overwrite").save()
-        n_files, n_fp = sizes.get["rows"], sizes.get.get("fp")
+    # signatures feed every later stage; recomputing the UDF stage per
+    # consumer would multiply the dominant cost. One noop write, the
+    # run's first action after any stage write, populates the cache while
+    # an Observation counts the rows that size the resident stage and the
+    # fingerprints that size the containment pass. Every later read of
+    # the signatures is a memory scan.
+    sizes = Observation()
+    fp = [F.sum(F.size("fingerprints")).alias("fp")]
+    signatures = signatures.observe(
+        sizes, F.count(F.lit(1)).alias("rows"),
+        *(fp if with_containment else []),
+    ).cache()
+    signatures.write.format("noop").mode("overwrite").save()
+    n_files, n_fp = sizes.get["rows"], sizes.get.get("fp")
 
-    # (candidates, verified, edges, clusters, containment) when the edges
-    # stage is computed in this run; empty when the store resumed it.
+    # (budget, candidates, verified, edges, clusters, containment) when
+    # the edges stage is computed in this run; empty when the store
+    # resumed it.
     fresh: list = []
 
     def compute_edges():
-        # the resident stage reads verify.RESIDENT_BYTES at call time, so
-        # a caller that sets it to 0 drives the Spark stages.
-        got = None
-        if n_files is not None:
-            got = _resident_frames(signatures, files, cfg, n_files, n_fp)
+        # the ledger reads verify.RESIDENT_BYTES when it is built, so a
+        # caller that sets it to 0 drives the Spark stages.
+        budget = verify.DriverBudget()
+        got = _resident_frames(signatures, files, cfg, budget, n_files, n_fp)
         if got is None:
             got = (*_spark_edges(signatures, files, cfg, internal), None, None)
-        fresh.extend(got)
-        return fresh[2]
+        fresh.extend([budget, *got])
+        return fresh[3]
 
     edges = stage("edges", compute_edges)
-    candidates, verified, _, fresh_clusters, fresh_cont = fresh or (None,) * 5
+    budget, candidates, verified, _, fresh_clusters, fresh_cont = (
+        fresh or (None,) * 6
+    )
     clusters = stage(
         "clusters",
         lambda: fresh_clusters if fresh_clusters is not None
@@ -227,7 +228,7 @@ def run_pipeline(
         cont = signatures.sparkSession.createDataFrame([], CONTAINMENT_SCHEMA)
     return PipelineResult(
         signatures, candidates, verified, clusters, cont, edges,
-        persisted=tuple(internal), resumed=resumed,
+        persisted=tuple(internal), resumed=resumed, budget=budget,
     )
 
 
@@ -247,8 +248,8 @@ def _resident_row_bytes(cfg: SketchConfig) -> int:
 
 
 def _resident_edges(
-    tbl: pa.Table, is_new: np.ndarray, cfg: SketchConfig, budget: int,
-    fetch,
+    tbl: pa.Table, is_new: np.ndarray, cfg: SketchConfig,
+    budget: verify.DriverBudget, fetch,
 ) -> tuple | None:
     """The edges stage on the driver -> (first, rank, candidates,
     verified, edges), or None.
@@ -261,42 +262,37 @@ def _resident_edges(
     :func:`driver_band_pairs`, the verified (a, b, jaccard, hamming)
     that the cascade core keeps, and the edges (a, b), those plus
     :func:`driver_exact_edges`, as :func:`_spark_edges` computes them.
-    ``fetch(fids, left)`` returns the ``fid, sig`` rows of the cascade's
-    borderline files, with their contents counted by ``n_bytes`` when
-    ``tbl`` has it, and ``left`` bytes of the budget after them.
-    ``budget``: driver bytes left after the table;
-    returns None, for the caller to hand over to :func:`_spark_edges`,
-    when the pair codes or the borderline sigs would overflow it."""
+    ``fetch(fids)`` returns the ``fid, sig`` rows of the cascade's
+    borderline files, or None when what it charges for them does not
+    fit. The pair codes and the sigs (8 * s B a file) are charged to
+    ``budget`` while the stage runs; returns None, for the caller to
+    hand over to :func:`_spark_edges`, when a charge does not fit."""
     fids, first, rank = np.unique(
         tbl["fid"].to_numpy(), return_index=True, return_inverse=True
     )
     n = fids.size
     mat = verify._sig_perm_matrix(tbl, cfg)
-    got = driver_band_pairs(mat, rank, cfg, budget, is_new)
-    if got is None:
-        return None
-    ca, cb, budget = got
-    keep, jac, ham = np.zeros(0, dtype=bool), np.empty(0), np.empty(0)
-    if ca.size:
 
-        def fetch_rows(pos: np.ndarray, left: int) -> dict:
-            sigs = fetch(fids[pos], left)
-            return dict(zip(
-                np.searchsorted(fids, sigs["fid"].to_numpy()),
-                sigs["sig"].to_numpy(),
-            ))
-
-        kept = verify._cascade_core(
-            mat[first],
-            tbl["simhash"].to_numpy()[first],
-            tbl["n_shingles"].to_numpy()[first],
-            ca, cb, cfg, verify.CASCADE_MARGIN, budget, fetch_rows,
-            tbl["n_bytes"].to_numpy()[first]
-            if "n_bytes" in tbl.column_names else None,
-        )
-        if kept is None:
+    def fetch_rows(pos: np.ndarray) -> dict | None:
+        if not budget.charge("borderline_sigs", 8 * cfg.s * pos.size):
             return None
-        keep, jac, ham = kept
+        sigs = fetch(fids[pos])
+        return None if sigs is None else dict(zip(
+            np.searchsorted(fids, sigs["fid"].to_numpy()),
+            sigs["sig"].to_numpy(),
+        ))
+
+    since = len(budget.charges)
+    got = driver_band_pairs(mat, rank, cfg, budget, is_new)
+    kept = None if got is None else verify._cascade_core(
+        mat[first], tbl["simhash"].to_numpy()[first],
+        tbl["n_shingles"].to_numpy()[first], *got, cfg, fetch_rows,
+    )
+    # the codes and sigs are freed here; the fetch's charges go with them
+    budget.release(since)
+    if kept is None:
+        return None
+    (ca, cb), (keep, jac, ham) = got, kept
     va, vb = ca[keep], cb[keep]
     xa, xb = driver_exact_edges(tbl["sha256"].to_numpy(), rank, is_new)
     ea, eb = np.divmod(
@@ -307,7 +303,7 @@ def _resident_edges(
 
 def _resident_frames(
     signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
-    n_files: int, n_fp: int | None = None,
+    budget: verify.DriverBudget, n_files: int, n_fp: int | None = None,
 ) -> tuple | None:
     """A plain run's (candidates, verified, edges, clusters,
     containment) as local frames, with the Spark stages' schemas and
@@ -315,16 +311,18 @@ def _resident_frames(
     :func:`_resident_edges` (every row new), the union-find and, while
     the ``n_fp`` fingerprints fit, the containment pass, and ONE content
     collect, of the containment files and the borderline files that the
-    driver re-sketches (of every file if they all fit what the budget has
-    left). The containment pass gets what the table left, the edges stage
-    the rest; the pass yields (containment None) when either does not
-    fit. None when the edges stage hands over."""
+    driver re-sketches (of every file if the whole input fits what the
+    ``budget`` has left). The table's rows and fingerprints are charged
+    first, then the containment pass, then the edges stage; the pass
+    yields (containment None) when either does not fit. None when the
+    edges stage hands over."""
     # n_bytes (8 B a row) rides along in a plain run only
-    budget = verify.RESIDENT_BYTES - n_files * (_resident_row_bytes(cfg) + 8)
-    shared = n_fp is not None and budget > 8 * n_fp
-    budget -= 8 * n_fp if shared else 0
-    if budget <= 0:
+    rows = n_files * (_resident_row_bytes(cfg) + 8)
+    if not budget.charge("rows", rows, strict=True):
         return None
+    shared = n_fp is not None and budget.charge(
+        "fingerprints", 8 * n_fp, strict=True
+    )
     tbl = signatures.select(
         "file_id", "n_bytes", *RESIDENT_COLS,
         *(["fingerprints"] if shared else []),
@@ -340,32 +338,44 @@ def _resident_frames(
     total = pc.sum(tbl["n_bytes"]).as_py() or 0
     held: dict = {}
 
-    def contents(ids, left: int) -> dict:  # the run's one content collect
+    def contents(ids, may_scan: bool) -> dict:  # the one content collect
         if not held and len(ids):
-            whole = total <= left  # sum of n_bytes: what a plain scan holds
+            # a plain scan holds the sum of n_bytes
+            whole = may_scan and budget.charge("whole_input", total)
             held.update(verify._file_contents(files, None if whole else ids))
         return held
 
-    def fetch(fids: np.ndarray, left: int) -> pa.Table:
-        name_of = dict(zip(tbl["fid"].to_pylist(), tbl["file_id"].to_pylist()))
-        names = [name_of[f] for f in fids.tolist()]
-        got = contents(sorted({*names, *cont_ids}), left)
+    def fetch(fids: np.ndarray) -> pa.Table | None:
+        col, first = np.unique(tbl["fid"].to_numpy(), return_index=True)
+        rows = first[np.searchsorted(col, fids)]
+        nbytes = tbl["n_bytes"].to_numpy()[rows].sum()
+        if not budget.charge("borderline_contents", nbytes):
+            return None
+        names = tbl["file_id"].to_numpy()[rows]
+        got = contents(sorted({*names, *cont_ids}), True)
         sigs = sketch_contents([got[n] for n in names], cfg, with_fp=False)
         return pa.table({"fid": fids, "sig": sigs["sig"]})
 
     new, got = np.ones(tbl.num_rows, dtype=bool), None
-    if cost < budget:
-        got = _resident_edges(tbl, new, cfg, budget - cost, fetch)
-    if got is None and cand is not None:  # the edges stage comes first
+    since = len(budget.charges)  # what the pass gives back when it yields
+    if cand is not None and budget.charge("containment", cost, strict=True):
+        got = _resident_edges(tbl, new, cfg, budget, fetch)
+        if got is None:  # the edges stage comes first
+            budget.release(since)
+    if got is None:
         cand, cont_ids = None, []
         got = _resident_edges(tbl, new, cfg, budget, fetch)
     if got is None:
         return None
     first, rank, (ca, cb), (va, vb, jac, ham), (ea, eb) = got
-    live = 16 * (ca.size + 2 * va.size + ea.size)  # the pair arrays kept
-    cont = None if cand is None else verify._driver_containment_verified(
-        spark, cand, contents(cont_ids, budget - cost - live), cfg
-    )
+    cont = None
+    if cand is not None:
+        kept = budget.charge(  # the pair arrays the run keeps
+            "pairs", 16 * (ca.size + 2 * va.size + ea.size)
+        )
+        cont = verify._driver_containment_verified(
+            spark, cand, contents(cont_ids, kept), cfg
+        )
     names = tbl["file_id"].to_numpy()[first]
     fids = tbl["fid"].to_numpy()[first]
     labels = least_member_labels(names, ea, eb)
@@ -443,10 +453,10 @@ def containment_pairs(
 
     The candidate threshold drops to a quarter of the small side's
     fingerprints: partial verbatim overlaps (a shared block that is NOT a
-    whole-file embedding) must reach the run-verify kernel. Both stages
-    follow the cascade's budget: within it they run on the driver and
-    return local frames (no Python UDF stage, no persist); above it,
-    scan-side on executors."""
+    whole-file embedding) must reach the run-verify kernel. Each stage
+    charges a ledger of its own, from the full capacity: within it the
+    stage runs on the driver and returns a local frame (no Python UDF
+    stage, no persist); above it, scan-side on executors."""
     return containment_verified(
         containment_candidates(
             signatures, cfg,

@@ -38,8 +38,8 @@ the cascade, and exact-sha edges from each new row to its sha group's
 pre-batch minimum.
 
 Where the stage runs follows the verify passes' resident rule
-(operators/verify.py): while the accumulated store fits the 30 MB
-``RESIDENT_BYTES`` budget, judged from the stage manifests' row counts,
+(operators/verify.py): while the accumulated store fits the batch's
+``DriverBudget`` ledger, judged from the stage manifests' row counts,
 the batch's one Spark job is its sketch pass, and the bytes after it
 move with Arrow on the driver, as the reference re-ranks its in-memory
 sketch collection on every arrival (src/sketchy.rs:81). On the parquet
@@ -49,9 +49,9 @@ kernel (``pipeline._resident_edges``), one filtered ``read_table`` per
 stage fetches the borderline files' stored ``sig``, the edges stage is
 written as an Arrow table, compaction is ``store.concat_stages`` and
 :meth:`IncrementalDedup.clusters` labels the files on the driver. The
-Iceberg store moves the same tables through its session. Above the
-budget, or when the pair codes or the borderline sigs would overflow
-it, the batch hands over to the Spark form (``pipeline._spark_edges``),
+Iceberg store moves the same tables through its session. When the
+rows, the pair codes or the borderline sigs do not fit the ledger, the
+batch hands over to the Spark form (``pipeline._spark_edges``),
 with identical rows, and the clusters come from
 :func:`assign_clusters_fid`. Every stage is read back against the Spark
 schema its manifest recorded, so no read runs a schema-inference job
@@ -315,22 +315,13 @@ class IncrementalDedup:
         over the store with the batch's rows marked new, and write its
         edges stage.
 
-        Where the edges are computed follows the verify passes' rule
-        (``operators.verify.RESIDENT_BYTES``, 30 MB), decided from the
-        stage manifests' row counts:
-
-        - Resident, while the stored rows fit at
-          ``pipeline._resident_row_bytes`` each (672 B at the
-          defaults): the sketch pass is the batch's one Spark job.
-          ``store.read_table`` reads the previous and new signature
-          stages for ``pipeline._resident_edges``, which fetches the
-          borderline files' stored ``sig`` with one filtered
-          ``read_table`` per stage, and the edges stage is written as an
-          Arrow table.
-        - Hand-over, above the budget or when the pair codes (8 B each)
-          or the borderline sigs (8 * s B per file) would overflow what
-          the read left: ``pipeline._spark_edges`` over the stored
-          signature frames. Both paths write identical rows.
+        Where the edges are computed follows the module docstring's
+        resident rule, with one ``operators.verify.DriverBudget`` per
+        batch: on the driver while its charges fit (the stored rows at
+        ``pipeline._resident_row_bytes`` each, from the manifests, then
+        the pair codes and the borderline sigs), else
+        ``pipeline._spark_edges`` over the stored signature frames. Both
+        paths write identical rows.
 
         Idempotent: the batch's edges stage is the single completion
         marker; a finished batch returns immediately, a half-finished one
@@ -361,18 +352,17 @@ class IncrementalDedup:
             s for s in self.view_stages("sig") if s != stage_sig
         ] + [stage_sig]
         n_rows = sum(self.store.manifest(s)["rows"] for s in stages)
-        budget = verify.RESIDENT_BYTES - n_rows * _resident_row_bytes(
-            self.cfg
-        )
-        edges = None
-        if budget > 0:
+        budget, edges = verify.DriverBudget(), None
+        if budget.charge(
+            "rows", n_rows * _resident_row_bytes(self.cfg), strict=True
+        ):
             tbl = _concat(
                 [self.store.read_table(s, RESIDENT_COLS) for s in stages]
             )
             n_new = self.store.manifest(stage_sig)["rows"]
             is_new = np.arange(tbl.num_rows) >= tbl.num_rows - n_new
 
-            def fetch(fids: np.ndarray, _left: int) -> pa.Table:
+            def fetch(fids: np.ndarray) -> pa.Table:
                 wanted = ds.field("fid").isin(pa.array(fids, pa.int64()))
                 return _concat([
                     self.store.read_table(s, ["fid", "sig"], filter=wanted)
@@ -408,8 +398,8 @@ class IncrementalDedup:
         """(file_id, cluster_id) for every stored signature row, each
         label its component's least file_id (operators/cluster.py).
 
-        While the fid and file_id of every row and the edge ends fit
-        ``verify.RESIDENT_BYTES``, counted from the manifests, the store's
+        While the fid and file_id of every row and the edge ends fit a
+        ``verify.DriverBudget``, counted from the manifests, the store's
         tables are read with ``read_table`` and labeled on the driver by
         :func:`least_member_labels`, and the result is a local frame.
         Above it, :func:`assign_clusters_fid` runs over the raw stage
@@ -425,7 +415,8 @@ class IncrementalDedup:
         n_edges = self.n_edges()
         n_rows = sum(self.store.manifest(s)["rows"] for s in sig_stages)
         # fid (8 B) and file_id (64 B) a row, two fids an edge
-        if n_rows * 72 + n_edges * 16 > verify.RESIDENT_BYTES:
+        held = 72 * n_rows + 16 * n_edges
+        if not verify.DriverBudget().charge("labels", held):
             return assign_clusters_fid(
                 self._union(sig_stages), self._union(edge_stages),
                 n_edges=n_edges,

@@ -852,7 +852,7 @@ def test_new_vs_all_candidates_match_band_truth(spark):
         with_fid,
     )
     from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import RESIDENT_BYTES, _sig_perm_matrix
+    from sketchy_spark.operators.verify import DriverBudget, _sig_perm_matrix
     from sketchy_spark.plans.explain import physical_plan
 
     corpus = corpus_pandas(160)[["repo", "path", "commit", "lang", "content"]]
@@ -891,8 +891,8 @@ def test_new_vs_all_candidates_match_band_truth(spark):
         tbl = pa.concat_tables([prev_tbl, _stage_table(new)])
         fids, rank = np.unique(tbl["fid"].to_numpy(), return_inverse=True)
         mat = _sig_perm_matrix(tbl, cfg)
-        a, b, _ = driver_band_pairs(
-            mat, rank, cfg, RESIDENT_BYTES,
+        a, b = driver_band_pairs(
+            mat, rank, cfg, DriverBudget(),
             np.arange(tbl.num_rows) >= prev_tbl.num_rows,
         )
         assert set(zip(fids[a], fids[b])) == got
@@ -1071,4 +1071,142 @@ def test_checkpointed_containment_matches_plain(
         "containment": False,
     }
     assert rows(res.containment) == want and alone == [1, 1]
+    assert res.budget is None  # the edges stage was resumed
     res.unpersist()
+
+
+# The charges of a resident plain run with containment on, in order.
+_PLAIN_CHARGES = [
+    "rows", "fingerprints", "containment_codes", "containment",
+    "band_codes", "borderline_sigs", "borderline_contents", "whole_input",
+    "pairs",
+]
+
+
+def test_driver_budget_bounds_every_resident_pass(
+    spark, tmp_path, monkeypatch
+):
+    """Every resident decision charges one ``DriverBudget`` ledger: a
+    plain run with containment on, each batch of a 3-batch
+    ``IncrementalDedup`` ingest, and its ``clusters()``. In each ledger
+    the held bytes never exceed the capacity, the charges come in the
+    passes' order, and a finished decision holds only what it keeps. A
+    run squeezed 1 B below one named charge records it as its first
+    failed charge, hands over, and gives identical rows: the plain run
+    below its fingerprints (its containment pass goes to
+    ``containment_pairs``) and the last batch below its borderline sigs
+    (its edges stage goes to the Spark form)."""
+    from sketchy_spark import pipeline as P
+    from sketchy_spark.corpus import corpus_pandas
+    from sketchy_spark.operators import verify as V
+    from sketchy_spark.streaming import incremental as I
+
+    ledgers = []
+
+    class Recorded(V.DriverBudget):
+        def __init__(self):
+            super().__init__()
+            ledgers.append(self)
+
+    monkeypatch.setattr(V, "DriverBudget", Recorded)
+    calls = []
+    for mod, name in ((P, "containment_pairs"), (I, "_spark_edges")):
+        monkeypatch.setattr(
+            mod, name,
+            lambda *a, f=getattr(mod, name), n=name, **k:
+            calls.append(n) or f(*a, **k),
+        )
+
+    def names(budget, order):
+        """``budget``'s charge names, its releases aside, after checking
+        that its held bytes stay within its capacity and that the names
+        follow ``order``."""
+        held = 0
+        for c in budget.charges:
+            held += c.nbytes if c.ok else 0
+            assert 0 <= held <= budget.capacity
+        assert budget.left == budget.capacity - held
+        got = [c.name for c in budget.charges if c.name != "release"]
+        assert got == [n for n in order if n in got]
+        return got
+
+    def held_at_end(budget, kept):
+        """The bytes ``budget`` holds when its decision is done: the
+        charges named ``kept``; every other charge was given back."""
+        return budget.capacity - budget.left == sum(
+            c.nbytes for c in budget.charges if c.ok and c.name in kept
+        )
+
+    def squeeze(charge, strict=False):
+        """The capacity that leaves ``charge`` 1 B short."""
+        return V.RESIDENT_BYTES - (charge.left - charge.nbytes) - (not strict)
+
+    def failed(budget):
+        return [c.name for c in budget.charges if not c.ok]
+
+    def asked(budget, name):
+        """The one charge ``name`` in ``budget``'s record."""
+        got, = [c for c in budget.charges if c.name == name]
+        return got
+
+    files = corpus_df(spark, 300).cache()
+
+    def plain():
+        res = run_pipeline(files, CFG)
+        got = {
+            k: sorted(tuple(r) for r in getattr(res, k).collect())
+            for k in ("clusters", "candidates", "verified", "edges",
+                      "containment")
+        }
+        res.unpersist()
+        return res.budget, got
+
+    budget, want = plain()
+    assert ledgers == [budget] and calls == []
+    assert names(budget, _PLAIN_CHARGES) == _PLAIN_CHARGES
+    kept = ["rows", "fingerprints", "containment", "pairs"]
+    assert held_at_end(budget, kept)
+    fp = asked(budget, "fingerprints")
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "RESIDENT_BYTES", squeeze(fp, strict=True))
+        budget, got = plain()
+    assert failed(budget)[0] == "fingerprints"
+    assert calls == ["containment_pairs"] and got == want
+    for b in ledgers:
+        names(b, _PLAIN_CHARGES)
+    files.unpersist()
+
+    corpus = corpus_pandas(300)[["repo", "path", "commit", "lang", "content"]]
+    batch_order = ["rows", "band_codes", "borderline_sigs"]
+
+    def ingest(name, last=None):
+        """Each batch's edges stage rows, the clusters' pairs and the
+        ledgers; the last batch runs at capacity ``last`` if given."""
+        store = CheckpointStore(str(tmp_path / name), CFG.config_hash)
+        inc = IncrementalDedup(spark, store, CFG)
+        del ledgers[:], calls[:]
+        for b in range(3):
+            with monkeypatch.context() as mp:
+                if b == 2 and last is not None:
+                    mp.setattr(V, "RESIDENT_BYTES", last)
+                inc.ingest_batch(b, spark.createDataFrame(corpus.iloc[b::3]))
+        pairs = _pairs(inc.clusters())
+        edges = [
+            sorted(zip(*store.read_table(
+                f"edges_batch_{b:05d}", ["a_fid", "b_fid"]
+            ).to_pydict().values()))
+            for b in range(3)
+        ]
+        return edges, pairs, list(ledgers)
+
+    edges, pairs, got = ingest("resident")
+    assert len(got) == 4 and calls == []
+    for b in got[:3]:
+        assert names(b, batch_order)[:2] == ["rows", "band_codes"]
+        assert held_at_end(b, ["rows"])
+    assert names(got[3], ["labels"]) == ["labels"]
+    last = squeeze(asked(got[2], "borderline_sigs"))
+    squeezed_edges, squeezed_pairs, got = ingest("squeezed", last)
+    assert failed(got[2]) == ["borderline_sigs"] and failed(got[3]) == []
+    assert calls == ["_spark_edges"]
+    assert squeezed_edges == edges and squeezed_pairs == pairs

@@ -200,6 +200,12 @@ def _is_sketch(desc):
     return "content#" in desc and "n_shingles#" in desc
 
 
+def _asked(budget, name):
+    """(bytes left, taken) of each charge ``name`` that the driver ledger
+    ``budget`` records."""
+    return [(c.left, c.ok) for c in budget.charges if c.name == name]
+
+
 def test_resident_edges_match_spark_path(spark, monkeypatch):
     """The plain pipeline's resident stage (one Arrow collect: band join,
     exact-sha edges, cascade, union-find) gives the same clusters,
@@ -252,29 +258,20 @@ def test_resident_edges_match_spark_path(spark, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return res, rows
 
-    sig_budgets = []
-    core = V._cascade_core
-
-    def cascade_core(*args):  # records (bytes left for sigs, handed over)
-        got = core(*args)
-        sig_budgets.append((args[7], got is None))
-        return got
-
-    with monkeypatch.context() as mp:
-        mp.setattr(V, "_cascade_core", cascade_core)
-        res, resident = run("resident-edges")
+    res, resident = run("resident-edges")
     with monkeypatch.context() as mp:
         mp.setattr(V, "RESIDENT_BYTES", 0)
         handed_res, handed = run("handed-over-edges")
     assert resident == handed
+    assert _asked(handed_res.budget, "rows") == [(0, False)]
+    # the rows, the pair codes and the borderline sigs fit; squeezed,
     # the rows and the pair codes fit, the borderline sigs do not
-    (left, over), = sig_budgets
-    assert not over
+    (left, fits), = _asked(res.budget, "borderline_sigs")
+    assert fits
     with monkeypatch.context() as mp:
         mp.setattr(V, "RESIDENT_BYTES", V.RESIDENT_BYTES - left + 1)
-        mp.setattr(V, "_cascade_core", cascade_core)
         overflow_res, overflow = run("borderline-overflow")
-    assert sig_budgets[1:] == [(1, True)]
+    assert _asked(overflow_res.budget, "borderline_sigs") == [(1, False)]
     assert overflow == resident
     overflow_res.unpersist()
 
@@ -334,7 +331,7 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
     runs. When the edges stage would not fit after it, the pass yields:
     the edges stage stays on the driver with the whole remainder, and
     ``containment_pairs`` computes the containment rows on its own, equal
-    to the shared pass's."""
+    to the shared pass's. The budgets are read from the run's ledger."""
     from sketchy_spark import pipeline as P
     from sketchy_spark.operators import verify as V
 
@@ -357,24 +354,11 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
         V.RESIDENT_BYTES
         - n_files * (P._resident_row_bytes(CFG) + 8) - 8 * n_fp
     )
-    alone, budgets, cand_budgets = [], [], []
-    pairs, edges, sizes = (
-        P.containment_pairs, P._resident_edges, V._containment_files
-    )
-    candidates = V._driver_containment_candidates
-    monkeypatch.setattr(
-        V, "_driver_containment_candidates",
-        lambda tbl, cfg, t, budget: cand_budgets.append(budget)
-        or candidates(tbl, cfg, t, budget),
-    )
+    alone, budgets = [], []
+    pairs, sizes = P.containment_pairs, V._containment_files
     monkeypatch.setattr(
         P, "containment_pairs",
         lambda *a, **k: alone.append(1) or pairs(*a, **k),
-    )
-    monkeypatch.setattr(
-        P, "_resident_edges",
-        lambda tbl, new, cfg, budget, fetch: budgets.append(budget)
-        or edges(tbl, new, cfg, budget, fetch),
     )
     # the pass's rows and contents leave the edges stage 1 B, then none
     for cost in (left - 1, left):
@@ -383,12 +367,12 @@ def test_resident_containment_yields_to_edges_stage(spark, monkeypatch):
         )
         res = run_pipeline(files, CFG)
         assert res.edges.isLocal() and rows(res) == want
+        # the shared pass's pair codes get what the table left
+        assert _asked(res.budget, "containment_codes") == [(left, True)]
+        budgets += [b for b, _ in _asked(res.budget, "band_codes")]
         res.unpersist()
     assert alone == [1, 1]
     assert budgets == [1, left, left]
-    # the shared pass's pair codes get what the table left; the
-    # standalone calls size theirs by the fingerprints alone
-    assert cand_budgets[0] == cand_budgets[2] == left
 
 
 def test_sizing_never_blocks_on_empty_input(spark, tmp_path):
@@ -438,22 +422,14 @@ def test_resident_run_starts_three_jobs(spark, monkeypatch):
     the budget has left at that fetch. With ``RESIDENT_BYTES`` set so
     the wanted files fit but the whole input does not, the fetch takes
     the broadcast ``left_semi`` form of the wanted files, and every row
-    is the same."""
-    from sketchy_spark import pipeline as P
+    is the same. The left bytes are read from the run's ledger."""
     from sketchy_spark.operators import verify as V
 
     files = corpus_df(spark, 300).cache()
     files.count()
     sc = spark.sparkContext
     lefts, fetched = [], []
-    edges, contents = P._resident_edges, V._file_contents
-    monkeypatch.setattr(
-        P, "_resident_edges",
-        lambda tbl, new, cfg, budget, fetch: edges(
-            tbl, new, cfg, budget,
-            lambda fids, left: lefts.append(left) or fetch(fids, left),
-        ),
-    )
+    contents = V._file_contents
     monkeypatch.setattr(
         V, "_file_contents",
         lambda f, ids: fetched.append(ids is None) or contents(f, ids),
@@ -471,6 +447,7 @@ def test_resident_run_starts_three_jobs(spark, monkeypatch):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         total = res.signatures.agg(F.sum("n_bytes")).first()[0]
+        lefts.extend(_asked(res.budget, "whole_input"))
         res.unpersist()
         return rows, len(sc.statusTracker().getJobIdsForGroup(group)), total
 
@@ -479,10 +456,11 @@ def test_resident_run_starts_three_jobs(spark, monkeypatch):
     assert jobs == 3
     assert len(want["containment"]) > 0
     # one borderline fetch a run, the whole input each time
-    assert fetched == [True, True] and len(lefts) == 2 and lefts[1] >= total
-    squeezed = V.RESIDENT_BYTES - lefts[1] + total - 1
+    assert fetched == [True, True] and len(lefts) == 2
+    assert lefts[1][0] >= total and lefts[1][1]
+    squeezed = V.RESIDENT_BYTES - lefts[1][0] + total - 1
     monkeypatch.setattr(V, "RESIDENT_BYTES", squeezed)
     got, _, _ = run("semi-join-contents")
-    assert lefts[2] == total - 1 and fetched[2] is False
+    assert lefts[2] == (total - 1, False) and fetched[2] is False
     assert got == want
     files.unpersist()

@@ -167,16 +167,15 @@ def test_range_partition_ingest_plan(spark):
 
     files = corpus_df(spark, 100)
     on = run_pipeline(
-        files, CFG, with_containment=False, cache_signatures=False,
-        range_partition=True,
+        files, CFG, with_containment=False, range_partition=True,
     )
     plan_on = physical_plan(on.signatures)
     assert "rangepartitioning" in plan_on, plan_on
     assert "lang" in plan_on.split("rangepartitioning")[1][:80]
-    off = run_pipeline(
-        files, CFG, with_containment=False, cache_signatures=False,
-    )
+    off = run_pipeline(files, CFG, with_containment=False)
     assert "rangepartitioning" not in physical_plan(off.signatures)
+    on.unpersist()
+    off.unpersist()
 
 
 def test_struct_type_matches_spark_ddl(spark):

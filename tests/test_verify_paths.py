@@ -12,7 +12,7 @@ from sketchy_spark.operators.verify import _with_sides, verified_pairs
 CFG = SketchConfig()
 
 
-def verified_pairs_sql(pairs, signatures, cfg, broadcast_pairs=None):
+def verified_pairs_sql(pairs, signatures, cfg):
     """The array-SQL oracle of ``verified_pairs``: estimate Jaccard per
     candidate pair; keep pairs >= tau.
 
@@ -24,7 +24,7 @@ def verified_pairs_sql(pairs, signatures, cfg, broadcast_pairs=None):
     exact. SimHash hamming distance is reported (filtering on it is the
     caller's choice — G2 is a secondary signal, not a recall gate).
     """
-    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
+    df = _with_sides(pairs, signatures, ["sig", "simhash"])
     # materialize union_s as a column so the sort/union evaluates once per
     # row instead of once per referencing expression
     staged = df.select(
@@ -426,14 +426,17 @@ def _containment_rows(df):
 
 
 @pytest.mark.parametrize("resident", [False, True])
-def test_whole_file_embedding_is_tier_one(spark, resident):
+def test_whole_file_embedding_is_tier_one(spark, monkeypatch, resident):
     """A file embedded verbatim in a bigger one comes back from the
     whole-file tier: containment 1.0 and overlap_chars equal to the small
     side's byte length. One small side is above 512 chars, one below:
     the partial-overlap kernel alone reports the first with a shorter
-    run and misses the second (its run is under ``min_overlap_chars``)."""
+    run and misses the second (its run is under ``min_overlap_chars``).
+    Both placements: the driver (the default budget) and scan-side
+    (``RESIDENT_BYTES`` = 0)."""
     import pandas as pd
 
+    from sketchy_spark.operators import verify as V
     from sketchy_spark.operators.verify import (
         containment_candidates,
         containment_verified,
@@ -465,13 +468,12 @@ def test_whole_file_embedding_is_tier_one(spark, resident):
         )
     )
     sigs = sketch_files(files, CFG).cache()
+    if not resident:
+        monkeypatch.setattr(V, "RESIDENT_BYTES", 0)
     cand = containment_candidates(sigs, CFG, min_containment=0.25)
-    got = {
-        (r[0], r[1]): r[2:]
-        for r in _containment_rows(
-            containment_verified(cand, files, CFG, resident=resident)
-        )
-    }
+    verified = containment_verified(cand, files, CFG)
+    assert cand.isLocal() == verified.isLocal() == resident
+    got = {(r[0], r[1]): r[2:] for r in _containment_rows(verified)}
     for small, big, text in (
         ("org/e/long_small.py", "org/e/long_big.py", long_small),
         ("org/e/short_small.py", "org/e/short_big.py", short_small),
@@ -485,10 +487,11 @@ def test_resident_containment_matches_scan_side(spark, monkeypatch):
     (scan-side) one return identical candidate and verified rows on the
     planted corpus, at the pipeline's 0.25 candidate threshold and at the
     default, and at a small ``fp_skew_cap`` where hot fingerprints are
-    excluded. Budget hand-overs still equal the scan-side result: pair
-    codes that overflow after the fingerprint rows fit, and candidate
-    contents that overflow. An ad-hoc resident call retains no cache and
-    runs no Python UDF."""
+    excluded; ``RESIDENT_BYTES`` = 0 drives the scan-side pass. Budget
+    hand-overs still equal the scan-side result: pair codes that
+    overflow after the fingerprint rows fit, and candidate contents that
+    overflow. An ad-hoc resident call retains no cache and runs no
+    Python UDF."""
     from sketchy_spark.operators import verify as V
     from sketchy_spark.plans.explain import physical_plan
 
@@ -501,20 +504,20 @@ def test_resident_containment_matches_scan_side(spark, monkeypatch):
         return sorted(tuple(r) for r in df.collect())
 
     def both(cfg, mc):
-        res = V.containment_candidates(sigs, cfg, mc, resident=True)
-        scan = V.containment_candidates(
-            sigs, cfg, mc, persisted=internal, resident=False
-        )
-        assert cand_rows(res) == cand_rows(scan)
-        want = _containment_rows(
-            V.containment_verified(
-                scan, files, cfg, persisted=internal, resident=False
+        res = V.containment_candidates(sigs, cfg, mc)
+        verified = V.containment_verified(res, files, cfg)
+        assert res.isLocal() and verified.isLocal()
+        with monkeypatch.context() as mp:
+            mp.setattr(V, "RESIDENT_BYTES", 0)
+            scan = V.containment_candidates(sigs, cfg, mc, persisted=internal)
+            scan_verified = V.containment_verified(
+                scan, files, cfg, persisted=internal
             )
-        )
-        got = _containment_rows(
-            V.containment_verified(res, files, cfg, resident=True)
-        )
-        assert got == want and len(want) > 0
+        assert "Generate explode" in physical_plan(scan)
+        assert "MapInPandas" in physical_plan(scan_verified)
+        assert cand_rows(res) == cand_rows(scan)
+        want = _containment_rows(scan_verified)
+        assert _containment_rows(verified) == want and len(want) > 0
         return want
 
     for mc in (0.25, None):
@@ -523,8 +526,8 @@ def test_resident_containment_matches_scan_side(spark, monkeypatch):
     capped_rows = both(capped, 0.25)
     # the cap removed some fingerprint groups from the pair counts
     assert cand_rows(
-        V.containment_candidates(sigs, capped, 0.25, resident=True)
-    ) != cand_rows(V.containment_candidates(sigs, CFG, 0.25, resident=True))
+        V.containment_candidates(sigs, capped, 0.25)
+    ) != cand_rows(V.containment_candidates(sigs, CFG, 0.25))
 
     # ad-hoc default calls within the budget: driver only, nothing kept
     V.release_cascade_caches()
@@ -584,10 +587,10 @@ def test_content_overflow_verifies_the_probed_candidates(spark, monkeypatch):
     files = spark.createDataFrame(corpus_pandas(600)).cache()
     sigs = sketch_files(files, CFG, with_sig=False).cache()
     n_fp = sigs.selectExpr("sum(size(fingerprints))").first()[0]
-    cand = V.containment_candidates(sigs, CFG, 0.25, resident=True)
-    want = _containment_rows(
-        V.containment_verified(cand, files, CFG, resident=True)
-    )
+    cand = V.containment_candidates(sigs, CFG, 0.25)
+    resident = V.containment_verified(cand, files, CFG)
+    assert cand.isLocal() and resident.isLocal()
+    want = _containment_rows(resident)
     rows = cand.count()
     _, cost = V._containment_files(cand.toArrow())
     budget = min(8 * n_fp, cost - 1)
